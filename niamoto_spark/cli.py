@@ -51,7 +51,13 @@ def cmd_transform(args) -> int:
     pipe = _pipeline(args)
     cfg = _load_yaml(os.path.join(args.config, "transform.yml"))
     results = pipe.run_transform(cfg, group_by=args.group)
-    print(json.dumps({g: df.count() for g, df in results.items()}))
+    for w in pipe.warnings:
+        print(f"warning: {w}", file=sys.stderr)
+    # count the group tables just written (parquet footers), not the
+    # group plans, which would run the whole transform a second time
+    read = pipe.spark.read.parquet
+    print(json.dumps({g: read(pipe.group_table(g)).count()
+                      for g in results}))
     return 0
 
 

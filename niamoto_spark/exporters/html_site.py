@@ -4,9 +4,9 @@ pages) — Jinja2 rendering of per-entity pages, a nav bar, an index listing,
 and optional static pages from the group results table.
 
 Site generation is presentation, not Spark work (SURVEY §2.1): widget JSON
-is already computed.  Detail pages render PER PARTITION on executors
-(foreachPartition in local/shared-fs mode, toLocalIterator otherwise) so
-entity counts scale past driver memory; only the pruned index columns are
+is already computed.  Detail pages stream through the driver one
+partition at a time (toLocalIterator), so entity counts scale past driver
+memory and no Python worker starts; only the pruned index columns are
 collected, mirroring json_api.  Widget payloads render by SHAPE — lists of
 objects become tables, objects become definition lists, scalars become
 paragraphs — so every widget the transform phase emits shows as content
@@ -141,13 +141,9 @@ def export_html_site(results: DataFrame, id_col: str, out_dir: str,
         with open(path, "w") as f:
             f.write(html)
 
-    # Detail pages render PER PARTITION on executors (VERDICT r2 next #7):
-    # the row payload ships as one JSON doc per entity and never collects
-    # to the driver; only the (pruned) index columns do.  Same local-fs
-    # guard as json_api: foreachPartition writes a local path, so it is
-    # only valid when executors share the driver's filesystem (local mode
-    # / shared mount); otherwise stream through the driver with
-    # toLocalIterator (bounded to one partition of memory).
+    # Detail pages stream through the driver one partition at a time
+    # (toLocalIterator): the row payload ships as one JSON doc per entity
+    # and never collects whole; only the (pruned) index columns do.
     from pyspark.sql import functions as F
 
     idx_cols = [id_col] + [c for c in (index_columns or []) if c != id_col]
@@ -155,57 +151,38 @@ def export_html_site(results: DataFrame, id_col: str, out_dir: str,
         F.col(id_col).alias("__id"),
         F.to_json(F.struct(*results.columns),
                   {"ignoreNullFields": "false"}).alias("__doc"))
-    nav_plain = [{"label": str(n["label"]), "url": str(n["url"])}
-                 for n in nav]
-    detail_src = detail_template
+    det_t = env.from_string(detail_template) if detail_template else None
+    body_det_t = jinja2.Environment(autoescape=False).from_string(
+        _DETAIL_BODY)
 
-    def render_partition(rows):
-        import jinja2 as _j
-        import json as _json
-
-        env_l = _j.Environment(autoescape=True)
-        esc_l = env_l.filters["e"]
-        base_l = _j.Environment(autoescape=False).from_string(_BASE)
-        det_l = env_l.from_string(detail_src) if detail_src else None
-        body_det_l = _j.Environment(autoescape=False).from_string(
-            _DETAIL_BODY)
-        for r in rows:
-            d = _json.loads(r["__doc"])
-            eid = d.pop(id_col)
-            widgets = []
-            for name, pl in d.items():
-                if isinstance(pl, str) and pl[:1] in "{[":
-                    try:
-                        pl = _json.loads(pl)
-                    except (ValueError, TypeError):
-                        pass
-                widgets.append({"title": esc_l(name.replace("_", " ")),
-                                "html": _render_value(env_l, pl)})
-            if det_l is not None:
-                body = det_l.render(group=group_name, entity_id=eid,
-                                    widgets=widgets)
-            else:
-                body = body_det_l.render(group=esc_l(group_name),
-                                         entity_id=esc_l(str(eid)),
-                                         widgets=widgets)
-            html = base_l.render(title=esc_l(f"{group_name} {eid}"),
-                                 body=body, lang=lang,
-                                 site_name=esc_l(site_name),
-                                 nav=nav_plain, root="../")
-            with open(os.path.join(
-                    detail_dir,
-                    f"{safe_filename(str(eid))}.html"), "w") as f:
-                f.write(html)
+    def render_detail(doc: str) -> None:
+        d = json.loads(doc)
+        eid = d.pop(id_col)
+        widgets = []
+        for name, pl in d.items():
+            if isinstance(pl, str) and pl[:1] in "{[":
+                try:
+                    pl = json.loads(pl)
+                except (ValueError, TypeError):
+                    pass
+            widgets.append({"title": esc(name.replace("_", " ")),
+                            "html": _render_value(env, pl)})
+        if det_t is not None:
+            body = det_t.render(group=group_name, entity_id=eid,
+                                widgets=widgets)
+        else:
+            body = body_det_t.render(group=esc(group_name),
+                                     entity_id=esc(str(eid)),
+                                     widgets=widgets)
+        page(os.path.join(detail_dir, f"{safe_filename(str(eid))}.html"),
+             f"{group_name} {eid}", body, depth=1)
 
     # persist across the TWO actions (detail render + index collect) so
     # an expensive upstream transform DAG computes once, not twice
     results = results.persist()
     try:
-        master = results.sparkSession.conf.get("spark.master", "")
-        if master.startswith("local"):
-            payload.foreachPartition(render_partition)
-        else:
-            render_partition(payload.toLocalIterator())
+        for r in payload.toLocalIterator():
+            render_detail(r["__doc"])
 
         ids = []
         index_rows = []

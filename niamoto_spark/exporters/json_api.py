@@ -1,9 +1,10 @@
 """JSON static-API sink (reference: exporters/json_api_exporter.py:84-1261).
 
-Writes one detail JSON per entity plus paginated index files.  Detail files
-are written from the executors via ``foreachPartition`` (no driver
-bottleneck — at 1e6 entities the write parallelizes across the cluster);
-index pages are small and assembled on the driver from a projected/sorted
+Writes one detail JSON per entity plus paginated index files.  Detail
+files stream through the driver one partition at a time
+(``toLocalIterator``), so memory stays bounded and the same code path runs
+in local mode and on a cluster, without starting a Python worker; index
+pages are small and assembled on the driver from a projected/sorted
 DataFrame.
 
 Reference-parity surface:
@@ -328,25 +329,13 @@ def export_json_api_target(results: DataFrame, group_name: str,
                                     id=safe_filename(item_id))
         return item, rel, detail
 
-    # detail files from the executors (local/shared-fs mode), else via
-    # the driver — same policy as export_json_api above
-    master = results.sparkSession.conf.get("spark.master", "")
-    distributed_fs_ok = master.startswith("local")
-
-    def write_partition(rows):
-        for r in rows:
-            res = emit(json.loads(r["__doc"]))
-            if res[0] is None:
-                continue
-            _, rel, detail = res
-            path = os.path.join(out_dir, rel)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            _dump(path, detail, opts)
-
-    if distributed_fs_ok:
-        payload.foreachPartition(write_partition)
-    else:
-        write_partition(payload.toLocalIterator())
+    for r in payload.toLocalIterator():
+        item, rel, detail = emit(json.loads(r["__doc"]))
+        if item is None:
+            continue
+        path = os.path.join(out_dir, rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        _dump(path, detail, opts)
 
     # index: entity-id order (the reference iterates _get_group_ids'
     # sorted ids); only the narrow mapped entries accumulate
@@ -422,27 +411,14 @@ def export_json_api(results: DataFrame, id_col: str, out_dir: str,
     payload = results.select(F.col(id_col).alias("__id"),
                              F.to_json(F.struct(*results.columns)).alias("__doc"))
 
-    # foreachPartition writes to a LOCAL path — only valid when executors
-    # share the driver's filesystem (local mode / shared mount).  On a real
-    # cluster, stream through the driver instead (toLocalIterator bounds
-    # memory to one partition); swapping in a Hadoop-FS writer re-enables
-    # the distributed path against shared storage.
-    master = results.sparkSession.conf.get("spark.master", "")
-    distributed_fs_ok = master.startswith("local")
-
-    def write_partition(rows):
-        for r in rows:
-            doc = _parse_widget_strings(json.loads(r["__doc"]))
-            if detail_fields:
-                doc = _map_fields(doc, detail_fields, ctx)
-            _dump(os.path.join(detail_dir,
-                               f"{safe_filename(r['__id'])}.json"),
-                  doc, opts)
-
-    if distributed_fs_ok:
-        payload.foreachPartition(write_partition)
-    else:
-        write_partition(payload.toLocalIterator())
+    # detail files stream through the driver (toLocalIterator bounds
+    # memory to one partition)
+    for r in payload.toLocalIterator():
+        doc = _parse_widget_strings(json.loads(r["__doc"]))
+        if detail_fields:
+            doc = _map_fields(doc, detail_fields, ctx)
+        _dump(os.path.join(detail_dir, f"{safe_filename(r['__id'])}.json"),
+              doc, opts)
 
     idx_src = results.filter(index_filter) if index_filter else results
     items = []

@@ -128,6 +128,21 @@ def bin_index(col: Column, edges: Sequence[float]) -> Column:
     return cases.otherwise(expr)
 
 
+def py_round2(col: Column) -> Column:
+    """Python's ``round(x, 2)`` as a JVM expression: half-even on the
+    double's exact binary value (``round(1.095, 2) == 1.09`` because
+    1.095 is stored as 1.09499...).  ``format_number`` with a pattern
+    string formats through ``java.text.DecimalFormat``, which rounds
+    HALF_EVEN on the exact binary expansion (JDK-7131459).  ``bround``
+    is not the same: it rounds the shortest decimal repr.  NaN and
+    +-inf pass through (the cast would throw on DecimalFormat's
+    infinity sign); NULL stays NULL."""
+    special = F.isnan(col) | (F.abs(col) == F.lit(float("inf")))
+    return F.when(special, col).otherwise(
+        F.call_function("format_number", col, F.lit("0.00"))
+        .cast("double"))
+
+
 def shannon_entropy_from_counts(count_col: Column, total_col: Column) -> Column:
     """Per-row term of Shannon entropy H = -sum(p * log2 p) over a counts
     table; zeros contribute nothing (reference custom_calculator.py:712-763

@@ -208,32 +208,40 @@ def _number_tree(spark: SparkSession, nodes: list[dict], id_offset: int,
     for root in children.get(None, ()):
         dfs(root)
 
-    schema = ("id bigint, parent_id bigint, level int, rank_name string, "
-              "rank_value string, full_path string")
-    extras = []
-    if ext_name:
-        schema += f", {ext_name} bigint"
-        extras.append("__ext_id")
-    if with_name:
-        schema += ", full_name string"
-        extras.append("full_name")
-    schema += ", lft int, rght int"
+    import pyarrow as pa
 
     def _int_or_none(v):
         return int(v) if v is not None else None
 
-    rows = [
-        (
-            n["id"],
-            by_path[n["parent_path"]]["id"] if n["parent_path"] else None,
-            n["level"], n["rank_name"], n["rank_value"], n["full_path"],
-            *[(_int_or_none(n.get(e)) if e == "__ext_id" else n.get(e))
-              for e in extras],
-            n["lft"], n["rght"],
-        )
-        for n in nodes
+    cols = [
+        ("id", pa.int64(), [n["id"] for n in nodes]),
+        ("parent_id", pa.int64(),
+         [by_path[n["parent_path"]]["id"] if n["parent_path"] else None
+          for n in nodes]),
+        ("level", pa.int32(), [n["level"] for n in nodes]),
+        ("rank_name", pa.string(), [n["rank_name"] for n in nodes]),
+        ("rank_value", pa.string(), [n["rank_value"] for n in nodes]),
+        ("full_path", pa.string(), [n["full_path"] for n in nodes]),
     ]
-    return spark.createDataFrame(rows, schema)
+    if ext_name:
+        cols.append((ext_name, pa.int64(),
+                     [_int_or_none(n.get("__ext_id")) for n in nodes]))
+    if with_name:
+        cols.append(("full_name", pa.string(),
+                     [n.get("full_name") for n in nodes]))
+    cols += [("lft", pa.int32(), [n["lft"] for n in nodes]),
+             ("rght", pa.int32(), [n["rght"] for n in nodes])]
+    return _arrow_frame(spark, cols)
+
+
+def _arrow_frame(spark: SparkSession, cols: list) -> DataFrame:
+    """A driver-built table as a DataFrame through Arrow: the JVM decodes
+    the batches itself, so unlike ``createDataFrame(list)`` (a Python
+    RDD) no Python worker starts.  ``cols``: (name, arrow type, values)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({name: pa.array(vals, typ) for name, typ, vals in cols}))
 
 
 # ---------------------------------------------------------------------------
@@ -322,11 +330,12 @@ def add_nested_sets(nodes: DataFrame, id_col: str = "id",
             f"add_nested_sets: {len(collected) - len(bounds)} nodes are "
             f"unreachable from any root (parent cycle), e.g. {missing}")
 
-    spark = nodes.sparkSession
-    bounds_df = spark.createDataFrame(
-        [(k, v[0], v[1]) for k, v in bounds.items()],
-        "__ns_row bigint, lft int, rght int",
-    )
+    import pyarrow as pa
+
+    bounds_df = _arrow_frame(nodes.sparkSession, [
+        ("__ns_row", pa.int64(), list(bounds)),
+        ("lft", pa.int32(), [v[0] for v in bounds.values()]),
+        ("rght", pa.int32(), [v[1] for v in bounds.values()])])
     return tagged.join(F.broadcast(bounds_df), "__ns_row", "left") \
                  .drop("__ns_row")
 

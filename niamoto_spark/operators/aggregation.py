@@ -17,6 +17,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from niamoto_spark.functions import py_round2
 from niamoto_spark.registry import PluginType, register
 
 _GROUP_SENTINEL = "_all"
@@ -32,29 +33,12 @@ def _strip_sentinel(df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     return df if group_cols else df.drop(_GROUP_SENTINEL)
 
 
-def _python_round2_udf():
-    """Arrow-batched EXACT python round(x, 2): half-even over the
-    double's BINARY value.  Neither Spark bround nor numpy.round is
-    that (both work from the shortest decimal repr / scaled multiply);
-    only CPython's correctly-rounded dtoa is, so the elements go
-    through round() itself inside the Arrow batch.  Reserved for
-    per-entity widget tables (one value per entity), never raw scans."""
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    def _py_round2(s):
-        # float(v) first: np.float64 OVERRIDES __round__ with numpy's
-        # scaled-multiply rounding (round(np.float64(0.015), 2) = 0.02
-        # vs python 0.01) — only CPython's float.__round__ is the
-        # correctly-rounded dtoa this helper exists for
-        return s.apply(lambda v: v if pd.isna(v)
-                       else float(round(float(v), 2)))
-
-    # non-decorator form: the module's `from __future__ import
-    # annotations` stringifies hints, which pyspark's type-hint
-    # inference can't resolve against module globals — an
-    # annotation-free callable defaults to a SCALAR pandas UDF
-    return pandas_udf(_py_round2, "double")
+def _literal_rows(spark, rows: list[tuple], struct: str) -> DataFrame:
+    """A few literal rows built in the JVM (``inline`` over a typed array
+    literal): no Python-side RDD and no Python worker.  ``struct`` is
+    the row type, e.g. ``"struct<bin_index:int,bin_label:string>"``."""
+    arr = F.array(*[F.struct(*[F.lit(v) for v in r]) for r in rows])
+    return spark.range(1).select(F.inline(arr.cast(f"array<{struct}>")))
 
 
 @register("statistical_summary", PluginType.TRANSFORMER)
@@ -62,7 +46,6 @@ def statistical_summary(df: DataFrame, group_cols: Sequence[str],
                         field: str, stats: Sequence[str] | None = None,
                         units: str | None = None,
                         max_value: float | None = None,
-                        rounding: str = "sql",
                         median: str = "exact") -> DataFrame:
     """min/mean/max/median/std of a numeric field, rounded to 2dp
     (reference: transformers/aggregation/statistical_summary.py:152-233).
@@ -85,42 +68,23 @@ def statistical_summary(df: DataFrame, group_cols: Sequence[str],
     exact median uses Spark's sort-based percentile which is the one
     genuinely shuffle-heavy piece.  ``median='approx'`` swaps it for
     ``approx_percentile`` (mergeable t-digest-style sketch, stays inside
-    the same partial aggregate — the 100 TB operational lever, mirroring
-    the ``rounding=`` split).  NOT reference parity: the reference's
-    semantics are the exact interpolated median, so the oracle lanes and
-    the refdiff grid keep the default.
+    the same partial aggregate — the 100 TB operational lever).  NOT
+    reference parity: the reference's semantics are the exact
+    interpolated median, so the oracle lanes and the refdiff grid keep
+    the default.
     """
-    # rounding="sql" (default): ROUND half-away-from-zero — what the
-    # DuckDB oracle computes.  rounding="python": EXACT python round()
-    # — half-even over the double's BINARY value.  Spark's bround is
-    # NOT that: it rounds the SHORTEST decimal repr
-    # (BigDecimal.valueOf), so round(1.095, 2) = 1.09 in python
-    # (binary 1.09499...) but bround = 1.10; 3dp measurement data puts
-    # maxima on that grid systematically (r13 v9 variant: max_value
-    # 1.2 -> 0.6 exposed 12 such flips on wood_density).  Exact parity
-    # needs the binary expansion, which the JVM surface can't reach
-    # (format_string %.20f zero-pads the shortest repr), so python
-    # mode rounds in one Arrow-batched projection AFTER the aggregate
-    # — one row per entity, the widget-table path, never the raw-scan
-    # hot path.
-    if rounding not in ("sql", "python"):
-        raise ValueError(f"unknown rounding mode {rounding!r}")
     if median not in ("exact", "approx"):
         raise ValueError(f"unknown median mode {median!r}")
-    py_mode = rounding == "python"
-    rnd = (lambda col, dp: col) if py_mode else F.round
     c = F.col(field).cast("double")
+    m = F.median(c) if median == "exact" else F.percentile_approx(c, 0.5)
     all_aggs = {
-        "min": rnd(F.min(c), 2).alias("min"),
-        "mean": rnd(F.avg(c), 2).alias("mean"),
-        "max": rnd(F.max(c), 2).alias("max"),
+        "min": F.round(F.min(c), 2).alias("min"),
+        "mean": F.round(F.avg(c), 2).alias("mean"),
+        "max": F.round(F.max(c), 2).alias("max"),
         # exact interpolated median hits .xx5 midpoints on 2dp data; double
         # rounding (4dp->2dp) keeps it stable across engines (see q51)
-        "median": (lambda m: (m if py_mode
-                              else F.round(F.round(m, 4), 2))
-                   )(F.median(c) if median == "exact"
-                     else F.percentile_approx(c, 0.5)).alias("median"),
-        "std": rnd(F.stddev_samp(c), 2).alias("std"),
+        "median": F.round(F.round(m, 4), 2).alias("median"),
+        "std": F.round(F.stddev_samp(c), 2).alias("std"),
         "count": F.count(c).alias("count"),
     }
     selected = list(stats) if stats else list(all_aggs)
@@ -132,14 +96,8 @@ def statistical_summary(df: DataFrame, group_cols: Sequence[str],
         # hidden data-max rides the same hash aggregate; greatest()
         # skips the NULL (all-null group) and falls back to the
         # configured value, matching the reference's empty-series branch
-        aggs.append(rnd(F.max(c), 2).alias("__data_max"))
+        aggs.append(F.round(F.max(c), 2).alias("__data_max"))
     out = _grouped(df, group_cols).agg(*aggs)
-    if py_mode:
-        _py_round2 = _python_round2_udf()
-        for s in selected + (["__data_max"] if max_value is not None
-                             else []):
-            if s != "count":
-                out = out.withColumn(s, _py_round2(F.col(s)))
     if max_value is not None:
         out = out.withColumn(
             "max_value",
@@ -177,8 +135,8 @@ def binned_distribution(df: DataFrame, group_cols: Sequence[str], field: str,
     counts = _grouped(binned, list(group_cols) + ["bin_index"]).agg(
         F.count(F.lit(1)).alias("count"))
 
-    bins = spark.createDataFrame(
-        [(i, labels[i]) for i in range(n)], "bin_index int, bin_label string")
+    bins = _literal_rows(spark, [(i, labels[i]) for i in range(n)],
+                         "struct<bin_index:int,bin_label:string>")
     if group_cols:
         groups = df.select(*group_cols).distinct()
         dense = groups.crossJoin(F.broadcast(bins))
@@ -216,7 +174,8 @@ def categorical_distribution(df: DataFrame, group_cols: Sequence[str],
     if categories is not None:
         cats = [str(x) for x in categories]
         filtered = filtered.where(F.col("category").isin(cats))
-        cat_df = spark.createDataFrame([(x,) for x in cats], "category string")
+        cat_df = _literal_rows(spark, [(x,) for x in cats],
+                               "struct<category:string>")
     else:
         cat_df = filtered.select("category").distinct()
     counts = _grouped(filtered, list(group_cols) + ["category"]).agg(
@@ -423,9 +382,8 @@ def time_series_analysis(df: DataFrame, group_cols: Sequence[str],
     refshapes shaper must distinguish an ABSENT month (reference [0]*12
     int fill) from a present month with 0%% presence (float 0.0).
     ``rounding``: "sql" = F.round (DuckDB oracle half-away); "python" =
-    EXACT python round() via the Arrow projection (reference
-    _presence_percentage) — see statistical_summary for the
-    bround-vs-binary analysis.
+    python's round() (reference _presence_percentage), as the JVM
+    expression ``functions.py_round2``.
     Output: group_cols + (month, <field>_pct ...).
     """
     spark = df.sparkSession
@@ -441,19 +399,12 @@ def time_series_analysis(df: DataFrame, group_cols: Sequence[str],
         label: F.avg(F.when(cond, 1.0).otherwise(0.0)) * 100.0
         for label, cond in exprs.items()
     }
-    if rounding == "sql":
-        aggs = [F.round(v, 2).alias(f"{label}_pct")
-                for label, v in raw_pct.items()]
-    else:
-        aggs = [v.alias(f"{label}_pct") for label, v in raw_pct.items()]
-    out = base.groupBy(*group_cols, "month").agg(*aggs)
-    if rounding == "python":
-        pyr = _python_round2_udf()
-        for label in exprs:
-            out = out.withColumn(f"{label}_pct",
-                                 pyr(F.col(f"{label}_pct")))
+    rnd = (lambda v: F.round(v, 2)) if rounding == "sql" else py_round2
+    out = base.groupBy(*group_cols, "month").agg(
+        *[rnd(v).alias(f"{label}_pct") for label, v in raw_pct.items()])
     if dense_months:
-        months = spark.createDataFrame([(i,) for i in range(1, 13)], "month int")
+        months = _literal_rows(spark, [(i,) for i in range(1, 13)],
+                               "struct<month:int>")
         if group_cols:
             dense = df.select(*group_cols).distinct().crossJoin(F.broadcast(months))
         else:

@@ -6,11 +6,13 @@ import -> transform -> export.  This module is the Spark-side equivalent:
 
 - ``run_import``: file/derived connectors -> parquet tables in a warehouse
   dir + an EntityRegistry (the reference's DuckDB tables + registry rows).
-- ``run_transform``: for each group config, ONE loader join per source and
-  ONE aggregate per widget computes every entity at once, then the widget
-  frames are packed to JSON columns in a wide per-group result table —
-  the same table shape the reference builds row-by-row
-  (transformer.py:1142-1186), minus the O(entities x widgets) query loop.
+- ``run_transform``: for each group config, ONE loader join per source
+  tags the fact rows with the entity id; every widget that is a plain
+  per-entity aggregate becomes expressions of ONE ``groupBy(gid)`` per
+  source, the other widgets build one (gid, json) frame each, and a wide
+  per-group result table joins them once each — the same table shape
+  the reference builds row-by-row (transformer.py:1142-1186), minus the
+  O(entities x widgets) query loop.
 - ``run_export``: JSON static API per group (exporters/json_api.py).
 
 Widget param adapters accept the reference's YAML parameter names verbatim
@@ -20,10 +22,12 @@ transform.yml runs unchanged against this engine.
 
 from __future__ import annotations
 
+import operator
 import os
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from niamoto_spark.catalog import Entity, EntityKind, EntityLink, EntityRegistry
@@ -45,7 +49,6 @@ SINGLE_ROW_WIDGETS = {
     "statistical_summary", "field_aggregator", "binary_counter",
     "direct_attribute", "class_object_field_aggregator",
 }
-
 
 
 def _resolve_chain_ref(ref: str, docs: dict):
@@ -78,6 +81,21 @@ def _resolve_chain_ref(ref: str, docs: dict):
     return cur
 
 
+def _kernel_frame(k, frames: dict[str, DataFrame], gid: str,
+                  row_source: str | None) -> DataFrame:
+    """A fused kernel's per-entity values on their own: its rows read off
+    the grouping table, one ``groupBy(gid)`` per source, full-joined on
+    gid (transform_chain steps and per-widget analysis)."""
+    parts = []
+    if k.rows:
+        parts.append(frames[row_source].select(
+            F.col(gid), *[c.alias(n) for n, c in k.rows.items()]))
+    parts += [frames[src].groupBy(gid).agg(
+                  *[c.alias(n) for n, c in aggs.items()])
+              for src, aggs in k.aggs.items()]
+    return reduce(lambda a, b: a.join(b, gid, "full"), parts)
+
+
 class Pipeline:
     def __init__(self, spark: SparkSession, warehouse: str,
                  registry: EntityRegistry | None = None,
@@ -94,6 +112,10 @@ class Pipeline:
         self.strict_parity = strict_parity
         self.layers_meta: dict[str, dict] = {}
         os.makedirs(warehouse, exist_ok=True)
+
+    def group_table(self, group: str) -> str:
+        """Path of a group's result table (the transform's output)."""
+        return os.path.join(self.warehouse, f"{group}_results.parquet")
 
     # ------------------------------------------------------------------
     # import phase
@@ -357,15 +379,46 @@ class Pipeline:
                 raise ValueError(f"unknown relation plugin {plugin!r}")
             tagged[src.name] = out
 
-        # 2. widgets: one aggregate each, packed to a JSON column
+        # 2. widgets.  Plain per-entity aggregates (RS.FUSED) become
+        # expressions of ONE groupBy(gid).agg(...) per source; the other
+        # widgets each build a (gid, json) frame.  The wide table joins
+        # each source aggregate and each frame once.
         from niamoto_spark import refshapes as RS
-        result = grouping.select(F.col(gid))
-        if only_ids is not None:
-            result = result.where(F.col(gid).isin(list(only_ids)))
-        for name, w in g.widgets_data.items():
+        row_source = g.group_by \
+            if tagged[g.group_by] is grouping else None
+        rows: dict[str, Column] = {}
+        source_aggs: dict[str, dict[str, Column]] = {}
+        frames: list[DataFrame] = []
+        columns: list[Column] = []
+        for i, (name, w) in enumerate(g.widgets_data.items()):
+            params = dict(w.params)
             try:
-                jdf = self._widget_json(w.plugin, dict(w.params), tagged,
-                                        g.group_by, gid, grouping)
+                if w.plugin in RS.FUSED:
+                    k = RS.kernel(w.plugin, params, tagged, row_source)
+                    # analyze this widget's aggregates alone, so a bad
+                    # column lands in the warnings instead of failing the
+                    # whole group (its doc reads only these aggregates)
+                    _kernel_frame(k, tagged, gid, row_source)
+                    prefix = f"__w{i}_"
+                    value = k.doc(lambda n, prefix=prefix: F.col(prefix + n))
+                    rows.update({prefix + n: c for n, c in k.rows.items()})
+                    markers = []
+                    for src, aggs in k.aggs.items():
+                        source_aggs.setdefault(src, {}).update(
+                            {prefix + n: c for n, c in aggs.items()})
+                        j = list(source_aggs).index(src)
+                        markers.append(F.col(f"__in_{j}").isNotNull())
+                    # an entity is present when a source has rows for it;
+                    # with grouping-row fields, every entity is
+                    present = None if k.rows else reduce(operator.or_,
+                                                         markers)
+                else:
+                    jdf = self._widget_json(w.plugin, params, tagged,
+                                            g.group_by, gid, grouping)
+                    frames.append(jdf.select(
+                        F.col(gid), F.col("__json").alias(f"__w{i}")))
+                    value = F.col(f"__w{i}")
+                    present = value.isNotNull()
             except Exception as e:  # noqa: BLE001
                 # the reference logs per-widget failures and keeps going
                 # (transformer.py:640-647); match that contract so one bad
@@ -373,20 +426,31 @@ class Pipeline:
                 self.warnings.append(
                     f"widget {g.group_by}.{name} ({w.plugin}): {e}")
                 continue
-            result = result.join(jdf.withColumnRenamed("__json", name),
-                                 gid, "left")
             # zero-occurrence entities: the reference's per-entity loop
             # runs EVERY widget on every taxonomy node and empty frames
             # take the plugins' empty branches — engine aggregates emit
-            # no row there, so coalesce with the config-derived empty
+            # no row there, so fall back to the config-derived empty
             # literal (r13 import-axis find: 'Unknown species' nodes)
-            empty = self._empty_chain_json(dict(w.params)) \
-                if w.plugin == "transform_chain" \
-                else RS.empty_widget_json(w.plugin, dict(w.params))
-            if empty is not None:
-                result = result.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(empty)))
-        out_path = os.path.join(self.warehouse, f"{g.group_by}_results.parquet")
+            if present is not None:
+                empty = self._empty_chain_json(params) \
+                    if w.plugin == "transform_chain" \
+                    else RS.empty_widget_json(w.plugin, params)
+                value = F.when(present, value).otherwise(F.lit(empty))
+            columns.append(value.alias(name))
+
+        result = grouping.select(
+            F.col(gid), *[c.alias(n) for n, c in rows.items()])
+        if only_ids is not None:
+            result = result.where(F.col(gid).isin(list(only_ids)))
+        for j, (src, aggs) in enumerate(source_aggs.items()):
+            agg = tagged[src].groupBy(gid).agg(
+                F.lit(True).alias(f"__in_{j}"),
+                *[c.alias(n) for n, c in aggs.items()])
+            result = result.join(agg, gid, "left")
+        for jdf in frames:
+            result = result.join(jdf, gid, "left")
+        result = result.select(F.col(gid), *columns)
+        out_path = self.group_table(g.group_by)
         if mode == "incremental":
             from niamoto_spark.sources.sinks import upsert_table
 
@@ -457,18 +521,8 @@ class Pipeline:
         if plugin == "transform_chain" and "__cc" in wdf.columns:
             return wdf.select(F.col(gid),
                               F.col("__cc").alias("__json"))
-        if plugin == "statistical_summary":
-            return RS.statistical_summary(wdf, gid, params)
-        if plugin == "binned_distribution":
-            return RS.binned_distribution(wdf, gid, params)
-        if plugin == "categorical_distribution":
-            return RS.categorical_distribution(wdf, gid, params)
-        if plugin == "binary_counter":
-            return RS.binary_counter(wdf, gid, params)
         if plugin == "top_ranking":
             return RS.top_ranking(wdf, gid, params)
-        if plugin == "field_aggregator":
-            return RS.field_aggregator(wdf, gid, params)
         if plugin == "time_series_analysis":
             return RS.time_series_analysis(wdf, gid, params)
         if plugin == "multi_column_extractor":
@@ -610,18 +664,8 @@ class Pipeline:
         JSON joins the chain envelope under its output_key."""
         from niamoto_spark import refshapes as RS
 
-        if plugin == "statistical_summary":
-            return RS.statistical_summary(wdf, gid, params)
-        if plugin == "binned_distribution":
-            return RS.binned_distribution(wdf, gid, params)
-        if plugin == "categorical_distribution":
-            return RS.categorical_distribution(wdf, gid, params)
-        if plugin == "binary_counter":
-            return RS.binary_counter(wdf, gid, params)
         if plugin == "top_ranking":
             return RS.top_ranking(wdf, gid, params)
-        if plugin == "field_aggregator":
-            return RS.field_aggregator(wdf, gid, params)
         if plugin == "time_series_analysis":
             return RS.time_series_analysis(wdf, gid, params)
         if plugin == "multi_column_extractor":
@@ -972,6 +1016,8 @@ class Pipeline:
             # the engine emitting only the tail.
             import json as _json
 
+            from niamoto_spark import refshapes as RS
+
             bindings = dict(tagged)
             binding_params: dict[str, dict] = {}
             shaped: list[tuple[str, DataFrame]] = []
@@ -985,6 +1031,12 @@ class Pipeline:
                         sparams, bindings, binding_params, gid)
                     jf = out.select(F.col(gid),
                                     F.col("__cc").alias("__json"))
+                elif step["plugin"] in RS.FUSED:
+                    k = RS.kernel(step["plugin"], sparams, bindings,
+                                  group_by)
+                    out = _kernel_frame(k, bindings, gid, group_by)
+                    jf = out.select(F.col(gid),
+                                    k.doc(F.col).alias("__json"))
                 else:
                     run_params = dict(sparams)
                     if step["plugin"] == "direct_attribute":
@@ -1014,32 +1066,6 @@ class Pipeline:
         src_name = params.pop("source", None)
         df = tagged.get(src_name) if src_name else None
 
-        if plugin == "field_aggregator":
-            return self._field_aggregator(params["fields"], tagged, gid)
-        if plugin == "statistical_summary":
-            return agg_ops.statistical_summary(
-                df, [gid], params["field"], stats=params.get("stats"),
-                units=params.get("units"),
-                # reference pydantic default (statistical_summary.py:61-70)
-                max_value=params.get("max_value", 100),
-                # python round() half-even, not SQL ROUND (r13 v9 find)
-                rounding="python")
-        if plugin == "binned_distribution":
-            return agg_ops.binned_distribution(
-                df, [gid], params["field"], edges=params["bins"],
-                labels=params.get("labels"),
-                include_percentages=params.get("include_percentages", False))
-        if plugin == "categorical_distribution":
-            return agg_ops.categorical_distribution(
-                df, [gid], params["field"],
-                categories=params.get("categories"),
-                include_percentages=params.get("include_percentages", False))
-        if plugin == "binary_counter":
-            return agg_ops.binary_counter(
-                df, [gid], params["field"],
-                true_label=params.get("true_label", "oui"),
-                false_label=params.get("false_label", "non"),
-                include_percentages=params.get("include_percentages", False))
         if plugin == "top_ranking":
             name_join = None
             field = params["field"]
@@ -1131,57 +1157,6 @@ class Pipeline:
                       .where(F.col("x").isNotNull() & F.col("y").isNotNull()))
         raise ValueError(f"no adapter for widget plugin {plugin!r}")
 
-    def _field_aggregator(self, fields: list[dict], tagged: dict,
-                          gid: str) -> DataFrame:
-        """Per-GROUP field aggregation across sources (the reference runs it
-        per entity row, transformers/aggregation/field_aggregator.py:206-341;
-        here each source contributes one grouped aggregate, joined on gid)."""
-        per_source: dict[str, list[dict]] = {}
-        for spec in fields:
-            per_source.setdefault(spec["source"], []).append(spec)
-        result: DataFrame | None = None
-        for source, specs in per_source.items():
-            src = tagged[source]
-            aggs = []
-            for s in specs:
-                fld, target = s["field"], s["target"]
-                t = s.get("transformation", "direct")
-                if "." in fld and fld.split(".", 1)[0] in src.columns:
-                    root, path = fld.split(".", 1)
-                    c = F.get_json_object(F.col(root), f"$.{path}")
-                else:
-                    c = F.col(fld)
-                if t == "direct":
-                    aggs.append(F.first(c, ignorenulls=True).alias(target))
-                elif t == "count":
-                    aggs.append(F.count(c).alias(target))
-                elif t == "sum":
-                    aggs.append(F.round(F.sum(c.cast("double")), 2).alias(target))
-                elif t == "mean":
-                    aggs.append(F.round(F.avg(c.cast("double")), 2).alias(target))
-                elif t == "min":
-                    aggs.append(F.round(F.min(c.cast("double")), 2).alias(target))
-                elif t == "max":
-                    aggs.append(F.round(F.max(c.cast("double")), 2).alias(target))
-                elif t == "std":
-                    aggs.append(F.round(F.stddev_samp(c.cast("double")), 2)
-                                .alias(target))
-                else:
-                    raise ValueError(f"unsupported transformation {t!r}")
-            piece = src.groupBy(gid).agg(*aggs)
-            result = piece if result is None else result.join(piece, gid, "full")
-        assert result is not None
-        # count over an entity with no source rows is 0 in the reference
-        # (len of the empty frame), not NULL — the cross-source full
-        # join leaves holes for zero-occurrence entities (r13 import
-        # axis: general_info.occurrences_count on 'Unknown species')
-        count_targets = [s["target"] for specs in per_source.values()
-                         for s in specs
-                         if s.get("transformation") == "count"]
-        for t in count_targets:
-            result = result.withColumn(t, F.coalesce(F.col(t), F.lit(0)))
-        return result
-
     def _pack_json(self, wdf: DataFrame, gid: str, name: str,
                    single_row: bool = False) -> DataFrame:
         """One JSON column per widget.  The shape is decided by the widget
@@ -1261,8 +1236,7 @@ class Pipeline:
                           if g.get("group_by") == group_filter]
             for g in groups:
                 group = g["group_by"]
-                path = os.path.join(self.warehouse,
-                                    f"{group}_results.parquet")
+                path = self.group_table(group)
                 if not os.path.exists(path):
                     continue
                 df = self.spark.read.parquet(path)
@@ -1339,14 +1313,12 @@ class Pipeline:
             params = target.get("params", {})
             name = target.get("name", f"{group}_{kind}")
             if kind == "json_api":
-                results = self.spark.read.parquet(
-                    os.path.join(self.warehouse, f"{group}_results.parquet"))
+                results = self.spark.read.parquet(self.group_table(group))
                 out_path = os.path.join(out_dir, group)
                 manifests[name] = export_json_api(
                     results, gid, out_path, **params)
             elif kind == "html":
-                results = self.spark.read.parquet(
-                    os.path.join(self.warehouse, f"{group}_results.parquet"))
+                results = self.spark.read.parquet(self.group_table(group))
                 out_path = os.path.join(out_dir, f"{group}_html")
                 manifests[name] = export_html_site(
                     results, gid, out_path, group_name=group, **params)

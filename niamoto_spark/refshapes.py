@@ -9,9 +9,18 @@ ignoreNullFields=false so explicit nulls survive like the reference's
 json.dumps does.
 
 Rounding parity: the reference rounds with Python round() = HALF_EVEN
-over the double's binary value, so shapers use F.bround (same mode),
-never F.round (HALF_UP) — a 0.005-boundary value would otherwise
-differ by a full cent.
+over the double's binary value, so shapers round with
+``functions.py_round2`` (a JVM expression that matches round(x, 2)
+exactly), never F.round (HALF_UP) or F.bround (half-even on the
+shortest decimal repr) — a 0.005-boundary value would otherwise differ
+by a full cent.
+
+Fused widgets: statistical_summary, binned_distribution,
+categorical_distribution, binary_counter and field_aggregator are plain
+per-entity aggregates.  :func:`kernel` gives each as aggregate
+expressions over its source plus a JSON expression over those
+aggregates, so the pipeline computes every such widget on a source in
+ONE ``groupBy(gid).agg(...)``.
 
 Ordering parity: several reference widgets (series_extractor with
 sort:false) emit values in SOURCE ROW ORDER (pandas groupby
@@ -28,10 +37,12 @@ the whole loaded stats frame per entity.
 from __future__ import annotations
 
 import json as _json
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from niamoto_spark.functions import bin_index, py_round2
 
 JSON_OPTS = {"ignoreNullFields": "false"}
 SRC_ORDER = "__src_order"
@@ -39,9 +50,12 @@ SRC_ORDER = "__src_order"
 CO, CN, CV = "class_object", "class_name", "class_value"
 
 
+def _obj_col(fields: list[Column]) -> Column:
+    return F.to_json(F.struct(*fields), JSON_OPTS)
+
+
 def _obj(df: DataFrame, gid: str, fields: list[Column]) -> DataFrame:
-    return df.select(F.col(gid),
-                     F.to_json(F.struct(*fields), JSON_OPTS).alias("__json"))
+    return df.select(F.col(gid), _obj_col(fields).alias("__json"))
 
 
 # ---------------------------------------------------------------------------
@@ -74,49 +88,32 @@ def _frag_num_array(arr: Column) -> Column:
             .otherwise(F.to_json(arr))
 
 
-def _doc(df: DataFrame, gid: str,
-         frags: list[tuple[str, Column]]) -> DataFrame:
-    """Assemble ``{name: <fragment>, ...}`` from JSON-fragment columns
-    (the fragment-typed counterpart of :func:`_obj`)."""
+def _doc_col(frags: list[tuple[str, Column]]) -> Column:
+    """``{name: <fragment>, ...}`` from JSON-fragment columns (the
+    fragment-typed counterpart of :func:`_obj_col`)."""
     parts: list[Column] = [F.lit("{")]
     for i, (name, frag) in enumerate(frags):
         parts.append(F.lit(("," if i else "") + _json.dumps(name) + ":"))
         parts.append(F.coalesce(frag, F.lit("null")))
     parts.append(F.lit("}"))
-    return df.select(F.col(gid), F.concat(*parts).alias("__json"))
+    return F.concat(*parts)
 
 
-def _py_round2_arr() -> Column:
-    """Arrow-batched EXACT python round(v, 2) over array<double> — see
-    operators/aggregation._python_round2_udf for why neither bround nor
-    numpy matches CPython's correctly-rounded dtoa.  Widget-table
-    emission only (bounded rows per entity group)."""
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    def f(s):
-        return s.apply(lambda arr: arr if arr is None else
-                       [None if pd.isna(v) else float(round(float(v), 2))
-                        for v in arr])
-
-    return pandas_udf(f, "array<double>")
+def _doc(df: DataFrame, gid: str,
+         frags: list[tuple[str, Column]]) -> DataFrame:
+    return df.select(F.col(gid), _doc_col(frags).alias("__json"))
 
 
 def _frag_pct(counts: Column, int_zero_fill: bool) -> Column:
-    """Percentages fragment: round((count/total)*100, 2) with EXACT
-    python rounding when total > 0; the zero-total fill echoes the
-    reference's literal — [0]*n INTS for binned_distribution /
-    multi_column_extractor, [0.0]*n floats for categorical_distribution
-    and friends (their code literally differs)."""
+    """Percentages fragment: python round((count/total)*100, 2) when
+    total > 0; the zero-total fill echoes the reference's literal —
+    [0]*n INTS for binned_distribution / multi_column_extractor,
+    [0.0]*n floats for categorical_distribution and friends (their code
+    literally differs)."""
     total = F.aggregate(counts, F.lit(0.0),
                         lambda acc, x: acc + x.cast("double"))
-    # the pandas UDF is extracted into its own projection, so its input
-    # expression runs even for rows the when() below routes to the
-    # zero-fill — guard the divisor or ANSI mode throws DIVIDE_BY_ZERO
-    safe_total = F.when(total > 0, total).otherwise(F.lit(1.0))
-    pcts = _py_round2_arr()(
-        F.transform(counts,
-                    lambda c: c.cast("double") * 100.0 / safe_total))
+    pcts = F.transform(
+        counts, lambda c: py_round2(c.cast("double") * 100.0 / total))
     zero = "0" if int_zero_fill else "0.0"
     zeros = F.concat(F.lit("["),
                      F.array_join(F.transform(counts,
@@ -217,38 +214,219 @@ def empty_widget_json(plugin: str, p: dict) -> str | None:
 
 
 # ---------------------------------------------------------------------------
-# scalar / per-entity object widgets
+# fused aggregate widgets
 # ---------------------------------------------------------------------------
 
-def statistical_summary(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
-    """{stat: bround(v,2)..., units, max_value}
-    (reference aggregation/statistical_summary.py:181-228)."""
-    stats = p.get("stats") or ["min", "mean", "max"]
-    frags: list[tuple[str, Column]] = [
-        (s, _frag_scalar(F.bround(F.col(s).cast("double"), 2)))
-        for s in stats]
-    frags.append(("units", F.lit(_json.dumps(p.get("units", "")))))
-    if "max_value" in wdf.columns:
-        # operator computed max(round(data_max,2), configured) — display
-        # metadata, never a clip (statistical_summary.py:221-228; r13
-        # config-variant find).  Typing (r13 byte differential): the
-        # reference emits ``data_max if data_max > params.max_value else
-        # params.max_value`` — STRICTLY greater, so the config literal
-        # wins ties and keeps its YAML type (Union[int, float], no
-        # pydantic coercion); only a data-sourced max is always float.
-        # pydantic default 100 (statistical_summary.py:61-70) — the
-        # pipeline passes the same default to the operator
-        conf = p.get("max_value", 100)
-        mv = F.col("max_value").cast("double")
-        frag = F.when(mv > float(conf), _frag_scalar(mv)) \
-                .otherwise(F.lit(_json.dumps(conf)))
-        frags.append(("max_value", frag))
-    else:
-        frags.append(("max_value",
-                      _frag_scalar(F.bround(F.col("max").cast("double"),
-                                            2))))
-    return _doc(wdf, gid, frags)
+class Kernel(NamedTuple):
+    """One widget as expressions the pipeline fuses with its siblings:
+    ``aggs`` maps a source name to ``{name: aggregate}`` over that
+    source's ``groupBy(gid)``; ``rows`` maps ``{name: expression}`` over
+    the grouping table's own row; ``doc(col)`` is the widget JSON, where
+    ``col(name)`` is the column holding that aggregate or row value."""
+    aggs: dict[str, dict[str, Column]]
+    rows: dict[str, Column]
+    doc: Callable[[Callable[[str], Column]], Column]
 
+
+FUSED = {"statistical_summary", "binned_distribution",
+         "categorical_distribution", "binary_counter", "field_aggregator"}
+
+
+def kernel(plugin: str, p: dict, sources: dict[str, DataFrame],
+           row_source: str | None = None) -> Kernel:
+    """The :class:`Kernel` of a FUSED plugin.  ``row_source`` names the
+    grouping table: field_aggregator fields on it are read straight off
+    the entity's row instead of being aggregated."""
+    if plugin == "field_aggregator":
+        return _field_aggregator(p, sources, row_source)
+    src = p.get("source")
+    if src not in sources:
+        raise ValueError(f"source {src!r} is not loaded for this group")
+    build = {"statistical_summary": _statistical_summary,
+             "binned_distribution": _binned_distribution,
+             "categorical_distribution": _categorical_distribution,
+             "binary_counter": _binary_counter}[plugin]
+    aggs, doc = build(p)
+    return Kernel({src: aggs}, {}, doc)
+
+
+_STATS = {"min": F.min, "mean": F.avg, "max": F.max, "median": F.median,
+          "std": F.stddev_samp}
+
+
+def _statistical_summary(p: dict):
+    """{stat: round(v, 2)..., units, max_value}
+    (reference aggregation/statistical_summary.py:152-233): sample std
+    (pandas ddof=1), exact interpolated median."""
+    stats = p.get("stats") or ["min", "mean", "max"]
+    unknown = set(stats) - set(_STATS) - {"count"}
+    if unknown:
+        raise ValueError(f"unknown stats {sorted(unknown)}")
+    c = F.col(p["field"]).cast("double")
+    aggs = {s: F.count(c) if s == "count" else py_round2(_STATS[s](c))
+            for s in stats}
+    aggs["data_max"] = py_round2(F.max(c))
+    conf = p.get("max_value", 100)
+
+    def doc(col):
+        frags = [(s, _frag_scalar(col(s).cast("double"))) for s in stats]
+        frags.append(("units", F.lit(_json.dumps(p.get("units", "")))))
+        # max_value is display metadata, never a clip: the reference
+        # emits ``data_max if data_max > params.max_value else
+        # params.max_value`` (statistical_summary.py:221-228) — STRICTLY
+        # greater, so the config literal wins ties and keeps its YAML
+        # type (Union[int, float], no pydantic coercion); only a
+        # data-sourced max is always float
+        dm = col("data_max")
+        frags.append(("max_value", _frag_scalar(dm) if conf is None else
+                      F.when(dm > float(conf), _frag_scalar(dm))
+                      .otherwise(F.lit(_json.dumps(conf)))))
+        return _doc_col(frags)
+
+    return aggs, doc
+
+
+def _binned_distribution(p: dict):
+    """{bins: edges as floats, counts dense,[ labels][, percentages]}
+    (distribution/binned_distribution.py:210-247): np.histogram bins,
+    one ``count_if`` per bin."""
+    bins = p["bins"]
+    b = bin_index(F.col(p["field"]).cast("double"), bins)
+    aggs = {"counts": F.array(*[F.count_if(b == i)
+                                for i in range(len(bins) - 1)])}
+
+    def doc(col):
+        # bins echo params.bins AFTER pydantic List[float] coercion ->
+        # all floats regardless of YAML typing (byte-verified r13)
+        frags = [("bins", F.lit(_json.dumps([float(x) for x in bins]))),
+                 ("counts", F.to_json(col("counts")))]
+        if p.get("labels"):
+            frags.append(("labels", F.lit(_json.dumps(
+                [str(lb) for lb in p["labels"]], ensure_ascii=False))))
+        if p.get("include_percentages"):
+            # zero-total fill is [0]*n INTS (binned_distribution.py:245)
+            frags.append(("percentages",
+                          _frag_pct(col("counts"), int_zero_fill=True)))
+        return _doc_col(frags)
+
+    return aggs, doc
+
+
+def _categorical_distribution(p: dict):
+    """{categories, counts, labels[, percentages]}
+    (distribution/categorical_distribution.py:197-247) over the
+    declared categories, matched as strings."""
+    cats = p.get("categories")
+    if cats is None:
+        raise ValueError("categorical_distribution needs declared "
+                         "categories")
+    labels = p.get("labels") or [str(c) for c in cats]
+    v = F.col(p["field"]).cast("string")
+    aggs = {"counts": F.array(*[F.count_if(v == F.lit(str(c)))
+                                for c in cats])}
+
+    def doc(col):
+        # categories echo params.categories verbatim (YAML types
+        # preserved — the typed params model leaves the list untouched)
+        frags = [("categories", F.lit(_json.dumps(cats,
+                                                  ensure_ascii=False))),
+                 ("counts", F.to_json(col("counts"))),
+                 ("labels", F.lit(_json.dumps([str(lb) for lb in labels],
+                                              ensure_ascii=False)))]
+        if p.get("include_percentages"):
+            # zero-total fill is [0.0]*n FLOATS
+            # (categorical_distribution.py:246 — the binned plugin's
+            # twin branch literally differs)
+            frags.append(("percentages",
+                          _frag_pct(col("counts"), int_zero_fill=False)))
+        return _doc_col(frags)
+
+    return aggs, doc
+
+
+def _binary_counter(p: dict):
+    """{true_label: n, false_label: m[, *_percent]} counting values
+    that are exactly 1 / 0 (aggregation/binary_counter.py:136-202)."""
+    tl = p.get("true_label", "oui")
+    fl = p.get("false_label", "non")
+    v = F.col(p["field"]).try_cast("int")
+    aggs = {"true": F.count_if(v == 1), "false": F.count_if(v == 0)}
+
+    def doc(col):
+        t, f = col("true"), col("false")
+        fields = [t.alias(tl), f.alias(fl)]
+        if p.get("include_percentages"):
+            total = (t + f).cast("double")
+            fields += [F.when(total > 0, py_round2(n * 100.0 / total))
+                       .otherwise(F.lit(0.0)).alias(f"{label}_percent")
+                       for n, label in ((t, tl), (f, fl))]
+        return _obj_col(fields)
+
+    return aggs, doc
+
+
+_FIELD_AGGS = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
+               "std": F.stddev_samp}
+
+
+def _field_aggregator(p: dict, sources: dict[str, DataFrame],
+                      row_source: str | None) -> Kernel:
+    """{target: {value[, units]}} across sources
+    (aggregation/field_aggregator.py:206-341): ``direct`` is the first
+    non-null value, ``count`` counts non-null values (0 for an entity
+    another source knows), the numeric transformations round to 2dp.
+    JSON dot-paths (``extra_data.key``) read through get_json_object."""
+    aggs: dict[str, dict[str, Column]] = {}
+    rows: dict[str, Column] = {}
+    specs = list(p["fields"])
+    for i, spec in enumerate(specs):
+        src, fld = spec["source"], spec["field"]
+        t = spec.get("transformation", "direct")
+        if t not in _FIELD_AGGS and t not in ("direct", "count"):
+            raise ValueError(f"unsupported transformation {t!r}")
+        if src not in sources:
+            raise ValueError(f"source {src!r} is not loaded for this group")
+        root, _, path = fld.partition(".")
+        c = F.get_json_object(F.col(root), f"$.{path}") \
+            if path and root in sources[src].columns else F.col(fld)
+        if src == row_source:
+            # one grouping row per entity: the aggregate of that row
+            if t == "direct":
+                e = c
+            elif t == "count":
+                e = c.isNotNull().cast("bigint")
+            elif t == "std":
+                e = F.lit(None).cast("double")   # sample std of one value
+            else:
+                e = F.round(c.cast("double"), 2)
+            rows[f"f{i}"] = e
+        else:
+            if t == "direct":
+                e = F.first(c, ignorenulls=True)
+            elif t == "count":
+                e = F.count(c)
+            else:
+                e = F.round(_FIELD_AGGS[t](c.cast("double")), 2)
+            aggs.setdefault(src, {})[f"f{i}"] = e
+
+    def doc(col):
+        fields = []
+        for i, spec in enumerate(specs):
+            v = col(f"f{i}")
+            if spec.get("transformation") == "count":
+                v = F.coalesce(v, F.lit(0))
+            inner = [v.alias("value")]
+            if spec.get("units"):
+                inner.append(F.lit(spec["units"]).alias("units"))
+            fields.append(F.struct(*inner).alias(spec["target"]))
+        return _obj_col(fields)
+
+    return Kernel(aggs, rows, doc)
+
+
+# ---------------------------------------------------------------------------
+# scalar / per-entity object widgets
+# ---------------------------------------------------------------------------
 
 def _rstrip_str(c: Column) -> Column:
     """str(float) with the reference's trailing-zero strip."""
@@ -327,97 +505,6 @@ def direct_attribute(wdf: DataFrame, gid: str, p: dict,
         parts.append(F.lit(',"format":' + _json.dumps(p["format"])))
     parts.append(F.lit("}"))
     return wdf.select(F.col(gid), F.concat(*parts).alias("__json"))
-
-
-def binary_counter(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
-    """{true_label: n, false_label: m[, *_percent]}
-    (aggregation/binary_counter.py:170-195)."""
-    tl = p.get("true_label", "oui")
-    fl = p.get("false_label", "non")
-    t, f = F.col("true_count"), F.col("false_count")
-    total = (t + f).cast("double")
-    fields = [t.alias(tl), f.alias(fl)]
-    if p.get("include_percentages"):
-        from niamoto_spark.operators.aggregation import _python_round2_udf
-        pyr = _python_round2_udf()
-        fields.append(F.when(total > 0, pyr(t * 100.0 / total))
-                      .otherwise(F.lit(0.0)).alias(f"{tl}_percent"))
-        fields.append(F.when(total > 0, pyr(f * 100.0 / total))
-                      .otherwise(F.lit(0.0)).alias(f"{fl}_percent"))
-    return _obj(wdf, gid, fields)
-
-
-def field_aggregator(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
-    """{target: {value[, units]}} — wdf already has one column per
-    target (pipeline._field_aggregator); this wraps each in the
-    reference's envelope (aggregation/field_aggregator.py:325-340)."""
-    fields = []
-    for spec in p["fields"]:
-        target = spec["target"]
-        inner = [F.col(target).alias("value")]
-        if spec.get("units"):
-            inner.append(F.lit(spec["units"]).alias("units"))
-        fields.append(F.struct(*inner).alias(target))
-    return _obj(wdf, gid, fields)
-
-
-# ---------------------------------------------------------------------------
-# dense axis distributions
-# ---------------------------------------------------------------------------
-
-def binned_distribution(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
-    """{bins: edges as floats, counts dense,[ percentages]}
-    (distribution/binned_distribution.py:210-247)."""
-    bins = p["bins"]
-    n = len(bins) - 1
-    m = F.map_from_entries(
-        F.collect_list(F.struct(F.col("bin_index"), F.col("count"))))
-    agg = (wdf.where(F.col("bin_index").isNotNull())
-           .groupBy(gid).agg(m.alias("__m")))
-    counts = F.array(*[F.coalesce(F.col("__m")[F.lit(i)],
-                                  F.lit(0).cast("bigint"))
-                       for i in range(n)])
-    agg = agg.select(F.col(gid), counts.alias("counts"))
-    # bins echo params.bins AFTER pydantic List[float] coercion -> all
-    # floats regardless of YAML typing (byte-verified r13)
-    frags = [("bins", F.lit(_json.dumps([float(b) for b in bins]))),
-             ("counts", F.to_json(F.col("counts")))]
-    if p.get("labels"):
-        frags.append(("labels", F.lit(_json.dumps(
-            [str(lb) for lb in p["labels"]], ensure_ascii=False))))
-    if p.get("include_percentages"):
-        # zero-total fill is [0]*n INTS (binned_distribution.py:245)
-        frags.append(("percentages",
-                      _frag_pct(F.col("counts"), int_zero_fill=True)))
-    return _doc(agg, gid, frags)
-
-
-def categorical_distribution(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
-    """{categories, counts, labels[, percentages]}
-    (distribution/categorical_distribution.py:197-247)."""
-    cats = p["categories"]
-    labels = p.get("labels") or [str(c) for c in cats]
-    m = F.map_from_entries(
-        F.collect_list(F.struct(F.col("category").cast("string"),
-                                F.col("count"))))
-    agg = wdf.groupBy(gid).agg(m.alias("__m"))
-    counts = F.array(*[F.coalesce(F.col("__m")[F.lit(str(c))],
-                                  F.lit(0).cast("bigint"))
-                       for c in cats])
-    agg = agg.select(F.col(gid), counts.alias("counts"))
-    # categories echo params.categories verbatim (YAML types preserved
-    # — the typed params model leaves the list untouched)
-    frags = [("categories", F.lit(_json.dumps(cats, ensure_ascii=False))),
-             ("counts", F.to_json(F.col("counts"))),
-             ("labels", F.lit(_json.dumps([str(lb) for lb in labels],
-                                          ensure_ascii=False)))]
-    if p.get("include_percentages"):
-        # zero-total fill is [0.0]*n FLOATS
-        # (categorical_distribution.py:246 — the binned plugin's twin
-        # branch literally differs)
-        frags.append(("percentages",
-                      _frag_pct(F.col("counts"), int_zero_fill=False)))
-    return _doc(agg, gid, frags)
 
 
 def top_ranking(wdf: DataFrame, gid: str, p: dict) -> DataFrame:

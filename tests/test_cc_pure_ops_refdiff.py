@@ -4,12 +4,21 @@ op in ecological.CC_PURE_OPS runs against the REFERENCE'S OWN method
 bit-level equality of the JSON-serialized result — stronger than shape
 tests, and independent of the pipeline plumbing the grid exercises."""
 
+import inspect
 import json
+import os
 
 import numpy as np
 import pytest
 
 from niamoto_spark.operators.ecological import CC_PURE_OPS, cc_pure_op
+from tools.refdiff import shims
+
+# the reference checkout the shims put on sys.path
+_REFERENCE = inspect.signature(shims.install).parameters[
+    "reference_src"].default
+pytestmark = pytest.mark.skipif(not os.path.isdir(_REFERENCE),
+                                reason="reference tree not mounted")
 
 
 @pytest.fixture(scope="module")

@@ -28,12 +28,19 @@ def test_stat_summary_max_value_type_echo(spark):
     """max_value: config literal (YAML type, Union[int,float] — no
     pydantic coercion) unless round(data_max, 2) is STRICTLY greater,
     which emits the float data max (statistical_summary.py:221-228)."""
-    wdf = spark.createDataFrame(
-        pd.DataFrame({"gid": [1, 2, 3],
-                      "max": [38.5, 40.0, 45.25],
-                      "max_value": [40.0, 40.0, 45.25]}))
-    out = _docs(RS.statistical_summary(
-        wdf, "gid", {"stats": ["max"], "max_value": 40}))
+    df = spark.createDataFrame(
+        pd.DataFrame({"gid": [1, 1, 2, 3, 3],
+                      "v": [38.5, 10.0, 40.0, 45.25, 1.0]}))
+
+    def docs(max_value):
+        k = RS.kernel("statistical_summary",
+                      {"source": "s", "field": "v", "stats": ["max"],
+                       "max_value": max_value}, {"s": df})
+        agg = df.groupBy("gid").agg(
+            *[c.alias(n) for n, c in k.aggs["s"].items()])
+        return _docs(agg.select("gid", k.doc(F.col).alias("__json")))
+
+    out = docs(40)
     # data below the cap AND data == cap -> config int echo
     assert out[1]["max_value"] == 40 and \
         isinstance(out[1]["max_value"], int)
@@ -44,8 +51,7 @@ def test_stat_summary_max_value_type_echo(spark):
         isinstance(out[3]["max_value"], float)
 
     # a float-typed YAML cap echoes as float even when it wins
-    out_f = _docs(RS.statistical_summary(
-        wdf, "gid", {"stats": ["max"], "max_value": 40.0}))
+    out_f = docs(40.0)
     assert isinstance(out_f[1]["max_value"], float)
 
 
