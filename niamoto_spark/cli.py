@@ -53,11 +53,15 @@ def cmd_transform(args) -> int:
     results = pipe.run_transform(cfg, group_by=args.group)
     for w in pipe.warnings:
         print(f"warning: {w}", file=sys.stderr)
-    # count the group tables just written (parquet footers), not the
-    # group plans, which would run the whole transform a second time
-    read = pipe.spark.read.parquet
-    print(json.dumps({g: read(pipe.group_table(g)).count()
-                      for g in results}))
+    # count the group tables just written from their parquet footers:
+    # no Spark job, and never the group plans, which would run the whole
+    # transform a second time
+    import pyarrow.parquet as pq
+
+    print(json.dumps({
+        g: sum(pq.read_metadata(f).num_rows
+               for f in pq.ParquetDataset(pipe.group_table(g)).files)
+        for g in results}))
     return 0
 
 

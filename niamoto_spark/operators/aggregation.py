@@ -270,6 +270,10 @@ def top_ranking(df: DataFrame, group_cols: Sequence[str], field: str,
     partial TopK under the window (WindowGroupLimit) so no full sort of the
     aggregate output happens.
     """
+    if weight_col is not None and agg != "count":
+        raise ValueError(
+            f"top_ranking: weight_col applies to agg='count' only, "
+            f"got agg={agg!r}")
     if agg == "count":
         # weight_col: pre-aggregated callers (hierarchical_top_ranking)
         # hand in per-row counts; sum(bigint) == count of the un-collapsed

@@ -24,11 +24,13 @@ from __future__ import annotations
 
 import operator
 import os
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from functools import reduce
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from niamoto_spark.catalog import Entity, EntityKind, EntityLink, EntityRegistry
 from niamoto_spark.config import (ImportConfig, TransformGroupConfig,
@@ -117,6 +119,51 @@ class Pipeline:
         """Path of a group's result table (the transform's output)."""
         return os.path.join(self.warehouse, f"{group}_results.parquet")
 
+    def _concurrently(self, units: list, fn: Callable,
+                      needs: Callable[[int], list[int]] = lambda i: [],
+                      done: Callable[[int, Any], None] = lambda i, r: None
+                      ) -> list:
+        """``fn(unit)`` for every unit on a pool of one thread per core,
+        all sharing the session; returns the results in input order.
+
+        Unit ``i`` is submitted once the earlier units ``needs(i)`` have
+        finished, and never starts if one of them failed.  ``done(i,
+        result)`` runs on this thread as each unit finishes, before any
+        unit that needs it is submitted.  Each unit keeps this thread's
+        job group and tags.  After every unit has finished, the first
+        exception in input order is raised."""
+        results: list = [None] * len(units)
+        errors: list[Exception | None] = [None] * len(units)
+        waiting, running, finished = list(range(len(units))), {}, set()
+        size = min(len(units), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max(size, 1)) as pool:
+            while waiting or running:
+                for i in [i for i in waiting if finished >= set(needs(i))]:
+                    waiting.remove(i)
+                    failed = next((errors[j] for j in needs(i)
+                                   if errors[j] is not None), None)
+                    if failed is not None:
+                        errors[i] = failed
+                        finished.add(i)
+                        continue
+                    unit = inheritable_thread_target(self.spark)(fn)
+                    running[pool.submit(unit, units[i])] = i
+                if not running:
+                    continue
+                over, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in over:
+                    i = running.pop(fut)
+                    try:
+                        results[i] = fut.result()
+                        done(i, results[i])
+                    except Exception as e:  # noqa: BLE001
+                        errors[i] = e
+                    finished.add(i)
+        first = next((e for e in errors if e is not None), None)
+        if first is not None:
+            raise first
+        return results
+
     # ------------------------------------------------------------------
     # import phase
     # ------------------------------------------------------------------
@@ -133,84 +180,97 @@ class Pipeline:
                 for lay in (meta.get("layers") or cfg.get("layers") or [])
                 if isinstance(lay, dict) and lay.get("name")}
             cfg = validate_import_config(cfg)
-        kind_map = {"datasets": EntityKind.DATASET,
-                    "references": EntityKind.REFERENCE,
-                    "spatial": EntityKind.SPATIAL}
         # file connectors first, derived ones after (they read datasets)
-        ordered: list[tuple[str, str, Any]] = []
+        units: list[tuple[str, str, Any]] = []
         for section, entities in cfg.entities.items():
             for name, spec in entities.items():
-                ordered.append((section, name, spec))
-        ordered.sort(key=lambda t: t[2].connector.type == "derived")
+                units.append((section, name, spec))
+        units.sort(key=lambda t: t[2].connector.type == "derived")
 
-        for section, name, spec in ordered:
-            kind = kind_map.get(section, EntityKind.DATASET)
-            conn = spec.connector
-            if conn.type == "derived":
-                src = self.registry.load(
-                    self.spark, conn.dataset or conn.source)
-                ex = conn.extraction or {}
-                raw_levels = ex.get("levels") or conn.levels or []
-                if raw_levels and isinstance(raw_levels[0], dict):
-                    level_names = [lv["name"] for lv in raw_levels]
-                    level_cols = [lv.get("column") or lv["name"]
-                                  for lv in raw_levels]
-                else:
-                    level_names = list(raw_levels)
-                    level_cols = list(raw_levels)
-                df = derive_hierarchy(
-                    src, level_names, level_columns=level_cols,
-                    id_strategy=ex.get("id_strategy", "sequence"),
-                    id_column=ex.get("id_column"),
-                    name_column=ex.get("name_column"),
-                    entity_name=name,
-                    incomplete_rows=ex.get("incomplete_rows", "skip"))
-                # the reference importer adds an (empty) extra_data JSON
-                # column to derived references (engine.py:335-337)
-                df = df.withColumn("extra_data",
-                                   F.lit(None).cast("string"))
-            elif conn.type == "file_multi_feature" and conn.sources:
-                from niamoto_spark.sources.vector import import_multi_feature
-                id_field = spec.schema_.id_field or "id"
-                df = import_multi_feature(
-                    self.spark,
-                    [(s["name"],
-                      s["path"] if os.path.isabs(s.get("path", ""))
-                      else os.path.join(base_dir, s.get("path", "")))
-                     for s in conn.sources],
-                    id_field=id_field,
-                    name_fields=[s.get("name_field", "name")
-                                 for s in conn.sources])
-                # engine.py:484-486: multi-feature rows carry extra_data
-                df = df.withColumn("extra_data",
-                                   F.lit(None).cast("string"))
-            elif conn.type in ("file", "file_multi_feature"):
-                path = conn.path if os.path.isabs(conn.path or "") \
-                    else os.path.join(base_dir, conn.path or "")
-                fmt = conn.format or os.path.splitext(path)[1].lstrip(".")
-                if fmt == "csv":
-                    df = read_csv_auto(self.spark, path)
-                elif fmt == "parquet":
-                    df = self.spark.read.parquet(path)
-                elif fmt in ("geojson", "json", "shp", "gpkg"):
-                    from niamoto_spark.sources.files import read_vector
-                    df = read_vector(self.spark, path)
-                else:
-                    raise ValueError(f"unsupported import format {fmt!r}")
-            else:
-                raise ValueError(f"unsupported connector type {conn.type!r}")
+        def reads(i: int) -> list[int]:
+            conn = units[i][2].connector
+            if conn.type != "derived":
+                return []
+            src = conn.dataset or conn.source
+            return [j for j in range(i) if units[j][1] == src]
 
-            out_path = os.path.join(self.warehouse, f"{name}.parquet")
-            overwrite_table(df, out_path)
-            id_field = spec.schema_.id_field or (
-                "id" if "id" in df.columns else df.columns[0])
-            self.registry.add(Entity(
-                name=name, kind=kind, path=out_path, id_field=id_field,
-                links=[EntityLink(field=l.field, references=l.entity,
-                                  ref_field=l.target_field)
-                       for l in spec.links]))
+        self._concurrently(
+            units, lambda u: self._import_entity(*u, base_dir=base_dir),
+            needs=reads, done=lambda _, entity: self.registry.add(entity))
         self.registry.save(os.path.join(self.warehouse, "registry.json"))
         return self.registry
+
+    def _import_entity(self, section: str, name: str, spec: Any,
+                       base_dir: str) -> Entity:
+        """Write one import entity's table; returns its registry entry."""
+        kind = {"datasets": EntityKind.DATASET,
+                "references": EntityKind.REFERENCE,
+                "spatial": EntityKind.SPATIAL}.get(section,
+                                                   EntityKind.DATASET)
+        conn = spec.connector
+        if conn.type == "derived":
+            src = self.registry.load(
+                self.spark, conn.dataset or conn.source)
+            ex = conn.extraction or {}
+            raw_levels = ex.get("levels") or conn.levels or []
+            if raw_levels and isinstance(raw_levels[0], dict):
+                level_names = [lv["name"] for lv in raw_levels]
+                level_cols = [lv.get("column") or lv["name"]
+                              for lv in raw_levels]
+            else:
+                level_names = list(raw_levels)
+                level_cols = list(raw_levels)
+            df = derive_hierarchy(
+                src, level_names, level_columns=level_cols,
+                id_strategy=ex.get("id_strategy", "sequence"),
+                id_column=ex.get("id_column"),
+                name_column=ex.get("name_column"),
+                entity_name=name,
+                incomplete_rows=ex.get("incomplete_rows", "skip"))
+            # the reference importer adds an (empty) extra_data JSON
+            # column to derived references (engine.py:335-337)
+            df = df.withColumn("extra_data",
+                               F.lit(None).cast("string"))
+        elif conn.type == "file_multi_feature" and conn.sources:
+            from niamoto_spark.sources.vector import import_multi_feature
+            id_field = spec.schema_.id_field or "id"
+            df = import_multi_feature(
+                self.spark,
+                [(s["name"],
+                  s["path"] if os.path.isabs(s.get("path", ""))
+                  else os.path.join(base_dir, s.get("path", "")))
+                 for s in conn.sources],
+                id_field=id_field,
+                name_fields=[s.get("name_field", "name")
+                             for s in conn.sources])
+            # engine.py:484-486: multi-feature rows carry extra_data
+            df = df.withColumn("extra_data",
+                               F.lit(None).cast("string"))
+        elif conn.type in ("file", "file_multi_feature"):
+            path = conn.path if os.path.isabs(conn.path or "") \
+                else os.path.join(base_dir, conn.path or "")
+            fmt = conn.format or os.path.splitext(path)[1].lstrip(".")
+            if fmt == "csv":
+                df = read_csv_auto(self.spark, path)
+            elif fmt == "parquet":
+                df = self.spark.read.parquet(path)
+            elif fmt in ("geojson", "json", "shp", "gpkg"):
+                from niamoto_spark.sources.files import read_vector
+                df = read_vector(self.spark, path)
+            else:
+                raise ValueError(f"unsupported import format {fmt!r}")
+        else:
+            raise ValueError(f"unsupported connector type {conn.type!r}")
+
+        out_path = os.path.join(self.warehouse, f"{name}.parquet")
+        overwrite_table(df, out_path)
+        id_field = spec.schema_.id_field or (
+            "id" if "id" in df.columns else df.columns[0])
+        return Entity(
+            name=name, kind=kind, path=out_path, id_field=id_field,
+            links=[EntityLink(field=l.field, references=l.entity,
+                              ref_field=l.target_field)
+                   for l in spec.links])
 
     # ------------------------------------------------------------------
     # transform phase
@@ -229,12 +289,14 @@ class Pipeline:
         resolves them against the project root, stats_loader.py:117)."""
         if base_dir:
             self.base_dir = base_dir
-        groups = validate_transform_config(cfg)
+        groups = [g for g in validate_transform_config(cfg)
+                  if not group_by or g.group_by == group_by]
+        outs = self._concurrently(
+            groups, lambda g: self._transform_group(g, mode, only_ids))
         results: dict[str, DataFrame] = {}
-        for g in groups:
-            if group_by and g.group_by != group_by:
-                continue
-            results[g.group_by] = self._transform_group(g, mode, only_ids)
+        for g, (result, warnings) in zip(groups, outs):
+            results[g.group_by] = result
+            self.warnings.extend(warnings)
         return results
 
     def _load_source_data(self, data: str) -> DataFrame:
@@ -267,7 +329,10 @@ class Pipeline:
 
     def _transform_group(self, g: TransformGroupConfig,
                          mode: str = "replace",
-                         only_ids: list | None = None) -> DataFrame:
+                         only_ids: list | None = None
+                         ) -> tuple[DataFrame, list[str]]:
+        """Write one group's table; returns its plan and the warnings of
+        the widgets that failed."""
         grouping_entity = self.registry.get(g.group_by)
         grouping = self.registry.load(self.spark, g.group_by)
         gid = grouping_entity.id_field
@@ -390,6 +455,7 @@ class Pipeline:
         source_aggs: dict[str, dict[str, Column]] = {}
         frames: list[DataFrame] = []
         columns: list[Column] = []
+        warnings: list[str] = []
         for i, (name, w) in enumerate(g.widgets_data.items()):
             params = dict(w.params)
             try:
@@ -423,7 +489,7 @@ class Pipeline:
                 # the reference logs per-widget failures and keeps going
                 # (transformer.py:640-647); match that contract so one bad
                 # widget config cannot sink the whole group
-                self.warnings.append(
+                warnings.append(
                     f"widget {g.group_by}.{name} ({w.plugin}): {e}")
                 continue
             # zero-occurrence entities: the reference's per-entity loop
@@ -457,7 +523,7 @@ class Pipeline:
             upsert_table(self.spark, result, out_path, gid)
         else:
             overwrite_table(result, out_path)
-        return result
+        return result, warnings
 
     def _widget_json(self, plugin: str, params: dict, tagged: dict,
                      group_by: str, gid: str,
@@ -1198,8 +1264,6 @@ class Pipeline:
         with ``enabled: false`` (json_api_exporter.py:328-333) — other
         groups' previously-exported files stay stale on disk, the same
         retention contract as the incremental transform upsert."""
-        from niamoto_spark.exporters.json_api import export_json_api_target
-
         targets = cfg.get("exports", [])
         if target_name:
             # reference exporter.py:151-156: filtering to an unknown
@@ -1208,71 +1272,70 @@ class Pipeline:
             if not targets:
                 raise ValueError(
                     f"export target {target_name!r} not found")
-        manifests: dict[str, Any] = {}
-        for target in targets:
-            name = target.get("name", "?")
-            if not target.get("enabled", True):
-                manifests[name] = {"status": "skipped", "reason": "disabled"}
-                continue
-            if target.get("exporter") != "json_api_exporter" or \
-                    target.get("params", {}).get("transformer_plugin"):
-                manifests[name] = {"status": "skipped",
-                                   "reason": f"exporter "
-                                   f"{target.get('exporter')!r} not run "
-                                   "in this dialect"}
-                continue
-            params = target.get("params", {})
-            target_out = params.get("output_dir", "exports/api")
-            if not os.path.isabs(target_out):
-                target_out = os.path.join(out_dir, target_out)
-            results = []
-            unsupported = None
-            # reference json_api_exporter.py:328-333: disabled groups
-            # are dropped first, then the group_filter applies
-            groups = [g for g in target.get("groups", [])
-                      if g.get("enabled", True)]
-            if group_filter:
-                groups = [g for g in groups
-                          if g.get("group_by") == group_filter]
-            for g in groups:
-                group = g["group_by"]
-                path = self.group_table(group)
-                if not os.path.exists(path):
-                    continue
-                df = self.spark.read.parquet(path)
-                gid = self.registry.get(group).id_field \
-                    if group in self.registry.names() else df.columns[0]
-                # the reference group table's id column is {group}_id
-                df = df.withColumnRenamed(gid, f"{group}_id")
-                tplugin = g.get("transformer_plugin")
-                if tplugin == "niamoto_to_dwc_occurrence":
-                    from niamoto_spark.exporters.dwc_json import \
-                        export_dwc_occurrence_target
+        names = [t.get("name", "?") for t in targets]
+        return dict(zip(names, self._concurrently(
+            targets, lambda t: self._export_reference_target(
+                t, out_dir, group_filter))))
 
-                    tp = g.get("transformer_params", {})
-                    occ = self.registry.load(
-                        self.spark, tp.get("occurrence_table",
-                                           "occurrences"))
-                    tax_name = tp.get("taxonomy_entity", group)
-                    taxonomy = self.registry.load(self.spark, tax_name) \
-                        if tax_name in self.registry.names() else None
-                    results.append(export_dwc_occurrence_target(
-                        df, occ, group, target_out, params, g,
-                        taxonomy=taxonomy))
-                elif tplugin:
-                    unsupported = (f"transformer_plugin {tplugin!r} "
-                                   "not supported in this dialect")
-                    break
-                else:
-                    results.append(export_json_api_target(
-                        df, group, target_out, params, g,
-                        strict_parity=self.strict_parity))
-            if unsupported:
-                manifests[name] = {"status": "skipped",
-                                   "reason": unsupported}
+    def _export_reference_target(self, target: dict, out_dir: str,
+                                 group_filter: str | None) -> dict:
+        """One export.yml target of the reference dialect; returns its
+        manifest."""
+        from niamoto_spark.exporters.json_api import export_json_api_target
+
+        if not target.get("enabled", True):
+            return {"status": "skipped", "reason": "disabled"}
+        if target.get("exporter") != "json_api_exporter" or \
+                target.get("params", {}).get("transformer_plugin"):
+            return {"status": "skipped",
+                    "reason": f"exporter {target.get('exporter')!r} not "
+                    "run in this dialect"}
+        params = target.get("params", {})
+        target_out = params.get("output_dir", "exports/api")
+        if not os.path.isabs(target_out):
+            target_out = os.path.join(out_dir, target_out)
+        results = []
+        # reference json_api_exporter.py:328-333: disabled groups
+        # are dropped first, then the group_filter applies
+        groups = [g for g in target.get("groups", [])
+                  if g.get("enabled", True)]
+        if group_filter:
+            groups = [g for g in groups
+                      if g.get("group_by") == group_filter]
+        for g in groups:
+            group = g["group_by"]
+            path = self.group_table(group)
+            if not os.path.exists(path):
+                continue
+            df = self.spark.read.parquet(path)
+            gid = self.registry.get(group).id_field \
+                if group in self.registry.names() else df.columns[0]
+            # the reference group table's id column is {group}_id
+            df = df.withColumnRenamed(gid, f"{group}_id")
+            tplugin = g.get("transformer_plugin")
+            if tplugin == "niamoto_to_dwc_occurrence":
+                from niamoto_spark.exporters.dwc_json import \
+                    export_dwc_occurrence_target
+
+                tp = g.get("transformer_params", {})
+                occ = self.registry.load(
+                    self.spark, tp.get("occurrence_table",
+                                       "occurrences"))
+                tax_name = tp.get("taxonomy_entity", group)
+                taxonomy = self.registry.load(self.spark, tax_name) \
+                    if tax_name in self.registry.names() else None
+                results.append(export_dwc_occurrence_target(
+                    df, occ, group, target_out, params, g,
+                    taxonomy=taxonomy))
+            elif tplugin:
+                return {"status": "skipped",
+                        "reason": f"transformer_plugin {tplugin!r} "
+                        "not supported in this dialect"}
             else:
-                manifests[name] = {"status": "success", "groups": results}
-        return manifests
+                results.append(export_json_api_target(
+                    df, group, target_out, params, g,
+                    strict_parity=self.strict_parity))
+        return {"status": "success", "groups": results}
 
     def run_export(self, cfg: dict, out_dir: str,
                    group_filter: str | None = None,
@@ -1287,11 +1350,6 @@ class Pipeline:
         the reference CLI's two partial-export filters
         (exporter.py:run_export; unknown target raises, matching the
         reference's ConfigurationError)."""
-        from niamoto_spark.exporters.dwc import to_dwc_occurrence
-        from niamoto_spark.exporters.dwc_archive import export_dwc_archive
-        from niamoto_spark.exporters.html_site import export_html_site
-        from niamoto_spark.exporters.json_api import export_json_api
-
         if "exports" in cfg:          # the reference's export.yml dialect
             return self._run_export_reference(cfg, out_dir, group_filter,
                                               target_name)
@@ -1302,41 +1360,53 @@ class Pipeline:
             if not targets:
                 raise ValueError(
                     f"export target {target_name!r} not found")
-        manifests = {}
-        for target in targets:
-            group = target["group"]
-            if group_filter and group != group_filter:
-                continue
-            gid = self.registry.get(group).id_field \
-                if group in self.registry.names() else "id"
-            kind = target.get("exporter", "json_api")
-            params = target.get("params", {})
-            name = target.get("name", f"{group}_{kind}")
-            if kind == "json_api":
-                results = self.spark.read.parquet(self.group_table(group))
-                out_path = os.path.join(out_dir, group)
-                manifests[name] = export_json_api(
-                    results, gid, out_path, **params)
-            elif kind == "html":
-                results = self.spark.read.parquet(self.group_table(group))
-                out_path = os.path.join(out_dir, f"{group}_html")
-                manifests[name] = export_html_site(
-                    results, gid, out_path, group_name=group, **params)
-            elif kind == "dwc_archive":
-                src = self.registry.load(self.spark, target["source"])
-                projected = to_dwc_occurrence(src, params["mapping"])
-                out_path = os.path.join(out_dir, f"{name}.zip")
-                manifests[name] = export_dwc_archive(projected, out_path)
-            else:
-                raise ValueError(f"unknown exporter {kind!r}")
-            if target.get("deploy"):
-                from niamoto_spark.deployers import run_deploy
+        if group_filter:
+            targets = [t for t in targets if t["group"] == group_filter]
+        names = [t.get("name", f"{t['group']}_"
+                             f"{t.get('exporter', 'json_api')}")
+                 for t in targets]
+        return dict(zip(names, self._concurrently(
+            list(zip(targets, names)),
+            lambda u: self._export_target(*u, out_dir))))
 
-                if not os.path.isdir(out_path):
-                    raise ValueError(
-                        f"deploy target {name!r}: deployers publish a "
-                        f"directory tree, got file {out_path!r}")
-                manifests[name] = dict(manifests[name] or {})
-                manifests[name]["deployed"] = run_deploy(
-                    out_path, target["deploy"], project_name=name)
-        return manifests
+    def _export_target(self, target: dict, name: str,
+                       out_dir: str) -> dict:
+        """One target of the ``targets:`` dialect; returns its
+        manifest."""
+        from niamoto_spark.exporters.dwc import to_dwc_occurrence
+        from niamoto_spark.exporters.dwc_archive import export_dwc_archive
+        from niamoto_spark.exporters.html_site import export_html_site
+        from niamoto_spark.exporters.json_api import export_json_api
+
+        group = target["group"]
+        gid = self.registry.get(group).id_field \
+            if group in self.registry.names() else "id"
+        kind = target.get("exporter", "json_api")
+        params = target.get("params", {})
+        if kind == "json_api":
+            results = self.spark.read.parquet(self.group_table(group))
+            out_path = os.path.join(out_dir, group)
+            manifest = export_json_api(results, gid, out_path, **params)
+        elif kind == "html":
+            results = self.spark.read.parquet(self.group_table(group))
+            out_path = os.path.join(out_dir, f"{group}_html")
+            manifest = export_html_site(
+                results, gid, out_path, group_name=group, **params)
+        elif kind == "dwc_archive":
+            src = self.registry.load(self.spark, target["source"])
+            projected = to_dwc_occurrence(src, params["mapping"])
+            out_path = os.path.join(out_dir, f"{name}.zip")
+            manifest = export_dwc_archive(projected, out_path)
+        else:
+            raise ValueError(f"unknown exporter {kind!r}")
+        if target.get("deploy"):
+            from niamoto_spark.deployers import run_deploy
+
+            if not os.path.isdir(out_path):
+                raise ValueError(
+                    f"deploy target {name!r}: deployers publish a "
+                    f"directory tree, got file {out_path!r}")
+            manifest = dict(manifest or {})
+            manifest["deployed"] = run_deploy(
+                out_path, target["deploy"], project_name=name)
+        return manifest

@@ -38,6 +38,15 @@ _DEFAULTS = {
 }
 
 
+def driver_memory(total_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: a quarter of the host's memory
+    (``total_bytes``, default the physical memory) in whole GiB, at least
+    1g — the host may be shared, and concurrent plans share this heap."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total_bytes // (4 << 30))}g"
+
+
 def get_spark(app_name: str = "niamoto_spark", master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
@@ -54,7 +63,8 @@ def get_spark(app_name: str = "niamoto_spark", master: str | None = None,
     conf["spark.sql.shuffle.partitions"] = cpus
     # Single-JVM local mode: driver memory is the only pool.  Leave headroom
     # for the OS; on a real cluster the executor memory flags take over.
-    conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+    conf.setdefault("spark.driver.memory",
+                    os.environ.get("SPARK_DRIVER_MEM") or driver_memory())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -97,6 +97,15 @@ def test_top_ranking_deterministic_ties(spark):
         [("a", 2, 1), ("b", 2, 2)]
 
 
+@pytest.mark.parametrize("how", ["sum", "avg"])
+def test_top_ranking_rejects_weight_with_value_agg(spark, how):
+    df = spark.createDataFrame(pd.DataFrame({"f": ["a"], "v": [1.0],
+                                             "w": [3]}))
+    with pytest.raises(ValueError, match="weight_col"):
+        agg.top_ranking(df, [], "f", agg=how, value_field="v",
+                        weight_col="w")
+
+
 def test_top_ranking_name_enrichment(spark):
     df = spark.createDataFrame(pd.DataFrame({"tid": [1, 1, 2]}))
     names = spark.createDataFrame(
