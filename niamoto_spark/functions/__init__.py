@@ -84,10 +84,6 @@ def _est_scan(df) -> tuple[int, int | None]:
     return df.rdd.getNumPartitions(), None
 
 
-def _est_partitions(df) -> int:
-    return _est_scan(df)[0]
-
-
 def _est_logical_bytes(df) -> int | None:
     """Catalyst's optimized-plan ``stats().sizeInBytes`` — the
     union-aware complement to ``_est_scan``.  The file listing DEDUPS
@@ -101,12 +97,6 @@ def _est_logical_bytes(df) -> int | None:
                    .stats().sizeInBytes())
     except Exception:
         return None
-
-
-def round2(col: Column | str) -> Column:
-    """The reference rounds every float output to 2 decimals (e.g.
-    statistical_summary.py:188-216)."""
-    return F.round(F.col(col) if isinstance(col, str) else col, 2)
 
 
 def bin_index(col: Column, edges: Sequence[float]) -> Column:
@@ -141,14 +131,6 @@ def py_round2(col: Column) -> Column:
     return F.when(special, col).otherwise(
         F.call_function("format_number", col, F.lit("0.00"))
         .cast("double"))
-
-
-def shannon_entropy_from_counts(count_col: Column, total_col: Column) -> Column:
-    """Per-row term of Shannon entropy H = -sum(p * log2 p) over a counts
-    table; zeros contribute nothing (reference custom_calculator.py:712-763
-    normalizes to probabilities, uses log2, ignores zeros)."""
-    p = count_col.cast("double") / total_col.cast("double")
-    return F.when(count_col > 0, -p * F.log2(p)).otherwise(F.lit(0.0))
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:

@@ -90,17 +90,3 @@ def cluster_representatives(df: DataFrame, pairs: DataFrame, id_col: str,
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.max(F.when(F.col("__rk") == 1,
                               F.col("node_id"))).alias("kept_id")))
-
-
-def dedup_keep_best(df: DataFrame, pairs: DataFrame, id_col: str,
-                    score_col: str, id_a: str = "id_a",
-                    id_b: str = "id_b") -> DataFrame:
-    """Corpus with each duplicate cluster reduced to its best-scoring
-    member (plus all never-duplicated rows)."""
-    comps = connected_components(pairs, id_a, id_b)
-    reps = cluster_representatives(df, pairs, id_col, score_col,
-                                   id_a, id_b, comps=comps)
-    losers = (comps.join(reps.select(F.col("kept_id").alias("node_id")),
-                         "node_id", "left_anti")
-              .select(F.col("node_id").alias(id_col)))
-    return df.join(losers, id_col, "left_anti")

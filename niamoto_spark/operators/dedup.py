@@ -18,7 +18,7 @@ Scale design
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from niamoto_spark.functions import fan_out, word_shingles
@@ -377,16 +377,11 @@ def _lsh_pairs_by_join(sig: DataFrame, num_hashes: int, bands: int,
                .groupBy("band", "band_hash")
                .agg(F.count(F.lit(1)).alias("__bn"))
                .where(F.col("__bn") > max_bucket_size))
-        try:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            hot = hot.observe(
-                obs, F.coalesce(F.sum("__bn"), F.lit(0))
-                .alias("dropped_rows"))
-            _log_dropped_async(obs, max_bucket_size)
-        except ImportError:
-            pass
+        obs = Observation()
+        hot = hot.observe(
+            obs, F.coalesce(F.sum("__bn"), F.lit(0))
+            .alias("dropped_rows"))
+        _log_dropped_async(obs, max_bucket_size)
         banded_ids = banded_ids.join(F.broadcast(hot.drop("__bn")),
                                      ["band", "band_hash"], "left_anti")
     buckets = (banded_ids.groupBy("band", "band_hash")
@@ -606,16 +601,11 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
                    .groupBy("band", "band_hash")
                    .agg(F.count(F.lit(1)).alias("__bn"))
                    .where(F.col("__bn") > max_bucket_size))
-            try:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                hot = hot.observe(
-                    obs, F.coalesce(F.sum("__bn"), F.lit(0))
-                    .alias("dropped_rows"))
-                _log_dropped_async(obs, max_bucket_size)
-            except ImportError:
-                pass
+            obs = Observation()
+            hot = hot.observe(
+                obs, F.coalesce(F.sum("__bn"), F.lit(0))
+                .alias("dropped_rows"))
+            _log_dropped_async(obs, max_bucket_size)
             banded = banded.join(F.broadcast(hot.drop("__bn")),
                                  ["band", "band_hash"], "left_anti")
     # Candidate pairs by bucket GROUPING, not a self-join: collect each
@@ -630,17 +620,12 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
                .agg(F.collect_list(F.struct(F.col("doc_id"),
                                             F.col("sig"))).alias("ms")))
     if inline_cap:
-        try:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            buckets = buckets.observe(
-                obs, F.coalesce(F.sum(F.when(
-                    F.size("ms") > max_bucket_size, F.size("ms"))),
-                    F.lit(0)).alias("dropped_rows"))
-            _log_dropped_async(obs, max_bucket_size)
-        except ImportError:
-            pass
+        obs = Observation()
+        buckets = buckets.observe(
+            obs, F.coalesce(F.sum(F.when(
+                F.size("ms") > max_bucket_size, F.size("ms"))),
+                F.lit(0)).alias("dropped_rows"))
+        _log_dropped_async(obs, max_bucket_size)
         buckets = buckets.where(F.size("ms") <= max_bucket_size)
     # Pair enumeration as ONE parsed SQL expression (same resolved tree
     # as the previous Python-API HOF construction — identical functions,
@@ -765,17 +750,12 @@ def hamming_near_pairs(hashes: DataFrame, id_col: str, hash_col: str,
                .groupBy("chunk_idx", "chunk_val")
                .agg(F.count(F.lit(1)).alias("__bn"))
                .where(F.col("__bn") > max_bucket_size))
-        try:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            hot = hot.observe(
-                obs, F.coalesce(F.sum("__bn"), F.lit(0))
-                .alias("dropped_rows"))
-            _log_dropped_async(obs, max_bucket_size,
-                               label="hamming_near_pairs")
-        except ImportError:
-            pass
+        obs = Observation()
+        hot = hot.observe(
+            obs, F.coalesce(F.sum("__bn"), F.lit(0))
+            .alias("dropped_rows"))
+        _log_dropped_async(obs, max_bucket_size,
+                           label="hamming_near_pairs")
         chunks = chunks.join(F.broadcast(hot.drop("__bn")),
                              ["chunk_idx", "chunk_val"], "left_anti")
     a = chunks.select(F.col("doc_id").alias("id_a"), F.col("__h").alias("h_a"),
@@ -951,19 +931,6 @@ def jaccard_similarity_join(left: DataFrame, right: DataFrame,
             .where(F.col("jaccard") >= t)
             .select(F.col("__lid").alias(left_id),
                     F.col("__rid").alias(rid_out), "jaccard"))
-
-
-def cross_corpus_dedup(new_docs: DataFrame, existing: DataFrame,
-                       id_col: str, text_col: str,
-                       shingle_k: int = 3, threshold: float = 0.8) -> DataFrame:
-    """Incremental-ingestion dedup: new_docs minus those whose shingle-set
-    Jaccard vs ANY existing document >= threshold (exact, via
-    jaccard_similarity_join's prefix filtering)."""
-    pairs = jaccard_similarity_join(
-        new_docs, existing, id_col, text_col, id_col, text_col,
-        shingle_k=shingle_k, threshold=threshold)
-    return new_docs.join(pairs.select(id_col).distinct(), id_col,
-                         "left_anti")
 
 
 @register("jaccard_join_prefix", PluginType.TRANSFORMER)

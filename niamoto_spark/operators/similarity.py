@@ -17,11 +17,12 @@ Python UDFs; dot products run in the JVM.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from niamoto_spark.functions import (cosine_from_norms, cosine_similarity,
                                      fan_out, vector_norm)
+from niamoto_spark.operators.dedup import _log_dropped_async
 from niamoto_spark.registry import PluginType, register
 
 
@@ -589,19 +590,12 @@ def _lsh_near_dup(corpus: DataFrame, id_col: str, vec_col: str,
                .groupBy("band", "bhash")
                .agg(F.count(F.lit(1)).alias("__bn"))
                .where(F.col("__bn") > max_bucket_size))
-        try:
-            from pyspark.sql import Observation
-
-            from niamoto_spark.operators.dedup import _log_dropped_async
-
-            obs = Observation()
-            hot = hot.observe(
-                obs, F.coalesce(F.sum("__bn"), F.lit(0))
-                .alias("dropped_rows"))
-            _log_dropped_async(obs, max_bucket_size,
-                               label="embedding_near_dup[lsh]")
-        except ImportError:
-            pass
+        obs = Observation()
+        hot = hot.observe(
+            obs, F.coalesce(F.sum("__bn"), F.lit(0))
+            .alias("dropped_rows"))
+        _log_dropped_async(obs, max_bucket_size,
+                           label="embedding_near_dup[lsh]")
         sigs = sigs.join(F.broadcast(hot.drop("__bn")),
                          ["band", "bhash"], "left_anti")
     a = sigs.select(F.col("vid").alias("id_a"), F.col("v").alias("v_a"),

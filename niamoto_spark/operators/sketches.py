@@ -41,13 +41,6 @@ def _mg_update(counters: dict, item, inc: int, k: int) -> None:
             counters[item] = inc - dec
 
 
-def _mg_merge(a: dict, b: dict, k: int) -> dict:
-    out = dict(a)
-    for item, c in b.items():
-        _mg_update(out, item, c, k)
-    return out
-
-
 @register("heavy_hitters", PluginType.TRANSFORMER)
 def heavy_hitters(df: DataFrame, col: str, k: int = 16) -> list[tuple]:
     """Misra–Gries candidates [(item, lower-bound count), ...] sorted by
@@ -121,12 +114,6 @@ def _cms_bucket(col: Column | str, seed: int, width: int) -> Column:
     return F.conv(F.substring(
         F.md5(F.concat(F.lit(f"{seed}|"), c.cast("string"))), 1, 8),
         16, 10).cast("bigint") % width
-
-
-def cms_bucket_sql(expr: str, seed: int, width: int) -> str:
-    """The DuckDB-SQL twin of ``_cms_bucket`` (used by oracle refits)."""
-    return (f"CAST(('0x' || substr(md5('{seed}|' || CAST({expr} AS "
-            f"VARCHAR)), 1, 8)) AS BIGINT) % {width}")
 
 
 @register("count_min_sketch", PluginType.TRANSFORMER)

@@ -101,7 +101,8 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     text under several ids compute each distinct text's signature ONCE
     below the id-explode and plant the ids over (doc_id, sig) rows
     (guide §1.2); the candidate set is bit-identical to the inline path
-    (tests pin exact set equality).
+    (tests pin exact set equality).  A ``sig`` of any other width fails
+    the job that consumes the result.
     """
     if sig_df is not None and prefilter == "none":
         raise ValueError("sig_df only applies to the minhash prefilter "
@@ -113,10 +114,17 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     right = p.select(F.col("doc_id").alias("id_b"), "token",
                      F.col("weight").alias("w_b"))
     if prefilter in ("minhash", "minhash_md5"):
-        sig_kw = ({"sig_col": "sig"} if sig_df is not None else {})
-        cand_in = sig_df if sig_df is not None else df
-        cand_id = "doc_id" if sig_df is not None else id_col
-        cand_text = None if sig_df is not None else text_col
+        if sig_df is None:
+            cand_in, cand_id, cand_text, sig_kw = df, id_col, text_col, {}
+        else:
+            # a wrong-width table would band silently and lose recall;
+            # the check rides the signature projection (no extra job)
+            n = 16 if prefilter == "minhash_md5" else 64
+            cand_in = sig_df.withColumn("sig", F.when(
+                F.size("sig") != n, F.raise_error(F.lit(
+                    f"sig_df rows must hold {n} hashes for "
+                    f"prefilter={prefilter!r}"))).otherwise(F.col("sig")))
+            cand_id, cand_text, sig_kw = "doc_id", None, {"sig_col": "sig"}
         if prefilter == "minhash_md5":
             # cross-engine candidate generation (dedup.py md5 family):
             # an external engine can recompute the candidate set AND

@@ -11,10 +11,17 @@ stable):
 - counts stay integer; every derived double is round()ed (2-4dp);
 - top-k always breaks ties on the item/id column;
 - LIMIT is only used under a unique ORDER BY key.
+
+The module is its own registry: every top-level function named
+``q<N>_<name>`` taking ``(spark, sf_dir)`` is a catalog query (ordered by N),
+and the module constant ``O_Q<N>`` (same digits) is its oracle SQL.  Adding a
+query means defining those two names, nothing else; a query with no
+``O_Q<N>`` is rows-only (see ``build_oracles``).
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
 import time
@@ -71,7 +78,8 @@ def _link_parquet_source(src: str, stream_dir: str,
 
 
 def _src_fingerprint(path: str) -> tuple:
-    """(name, mtime_ns, size) of the source file / every part file.
+    """(relative path, mtime_ns, size) of the source file / every file
+    below it, nested partition directories (``k=v/``) included.
 
     A memoized table handle pins the file listing Spark resolved at
     first read; if the files under ``path`` are ever rewritten
@@ -82,9 +90,13 @@ def _src_fingerprint(path: str) -> tuple:
     try:
         if os.path.isdir(path):
             parts = []
-            for f in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, f))
-                parts.append((f, st.st_mtime_ns, st.st_size))
+            for root, dirs, files in os.walk(path):
+                dirs.sort()
+                for f in sorted(files):
+                    full = os.path.join(root, f)
+                    st = os.stat(full)
+                    parts.append((os.path.relpath(full, path),
+                                  st.st_mtime_ns, st.st_size))
             return tuple(parts)
         st = os.stat(path)
         return (st.st_mtime_ns, st.st_size)
@@ -743,6 +755,9 @@ b AS (SELECT lang, {best} AS best, {', '.join('hits_' + lang for lang in langs)}
 p AS (SELECT lang, {case} AS lang_pred FROM b)
 SELECT lang, lang_pred, count(*) AS n FROM p GROUP BY 1, 2
 """
+
+
+O_Q25 = _o_q25()
 
 
 def q26_quality_by_source(spark, sf_dir):
@@ -1584,6 +1599,10 @@ def q56_ann_blas(spark, sf_dir):
                                     k=5, round_dp=4)
 
 
+# identical semantics to q28, BLAS execution
+O_Q56 = O_Q28
+
+
 def q57_scalar_functions(spark, sf_dir):
     """Scalar-function surface (SURVEY §2.4): LIKE, concat, trim/upper,
     date parts, COALESCE/NULLIF — one projection + aggregate."""
@@ -1797,369 +1816,6 @@ WHERE r_name = 'ASIA'
   AND o.o_orderdate >= DATE '1994-01-01' AND o.o_orderdate < DATE '1996-01-01'
 GROUP BY n_name
 """
-
-
-# ---------------------------------------------------------------------------
-
-def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q01_pricing_summary": q01_pricing_summary,
-        "q02_stat_summary": q02_stat_summary,
-        "q03_binned_qty": q03_binned_qty,
-        "q04_categorical_priority": q04_categorical_priority,
-        "q05_binary_discount": q05_binary_discount,
-        "q06_boolean_flags": q06_boolean_flags,
-        "q07_top_brands": q07_top_brands,
-        "q08_region_rollup_nested_set": q08_region_rollup_nested_set,
-        "q09_adjacency_rollup": q09_adjacency_rollup,
-        "q10_nested_descendants": q10_nested_descendants,
-        "q11_customer_orders": q11_customer_orders,
-        "q12_bridge_revenue": q12_bridge_revenue,
-        "q13_stats_lookup": q13_stats_lookup,
-        "q14_multi_column": q14_multi_column,
-        "q15_field_aggregator": q15_field_aggregator,
-        "q16_time_series": q16_time_series,
-        "q17_class_series": q17_class_series,
-        "q18_class_ratio": q18_class_ratio,
-        "q19_shannon_brands": q19_shannon_brands,
-        "q20_scatter": q20_scatter,
-        "q21_explorer": q21_explorer,
-        "q22_dwc_projection": q22_dwc_projection,
-        "q23_dedup_exact": q23_dedup_exact,
-        "q24_token_stats": q24_token_stats,
-        "q25_lang_confusion": q25_lang_confusion,
-        "q26_quality_by_source": q26_quality_by_source,
-        "q27_fingerprint": q27_fingerprint,
-        "q28_ann_topk": q28_ann_topk,
-        "q29_embedding_near_dup": q29_embedding_near_dup,
-        "q30_events_hourly": q30_events_hourly,
-        "q31_sessions": q31_sessions,
-        "q32_points_in_polygons": q32_points_in_polygons,
-        "q33_fragmentation": q33_fragmentation,
-        "q34_geo_extract": q34_geo_extract,
-        "q35_direct_attribute": q35_direct_attribute,
-        "q36_class_categories": q36_class_categories,
-        "q37_class_binary": q37_class_binary,
-        "q38_minhash_candidates": q38_minhash_candidates,
-        "q39_simhash_pairs": q39_simhash_pairs,
-        "q40_ngram_jaccard": q40_ngram_jaccard,
-        "q41_ivf_topk": q41_ivf_topk,
-        "q42_json_extraction": q42_json_extraction,
-        "q43_top_ranking_join": q43_top_ranking_join,
-        "q44_hierarchical_top": q44_hierarchical_top,
-        "q45_hierarchy_derivation": q45_hierarchy_derivation,
-        "q46_database_aggregator": q46_database_aggregator,
-        "q47_enrichment_profile": q47_enrichment_profile,
-        "q48_anti_join": q48_anti_join,
-        "q49_semi_join": q49_semi_join,
-        "q50_rollup": q50_rollup,
-        "q51_quantiles": q51_quantiles,
-        "q52_running_total": q52_running_total,
-        "q53_dedup_keep": q53_dedup_keep,
-        "q54_stream_events": q54_stream_events,
-        "q55_pivot": q55_pivot,
-        "q56_ann_blas": q56_ann_blas,
-        "q57_scalar_functions": q57_scalar_functions,
-        "q58_sequence_packing": q58_sequence_packing,
-        "q59_vocabulary": q59_vocabulary,
-        "q60_scrub": q60_scrub,
-        "q61_shipping_priority": q61_shipping_priority,
-        "q62_regional_revenue": q62_regional_revenue,
-        "q63_curation_pipeline": q63_curation_pipeline,
-        "q64_stream_sessions": q64_stream_sessions,
-        "q65_vector_import": q65_vector_import,
-        "q66_raster_zonal": q66_raster_zonal,
-        "q67_dwc_mapping": q67_dwc_mapping,
-        "q68_decontamination": q68_decontamination,
-        "q69_repetition_stats": q69_repetition_stats,
-        "q70_stratified_sample": q70_stratified_sample,
-        "q71_chunk_documents": q71_chunk_documents,
-        "q72_char_entropy": q72_char_entropy,
-        "q73_materialize_packs": q73_materialize_packs,
-        "q74_overlay_union": q74_overlay_union,
-        "q75_overlay_difference": q75_overlay_difference,
-        "q76_overlay_symdiff": q76_overlay_symdiff,
-        "q77_overlay_identity_where": q77_overlay_identity_where,
-        "q78_media_dhash_jpeg": q78_media_dhash_jpeg,
-        "q79_utm_area": q79_utm_area,
-        "q80_video_frames": q80_video_frames,
-        "q81_overlay_coverage": q81_overlay_coverage,
-        "q82_audio_spectral": q82_audio_spectral,
-        "q83_forest_elevation": q83_forest_elevation,
-        "q84_lm_quality": q84_lm_quality,
-        "q85_stream_dedup": q85_stream_dedup,
-        "q86_asof_join": q86_asof_join,
-        "q87_bm25_topk": q87_bm25_topk,
-        "q88_temperature_sample": q88_temperature_sample,
-        "q89_semantic_dedup": q89_semantic_dedup,
-        "q90_pq_adc_topk": q90_pq_adc_topk,
-        "q91_bpe_pair_counts": q91_bpe_pair_counts,
-        "q92_cross_corpus_dedup": q92_cross_corpus_dedup,
-        "q93_substring_dup": q93_substring_dup,
-        "q94_interval_join": q94_interval_join,
-        "q95_cube_revenue": q95_cube_revenue,
-        "q96_profile_table": q96_profile_table,
-        "q97_tfidf_cosine": q97_tfidf_cosine,
-        "q98_scd2_history": q98_scd2_history,
-        "q99_stream_stream_join": q99_stream_stream_join,
-        "q100_kmeans": q100_kmeans,
-        "q101_quality_dedup_clusters": q101_quality_dedup_clusters,
-        "q102_pagerank": q102_pagerank,
-        "q103_weighted_sample": q103_weighted_sample,
-        "q104_dsir_importance": q104_dsir_importance,
-        "q105_fuzzy_linkage": q105_fuzzy_linkage,
-        "q106_rolling_window": q106_rolling_window,
-        "q107_funnel": q107_funnel,
-        "q108_gap_filling": q108_gap_filling,
-        "q109_cohort_retention": q109_cohort_retention,
-        "q110_ivfpq_topk": q110_ivfpq_topk,
-        "q111_setops": q111_setops,
-        "q112_ntile_quartiles": q112_ntile_quartiles,
-        "q113_native_session_window": q113_native_session_window,
-        "q114_sliding_windows": q114_sliding_windows,
-        "q115_split_assign": q115_split_assign,
-        "q116_contrastive_pairs": q116_contrastive_pairs,
-        "q117_triangles": q117_triangles,
-        "q118_returned_revenue": q118_returned_revenue,
-        "q119_imputation": q119_imputation,
-        "q120_rolling_anomalies": q120_rolling_anomalies,
-        "q121_proximity_join": q121_proximity_join,
-        "q122_manifest_roundtrip": q122_manifest_roundtrip,
-        "q123_exists_late_orders": q123_exists_late_orders,
-        "q124_antijoin_scalar_subquery": q124_antijoin_scalar_subquery,
-        "q125_markov_transitions": q125_markov_transitions,
-        "q126_heavy_hitters": q126_heavy_hitters,
-        "q127_tfidf_prefiltered": q127_tfidf_prefiltered,
-        "q128_bloom_semi_join": q128_bloom_semi_join,
-        "q129_bigram_lm": q129_bigram_lm,
-        "q130_line_dedup": q130_line_dedup,
-        "q131_count_min": q131_count_min,
-        "q132_salted_join": q132_salted_join,
-        "q133_incremental_agg": q133_incremental_agg,
-        "q134_distinct_rollup": q134_distinct_rollup,
-        "q135_shard_corpus": q135_shard_corpus,
-        "q136_grouping_sets": q136_grouping_sets,
-        "q137_stream_static_join": q137_stream_static_join,
-        "q138_bucketed_join": q138_bucketed_join,
-        "q139_melt_metrics": q139_melt_metrics,
-        "q140_table_dml": q140_table_dml,
-        "q141_bloom_point_lookup": q141_bloom_point_lookup,
-        "q142_expectations": q142_expectations,
-        "q143_epoch_order": q143_epoch_order,
-        "q144_grouped_split": q144_grouped_split,
-        "q145_trigram_match": q145_trigram_match,
-        "q146_corr_matrix": q146_corr_matrix,
-        "q147_mode_per_group": q147_mode_per_group,
-        "q148_sorted_listagg": q148_sorted_listagg,
-        "q149_text_classifier": q149_text_classifier,
-        "q150_table_diff": q150_table_diff,
-        "q151_stream_topk": q151_stream_topk,
-        "q152_winsorize": q152_winsorize,
-        "q153_robust_outliers": q153_robust_outliers,
-        "q154_regression_aggs": q154_regression_aggs,
-        "q155_association_rules": q155_association_rules,
-        "q156_cusum_drift": q156_cusum_drift,
-        "q157_ewma_smoothing": q157_ewma_smoothing,
-        "q158_bfs_hops": q158_bfs_hops,
-        "q159_pareto_frontier": q159_pareto_frontier,
-        "q160_benford_audit": q160_benford_audit,
-        "q161_table_fingerprint": q161_table_fingerprint,
-        "q162_kn_bigram_lm": q162_kn_bigram_lm,
-        "q163_attribution": q163_attribution,
-        "q164_morton_density": q164_morton_density,
-        "q165_pca_scree": q165_pca_scree,
-        "q166_ann_index_query": q166_ann_index_query,
-        "q167_multi_table_txn": q167_multi_table_txn,
-        "q168_manifest_datasource": q168_manifest_datasource,
-        "q169_psi_drift": q169_psi_drift,
-        "q170_ks_drift": q170_ks_drift,
-        "q171_chi_square": q171_chi_square,
-        "q172_prefix_jaccard_join": q172_prefix_jaccard_join,
-        "q173_target_encoding": q173_target_encoding,
-        "q174_naive_bayes": q174_naive_bayes,
-        "q175_kaplan_meier": q175_kaplan_meier,
-        "q176_pmi_collocations": q176_pmi_collocations,
-        "q177_json_flatten": q177_json_flatten,
-        "q178_quantile_buckets": q178_quantile_buckets,
-        "q179_nucleus_vocab": q179_nucleus_vocab,
-        "q180_locf_fill": q180_locf_fill,
-        "q181_mutual_information": q181_mutual_information,
-        "q182_histogram_quantiles": q182_histogram_quantiles,
-        "q183_rrf_hybrid": q183_rrf_hybrid,
-        "q184_cap_per_group": q184_cap_per_group,
-        "q185_seasonal_anomalies": q185_seasonal_anomalies,
-        "q186_ab_test": q186_ab_test,
-        "q187_text_index": q187_text_index,
-        "q188_k_anonymity": q188_k_anonymity,
-        "q189_item_similarity": q189_item_similarity,
-        "q190_ppmi_similarity": q190_ppmi_similarity,
-        "q191_dp_counts": q191_dp_counts,
-        "q192_clustering_coefficient": q192_clustering_coefficient,
-        "q193_binary_auc": q193_binary_auc,
-        "q194_calibration": q194_calibration,
-        "q195_rank_metrics": q195_rank_metrics,
-        "q196_ols_normal_equations": q196_ols_normal_equations,
-        "q197_weighted_median": q197_weighted_median,
-        "q198_position_attribution": q198_position_attribution,
-        "q199_good_turing": q199_good_turing,
-        "q200_duplicate_weights": q200_duplicate_weights,
-        "q201_lexical_stats": q201_lexical_stats,
-        "q202_keywords": q202_keywords,
-        "q203_gains_table": q203_gains_table,
-        "q204_sliced_auc": q204_sliced_auc,
-        "q205_zipf_fit": q205_zipf_fit,
-        "q206_burstiness": q206_burstiness,
-        "q207_vocab_overlap": q207_vocab_overlap,
-        "q208_compact_where": q208_compact_where,
-        "q209_next_event_baseline": q209_next_event_baseline,
-        "q210_time_to_convert": q210_time_to_convert,
-        "q211_variant_extract": q211_variant_extract,
-        "q212_quantile_normalize": q212_quantile_normalize,
-        "q213_rfm_segments": q213_rfm_segments,
-        "q214_cohort_ltv": q214_cohort_ltv,
-        "q215_woe_iv": q215_woe_iv,
-        "q216_stump_split": q216_stump_split,
-        "q217_shallow_clone": q217_shallow_clone,
-        "q218_wap_publish": q218_wap_publish,
-        "q219_label_propagation": q219_label_propagation,
-        "q220_stream_outer_join": q220_stream_outer_join,
-        "q221_permutation_test": q221_permutation_test,
-        "q222_sequence_pairs": q222_sequence_pairs,
-        "q223_l_diversity": q223_l_diversity,
-        "q224_skew_report": q224_skew_report,
-        "q225_kcore": q225_kcore,
-        "q226_readability": q226_readability,
-        "q227_sampled_counts": q227_sampled_counts,
-        "q228_gazetteer": q228_gazetteer,
-        "q229_hidden_partitioning": q229_hidden_partitioning,
-        "q230_stl_decompose": q230_stl_decompose,
-        "q231_conformal": q231_conformal,
-        "q232_uplift": q232_uplift,
-        "q233_maintain_join": q233_maintain_join,
-        "q234_audience_overlap": q234_audience_overlap,
-        "q235_trending": q235_trending,
-        "q236_deletion_vectors": q236_deletion_vectors,
-        "q237_interval_allocate": q237_interval_allocate,
-        "q238_golden_record": q238_golden_record,
-        "q239_mutual_best_match": q239_mutual_best_match,
-        "q240_cumulative_unique": q240_cumulative_unique,
-        "q241_poisson_bootstrap": q241_poisson_bootstrap,
-        "q242_sole_blame_suppliers": q242_sole_blame_suppliers,
-        "q243_top_paths": q243_top_paths,
-        "q244_orc_roundtrip": q244_orc_roundtrip,
-        "q245_result_cache": q245_result_cache,
-        "q246_augment_text": q246_augment_text,
-        "q247_leakage_audit": q247_leakage_audit,
-        "q248_personalized_pagerank": q248_personalized_pagerank,
-        "q249_autocorrelation": q249_autocorrelation,
-        "q250_growth_accounting": q250_growth_accounting,
-        "q251_stream_upsert": q251_stream_upsert,
-        "q252_contamination_score": q252_contamination_score,
-        "q253_als_rank1": q253_als_rank1,
-        "q254_boosted_stumps": q254_boosted_stumps,
-        "q255_interval_overlap": q255_interval_overlap,
-        "q256_robust_slope": q256_robust_slope,
-        "q257_window_surface": q257_window_surface,
-        "q258_datetime_surface": q258_datetime_surface,
-        "q259_array_surface": q259_array_surface,
-        "q260_multiset_ops": q260_multiset_ops,
-        "q261_regex_surface": q261_regex_surface,
-        "q262_dbscan": q262_dbscan,
-        "q263_stream_distinct_users": q263_stream_distinct_users,
-        "q264_partition_overwrite": q264_partition_overwrite,
-        "q265_join_cardinality": q265_join_cardinality,
-        "q266_map_surface": q266_map_surface,
-        "q267_media_pipeline": q267_media_pipeline,
-        "q268_trimmed_mean": q268_trimmed_mean,
-        "q269_nullsafe_join": q269_nullsafe_join,
-        "q270_posexplode": q270_posexplode,
-        "q271_time_weighted_avg": q271_time_weighted_avg,
-        "q272_ohlc_bars": q272_ohlc_bars,
-        "q273_rolling_median": q273_rolling_median,
-        "q274_adamic_adar": q274_adamic_adar,
-        "q275_state_periods": q275_state_periods,
-        "q276_url_normalize": q276_url_normalize,
-        "q277_mixture_rebalance": q277_mixture_rebalance,
-        "q278_holt_linear": q278_holt_linear,
-        "q279_confusion_stats": q279_confusion_stats,
-        "q280_bitmap_distinct": q280_bitmap_distinct,
-        "q281_debounce": q281_debounce,
-        "q282_sliding_windows": q282_sliding_windows,
-        "q283_cube": q283_cube,
-        "q284_cramers_v": q284_cramers_v,
-        "q285_counter_rate": q285_counter_rate,
-        "q286_ip_enrich": q286_ip_enrich,
-        "q287_frequent_triples": q287_frequent_triples,
-        "q288_string_surface": q288_string_surface,
-        "q289_tpch_q7": q289_tpch_q7,
-        "q290_tpch_q8": q290_tpch_q8,
-        "q291_table_cdf": q291_table_cdf,
-        "q292_percent_of_parent": q292_percent_of_parent,
-        "q293_sq_int8": q293_sq_int8,
-        "q294_access_log": q294_access_log,
-        "q295_negative_samples": q295_negative_samples,
-        "q296_multilabel": q296_multilabel,
-        "q297_hashed_features": q297_hashed_features,
-        "q298_temporal_split": q298_temporal_split,
-        "q299_tpch_q10": q299_tpch_q10,
-        "q300_tpch_q13": q300_tpch_q13,
-        "q301_tpch_q15": q301_tpch_q15,
-        "q302_tpch_q18": q302_tpch_q18,
-        "q303_tpch_q22": q303_tpch_q22,
-        "q304_session_window": q304_session_window,
-        "q305_knn_classify": q305_knn_classify,
-        "q306_silhouette": q306_silhouette,
-        "q307_agg_surface": q307_agg_surface,
-        "q308_lateral_topn": q308_lateral_topn,
-        "q309_recursive_cte": q309_recursive_cte,
-        "q310_xml_ingest": q310_xml_ingest,
-        "q311_masking": q311_masking,
-        "q312_forecast_eval": q312_forecast_eval,
-        "q313_rbo": q313_rbo,
-        "q314_calendar_spine": q314_calendar_spine,
-        "q315_rolling_active": q315_rolling_active,
-        "q316_embedding_drift": q316_embedding_drift,
-        "q317_stream_ohlc": q317_stream_ohlc,
-        "q318_emd_drift": q318_emd_drift,
-        "q319_gini": q319_gini,
-        "q320_hhi": q320_hhi,
-        "q321_nelson_aalen": q321_nelson_aalen,
-        "q322_synthetic_source": q322_synthetic_source,
-        "q323_neyman": q323_neyman,
-        "q324_udtf_sentences": q324_udtf_sentences,
-        "q325_decimal_exact": q325_decimal_exact,
-        "q326_edit_distance": q326_edit_distance,
-        "q327_ignore_nulls": q327_ignore_nulls,
-        "q328_stream_quarantine": q328_stream_quarantine,
-        "q329_nested_struct": q329_nested_struct,
-        "q330_tags_normalize": q330_tags_normalize,
-        "q331_rolling_slope": q331_rolling_slope,
-        "q332_percentile_bands": q332_percentile_bands,
-        "q333_sssp": q333_sssp,
-        "q334_range_frames": q334_range_frames,
-        "q335_business_days": q335_business_days,
-        "q336_reconcile": q336_reconcile,
-        "q337_cuped": q337_cuped,
-        "q338_bh_fdr": q338_bh_fdr,
-        "q339_diff_in_diff": q339_diff_in_diff,
-        "q340_rdd": q340_rdd,
-        "q341_wald_iv": q341_wald_iv,
-        "q342_ipf_raking": q342_ipf_raking,
-        "q343_chao1": q343_chao1,
-        "q344_bray_curtis": q344_bray_curtis,
-        "q345_rarefaction": q345_rarefaction,
-        "q346_weighted_endemism": q346_weighted_endemism,
-        "q347_faith_pd": q347_faith_pd,
-        "q348_beta_partition": q348_beta_partition,
-        "q349_minhash_oracle_lane": q349_minhash_oracle_lane,
-        "q350_simhash_oracle_lane": q350_simhash_oracle_lane,
-        "q351_curation_oracle_lane": q351_curation_oracle_lane,
-        "q352_covariance_profile": q352_covariance_profile,
-        "q353_tfidf_prefiltered_oracle": q353_tfidf_prefiltered_oracle,
-        "q354_media_lossless_jpeg": q354_media_lossless_jpeg,
-        "q355_media_gif": q355_media_gif,
-        "q356_media_png_interlaced": q356_media_png_interlaced,
-    }
 
 
 _VEC_ZONES = [
@@ -2850,6 +2506,9 @@ FROM s GROUP BY shape_id
 """
 
 
+O_Q79 = _o_q79()
+
+
 def q80_video_frames(spark, sf_dir):
     """Video lane end-to-end (round-3 gap closure): two deterministic
     MJPEG-AVI fixtures built with the repo's own RIFF writer + T.81 JPEG
@@ -2969,6 +2628,9 @@ SELECT k.zone_id,
        round(coalesce(cov.cdeg, 0) * 100.0 / k.zdeg, 2) AS coverage_pct
 FROM k LEFT JOIN cov ON k.zone_id = cov.zone_id
 """
+
+
+O_Q81 = _o_q81()
 
 
 def q82_audio_spectral(spark, sf_dir):
@@ -3806,6 +3468,10 @@ def q99_stream_stream_join(spark, sf_dir):
             .groupBy("purchase_id")
             .agg(F.count(F.lit(1)).alias("n_clicks"),
                  F.round(F.sum("click_value"), 2).alias("click_value_sum")))
+
+
+# identical semantics to q94, streaming execution
+O_Q99 = O_Q94
 
 
 def q100_kmeans(spark, sf_dir):
@@ -5819,371 +5485,6 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
-def build_oracles() -> dict[str, str]:
-    return {
-        "q01_pricing_summary": O_Q01,
-        "q02_stat_summary": O_Q02,
-        "q03_binned_qty": O_Q03,
-        "q04_categorical_priority": O_Q04,
-        "q05_binary_discount": O_Q05,
-        "q06_boolean_flags": O_Q06,
-        "q07_top_brands": O_Q07,
-        "q08_region_rollup_nested_set": O_Q08,
-        "q09_adjacency_rollup": O_Q09,
-        "q10_nested_descendants": O_Q10,
-        "q11_customer_orders": O_Q11,
-        "q12_bridge_revenue": O_Q12,
-        "q13_stats_lookup": O_Q13,
-        "q14_multi_column": O_Q14,
-        "q15_field_aggregator": O_Q15,
-        "q16_time_series": O_Q16,
-        "q17_class_series": O_Q17,
-        "q18_class_ratio": O_Q18,
-        "q19_shannon_brands": O_Q19,
-        "q20_scatter": O_Q20,
-        "q21_explorer": O_Q21,
-        "q22_dwc_projection": O_Q22,
-        "q23_dedup_exact": O_Q23,
-        "q24_token_stats": O_Q24,
-        "q25_lang_confusion": _o_q25(),
-        "q26_quality_by_source": O_Q26,
-        "q27_fingerprint": O_Q27,
-        "q28_ann_topk": O_Q28,
-        "q29_embedding_near_dup": O_Q29,
-        "q30_events_hourly": O_Q30,
-        "q31_sessions": O_Q31,
-        "q32_points_in_polygons": O_Q32,
-        "q33_fragmentation": O_Q33,
-        "q34_geo_extract": O_Q34,
-        "q35_direct_attribute": O_Q35,
-        "q36_class_categories": O_Q36,
-        "q37_class_binary": O_Q37,
-        "q40_ngram_jaccard": O_Q40,
-        "q42_json_extraction": O_Q42,
-        "q43_top_ranking_join": O_Q43,
-        "q44_hierarchical_top": O_Q44,
-        "q45_hierarchy_derivation": O_Q45,
-        "q46_database_aggregator": O_Q46,
-        "q47_enrichment_profile": O_Q47,
-        "q48_anti_join": O_Q48,
-        "q49_semi_join": O_Q49,
-        "q50_rollup": O_Q50,
-        "q51_quantiles": O_Q51,
-        "q52_running_total": O_Q52,
-        "q53_dedup_keep": O_Q53,
-        "q54_stream_events": O_Q54,
-        "q55_pivot": O_Q55,
-        "q56_ann_blas": O_Q28,  # identical semantics to q28, BLAS execution
-        "q57_scalar_functions": O_Q57,
-        "q58_sequence_packing": O_Q58,
-        "q59_vocabulary": O_Q59,
-        "q60_scrub": O_Q60,
-        "q61_shipping_priority": O_Q61,
-        "q62_regional_revenue": O_Q62,
-        "q64_stream_sessions": O_Q64,
-        "q65_vector_import": O_Q65,
-        "q66_raster_zonal": O_Q66,
-        "q67_dwc_mapping": O_Q67,
-        "q68_decontamination": O_Q68,
-        "q69_repetition_stats": O_Q69,
-        "q70_stratified_sample": O_Q70,
-        "q71_chunk_documents": O_Q71,
-        "q72_char_entropy": O_Q72,
-        "q73_materialize_packs": O_Q73,
-        "q74_overlay_union": O_Q74,
-        "q75_overlay_difference": O_Q75,
-        "q76_overlay_symdiff": O_Q76,
-        "q77_overlay_identity_where": O_Q77,
-        "q78_media_dhash_jpeg": O_Q78,
-        "q79_utm_area": _o_q79(),
-        "q80_video_frames": O_Q80,
-        "q81_overlay_coverage": _o_q81(),
-        "q82_audio_spectral": O_Q82,
-        "q83_forest_elevation": O_Q83,
-        "q84_lm_quality": O_Q84,
-        "q85_stream_dedup": O_Q85,
-        "q86_asof_join": O_Q86,
-        "q87_bm25_topk": O_Q87,
-        "q88_temperature_sample": O_Q88,
-        "q89_semantic_dedup": O_Q89,
-        "q90_pq_adc_topk": O_Q90,
-        "q91_bpe_pair_counts": O_Q91,
-        "q92_cross_corpus_dedup": O_Q92,
-        "q93_substring_dup": O_Q93,
-        "q94_interval_join": O_Q94,
-        "q95_cube_revenue": O_Q95,
-        "q96_profile_table": O_Q96,
-        "q97_tfidf_cosine": O_Q97,
-        "q98_scd2_history": O_Q98,
-        "q99_stream_stream_join": O_Q94,  # identical semantics to q94, streaming execution
-        "q100_kmeans": O_Q100,
-        "q101_quality_dedup_clusters": O_Q101,
-        "q102_pagerank": O_Q102,
-        "q103_weighted_sample": O_Q103,
-        "q104_dsir_importance": O_Q104,
-        "q105_fuzzy_linkage": O_Q105,
-        "q106_rolling_window": O_Q106,
-        "q107_funnel": O_Q107,
-        "q108_gap_filling": O_Q108,
-        "q109_cohort_retention": O_Q109,
-        "q111_setops": O_Q111,
-        "q112_ntile_quartiles": O_Q112,
-        "q113_native_session_window": O_Q113,
-        "q114_sliding_windows": O_Q114,
-        "q115_split_assign": O_Q115,
-        "q116_contrastive_pairs": O_Q116,
-        "q117_triangles": O_Q117,
-        "q118_returned_revenue": O_Q118,
-        "q119_imputation": O_Q119,
-        "q120_rolling_anomalies": O_Q120,
-        "q121_proximity_join": O_Q121,
-        "q122_manifest_roundtrip": O_Q122,
-        "q123_exists_late_orders": O_Q123,
-        "q124_antijoin_scalar_subquery": O_Q124,
-        "q125_markov_transitions": O_Q125,
-        "q126_heavy_hitters": O_Q126,
-        "q128_bloom_semi_join": O_Q128,
-        "q129_bigram_lm": O_Q129,
-        "q130_line_dedup": O_Q130,
-        "q131_count_min": O_Q131,
-        "q132_salted_join": O_Q132,
-        "q133_incremental_agg": O_Q133,
-        "q134_distinct_rollup": O_Q134,
-        "q135_shard_corpus": O_Q135,
-        "q136_grouping_sets": O_Q136,
-        "q137_stream_static_join": O_Q137,
-        "q138_bucketed_join": O_Q138,
-        "q139_melt_metrics": O_Q139,
-        "q140_table_dml": O_Q140,
-        "q141_bloom_point_lookup": O_Q141,
-        "q142_expectations": O_Q142,
-        "q143_epoch_order": O_Q143,
-        "q144_grouped_split": O_Q144,
-        "q145_trigram_match": O_Q145,
-        "q146_corr_matrix": O_Q146,
-        "q147_mode_per_group": O_Q147,
-        "q148_sorted_listagg": O_Q148,
-        "q149_text_classifier": O_Q149,
-        "q150_table_diff": O_Q150,
-        "q151_stream_topk": O_Q151,
-        "q152_winsorize": O_Q152,
-        "q153_robust_outliers": O_Q153,
-        "q154_regression_aggs": O_Q154,
-        "q155_association_rules": O_Q155,
-        "q156_cusum_drift": O_Q156,
-        "q157_ewma_smoothing": O_Q157,
-        "q158_bfs_hops": O_Q158,
-        "q159_pareto_frontier": O_Q159,
-        "q160_benford_audit": O_Q160,
-        "q161_table_fingerprint": O_Q161,
-        "q162_kn_bigram_lm": O_Q162,
-        "q163_attribution": O_Q163,
-        "q164_morton_density": O_Q164,
-        "q167_multi_table_txn": O_Q167,
-        "q168_manifest_datasource": O_Q168,
-        "q169_psi_drift": O_Q169,
-        "q170_ks_drift": O_Q170,
-        "q171_chi_square": O_Q171,
-        "q172_prefix_jaccard_join": O_Q172,
-        "q173_target_encoding": O_Q173,
-        "q174_naive_bayes": O_Q174,
-        "q175_kaplan_meier": O_Q175,
-        "q176_pmi_collocations": O_Q176,
-        "q177_json_flatten": O_Q177,
-        "q178_quantile_buckets": O_Q178,
-        "q179_nucleus_vocab": O_Q179,
-        "q180_locf_fill": O_Q180,
-        "q181_mutual_information": O_Q181,
-        "q182_histogram_quantiles": O_Q182,
-        "q183_rrf_hybrid": O_Q183,
-        "q184_cap_per_group": O_Q184,
-        "q185_seasonal_anomalies": O_Q185,
-        "q186_ab_test": O_Q186,
-        "q187_text_index": O_Q87,
-        "q188_k_anonymity": O_Q188,
-        "q189_item_similarity": O_Q189,
-        "q190_ppmi_similarity": O_Q190,
-        "q191_dp_counts": O_Q191,
-        "q192_clustering_coefficient": O_Q192,
-        "q193_binary_auc": O_Q193,
-        "q194_calibration": O_Q194,
-        "q195_rank_metrics": O_Q195,
-        "q196_ols_normal_equations": O_Q196,
-        "q197_weighted_median": O_Q197,
-        "q198_position_attribution": O_Q198,
-        "q199_good_turing": O_Q199,
-        "q200_duplicate_weights": O_Q200,
-        "q201_lexical_stats": O_Q201,
-        "q202_keywords": O_Q202,
-        "q203_gains_table": O_Q203,
-        "q204_sliced_auc": O_Q204,
-        "q205_zipf_fit": O_Q205,
-        "q206_burstiness": O_Q206,
-        "q207_vocab_overlap": O_Q207,
-        "q208_compact_where": O_Q208,
-        "q209_next_event_baseline": O_Q209,
-        "q210_time_to_convert": O_Q210,
-        "q211_variant_extract": O_Q211,
-        "q212_quantile_normalize": O_Q212,
-        "q213_rfm_segments": O_Q213,
-        "q214_cohort_ltv": O_Q214,
-        "q215_woe_iv": O_Q215,
-        "q216_stump_split": O_Q216,
-        "q217_shallow_clone": O_Q217,
-        "q218_wap_publish": O_Q218,
-        "q219_label_propagation": O_Q219,
-        "q220_stream_outer_join": O_Q220,
-        "q221_permutation_test": O_Q221,
-        "q222_sequence_pairs": O_Q222,
-        "q223_l_diversity": O_Q223,
-        "q224_skew_report": O_Q224,
-        "q225_kcore": O_Q225,
-        "q226_readability": O_Q226,
-        "q227_sampled_counts": O_Q227,
-        "q228_gazetteer": O_Q228,
-        "q229_hidden_partitioning": O_Q229,
-        "q230_stl_decompose": O_Q230,
-        "q231_conformal": O_Q231,
-        "q232_uplift": O_Q232,
-        "q233_maintain_join": O_Q233,
-        "q234_audience_overlap": O_Q234,
-        "q235_trending": O_Q235,
-        "q236_deletion_vectors": O_Q236,
-        "q237_interval_allocate": O_Q237,
-        "q238_golden_record": O_Q238,
-        "q239_mutual_best_match": O_Q239,
-        "q240_cumulative_unique": O_Q240,
-        "q241_poisson_bootstrap": O_Q241,
-        "q242_sole_blame_suppliers": O_Q242,
-        "q243_top_paths": O_Q243,
-        "q244_orc_roundtrip": O_Q244,
-        "q245_result_cache": O_Q245,
-        "q246_augment_text": O_Q246,
-        "q247_leakage_audit": O_Q247,
-        "q248_personalized_pagerank": O_Q248,
-        "q249_autocorrelation": O_Q249,
-        "q250_growth_accounting": O_Q250,
-        "q251_stream_upsert": O_Q251,
-        "q252_contamination_score": O_Q252,
-        "q253_als_rank1": O_Q253,
-        "q254_boosted_stumps": O_Q254,
-        "q255_interval_overlap": O_Q255,
-        "q256_robust_slope": O_Q256,
-        "q257_window_surface": O_Q257,
-        "q258_datetime_surface": O_Q258,
-        "q259_array_surface": O_Q259,
-        "q260_multiset_ops": O_Q260,
-        "q261_regex_surface": O_Q261,
-        "q262_dbscan": O_Q262,
-        "q263_stream_distinct_users": O_Q263,
-        "q264_partition_overwrite": O_Q264,
-        "q265_join_cardinality": O_Q265,
-        "q266_map_surface": O_Q266,
-        "q267_media_pipeline": O_Q267,
-        "q268_trimmed_mean": O_Q268,
-        "q269_nullsafe_join": O_Q269,
-        "q270_posexplode": O_Q270,
-        "q271_time_weighted_avg": O_Q271,
-        "q272_ohlc_bars": O_Q272,
-        "q273_rolling_median": O_Q273,
-        "q274_adamic_adar": O_Q274,
-        "q275_state_periods": O_Q275,
-        "q276_url_normalize": O_Q276,
-        "q277_mixture_rebalance": O_Q277,
-        "q278_holt_linear": O_Q278,
-        "q279_confusion_stats": O_Q279,
-        "q280_bitmap_distinct": O_Q280,
-        "q281_debounce": O_Q281,
-        "q282_sliding_windows": O_Q282,
-        "q283_cube": O_Q283,
-        "q284_cramers_v": O_Q284,
-        "q285_counter_rate": O_Q285,
-        "q286_ip_enrich": O_Q286,
-        "q287_frequent_triples": O_Q287,
-        "q288_string_surface": O_Q288,
-        "q289_tpch_q7": O_Q289,
-        "q290_tpch_q8": O_Q290,
-        "q291_table_cdf": O_Q291,
-        "q292_percent_of_parent": O_Q292,
-        "q293_sq_int8": O_Q293,
-        "q294_access_log": O_Q294,
-        "q295_negative_samples": O_Q295,
-        "q296_multilabel": O_Q296,
-        "q297_hashed_features": O_Q297,
-        "q298_temporal_split": O_Q298,
-        "q299_tpch_q10": O_Q299,
-        "q300_tpch_q13": O_Q300,
-        "q301_tpch_q15": O_Q301,
-        "q302_tpch_q18": O_Q302,
-        "q303_tpch_q22": O_Q303,
-        "q304_session_window": O_Q304,
-        "q305_knn_classify": O_Q305,
-        "q306_silhouette": O_Q306,
-        "q307_agg_surface": O_Q307,
-        "q308_lateral_topn": O_Q308,
-        "q309_recursive_cte": O_Q309,
-        "q310_xml_ingest": O_Q310,
-        "q311_masking": O_Q311,
-        "q312_forecast_eval": O_Q312,
-        "q313_rbo": O_Q313,
-        "q314_calendar_spine": O_Q314,
-        "q315_rolling_active": O_Q315,
-        "q316_embedding_drift": O_Q316,
-        "q317_stream_ohlc": O_Q317,
-        "q318_emd_drift": O_Q318,
-        "q319_gini": O_Q319,
-        "q320_hhi": O_Q320,
-        "q321_nelson_aalen": O_Q321,
-        "q322_synthetic_source": O_Q322,
-        "q323_neyman": O_Q323,
-        "q324_udtf_sentences": O_Q324,
-        "q325_decimal_exact": O_Q325,
-        "q326_edit_distance": O_Q326,
-        "q327_ignore_nulls": O_Q327,
-        "q328_stream_quarantine": O_Q328,
-        "q329_nested_struct": O_Q329,
-        "q330_tags_normalize": O_Q330,
-        "q331_rolling_slope": O_Q331,
-        "q332_percentile_bands": O_Q332,
-        "q333_sssp": O_Q333,
-        "q334_range_frames": O_Q334,
-        "q335_business_days": O_Q335,
-        "q336_reconcile": O_Q336,
-        "q337_cuped": O_Q337,
-        "q338_bh_fdr": O_Q338,
-        "q339_diff_in_diff": O_Q339,
-        "q340_rdd": O_Q340,
-        "q341_wald_iv": O_Q341,
-        "q342_ipf_raking": O_Q342,
-        "q343_chao1": O_Q343,
-        "q344_bray_curtis": O_Q344,
-        "q345_rarefaction": O_Q345,
-        "q346_weighted_endemism": O_Q346,
-        "q347_faith_pd": O_Q347,
-        "q348_beta_partition": O_Q348,
-        "q349_minhash_oracle_lane": O_Q349,
-        "q350_simhash_oracle_lane": O_Q350,
-        "q351_curation_oracle_lane": O_Q351,
-        "q352_covariance_profile": O_Q352,
-        "q353_tfidf_prefiltered_oracle": O_Q353,
-        "q354_media_lossless_jpeg": O_Q354,
-        "q355_media_gif": O_Q355,
-        "q356_media_png_interlaced": O_Q354,
-        # q165 (PCA scree) and q166 (persisted ANN index) are
-        # rows-only: eigendecomposition / approximate ANN have no
-        # SQL equivalent; numpy parity and index==direct equality
-        # are pinned in tests.  A recursive-CTE power-iteration oracle
-        # for q165 was evaluated and rejected: the embeddings
-        # covariance spectrum is near-isotropic (measured eigengap
-        # ratios 0.93-0.995 at both gate SFs), so power iteration
-        # cannot converge to the 4dp the hash compare needs; numpy
-        # parity (LAPACK, exact) is the stronger check anyway.
-        # q38/q39 (xxhash64-seeded minhash/simhash) and q41 (approximate IVF)
-        # are rows-only checks: their values depend on Spark's hash functions
-        # which have no DuckDB equivalent.
-    }
-
-
 # --------------------------------------------------------------------------
 # Round-7 continuation: q155+ (mining / drift / skyline / audit lanes)
 # --------------------------------------------------------------------------
@@ -7548,6 +6849,10 @@ def q187_text_index(spark, sf_dir):
     queries = spark.createDataFrame(_BM25_QUERIES,
                                     ["query_id", "query_text"])
     return query_text_index(spark, path, queries, k=10, round_dp=4)
+
+
+# identical semantics to q87, served from the persisted index
+O_Q187 = O_Q87
 
 
 def q188_k_anonymity(spark, sf_dir):
@@ -15661,3 +14966,47 @@ def q356_media_png_interlaced(spark, sf_dir):
         rows.append((i, bytearray(encode_png(img, interlace=i % 2 == 0))))
     df = spark.createDataFrame(rows, "media_id long, payload binary")
     return image_channel_stats(df)
+
+
+# identical semantics to q354, PNG decode
+O_Q356 = O_Q354
+
+
+# ---------------------------------------------------------------------------
+
+_QUERY_NAME = re.compile(r"q(\d+)_\w+")
+
+
+def _catalog() -> list[tuple[str, str, Callable]]:
+    """(number, name, function) of every ``q<N>_...`` function defined in
+    this module, ordered by N."""
+    found = []
+    for name, fn in list(globals().items()):
+        m = _QUERY_NAME.fullmatch(name)
+        if m and inspect.isfunction(fn) and fn.__module__ == __name__:
+            found.append((int(m.group(1)), m.group(1), name, fn))
+    return [(num, name, fn) for _, num, name, fn in sorted(found)]
+
+
+def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: fn for _, name, fn in _catalog()}
+
+
+def build_oracles() -> dict[str, str]:
+    """``O_Q<N>`` for every query that has one.
+
+    The queries without one are rows-only checks:
+    - q38/q39 (xxhash64-seeded minhash/simhash), q63 and q127 (minhash
+      stages) depend on Spark's hash functions, which have no DuckDB
+      equivalent; q41 (IVF) and q110 (IVF-PQ) are approximate.
+    - q165 (PCA scree): eigendecomposition has no SQL equivalent.  A
+      recursive-CTE power-iteration oracle was evaluated and rejected:
+      the embeddings covariance spectrum is near-isotropic (measured
+      eigengap ratios 0.93-0.995 at both gate SFs), so power iteration
+      cannot converge to the 4dp the hash compare needs.  numpy parity
+      (LAPACK, exact) is pinned in tests and is the stronger check.
+    - q166 (persisted ANN index) is approximate; index==direct equality
+      is pinned in tests."""
+    g = globals()
+    return {name: g[f"O_Q{num}"] for num, name, _ in _catalog()
+            if f"O_Q{num}" in g}

@@ -60,6 +60,20 @@ def test_binned_distribution_empty_bins_present(spark, frame):
     assert rows[0] == 0 and rows[1] == 0 and rows[2] == 17
 
 
+def test_grouped_bins_dense_per_group(spark):
+    # every group gets every bin, including groups with empty bins
+    df = spark.createDataFrame(pd.DataFrame(
+        {"plot_id": [1, 1, 1, 2, 2], "dbh": [10.0, 20.0, 30.0, 5.0, 15.0],
+         "alive": [1, 0, 1, 1, 1]}))
+    bins = {(r["plot_id"], r["bin_index"]): r["count"] for r in
+            agg.binned_distribution(df, ["plot_id"], "dbh",
+                                    edges=[0, 10, 20, 40]).collect()}
+    assert bins == {(1, 0): 0, (1, 1): 1, (1, 2): 2,
+                    (2, 0): 1, (2, 1): 1, (2, 2): 0}
+    alive = {r["plot_id"]: (r["true_count"], r["false_count"]) for r in
+             agg.binary_counter(df, ["plot_id"], "alive").collect()}
+    assert alive == {1: (2, 1), 2: (2, 0)}
+
 def test_categorical_distribution_declared_categories(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"h": ["1", "2", "1", "3", "9"]}))

@@ -458,3 +458,29 @@ def test_table_handle_memo_invalidates_on_source_rewrite(spark, tmp_path):
     assert g2 is not g1 and g2.count() == 2, \
         "added part file must invalidate the directory handle"
     shutil.rmtree(pdir)
+
+
+def test_table_handle_memo_invalidates_on_nested_partition_rewrite(
+        spark, tmp_path):
+    """A part file under a ``k=v/`` partition directory rewritten in
+    place leaves every top-level entry's stat unchanged; the handle must
+    still be re-resolved with the new contents."""
+    import os
+    import pandas as pd
+
+    from niamoto_spark.queries import _t
+
+    tdir = tmp_path / "part" / "region.parquet"
+    for k in (1, 2):
+        (tdir / f"k={k}").mkdir(parents=True)
+        pd.DataFrame({"r_regionkey": [k]}).to_parquet(
+            tdir / f"k={k}" / "part-0.parquet")
+    h1 = _t(spark, str(tmp_path / "part"), "region")
+    assert h1.count() == 2
+    nested = tdir / "k=1" / "part-0.parquet"
+    pd.DataFrame({"r_regionkey": [10, 11, 12]}).to_parquet(nested)
+    st = os.stat(nested)
+    os.utime(nested, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    h2 = _t(spark, str(tmp_path / "part"), "region")
+    assert h2 is not h1, "rewritten nested part must invalidate the handle"
+    assert h2.count() == 4, "stale listing served after nested rewrite"

@@ -216,6 +216,18 @@ def test_tfidf_sig_df_with_no_prefilter_raises(spark):
         tfidf_cosine_pairs(df, "doc_id", "text", sig_df=df)
 
 
+def test_tfidf_sig_df_wrong_width_raises(spark):
+    """A 16-hash (md5 family) table handed to the 64-hash minhash lane
+    would band silently with lost recall: it must fail instead."""
+    from niamoto_spark.operators.dedup import minhash_signatures_md5
+
+    d, _ = _planted_text_corpus(spark)
+    sigs = minhash_signatures_md5(d, "doc_id", "text", num_hashes=16)
+    out = tfidf_cosine_pairs(d, "doc_id", "text", threshold=0.3,
+                             prefilter="minhash", sig_df=sigs)
+    with pytest.raises(Exception, match="must hold 64 hashes"):
+        out.collect()
+
 def test_tfidf_max_df_prunes_stop_tokens(spark):
     rows = [(i, f"common unique{i}") for i in range(10)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])

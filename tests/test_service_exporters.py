@@ -1,5 +1,4 @@
-"""TransformerService end-to-end + exporters + extraction + chains +
-catalog/registry."""
+"""Exporters + extraction + chains + catalog/registry."""
 
 import json
 import os
@@ -14,7 +13,6 @@ from niamoto_spark.exporters.json_api import export_json_api
 from niamoto_spark.operators import extraction as ex
 from niamoto_spark.operators.chains import transform_chain
 from niamoto_spark.registry import PluginType, get_plugin, list_plugins, load_all
-from niamoto_spark.transformer_service import GroupConfig, TransformerService, WidgetSpec
 
 
 def test_registry_resolves_reference_plugin_names():
@@ -37,28 +35,6 @@ def test_entity_registry_roundtrip(tmp_path, spark, sf_dir):
     assert reg2.get("nation").links[0].references == "region"
     df = reg2.load(spark, "region")
     assert df.count() == 5
-
-
-def test_transformer_service_wide_table(spark):
-    facts = spark.createDataFrame(pd.DataFrame({
-        "plot_id": [1, 1, 1, 2, 2],
-        "dbh": [10.0, 20.0, 30.0, 5.0, 15.0],
-        "alive": [1, 0, 1, 1, 1],
-    }))
-    svc = TransformerService(spark)
-    cfg = GroupConfig(group_by="plots", group_id_col="plot_id", widgets=[
-        WidgetSpec("dbh_summary", "statistical_summary", {"field": "dbh"}),
-        WidgetSpec("alive_counts", "binary_counter", {"field": "alive"}),
-        WidgetSpec("dbh_bins", "binned_distribution",
-                   {"field": "dbh", "edges": [0, 10, 20, 40]}),
-    ])
-    out = svc.transform_group(cfg, facts)
-    assert set(out.columns) == {"plot_id", "dbh_summary", "alive_counts", "dbh_bins"}
-    rows = {r["plot_id"]: r for r in out.collect()}
-    s1 = json.loads(rows[1]["dbh_summary"])
-    assert s1["mean"] == 20.0 and s1["count"] == 3
-    bins2 = json.loads(rows[2]["dbh_bins"])
-    assert isinstance(bins2, list) and len(bins2) == 3  # dense bins
 
 
 def test_json_api_exporter(tmp_path, spark):
@@ -163,15 +139,6 @@ def test_json_api_index_filter(tmp_path, spark):
     from niamoto_spark.plans.guards import UnsafeQueryError
     with pytest.raises(UnsafeQueryError):
         export_json_api(df, "id", str(tmp_path), index_filter="evil; DROP")
-
-
-def test_transform_single_widget_preview(spark):
-    svc = TransformerService(spark)
-    df = spark.createDataFrame(pd.DataFrame(
-        {"pid": [1, 1, 2], "dbh": [10.0, 30.0, 7.0]}))
-    out = {r["pid"]: r for r in svc.transform_single_widget(
-        df, "pid", "statistical_summary", {"field": "dbh"}).collect()}
-    assert out[1]["mean"] == 20.0 and out[2]["count"] == 1
 
 
 def test_xlsx_gated_when_openpyxl_missing(spark, tmp_path):

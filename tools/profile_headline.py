@@ -18,12 +18,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEADLINE = [
-    "q01_pricing_summary", "q07_top_brands", "q11_customer_orders",
-    "q12_bridge_revenue", "q19_shannon_brands", "q23_dedup_exact",
-    "q28_ann_topk", "q56_ann_blas", "q30_events_hourly", "q31_sessions",
-    "q38_minhash_candidates",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
