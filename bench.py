@@ -73,7 +73,10 @@ def main() -> None:
     #     (most queries moving >30% in the SAME direction — code changes
     #     never do that, background load does);
     #   - per-query result is the min across all accepted passes.
-    LOAD_CEIL = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_CEIL", "4.0"))
+    #   The default ceiling is the core count: a higher 1-min load means
+    #   more runnable threads than cores, whatever the host.
+    LOAD_CEIL = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_CEIL")
+                      or _cpus())
     MAX_PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_PASSES", "3"))
 
     timings: dict[str, float] = {}
@@ -146,6 +149,7 @@ def main() -> None:
         "approx_p50_rel_err": sketch["p50_rel_err"],
         "heavy_hitters_sec": hh_sec,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf_dir,
+        "cpus": _cpus(),
     }
     print(json.dumps(result))
 
@@ -199,28 +203,37 @@ def _lockstep_noise(timings: dict[str, float]) -> bool:
     return slow >= 0.8 * len(pcts)
 
 
+def _cpus() -> int:
+    """The core count the session runs on (``local[$SPARK_GRAFT_CPUS]``,
+    as niamoto_spark.session resolves it)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
+
+
 def _deltas_vs_prev(timings: dict[str, float]) -> dict:
     """Round-over-round regression guard (VERDICT r6 #2): diff this run
-    against the newest driver-recorded BENCH_r{N}.json so a creeping
-    query (q38 went +33% over three rounds unnoticed) is visible in the
-    bench output itself.  Positive delta = slower than last round."""
+    against the newest recorded BENCH_r{N}[_c<cpus>].json taken
+    at the same core count, so a creeping query (q38 went +33% over
+    three rounds unnoticed) is visible in the bench output itself.
+    Positive delta = slower than last round."""
     import glob
     import re
 
     here = os.path.dirname(os.path.abspath(__file__))
     rounds = []
     for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            rounds.append((int(m.group(1)), p))
+        m = re.search(r"BENCH_r(\d+)(?:_c\d+)?\.json$", p)
+        if not m:
+            continue
+        try:
+            with open(p) as f:
+                rec = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        if rec.get("cpus") == _cpus():
+            rounds.append((int(m.group(1)), p, rec.get("parsed", {})))
     if not rounds:
-        return {}
-    n, path = max(rounds)
-    try:
-        with open(path) as f:
-            parsed = json.load(f).get("parsed", {})
-    except (OSError, json.JSONDecodeError):
-        return {}
+        return {"skipped": f"no BENCH_r*.json recorded at cpus={_cpus()}"}
+    n, _, parsed = max(rounds)
     prev = parsed.get("queries", {})
     sf_now = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_now = sf_now.rstrip("/").rsplit("sf", 1)[-1]

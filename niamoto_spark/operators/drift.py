@@ -5,7 +5,7 @@ Kolmogorov-Smirnov statistic, and the chi-square independence test.
 
 Complements the single-series detectors in operators/timeseries.py
 (CUSUM/EWMA watch ONE metric over time; these compare WHOLE
-distributions) and the per-column profiler (sources/profiler.py).
+distributions).
 
 All three are exact, closed-form, and engine-replayable (full DuckDB
 oracles): binning is deterministic arithmetic over reference min/max,

@@ -41,6 +41,7 @@ from niamoto_spark.operators import aggregation as agg_ops
 from niamoto_spark.operators import class_objects as co_ops
 from niamoto_spark.operators import extraction as ex_ops
 from niamoto_spark.operators import loaders as loader_ops
+from niamoto_spark.operators.chains import empty_chain_json, transform_chain
 from niamoto_spark.sources.files import read_csv_auto
 from niamoto_spark.sources.sinks import overwrite_table
 
@@ -51,36 +52,6 @@ SINGLE_ROW_WIDGETS = {
     "statistical_summary", "field_aggregator", "binary_counter",
     "direct_attribute", "class_object_field_aggregator",
 }
-
-
-def _resolve_chain_ref(ref: str, docs: dict):
-    """Resolve an "@step.field.sub[0]" chain reference against computed
-    per-entity step docs — the reference ReferenceResolver's dotted +
-    indexed grammar (reference_resolver.py:53-67); ``|function`` pipes
-    are not supported here (KeyError -> the step emits NULL).  Raises
-    KeyError when any segment is missing."""
-    import re as _re
-
-    body = ref[1:]
-    if "|" in body:
-        raise KeyError(ref)
-    parts = body.split(".")
-    if parts[0] not in docs:
-        raise KeyError(ref)
-    cur = docs[parts[0]]
-    for seg in parts[1:]:
-        m = _re.match(r"([A-Za-z0-9_]+)((?:\[\d+\])*)$", seg)
-        if not m:
-            raise KeyError(ref)
-        name, idx = m.group(1), m.group(2)
-        if not (isinstance(cur, dict) and name in cur):
-            raise KeyError(ref)
-        cur = cur[name]
-        for i in _re.findall(r"\[(\d+)\]", idx or ""):
-            if not isinstance(cur, list) or int(i) >= len(cur):
-                raise KeyError(ref)
-            cur = cur[int(i)]
-    return cur
 
 
 def _kernel_frame(k, frames: dict[str, DataFrame], gid: str,
@@ -479,12 +450,21 @@ class Pipeline:
                     present = None if k.rows else reduce(operator.or_,
                                                          markers)
                 else:
-                    jdf = self._widget_json(w.plugin, params, tagged,
-                                            g.group_by, gid, grouping)
+                    jdf, _ = self._widget_json(w.plugin, params, tagged,
+                                               g.group_by, gid, grouping)
                     frames.append(jdf.select(
                         F.col(gid), F.col("__json").alias(f"__w{i}")))
                     value = F.col(f"__w{i}")
                     present = value.isNotNull()
+                # zero-occurrence entities: the reference's per-entity
+                # loop runs EVERY widget on every taxonomy node and empty
+                # frames take the plugins' empty branches — engine
+                # aggregates emit no row there, so fall back to the
+                # config-derived empty literal (r13 import-axis find:
+                # 'Unknown species' nodes)
+                empty = empty_chain_json(params["steps"]) \
+                    if w.plugin == "transform_chain" \
+                    else RS.empty_widget_json(w.plugin, params)
             except Exception as e:  # noqa: BLE001
                 # the reference logs per-widget failures and keeps going
                 # (transformer.py:640-647); match that contract so one bad
@@ -492,15 +472,7 @@ class Pipeline:
                 warnings.append(
                     f"widget {g.group_by}.{name} ({w.plugin}): {e}")
                 continue
-            # zero-occurrence entities: the reference's per-entity loop
-            # runs EVERY widget on every taxonomy node and empty frames
-            # take the plugins' empty branches — engine aggregates emit
-            # no row there, so fall back to the config-derived empty
-            # literal (r13 import-axis find: 'Unknown species' nodes)
             if present is not None:
-                empty = self._empty_chain_json(params) \
-                    if w.plugin == "transform_chain" \
-                    else RS.empty_widget_json(w.plugin, params)
                 value = F.when(present, value).otherwise(F.lit(empty))
             columns.append(value.alias(name))
 
@@ -527,11 +499,34 @@ class Pipeline:
 
     def _widget_json(self, plugin: str, params: dict, tagged: dict,
                      group_by: str, gid: str,
-                     grouping: DataFrame) -> DataFrame:
+                     grouping: DataFrame
+                     ) -> tuple[DataFrame, DataFrame | None]:
         """One widget -> (gid, __json) in the reference's exact JSON shape
         (niamoto_spark/refshapes.py); plugins without a reference shaper
-        fall back to the legacy array-of-structs packing."""
+        fall back to the legacy array-of-structs packing.  Also returns
+        the frame the JSON was shaped from, which a later transform_chain
+        step's ``source: "@key"`` reads: a fused plugin's kernel frame,
+        the operator frame of the others, None for a chain and for
+        plugins shaped straight off their source."""
         from niamoto_spark import refshapes as RS
+
+        if plugin == "transform_chain":
+            def step(name: str, sparams: dict, bound: dict):
+                jdf, frame = self._widget_json(name, sparams, bound,
+                                               group_by, gid, grouping)
+                if frame is None:
+                    frame = self._run_widget(name, dict(sparams), bound,
+                                             group_by, gid)
+                return jdf, frame
+
+            return transform_chain(params["steps"], tagged, gid, step), None
+        if plugin in RS.FUSED:
+            # a chain step (top-level fused widgets are planned by
+            # _transform_group)
+            k = RS.kernel(plugin, params, tagged, group_by)
+            frame = _kernel_frame(k, tagged, gid, group_by)
+            return frame.select(F.col(gid),
+                                k.doc(F.col).alias("__json")), frame
 
         src_name = params.get("source")
         df = tagged.get(src_name) if src_name else None
@@ -543,36 +538,37 @@ class Pipeline:
         # tagged frame (the reference plugins receive the loaded stats
         # frame whole and filter internally)
         if plugin == "class_object_series_extractor" and "size_field" in params:
-            return RS.co_series_extractor(df, gid, params, grouping)
+            return RS.co_series_extractor(df, gid, params, grouping), None
         if plugin == "class_object_field_aggregator" and isinstance(
                 params.get("fields"), list):
-            return RS.co_field_aggregator(df, gid, params, grouping)
+            return RS.co_field_aggregator(df, gid, params, grouping), None
         if plugin == "class_object_categories_extractor" and (
                 "categories_order" in params or "class_object" in params):
-            return RS.co_categories_extractor(df, gid, params, grouping)
+            return RS.co_categories_extractor(df, gid, params,
+                                              grouping), None
         if plugin == "class_object_binary_aggregator" and "groups" in params:
-            return RS.co_binary_aggregator(df, gid, params)
+            return RS.co_binary_aggregator(df, gid, params), None
         if plugin == "class_object_categories_mapper" and isinstance(
                 params.get("categories"), dict):
-            return RS.co_categories_mapper(df, gid, params)
+            return RS.co_categories_mapper(df, gid, params), None
         if plugin == "class_object_series_ratio_aggregator" and \
                 "distributions" in params:
-            return RS.co_series_ratio_aggregator(df, gid, params)
+            return RS.co_series_ratio_aggregator(df, gid, params), None
         if plugin == "class_object_series_matrix_extractor" and \
                 "series" in params:
-            return RS.co_series_matrix_extractor(df, gid, params)
+            return RS.co_series_matrix_extractor(df, gid, params), None
         if plugin == "class_object_series_by_axis_extractor" and \
                 "types" in params:
-            return RS.co_series_by_axis_extractor(df, gid, params)
+            return RS.co_series_by_axis_extractor(df, gid, params), None
         if plugin == "geospatial_extractor":
             return RS.geospatial_extractor(
                 df, gid, params, grouping,
-                strict_parity=self.strict_parity)
+                strict_parity=self.strict_parity), None
         if plugin == "multi_column_extractor" and df is not None:
-            return RS.multi_column_extractor(df, gid, params)
+            return RS.multi_column_extractor(df, gid, params), None
         if plugin == "shape_processor":
-            return self._shape_processor_widget(df if df is not None
-                                                else grouping, gid, params)
+            return self._shape_processor_widget(
+                df if df is not None else grouping, gid, params), None
 
         run_params = dict(params)
         if plugin == "direct_attribute":
@@ -584,378 +580,20 @@ class Pipeline:
             run_params.pop("max_value", None)
             run_params.pop("precision", None)
         wdf = self._run_widget(plugin, run_params, tagged, group_by, gid)
-        if plugin == "transform_chain" and "__cc" in wdf.columns:
-            return wdf.select(F.col(gid),
-                              F.col("__cc").alias("__json"))
         if plugin == "top_ranking":
-            return RS.top_ranking(wdf, gid, params)
-        if plugin == "time_series_analysis":
-            return RS.time_series_analysis(wdf, gid, params)
-        if plugin == "multi_column_extractor":
-            return RS.multi_column_extractor(wdf, gid, params)
-        if plugin == "direct_attribute":
+            jdf = RS.top_ranking(wdf, gid, params)
+        elif plugin == "time_series_analysis":
+            jdf = RS.time_series_analysis(wdf, gid, params)
+        elif plugin == "direct_attribute":
             field = params["field"]
             is_float = bool(df is not None and field in df.columns and
                             dict(df.dtypes).get(field) in
                             ("double", "float"))
-            return RS.direct_attribute(wdf, gid, params, is_float)
-        return self._pack_json(wdf, gid, "__json",
-                               single_row=plugin in SINGLE_ROW_WIDGETS)
-
-    def _empty_chain_json(self, params: dict) -> str | None:
-        """transform_chain empty-entity envelope: the reference runs the
-        whole chain on the empty frame, so each step's empty result is
-        keyed under its output_key — ts steps take the [0]*12 int fill,
-        custom_calculator steps run the SAME python kernels the engine
-        uses at scale (deterministic over the zero series), and a dict
-        custom_formula composes prior keys.  Returns None when a step
-        cannot be statically evaluated (the widget stays NULL there)."""
-        import json as _json
-
-        from niamoto_spark import refshapes as RS
-        from niamoto_spark.operators.ecological import (
-            active_periods_dict, peak_detection_dict)
-
-        doc: dict[str, Any] = {}
-        step_params: dict[str, dict] = {}
-        series_names: list[str] = []
-        for step in params.get("steps") or []:
-            sp_ = dict(step.get("params") or {})
-            key = step.get("output_key")
-            if step.get("plugin") == "time_series_analysis":
-                txt = RS.empty_widget_json("time_series_analysis", sp_)
-                doc[key] = _json.loads(txt)
-                series_names = list(sp_.get("fields") or {})
-            elif step.get("plugin") == "custom_calculator":
-                op = sp_.get("operation")
-                series = {k: [0.0] * 12 for k in series_names}
-                if op == "peak_detection":
-                    doc[key] = peak_detection_dict(
-                        series, threshold=sp_.get("threshold"),
-                        min_distance=int(sp_.get("min_distance", 1)),
-                        prominence=float(sp_.get("prominence", 0.0)))
-                elif op == "active_periods":
-                    labels = sp_.get("labels")
-                    if isinstance(labels, str) and labels.startswith("@"):
-                        src_key = labels[1:].split(".", 1)[0]
-                        labels = step_params.get(src_key, {}).get("labels")
-                    doc[key] = active_periods_dict(
-                        series,
-                        threshold=float(sp_.get("threshold", 0.0)),
-                        min_duration=int(sp_.get("min_duration", 1)),
-                        labels=labels)
-                elif op == "custom_formula":
-                    import ast
-                    try:
-                        tree = ast.parse(sp_["formula"], mode="eval").body
-                    except (KeyError, SyntaxError):
-                        return None
-                    if not isinstance(tree, ast.Dict):
-                        return None
-                    variables = sp_.get("variables", {})
-
-                    def _resolve_ref(ref):
-                        # "@key.sub.path" -> the dotted lookup into the
-                        # already-computed doc (the reference's
-                        # ReferenceResolver resolves subpaths the same
-                        # way); sentinel KeyError when unresolvable
-                        path = ref[1:].split(".")
-                        if path[0] not in doc:
-                            raise KeyError(ref)
-                        cur = doc[path[0]]
-                        for p in path[1:]:
-                            if not (isinstance(cur, dict) and p in cur):
-                                raise KeyError(ref)
-                            cur = cur[p]
-                        return cur
-
-                    merged = {}
-                    try:
-                        for k, v in zip(tree.keys, tree.values):
-                            if not isinstance(k, ast.Constant) or \
-                                    not isinstance(v, ast.Name):
-                                return None
-                            ref = variables.get(v.id, f"@{v.id}")
-                            if not (isinstance(ref, str)
-                                    and ref.startswith("@")):
-                                return None
-                            merged[k.value] = _resolve_ref(ref)
-                        resolved_vars = {
-                            vn: _resolve_ref(r) for vn, r in
-                            variables.items()
-                            if isinstance(r, str) and r.startswith("@")}
-                    except KeyError:
-                        return None
-                    # the reference's _custom_formula envelope
-                    # (custom_calculator.py:1649-1654)
-                    doc[key] = {
-                        "value": merged,
-                        "formula": sp_["formula"],
-                        "description": sp_.get("description",
-                                               "Custom formula"),
-                        "variables": resolved_vars,
-                    }
-                else:
-                    from niamoto_spark.operators.ecological import (
-                        CC_PURE_OPS, cc_pure_op)
-                    if op not in CC_PURE_OPS:
-                        return None
-                    # pure op over the zero-series docs computed so far
-
-                    def _mat(v):
-                        if isinstance(v, str) and v.startswith("@"):
-                            return _resolve_chain_ref(v, doc)
-                        if isinstance(v, dict):
-                            return {k2: _mat(x) for k2, x in v.items()}
-                        if isinstance(v, list):
-                            return [_mat(x) for x in v]
-                        return v
-
-                    try:
-                        doc[key] = cc_pure_op(
-                            op, {k2: _mat(v) for k2, v in sp_.items()
-                                 if k2 not in ("operation", "source")})
-                    except (KeyError, ValueError, TypeError):
-                        return None
-            else:
-                return None
-            step_params[key] = sp_
-        return _json.dumps(doc, ensure_ascii=False) if doc else None
-
-    def _shape_chain_step(self, plugin: str, params: dict,
-                          wdf: DataFrame, bindings: dict,
-                          gid: str) -> DataFrame:
-        """Reference-shape ONE chain step's operator output (the same
-        dispatch _widget_json applies after _run_widget) — each step's
-        JSON joins the chain envelope under its output_key."""
-        from niamoto_spark import refshapes as RS
-
-        if plugin == "top_ranking":
-            return RS.top_ranking(wdf, gid, params)
-        if plugin == "time_series_analysis":
-            return RS.time_series_analysis(wdf, gid, params)
-        if plugin == "multi_column_extractor":
-            return RS.multi_column_extractor(wdf, gid, params)
-        if plugin == "direct_attribute":
-            src = bindings.get(params.get("source"))
-            field = params.get("field")
-            is_float = bool(src is not None and field in src.columns
-                            and dict(src.dtypes).get(field)
-                            in ("double", "float"))
-            return RS.direct_attribute(wdf, gid, params, is_float)
-        return self._pack_json(wdf, gid, "__json",
-                               single_row=plugin in SINGLE_ROW_WIDGETS)
-
-    def _custom_calculator_step(self, params: dict, bindings: dict,
-                                binding_params: dict,
-                                gid: str) -> DataFrame:
-        """custom_calculator inside transform_chain — the phenology-style
-        per-entity time-series ops (reference custom_calculator.py
-        peak_detection :1299, active_periods :1421, custom_formula
-        :1603).  NOTE: the reference's own safe-eval rejects the dict
-        literal its example config uses (ast.Dict not whitelisted), so
-        on the example transform.yml this engine is a strict SUPERSET:
-        the chain runs here and errors there.
-
-        Per-entity series are one year of months; the ops run per Arrow
-        batch via mapInPandas (no row-at-a-time UDFs)."""
-        import ast
-        import json as _json
-
-        import pandas as pd
-
-        from niamoto_spark.operators.ecological import (active_periods_dict,
-                                                        peak_detection_dict)
-
-        def _resolve_key(ref: str) -> str:
-            return ref[1:].split(".", 1)[0]
-
-        op = params.get("operation")
-        if op in ("peak_detection", "active_periods"):
-            key = _resolve_key(params["time_series"])
-            ts = bindings[key]
-            series_cols = [c for c in ts.columns if c.endswith("_pct")]
-            aggs = []
-            for s in series_cols:
-                m = F.map_from_entries(
-                    F.collect_list(F.struct(F.col("month"), F.col(s))))
-                aggs.append(F.array(*[F.coalesce(m[F.lit(i)], F.lit(0.0))
-                                      for i in range(1, 13)]).alias(s))
-            agg = ts.groupBy(gid).agg(*aggs)
-            labels = params.get("labels")
-            if isinstance(labels, str) and labels.startswith("@"):
-                labels = binding_params.get(_resolve_key(labels), {}) \
-                    .get("labels")
-            kwargs: dict[str, Any]
-            if op == "peak_detection":
-                kwargs = {"threshold": params.get("threshold"),
-                          "min_distance": int(params.get("min_distance", 1)),
-                          "prominence": float(params.get("prominence", 0.0))}
-                fn = peak_detection_dict
-            else:
-                kwargs = {"threshold": float(params.get("threshold", 0.0)),
-                          "min_duration": int(params.get("min_duration", 1)),
-                          "labels": labels}
-                fn = active_periods_dict
-
-            gid_type = dict(agg.dtypes)[gid]
-
-            def run(batches):
-                for pdf in batches:
-                    rows = []
-                    for _, row in pdf.iterrows():
-                        series = {s[:-len("_pct")]: [float(v)
-                                                    for v in row[s]]
-                                  for s in series_cols}
-                        rows.append((row[gid],
-                                     _json.dumps(fn(series, **kwargs))))
-                    yield pd.DataFrame(rows, columns=[gid, "__cc"])
-
-            return agg.mapInPandas(run,
-                                   schema=f"{gid} {gid_type}, __cc string")
-
-        if op == "custom_formula":
-            # dict-literal formula over @variable refs -> the reference's
-            # _custom_formula ENVELOPE {"value": <merged>, "formula":
-            # ..., "description": ..., "variables": {<name>: <doc>}}
-            # (custom_calculator.py:1649-1654 — the variables echo is the
-            # RESOLVED params dict), assembled JVM-side by string
-            # concatenation of the bound steps' per-entity JSON payloads.
-            # Subpath refs ("@key.subpath") bind the whole doc — the
-            # example config and grid variants only use whole-doc refs.
-            tree = ast.parse(params["formula"], mode="eval").body
-            if not isinstance(tree, ast.Dict):
-                raise ValueError(
-                    "chain custom_formula supports dict literals of "
-                    "variables here")
-            variables = params.get("variables", {})
-            entries: list[tuple[str, str]] = []   # value-dict (key, src)
-            for k, v in zip(tree.keys, tree.values):
-                if not isinstance(k, ast.Constant) or \
-                        not isinstance(v, ast.Name):
-                    raise ValueError("dict formula entries must be "
-                                     "'literal': variable")
-                ref = variables.get(v.id, f"@{v.id}")
-                entries.append((k.value, _resolve_key(ref)))
-            var_entries: list[tuple[str, str]] = []  # echo (name, src)
-            for vname, ref in variables.items():
-                if isinstance(ref, str) and ref.startswith("@"):
-                    var_entries.append((vname, _resolve_key(ref)))
-
-            joined, cols = None, {}
-            for key in dict.fromkeys(
-                    [s for _, s in entries] + [s for _, s in var_entries]):
-                frame = bindings[key]
-                if "__cc" in frame.columns:
-                    frame = frame.withColumnRenamed("__cc", f"__cc_{key}")
-                else:
-                    # a time-series frame: emit its reference JSON shape
-                    from niamoto_spark import refshapes as RS
-                    frame = RS.time_series_analysis(
-                        frame, gid, binding_params.get(key, {})) \
-                        .withColumnRenamed("__json", f"__cc_{key}")
-                cols[key] = F.col(f"__cc_{key}")
-                joined = frame if joined is None \
-                    else joined.join(frame, gid, "full")
-
-            def _obj(pairs):
-                ps: list = []
-                for jk, sk in pairs:
-                    ps.append(F.lit(f'{_json.dumps(jk)}: '))
-                    ps.append(F.coalesce(cols[sk], F.lit("null")))
-                    ps.append(F.lit(", "))
-                return ([F.lit("{")] + ps[:-1] + [F.lit("}")]) if ps \
-                    else [F.lit("{}")]
-
-            desc = params.get("description", "Custom formula")
-            parts = ([F.lit('{"value": ')] + _obj(entries)
-                     + [F.lit(f', "formula": '
-                              f'{_json.dumps(params["formula"])}, '
-                              f'"description": {_json.dumps(desc)}, '
-                              f'"variables": ')]
-                     + _obj(var_entries) + [F.lit("}")])
-            return joined.select(F.col(gid), F.concat(*parts).alias("__cc"))
-
-        from niamoto_spark.operators.ecological import (CC_PURE_OPS,
-                                                         cc_pure_op)
-        if op in CC_PURE_OPS:
-            # pure (params-only) operation: resolve @refs into the
-            # referenced steps' per-entity docs and run the shared
-            # python kernel per Arrow batch — the same kernels the
-            # reference's per-entity loop runs, so parity is the
-            # kernel's (grid-diffed on the appended-step variants)
-            refs: list[str] = []
-
-            def _walk(v):
-                if isinstance(v, str) and v.startswith("@"):
-                    refs.append(v)
-                elif isinstance(v, dict):
-                    for x in v.values():
-                        _walk(x)
-                elif isinstance(v, list):
-                    for x in v:
-                        _walk(x)
-
-            op_params = {k: v for k, v in params.items()
-                         if k not in ("operation", "source")}
-            _walk(op_params)
-            src_keys = list(dict.fromkeys(_resolve_key(r) for r in refs))
-            joined = None
-            for skey in src_keys:
-                frame = bindings[skey]
-                if "__cc" in frame.columns:
-                    frame = frame.withColumnRenamed("__cc",
-                                                    f"__cc_{skey}")
-                else:
-                    from niamoto_spark import refshapes as RS
-                    frame = RS.time_series_analysis(
-                        frame, gid, binding_params.get(skey, {}))                         .withColumnRenamed("__json", f"__cc_{skey}")
-                joined = frame if joined is None                     else joined.join(frame, gid, "full")
-            if joined is None:
-                raise ValueError(
-                    f"chain {op} step has no @step references")
-            gid_type = dict(joined.dtypes)[gid]
-            keys_ = list(src_keys)
-
-            def run_pure(batches):
-                for pdf in batches:
-                    rows = []
-                    for _, row in pdf.iterrows():
-                        docs, ok = {}, True
-                        for skey in keys_:
-                            txt = row[f"__cc_{skey}"]
-                            if not isinstance(txt, str):
-                                ok = False
-                                break
-                            docs[skey] = _json.loads(txt)
-                        if not ok:
-                            rows.append((row[gid], None))
-                            continue
-
-                        def mat(v):
-                            if isinstance(v, str) and v.startswith("@"):
-                                return _resolve_chain_ref(v, docs)
-                            if isinstance(v, dict):
-                                return {k2: mat(x) for k2, x in v.items()}
-                            if isinstance(v, list):
-                                return [mat(x) for x in v]
-                            return v
-
-                        try:
-                            out_doc = cc_pure_op(
-                                op, {k2: mat(v) for k2, v
-                                     in op_params.items()})
-                            rows.append((row[gid], _json.dumps(
-                                out_doc, ensure_ascii=False)))
-                        except (KeyError, ValueError, TypeError):
-                            rows.append((row[gid], None))
-                    yield pd.DataFrame(rows, columns=[gid, "__cc"])
-
-            return joined.mapInPandas(
-                run_pure, schema=f"{gid} {gid_type}, __cc string")
-
-        raise ValueError(f"chain custom_calculator operation {op!r} "
-                         "not supported")
+            jdf = RS.direct_attribute(wdf, gid, params, is_float)
+        else:
+            jdf = self._pack_json(wdf, gid, "__json",
+                                  single_row=plugin in SINGLE_ROW_WIDGETS)
+        return jdf, wdf
 
     def _shape_processor_widget(self, df: DataFrame, gid: str,
                                 params: dict) -> DataFrame:
@@ -1066,69 +704,6 @@ class Pipeline:
     def _run_widget(self, plugin: str, params: dict, tagged: dict,
                     group_by: str, gid: str) -> DataFrame:
         """Adapter: reference YAML param names -> operator signatures."""
-        if plugin == "transform_chain":
-            # ordered steps; each step's output binds under output_key and
-            # later steps reference it via source: "@key" (reference
-            # transform_chain.py:200-317).  Step PARAMS are also kept so
-            # later steps can resolve config refs like
-            # "@phenology_raw.labels".
-            #
-            # The chain's RESULT is the reference's envelope: EVERY
-            # step's output keyed by its output_key
-            # (transform_chain.py:305-311 ``result[output_key] =
-            # step_result; return result``) — not just the final
-            # step's.  Found by the r13 chain-variant differential: the
-            # first config the reference could actually execute showed
-            # the engine emitting only the tail.
-            import json as _json
-
-            from niamoto_spark import refshapes as RS
-
-            bindings = dict(tagged)
-            binding_params: dict[str, dict] = {}
-            shaped: list[tuple[str, DataFrame]] = []
-            for step in params["steps"]:
-                sparams = dict(step.get("params", {}))
-                src = sparams.get("source")
-                if isinstance(src, str) and src.startswith("@"):
-                    sparams["source"] = src[1:]
-                if step["plugin"] == "custom_calculator":
-                    out = self._custom_calculator_step(
-                        sparams, bindings, binding_params, gid)
-                    jf = out.select(F.col(gid),
-                                    F.col("__cc").alias("__json"))
-                elif step["plugin"] in RS.FUSED:
-                    k = RS.kernel(step["plugin"], sparams, bindings,
-                                  group_by)
-                    out = _kernel_frame(k, bindings, gid, group_by)
-                    jf = out.select(F.col(gid),
-                                    k.doc(F.col).alias("__json"))
-                else:
-                    run_params = dict(sparams)
-                    if step["plugin"] == "direct_attribute":
-                        run_params.pop("max_value", None)
-                        run_params.pop("precision", None)
-                    out = self._run_widget(step["plugin"], run_params,
-                                           bindings, group_by, gid)
-                    jf = self._shape_chain_step(step["plugin"], sparams,
-                                                out, bindings, gid)
-                bindings[step["output_key"]] = out
-                binding_params[step["output_key"]] = sparams
-                shaped.append((step["output_key"], jf))
-            assert shaped, "empty transform_chain"
-            joined = None
-            parts: list = [F.lit("{")]
-            for i, (key, jf) in enumerate(shaped):
-                jf = jf.withColumnRenamed("__json", f"__j{i}")
-                joined = jf if joined is None \
-                    else joined.join(jf, gid, "full")
-                parts.append(F.lit(("," if i else "")
-                                   + _json.dumps(key) + ": "))
-                parts.append(F.coalesce(F.col(f"__j{i}"), F.lit("null")))
-            parts.append(F.lit("}"))
-            return joined.select(F.col(gid),
-                                 F.concat(*parts).alias("__cc"))
-
         src_name = params.pop("source", None)
         df = tagged.get(src_name) if src_name else None
 

@@ -5,8 +5,7 @@ The reference's 16 widget plugins render JSON results to Plotly HTML and do
 table_view.py:204).  Rendering is presentation; the data ops belong to the
 engine.  Each shaper takes a widget frame (an operator's output) and returns
 the render-ready DataFrame — sorted, limited, renamed — that a chart
-front-end consumes directly.  Compatibility between operators and shapers is
-scored by niamoto_spark.matching.
+front-end consumes directly.
 """
 
 from __future__ import annotations

@@ -12,6 +12,7 @@ import json
 import os
 
 import pandas as pd
+import pytest
 
 from niamoto_spark.pipeline import Pipeline
 
@@ -135,10 +136,14 @@ def typed(doc) -> str:
     return json.dumps(doc, sort_keys=True, ensure_ascii=False)
 
 
-def test_chain_outputs_match_pinned(spark, tmp_path):
-    pipe = fixture_project(spark, str(tmp_path))
-    got = chain_outputs(pipe, CHAINS)
-    assert not pipe.warnings
+@pytest.fixture(scope="module")
+def project(spark, tmp_path_factory):
+    return fixture_project(spark, str(tmp_path_factory.mktemp("chains")))
+
+
+def test_chain_outputs_match_pinned(project):
+    got = chain_outputs(project, CHAINS)
+    assert not project.warnings
     with open(PINNED) as f:
         pinned = json.load(f)
     assert sorted(got) == sorted(pinned)
@@ -146,6 +151,51 @@ def test_chain_outputs_match_pinned(spark, tmp_path):
         for plot in ("1", "2", "3"):
             assert typed(got[name][plot]) == typed(pinned[name][plot]), \
                 (name, plot)
+
+
+def test_custom_formula_resolves_subpath_refs(project):
+    """``@raw.month_data`` names the ts doc's month_data, for entities
+    with data as for the empty-entity envelope."""
+    got = chain_outputs(project, {"months": [
+        TS, _cc("merged", operation="custom_formula",
+                formula="{'months': md}",
+                variables={"md": "@raw.month_data"})]})["months"]
+    for plot in ("1", "2", "3"):
+        doc = got[plot]
+        want = typed(doc["raw"]["month_data"])
+        assert typed(doc["merged"]["value"]["months"]) == want, plot
+        assert typed(doc["merged"]["variables"]["md"]) == want, plot
+
+
+def test_labels_ref_reads_the_ts_doc(project):
+    """``@raw.labels`` reads the ts step's output doc, so a ts step that
+    omits ``labels`` lends the period labels its default month names."""
+    ts = {**TS, "params": {k: v for k, v in TS["params"].items()
+                           if k != "labels"}}
+    got = chain_outputs(project, {"periods": [
+        ts, _cc("periods", operation="active_periods",
+                time_series="@raw.month_data", labels="@raw.labels")]})
+    doc = got["periods"]["1"]
+    labels = doc["raw"]["labels"]
+    assert labels[2] == "Mar"
+    periods = doc["periods"]["value"]["flower"]["periods"]
+    assert periods
+    for p in periods:
+        assert (p["start_label"], p["end_label"]) == \
+            (labels[p["start"]], labels[p["end"]])
+
+
+def test_one_python_stage_per_calculating_chain(project):
+    """A chain plans one mapInPandas for all of its custom_calculator
+    steps, and none when it has no such step."""
+    def plan(chains):
+        out = project.run_transform(chain_group(chains))["plots"]
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    assert "MapInPandas" not in plan(
+        {k: CHAINS[k] for k in ("dbh", "families")})
+    assert plan({"phenology": CHAINS["phenology"]}) \
+        .count("MapInPandas ") == 1
 
 
 if __name__ == "__main__":

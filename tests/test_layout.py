@@ -1,61 +1,4 @@
-"""Layout + skew utilities."""
-
-import glob
-import os
-
-import pandas as pd
-from pyspark.sql import functions as F
-
-from niamoto_spark.sources.layout import (salted_join, write_bucketed,
-                                          write_partitioned)
-
-
-def test_write_partitioned_dirs(tmp_path, spark):
-    df = spark.createDataFrame(pd.DataFrame(
-        {"k": ["a", "a", "b"], "v": [1, 2, 3]}))
-    p = str(tmp_path / "part")
-    write_partitioned(df, p, ["k"])
-    assert sorted(os.path.basename(d) for d in glob.glob(p + "/k=*")) \
-        == ["k=a", "k=b"]
-    back = spark.read.parquet(p)
-    assert back.count() == 3
-
-
-def test_write_bucketed_table(tmp_path, spark):
-    # spark.sql.warehouse.dir is static; use the session default and drop
-    # the managed table afterwards (drop removes its files)
-    df = spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3], "v": list("abc")}))
-    write_bucketed(df, "t_bucketed_test", "k", n_buckets=4, sort_col="k")
-    try:
-        assert spark.table("t_bucketed_test").count() == 3
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_test")
-
-
-def test_salted_join_matches_plain_join(spark):
-    big = spark.createDataFrame(pd.DataFrame(
-        {"k": ["hot"] * 50 + ["cold"] * 5, "v": range(55)}))
-    small = spark.createDataFrame(pd.DataFrame(
-        {"k": ["hot", "cold", "never"], "name": ["H", "C", "N"]}))
-    plain = big.join(small, "k").select("k", "v", "name")
-    salted = salted_join(big, small, "k").select("k", "v", "name")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    # left join keeps unmatched big rows too
-    left = salted_join(big, small.where("k = 'hot'"), "k", how="left")
-    assert left.where(F.col("name").isNull()).count() == 5
-
-
-def test_profiler(tmp_path, spark):
-    from niamoto_spark.sources.profiler import profile_csv
-
-    p = tmp_path / "occ.csv"
-    p.write_text("id;geo_pt;name\n1;POINT (166 -22);a\n2;;b\n")
-    prof = profile_csv(spark, str(p))
-    assert prof["delimiter"] == ";"
-    cols = {c["column"]: c for c in prof["columns"]}
-    assert cols["geo_pt"]["geometry"] is True
-    assert cols["geo_pt"]["nulls"] == 1
-    assert cols["id"]["approx_distinct"] >= 2
+"""Deployers and read_any format dispatch."""
 
 
 def test_local_deployer(tmp_path):

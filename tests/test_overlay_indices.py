@@ -1,5 +1,5 @@
 """Vector overlay (clip/coverage/aggregate), simplification, composite
-ecological indices, SmartMatcher, DwC archive, HTML site."""
+ecological indices, DwC archive, HTML site."""
 
 import json
 import os
@@ -9,7 +9,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from niamoto_spark.matching import match_widgets, score_structure
 from niamoto_spark.operators import ecological as eco
 from niamoto_spark.operators import overlay as ov
 
@@ -120,19 +119,6 @@ def test_custom_formula_whitelist(spark):
         eco.custom_formula(df, "reflect('java.lang.System','exit')", "r")
     with pytest.raises(UnsafeQueryError):
         eco.custom_formula(df, "a; drop", "r")
-
-
-def test_smart_matcher_tiers():
-    assert score_structure(["x", "y"], ["x", "y"]) == (1.0, "exact")
-    assert score_structure(["x", "y", "z"], ["x", "y"]) == (0.8, "superset")
-    s, k = score_structure(["x"], ["x", "y"])
-    assert s == 0.25 and k == "partial"
-    top = match_widgets("statistical_summary")[0]
-    assert top.widget == "summary_stats" and top.score == 1.0
-    scatter_matches = {m.widget: m.score for m in match_widgets("scatter_analysis")}
-    assert scatter_matches["scatter_plot"] == 1.0
-    assert any(m.widget == "interactive_map"
-               for m in match_widgets("geospatial_extractor"))
 
 
 def test_dwc_archive_zip(tmp_path, spark):

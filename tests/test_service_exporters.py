@@ -11,7 +11,8 @@ from niamoto_spark.catalog import Entity, EntityKind, EntityRegistry, testdata_r
 from niamoto_spark.exporters.dwc import to_dwc_occurrence
 from niamoto_spark.exporters.json_api import export_json_api
 from niamoto_spark.operators import extraction as ex
-from niamoto_spark.operators.chains import transform_chain
+from niamoto_spark.operators.chains import (evaluate, resolve_ref,
+                                            transform_chain)
 from niamoto_spark.registry import PluginType, get_plugin, list_plugins, load_all
 
 
@@ -83,17 +84,31 @@ def test_direct_attribute_precision_cap(spark):
     assert r["value"] == 100.0
 
 
-def test_transform_chain_refs(spark):
-    df = spark.createDataFrame(pd.DataFrame({"g": ["x", "x"], "v": [1.0, 3.0]}))
-    from niamoto_spark.operators.aggregation import statistical_summary
-
-    out = transform_chain({"src": df}, [
-        {"func": statistical_summary, "args": ["@src"],
-         "params": {"group_cols": [], "field": "v"}, "output_key": "stats"},
-        {"func": lambda d: d.select((F.col("mean") * 2).alias("dbl")),
-         "args": ["@stats"], "output_key": "doubled"},
-    ])
-    assert out["doubled"].collect()[0]["dbl"] == 4.0
+def test_transform_chain_refs():
+    """One resolver reads ``@step.field[i]`` refs off earlier step docs;
+    one evaluator runs a custom_calculator step over them."""
+    docs = {"raw": {"month_data": {"um": [0, 2.0, 2.0]}, "labels": ["a"]}}
+    assert resolve_ref("@raw.month_data.um[1]", docs) == 2.0
+    assert resolve_ref("@raw", docs) is docs["raw"]
+    for missing in ("@raw.month_data.x", "@raw.labels[1]", "@nope",
+                    "@raw|upper"):
+        with pytest.raises(KeyError):
+            resolve_ref(missing, docs)
+    docs["h1"] = evaluate({"operation": "sum_array_slice",
+                           "array": "@raw.month_data.um",
+                           "start_index": 0, "end_index": 2}, docs)
+    assert docs["h1"]["slice_sum"] == 2.0
+    merged = evaluate({"operation": "custom_formula",
+                       "formula": "{'sum': h1, 'um': um}",
+                       "variables": {"um": "@raw.month_data.um"}}, docs)
+    assert merged["value"] == {"sum": docs["h1"], "um": [0, 2.0, 2.0]}
+    assert merged["variables"] == {"um": [0, 2.0, 2.0]}
+    # a ref to no earlier step fails the widget before anything runs
+    with pytest.raises(ValueError, match="names no earlier chain step"):
+        transform_chain([{"plugin": "custom_calculator", "output_key": "e",
+                          "params": {"operation": "shannon_entropy",
+                                     "probabilities": "@e.value"}}],
+                        {}, "id", shape=None)
 
 
 def test_explorer_end_to_end(spark, sf_dir):

@@ -1,13 +1,13 @@
 """Best-of-N regression guard for the HEAVIEST catalog lanes
 (VERDICT r10 next-#3).
 
-`tools/bench_guard.py` best-of-Ns the 11 headline bench queries; the
-round-9 connected-components waste (62s -> 35s on the q351 lane) sat
+perfbench's ``catalog_headline`` workload times the 11 headline bench
+queries one by one; the round-9 connected-components waste (62s -> 35s on the q351 lane) sat
 latent since round 2 because nothing watched the slow catalog lanes.
 This guard times the five heaviest lanes directly through the driver
 contract (`queries()` at the gate SF, full collect), takes the
 per-lane best of N runs, appends a ``{"kind": "slow", ...}`` record to
-``BENCH_GUARD.jsonl`` (bench_guard's reader skips foreign kinds), and
+``BENCH_GUARD.jsonl`` (older records of other kinds are skipped), and
 exits nonzero on >threshold best-of-N creep vs the previous slow
 record.
 
