@@ -492,21 +492,23 @@ def _lsh_band_hashes_numpy(c: DataFrame, planes, lsh_bands: int,
 
 
 def _auto_band_bits(n: int) -> int:
-    """Band-bit count scaled to the corpus (r15): a band's bucket
-    keyspace is 2^bits sign patterns, so the AVERAGE bucket holds
-    ~n/2^bits vectors and banded-join work Σb² grows quadratically in n
-    once n >> 2^bits — at a fixed 6 bits the banding saturates (64
-    patterns) around a few thousand vectors, and past ~64×cap the
-    hot-bucket cap would drop every bucket outright.  Scaling bits with
-    log2(n) pins the expected bucket (~64 here) so per-row candidate
-    work stays constant; the recall trade is the documented banding
-    curve (per-band match (1-θ/π)^bits — e.g. 0.95-cosine pairs match
-    a band with p=0.53 at 6 bits, 0.22 at 14 bits; 16 bands keep
-    recall ≥ ~98% through 14 bits).  Floor 6 = the historical default
-    (small corpora are bit-identical to r14 behavior); cap 24."""
+    """Band-bit count scaled to the corpus: a band's bucket keyspace is
+    2^bits sign patterns, so the AVERAGE bucket holds ~n/2^bits vectors
+    and banded-join work Σb² grows quadratically in n once n >> 2^bits —
+    at a fixed 6 bits the banding saturates (64 patterns) around a few
+    thousand vectors.  Scaling bits with log2(n) pins the expected bucket
+    (~64 here) so per-row candidate work stays constant, up to the cap.
+
+    The cap is set by recall: a band matches with p = (1-θ/π)^bits, so
+    with the default 16 bands 0.95-cosine pairs are found with
+    probability 1-(1-p)^16 = 0.983 at 14 bits but 0.867 at 20 and 0.725
+    at 24.  Past n = 2^20 the bits stay at 14 and the average bucket
+    grows again; ``max_bucket_size`` bounds that work (dropped buckets
+    are logged).  Floor 6 = the historical default (small corpora keep
+    that behavior)."""
     import math
 
-    return max(6, min(24, math.ceil(math.log2(max(n, 1))) - 6))
+    return max(6, min(14, math.ceil(math.log2(max(n, 1))) - 6))
 
 
 def _lsh_near_dup(corpus: DataFrame, id_col: str, vec_col: str,
@@ -649,7 +651,9 @@ def embedding_near_dup(corpus: DataFrame, id_col: str, vec_col: str,
     grow linearly in n (candidate work quadratically) and, past
     ~2^bits × max_bucket_size vectors, the cap would drop every bucket.
     Auto bits pin the expected bucket size so per-row work stays
-    constant; small corpora (n ≤ 4096) resolve to the historical 6.
+    constant up to 2^20 vectors, where the width stops at 14 bits to keep
+    0.95-cosine recall ≥ 98% with 16 bands; small corpora (n ≤ 4096)
+    resolve to the historical 6.
     Pass an int to pin the width (recall follows the banding curve —
     more bits = fewer sub-threshold candidates, lower per-band match
     rate).

@@ -377,22 +377,58 @@ def test_lsh_bucket_cap_defaults_on_and_warns(spark, caplog):
 
 
 def test_lsh_auto_band_bits_scales_with_corpus():
-    """r15: a fixed band width saturates its 2^bits keyspace — average
+    """A fixed band width saturates its 2^bits keyspace — average
     buckets then grow linearly in n and banded-join work quadratically
     (measured: the 4x scale lane's Σbucket² hit 19M pairs at 6 bits /
-    8,400 vectors).  Auto bits pin the expected bucket; small corpora
-    keep the historical 6 (bit-identical r14 behavior)."""
+    8,400 vectors).  Auto bits pin the expected bucket up to the 14-bit
+    recall cap; small corpora keep the historical 6."""
     from niamoto_spark.operators.similarity import _auto_band_bits
 
     assert _auto_band_bits(0) == 6
     assert _auto_band_bits(100) == 6
-    assert _auto_band_bits(4096) == 6          # floor: r14 default
+    assert _auto_band_bits(4096) == 6          # floor: historical default
     assert _auto_band_bits(8400) == 8          # the 4x lane shape
     assert _auto_band_bits(1_000_000) == 14
-    assert _auto_band_bits(10**9) == 24        # cap
-    # expected average bucket n/2^bits stays bounded past the floor
-    for n in (10_000, 10**5, 10**6, 10**8):
+    assert _auto_band_bits(10**9) == 14        # cap: recall, not bucket size
+    # expected average bucket n/2^bits stays bounded until the cap
+    for n in (10_000, 10**5, 10**6, 2**20):
         assert n / 2 ** _auto_band_bits(n) <= 64
+
+
+def test_lsh_auto_band_bits_hold_recall():
+    """Derived band widths keep 0.95-cosine recall ≥ 0.98 with the
+    default 16 bands at every corpus size: a band matches with
+    p = (1-θ/π)^bits, a pair is found unless all 16 bands miss.  A
+    seeded Monte Carlo of sign-random-projection banding at the widest
+    derived width agrees with that curve."""
+    import math
+
+    import numpy as np
+
+    from niamoto_spark.operators.similarity import _auto_band_bits
+
+    bands, cos = 16, 0.95
+
+    def recall(bits):
+        return 1 - (1 - (1 - math.acos(cos) / math.pi) ** bits) ** bands
+
+    widths = {_auto_band_bits(2 ** e) for e in range(6, 41)}
+    assert min(recall(b) for b in widths) >= 0.98, sorted(widths)
+    bits = max(widths)
+    rng = np.random.default_rng(7)
+    n, dim = 4000, 32
+    a = rng.standard_normal((n, dim))
+    a /= np.linalg.norm(a, axis=1, keepdims=True)
+    u = rng.standard_normal((n, dim))
+    u -= (u * a).sum(axis=1, keepdims=True) * a
+    u /= np.linalg.norm(u, axis=1, keepdims=True)
+    b = cos * a + math.sqrt(1 - cos ** 2) * u      # cosine(a, b) == 0.95
+    planes = rng.standard_normal((bands * bits, dim))
+    sa = (a @ planes.T >= 0).reshape(n, bands, bits)
+    sb = (b @ planes.T >= 0).reshape(n, bands, bits)
+    found = (sa == sb).all(axis=2).any(axis=1).mean()
+    assert abs(found - recall(bits)) < 0.01, (found, recall(bits))
+    assert found >= 0.975
 
 
 def test_lsh_auto_bits_still_finds_planted_pairs_mid_corpus(spark):
