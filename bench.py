@@ -37,8 +37,7 @@ def main() -> None:
     # AQE off (its per-query re-planning rounds cost ~80ms each and buy
     # nothing below a few hundred MB).  The DEFAULT engine session keeps
     # AQE on with skew-join handling — those are the settings the same
-    # plans run under at real scale; see PLANS.md for the measured
-    # crossover discussion.
+    # plans run under at real scale.
     spark = get_spark("bench", extra_conf={
         "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "8"),
         "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "false"),

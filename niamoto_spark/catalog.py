@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import enum
 import json
-import os
 from dataclasses import dataclass, field
 from typing import Iterable
 
@@ -123,35 +122,3 @@ class EntityRegistry:
     def open(cls, path: str) -> "EntityRegistry":
         with open(path) as f:
             return cls.from_json(f.read())
-
-
-# TPC-H-ish testdata id fields (TESTDATA.md); used by tests and the entry
-# module to build a registry over a scale-factor directory.
-_TESTDATA_IDS = {
-    "region": ("r_regionkey", EntityKind.REFERENCE),
-    "nation": ("n_nationkey", EntityKind.REFERENCE),
-    "customer": ("c_custkey", EntityKind.DATASET),
-    "supplier": ("s_suppkey", EntityKind.REFERENCE),
-    "part": ("p_partkey", EntityKind.REFERENCE),
-    "orders": ("o_orderkey", EntityKind.DATASET),
-    "lineitem": ("l_orderkey", EntityKind.DATASET),
-    "events": ("event_id", EntityKind.DATASET),
-    "documents": ("doc_id", EntityKind.DATASET),
-    "embeddings": ("vec_id", EntityKind.DATASET),
-}
-
-
-def testdata_registry(sf_dir: str) -> EntityRegistry:
-    reg = EntityRegistry()
-    for name, (id_field, kind) in _TESTDATA_IDS.items():
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        reg.add(Entity(name=name, kind=kind, path=p, id_field=id_field))
-    reg.get("nation").links.append(
-        EntityLink(field="n_regionkey", references="region", ref_field="r_regionkey"))
-    reg.get("customer").links.append(
-        EntityLink(field="c_nationkey", references="nation", ref_field="n_nationkey"))
-    reg.get("orders").links.append(
-        EntityLink(field="o_custkey", references="customer", ref_field="c_custkey"))
-    reg.get("lineitem").links.append(
-        EntityLink(field="l_orderkey", references="orders", ref_field="o_orderkey"))
-    return reg

@@ -3,7 +3,11 @@
 
 Usage:
     python -m niamoto_spark run --config <dir> --warehouse <dir> [--out <dir>]
+        [--group <name>]
     python -m niamoto_spark import|transform|export ...
+
+``--group`` limits ``transform`` to that group and ``export`` to the
+targets of that group.
     python -m niamoto_spark explore --warehouse <dir> --entity <name> \
         [--where <predicate>] [--order-by col] [--limit N]
 
@@ -68,7 +72,8 @@ def cmd_transform(args) -> int:
 def cmd_export(args) -> int:
     pipe = _pipeline(args)
     cfg = _load_yaml(os.path.join(args.config, "export.yml"))
-    manifests = pipe.run_export(cfg, out_dir=args.out)
+    manifests = pipe.run_export(cfg, out_dir=args.out,
+                                group_filter=args.group)
     print(json.dumps(manifests))
     return 0
 
@@ -157,7 +162,8 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument("--config", required=True)
         sp.add_argument("--warehouse", required=True)
         sp.add_argument("--out", default="./out")
-        sp.add_argument("--group", default=None)
+        if name != "import":
+            sp.add_argument("--group", default=None)
         sp.set_defaults(fn=fn)
     se = sub.add_parser("explore")
     se.add_argument("--warehouse", required=True)

@@ -225,8 +225,8 @@ def _missing_src_check(item: Mapping[str, Any], src: str,
     """Non-strict mode fails LOUDLY on a source path whose head key is
     absent from the item — the reference maps e.g. ``id: taxon_id`` to
     null silently when the column is really ``taxons_id``
-    (ROUND12_NOTES 'index field DSL' quirk; strict mode preserves it
-    for drop-in parity)."""
+    (the reference's index field DSL quirk; strict mode preserves it
+    for drop-in parity, tests/test_strict_parity.py)."""
     if not strict_parity and src.split(".", 1)[0] not in item:
         close = [k for k in item if k.endswith("_id") or k == "id"]
         raise KeyError(

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -47,14 +47,3 @@ def export_jsonl_shards(df: DataFrame, id_col: str, path: str,
      .repartition(n_shards, "shard")
      .write.mode("overwrite").partitionBy("shard").text(path))
     return n_shards
-
-
-def read_jsonl_shards(spark: SparkSession, path: str,
-                      schema=None) -> DataFrame:
-    """Read the shard tree back (native JSON-lines source; schema
-    inferred unless given).  The ``shard`` partition column comes along
-    for pruned per-shard reads."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)

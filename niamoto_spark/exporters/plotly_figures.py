@@ -3,12 +3,11 @@ next-#8: the last presentation-fidelity delta).
 
 The reference's widget plugins build ``plotly.graph_objects`` figures
 and serialize them into the page (bar_plot.py:963,1103,
-donut_chart.py:255-262, line_plot.py:388, shared layout defaults
-plotly_utils.py:180-191).  Plotly is not available in this
-environment, but a Plotly *figure* is just a JSON dict with ``data``
-(trace list) and ``layout`` — so these builders emit that dict
-directly, matching the trace/field shapes ``go.Figure(...).to_dict()``
-would produce.  The front-end consumes them with ``Plotly.newPlot(el,
+donut_chart.py:255-262, shared layout defaults plotly_utils.py:180-191).
+Plotly is not available in this environment, but a Plotly *figure* is
+just a JSON dict with ``data`` (trace list) and ``layout`` — so these
+builders emit that dict directly, matching the trace/field shapes
+``go.Figure(...).to_dict()`` would produce.  The front-end consumes them with ``Plotly.newPlot(el,
 fig.data, fig.layout)`` unchanged.
 
 Figures are built from the ALREADY-SHAPED widget frames
@@ -78,26 +77,6 @@ def donut_figure(labels: list, values: list, title: str | None = None,
     return {"data": [trace], "layout": layout_defaults(title)}
 
 
-def line_figure(points: list[tuple], title: str | None = None) -> dict:
-    """One lines-mode scatter trace per series (line_plot.py:388 via
-    px.line).  ``points`` is [(x, y)] or [(x, y, series)]; series order
-    follows first appearance, point order is preserved (the widget
-    frame is already x-ordered)."""
-    series: dict[str, tuple[list, list]] = {}
-    for p in points:
-        name = str(p[2]) if len(p) > 2 else ""
-        xs, ys = series.setdefault(name, ([], []))
-        xs.append(p[0])
-        ys.append(p[1])
-    data = []
-    for name, (xs, ys) in series.items():
-        trace = {"type": "scatter", "mode": "lines", "x": xs, "y": ys}
-        if name:
-            trace["name"] = name
-        data.append(trace)
-    return {"data": data, "layout": layout_defaults(title)}
-
-
 # --- DataFrame-level adapters over the shaped widget frames ---------------
 
 def bar_figure_from(df: DataFrame, title: str | None = None,
@@ -115,320 +94,6 @@ def donut_figure_from(df: DataFrame, title: str | None = None,
     return donut_figure([r["label"] for r in rows],
                         [r["value"] for r in rows],
                         title=title, hole_size=hole_size)
-
-
-def line_figure_from(df: DataFrame, title: str | None = None) -> dict:
-    """Consume line_plot_data's ordered (x, y[, series]) frame."""
-    has_series = "series" in df.columns
-    cols = ["x", "y"] + (["series"] if has_series else [])
-    rows = df.select(*cols).collect()
-    pts = [(r["x"], r["y"], r["series"]) if has_series
-           else (r["x"], r["y"]) for r in rows]
-    return line_figure(pts, title=title)
-
-
-def scatter_figure(xs: list, ys: list, title: str | None = None,
-                   color: list | None = None, size: list | None = None,
-                   name: str | None = None) -> dict:
-    """px.scatter-shaped markers trace (scatter_plot.py:204-240): one
-    scatter trace in markers mode; optional per-point color/size ride
-    in ``marker`` exactly where px puts them."""
-    trace: dict = {"type": "scatter", "mode": "markers",
-                   "x": list(xs), "y": list(ys)}
-    marker: dict = {}
-    if color is not None:
-        marker["color"] = list(color)
-    if size is not None:
-        marker["size"] = list(size)
-    if marker:
-        trace["marker"] = marker
-    if name:
-        trace["name"] = name
-    return {"data": [trace],
-            "layout": layout_defaults(
-                title, margin={"r": 10, "t": 30 if title else 10,
-                               "l": 10, "b": 10})}
-
-
-def sunburst_figure(ids: list, labels: list, parents: list, values: list,
-                    branchvalues: str = "total",
-                    text_info: str = "label+percent parent",
-                    opacity: float = 1.0) -> dict:
-    """go.Sunburst-shaped trace (sunburst_chart.py:236-262): white
-    1px segment borders, radial inside text, sort disabled, reduced
-    margins and the reference's 450px height."""
-    trace = {
-        "type": "sunburst",
-        "ids": list(ids), "labels": list(labels),
-        "parents": list(parents), "values": list(values),
-        "branchvalues": branchvalues,
-        "marker": {"line": {"color": "#FFFFFF", "width": 1}},
-        "textinfo": text_info,
-        "hoverinfo": "label+percent parent+value",
-        "insidetextorientation": "radial",
-        "opacity": opacity,
-        "sort": False,
-    }
-    return {"data": [trace],
-            "layout": layout_defaults(
-                None, margin={"t": 5, "l": 5, "r": 5, "b": 5},
-                height=450)}
-
-
-def stacked_area_figure(xs: list, series: "dict[str, list]",
-                        fill_type: str = "tonexty",
-                        colors: list[str] | None = None,
-                        x_title: str | None = None,
-                        y_title: str | None = None) -> dict:
-    """Stacked go.Scatter traces (stacked_area_plot.py:313-345): each
-    series is a scatter with ``stackgroup='one'`` and the fill mode;
-    a per-series color lands on both line (width 0) and fillcolor."""
-    data = []
-    for i, (name, ys) in enumerate(series.items()):
-        trace: dict = {"type": "scatter", "x": list(xs), "y": list(ys),
-                       "name": name, "fill": fill_type,
-                       "stackgroup": "one"}
-        if colors and i < len(colors):
-            trace["line"] = {"color": colors[i], "width": 0}
-            trace["fillcolor"] = colors[i]
-        data.append(trace)
-    layout = layout_defaults(None)
-    if x_title:
-        layout["xaxis"] = {"title": {"text": x_title}}
-    if y_title:
-        layout["yaxis"] = {"title": {"text": y_title}}
-    return {"data": data, "layout": layout}
-
-
-#: diverging_bar_plot.py:32-33 — sign colors, kept byte-identical.
-DIVERGING_POSITIVE = "#2ca02c"
-DIVERGING_NEGATIVE = "#d62728"
-
-
-def diverging_bar_figure(categories: list, values: list,
-                         threshold: float = 0.0,
-                         orientation: str = "v",
-                         color_positive: str = DIVERGING_POSITIVE,
-                         color_negative: str = DIVERGING_NEGATIVE) -> dict:
-    """go.Bar-shaped diverging trace (diverging_bar_plot.py:161-223):
-    ONE trace, per-bar color by sign vs threshold, values as bar text,
-    bargap 0.15, no legend."""
-    colors = [color_positive if (v is not None and v >= threshold)
-              else color_negative for v in values]
-    trace: dict = {"type": "bar", "orientation": orientation,
-                   "marker": {"color": colors},
-                   "text": list(values), "textposition": "auto",
-                   "name": ""}
-    if orientation == "h":
-        trace["x"], trace["y"] = list(values), list(categories)
-    else:
-        trace["x"], trace["y"] = list(categories), list(values)
-    return {"data": [trace],
-            "layout": layout_defaults(None, bargap=0.15,
-                                      showlegend=False)}
-
-
-#: radial_gauge.py:19-25 — gauge palette, kept byte-identical.
-GAUGE_DEFAULT_COLOR = "#6d8796"
-
-
-def radial_gauge_figure(value: float, min_value: float = 0.0,
-                        max_value: float = 100.0,
-                        title: str | None = None, suffix: str = "",
-                        bar_color: str = GAUGE_DEFAULT_COLOR,
-                        shape: str = "angular",
-                        show_axis: bool = True) -> dict:
-    """go.Indicator gauge trace (radial_gauge.py:358-372, minimal style
-    :448-455: light-gray bgcolor, no border, 0.8 bar thickness).
-    Degenerate ranges expand like the reference (:338-344)."""
-    if max_value <= min_value:
-        max_value = min_value + max(abs(min_value) * 0.1, 1)
-    trace = {
-        "type": "indicator",
-        "mode": "gauge+number",
-        "value": value,
-        "title": {"text": title or ""},
-        "number": {"suffix": suffix},
-        "gauge": {
-            "axis": {"range": [min_value, max_value],
-                     "visible": show_axis},
-            "bar": {"color": bar_color, "thickness": 0.8},
-            "bgcolor": "#f5f5f5",
-            "borderwidth": 0,
-            "shape": shape,
-        },
-    }
-    return {"data": [trace], "layout": layout_defaults(None)}
-
-
-#: concentric_rings.py:61 default ring palette + :122-130 hole ladder.
-RING_DEFAULT_COLORS = ["#6B8E23", "#8B7355", "#C5A98B", "#F4E4BC"]
-_RING_HOLES = [0.65, 0.35, 0.0]
-
-
-def concentric_rings_figure(rings: "dict[str, tuple[list, list]]",
-                            ring_order: list[str],
-                            ring_labels: "dict[str, str] | None" = None,
-                            border_width: float = 2.0,
-                            colors: list[str] | None = None) -> dict:
-    """Concentric go.Pie traces (concentric_rings.py:120-245): fixed
-    hole ladder 0.65/0.35/0.0 innermost->outermost, rings added in
-    REVERSED order so inner rings layer on top; segment text is
-    suppressed and ring name + first-segment percentage land as center
-    annotations at the reference's fixed positions."""
-    ring_labels = ring_labels or {}
-    palette = colors or RING_DEFAULT_COLORS
-    data = []
-    for i, key in enumerate(reversed(ring_order)):
-        if key not in rings:
-            continue
-        labels, values = rings[key]
-        depth = len(ring_order) - 1 - i
-        hole = _RING_HOLES[depth] if depth < len(_RING_HOLES) else 0.0
-        data.append({
-            "type": "pie",
-            "values": list(values),
-            "labels": [""] * len(labels),
-            "text": [""] * len(labels),
-            "hole": hole,
-            "marker": {
-                "colors": [palette[j % len(palette)]
-                           for j in range(len(values))],
-                "line": {"color": "#FFFFFF", "width": border_width},
-            },
-            "textinfo": "none",
-            "showlegend": False,
-            "name": ring_labels.get(key, key.upper()),
-            "sort": False,
-            "direction": "clockwise",
-            "rotation": -30,
-        })
-    annotations = []
-    label_pos = [(0.5, 0.4), (0.5, 0.22), (0.5, 0.08)]
-    pct_pos = [(0.5, 0.67), (0.5, 0.77), (0.5, 0.87)]
-    for i, key in enumerate(ring_order):
-        if key not in rings:
-            continue
-        _, values = rings[key]
-        total = sum(v for v in values if v is not None)
-        first_pct = (round(values[0] / total * 100, 1)
-                     if total > 0 and values else 0)
-        lx, ly = (label_pos[i] if i < 3
-                  else (0.5, 0.5 - 0.18 * i))
-        annotations.append({
-            "text": ring_labels.get(key, key.upper()),
-            "x": lx, "y": ly, "showarrow": False,
-            "font": {"size": 14, "color": "black",
-                     "family": "Arial Bold"},
-        })
-        if first_pct > 0:
-            px_, py = (pct_pos[i] if i < 3
-                       else (0.5, 0.82 + 0.04 * i))
-            annotations.append({
-                "text": f"{first_pct}%",
-                "x": px_, "y": py, "showarrow": False,
-                "font": {"size": 14, "color": "white",
-                         "family": "Arial Bold"},
-            })
-    return {"data": data,
-            "layout": layout_defaults(None, annotations=annotations)}
-
-
-def map_figure(lons: list, lats: list, weights: list | None = None,
-               name: str = "Points", color: str = "#ff0000",
-               map_style: str = "carto-positron",
-               zoom: float = 9.0) -> dict:
-    """go.Scattermap markers trace (interactive_map.py:1716-1760) with
-    the reference's layout recipe (:1898-1907): data-bounds center,
-    zero margins, 500px height, carto-positron base style."""
-    trace: dict = {
-        "type": "scattermap",
-        "lon": list(lons), "lat": list(lats),
-        "mode": "markers",
-        "marker": {"size": 10, "color": color, "opacity": 0.8},
-        "name": name,
-        "hovertemplate": "<b>%{text}</b><br><extra></extra>",
-        "showlegend": True,
-    }
-    if weights is not None:
-        trace["text"] = [str(w) for w in weights]
-        trace["marker"]["size"] = [
-            max(6, min(24, 6 + (float(w or 0)) ** 0.5)) for w in weights]
-    else:
-        trace["text"] = ["" for _ in lons]
-    center = {"lat": (sum(lats) / len(lats)) if lats else 0,
-              "lon": (sum(lons) / len(lons)) if lons else 0}
-    layout = layout_defaults(
-        None, margin={"r": 0, "t": 0, "l": 0, "b": 0}, height=500,
-        map_zoom=zoom, map_center=center, map_style=map_style)
-    return {"data": [trace], "layout": layout}
-
-
-# --- DataFrame-level adapters over the shaped widget frames ---------------
-
-def scatter_figure_from(df: DataFrame, title: str | None = None) -> dict:
-    """Consume scatter_plot_data's (x, y) frame."""
-    rows = df.select("x", "y").collect()
-    return scatter_figure([r["x"] for r in rows], [r["y"] for r in rows],
-                          title=title)
-
-
-def sunburst_figure_from(df: DataFrame, **kw) -> dict:
-    """Consume sunburst_data's (id, parent, label, value) frame."""
-    rows = df.select("id", "parent", "label", "value").collect()
-    return sunburst_figure([r["id"] for r in rows],
-                           [r["label"] for r in rows],
-                           [r["parent"] for r in rows],
-                           [r["value"] for r in rows], **kw)
-
-
-def stacked_area_figure_from(df: DataFrame, **kw) -> dict:
-    """Consume stacked_area_data's wide (x, series...) frame."""
-    rows = df.collect()
-    xs = [r["x"] for r in rows]
-    series = {c: [r[c] for r in rows] for c in df.columns if c != "x"}
-    return stacked_area_figure(xs, series, x_title="x", **kw)
-
-
-def diverging_bar_figure_from(df: DataFrame, **kw) -> dict:
-    """Consume diverging_bar_data's (category, positive, negative)
-    frame: the positive and negative counts interleave into the single
-    sign-colored trace the reference draws."""
-    rows = df.select("category", "positive", "negative").collect()
-    cats, vals = [], []
-    for r in rows:
-        cats.extend([r["category"], r["category"]])
-        vals.extend([r["positive"], r["negative"]])
-    return diverging_bar_figure(cats, vals, **kw)
-
-
-def radial_gauge_figure_from(df: DataFrame, max_value: float = 100.0,
-                             **kw) -> dict:
-    """Consume radial_gauge_data's single-row (value[, pct_of_max])."""
-    row = df.select("value").first()
-    return radial_gauge_figure(float(row["value"]) if row else 0.0,
-                               max_value=max_value, **kw)
-
-
-def concentric_rings_figure_from(df: DataFrame,
-                                 ring_order: list[str] | None = None,
-                                 **kw) -> dict:
-    """Consume concentric_rings_data's (ring, value, pct) frame."""
-    rows = df.select("ring", "value").collect()
-    rings: dict = {}
-    for r in rows:
-        labels, values = rings.setdefault(str(r["ring"]), ([], []))
-        labels.append(str(r["ring"]))
-        values.append(r["value"])
-    order = ring_order or sorted(rings)
-    return concentric_rings_figure(rings, order, **kw)
-
-
-def map_figure_from(df: DataFrame, **kw) -> dict:
-    """Consume interactive_map_data's (lon, lat, weight) frame."""
-    rows = df.select("lon", "lat", "weight").collect()
-    return map_figure([r["lon"] for r in rows], [r["lat"] for r in rows],
-                      [r["weight"] for r in rows], **kw)
 
 
 def is_plotly_figure(v) -> bool:

@@ -102,67 +102,6 @@ def _signature_from_hashed(hashed: Column, n_shingles: Column,
     )
 
 
-def _signatures_numpy(hashed: DataFrame, num_hashes: int) -> DataFrame:
-    """MinHash signatures via Arrow-batched numpy — bit-identical to
-    ``_signature_from_hashed`` (same xxhash64 math, ported fixed-width
-    in functions/xxh64np.py), ~10-100x fewer interpreter steps.
-
-    The HOF fold runs as interpreted lambdas (~1-2us per
-    (seed, shingle) element — higher-order functions never enter
-    whole-stage codegen), which SCALE_PROBE measured at ~600-700
-    rows/s/32-cores on the LSH lane: linear, but the biggest known
-    throughput headroom in the LLM lanes (VERDICT r11 next-#4).  Here
-    each Arrow batch concatenates its shingle-hash arrays into ONE flat
-    uint64 vector; per seed, the re-hash is ~10 vectorized ops over the
-    flat vector and the per-doc minima fall out of one
-    ``np.minimum.reduceat`` over the row offsets (SIGNED view first:
-    Spark's array_min compares BIGINT signed).
-
-    Input: (doc_id, __n, __hl) with __hl = xxhash64 of each distinct
-    shingle (string hashing stays JVM-side — one pass, amortized over
-    all seeds).  Output: (doc_id, sig); rows with no shingles are
-    dropped, matching the HOF path's ``WHERE sig IS NOT NULL``.
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from niamoto_spark.functions.xxh64np import (SPARK_SEED, hash_int,
-                                                 hash_long)
-
-    id_field = hashed.schema["doc_id"]
-    out_schema = T.StructType([
-        T.StructField("doc_id", id_field.dataType, id_field.nullable),
-        T.StructField("sig", T.ArrayType(T.LongType()), True),
-    ])
-
-    def batch_sigs(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            arrs, keep = [], []
-            for i, a in enumerate(pdf["__hl"]):
-                if a is not None and len(a):
-                    arrs.append(np.asarray(a, dtype=np.int64))
-                    keep.append(i)
-            if not keep:
-                continue
-            flat = np.concatenate(arrs).view(np.uint64)
-            sizes = np.array([len(a) for a in arrs])
-            offsets = np.zeros(len(arrs), dtype=np.intp)
-            np.cumsum(sizes[:-1], out=offsets[1:])
-            base = hash_long(flat, SPARK_SEED)
-            sig = np.empty((len(arrs), num_hashes), dtype=np.int64)
-            for s in range(num_hashes):
-                per_seed = hash_int(s, base).view(np.int64)
-                sig[:, s] = np.minimum.reduceat(per_seed, offsets)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].iloc[keep].to_numpy(),
-                "sig": list(sig),
-            })
-
-    return hashed.mapInPandas(batch_sigs, schema=out_schema)
-
-
 def _sigs_from_text_numpy(df: DataFrame, id_col: str, text_col: str,
                           num_hashes: int, shingle_k: int) -> DataFrame:
     """MinHash signatures with shingling AND hashing inside the Arrow
@@ -176,7 +115,9 @@ def _sigs_from_text_numpy(df: DataFrame, id_col: str, text_col: str,
     separated), so the kernel never materializes shingle strings: it
     scans delimiter bytes once, derives (start, length) slice pairs, and
     hashes them with the vectorized XXH64 port (functions/xxh64np.py),
-    then folds the per-seed minima exactly like ``_signatures_numpy``.
+    then takes each seed's per-doc minima with one ``np.minimum.reduceat``
+    over the row offsets (a SIGNED view: Spark's array_min compares
+    BIGINT signed).
     Bit-identical to the HOF path (same normalized bytes -> same
     xxhash64 -> same fold), pinned in
     tests/test_dedup_similarity.py::test_text_numpy_signatures_match_hof.
@@ -421,7 +362,7 @@ def _auto_pair_strategy(df, threshold_bytes: int = 256 * 1024 * 1024) -> str:
     optimized-plan sizeInBytes): the file listing DEDUPS repeated
     files, so union-inflated plans (the 64x scale-probe shape)
     under-read as base bytes there and would mis-pick bucket — plan
-    stats sum union children (r13 blind spot, ROUND13_NOTES §7)."""
+    stats sum union children."""
     from niamoto_spark.functions import _est_logical_bytes, _est_scan
 
     _, pb = _est_scan(df)
@@ -519,8 +460,7 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
       optimized-plan sizeInBytes): the file listing DEDUPS repeated
       files, so a union-inflated frame (the 64x scale probe shape)
       under-reads as its base bytes and mis-picks bucket — plan stats
-      sum union children and catch it (r13 `_est_scan` blind spot,
-      ROUND13_NOTES §7).
+      sum union children and catch it.
 
     Pipeline: signature -> explode into ``bands`` band-hashes -> self-join on
     (band, band_hash) -> distinct pairs -> estimated Jaccard from full
@@ -646,27 +586,6 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
             .select("p.id_a", "p.id_b", "p.est_jaccard")
             .where(F.col("est_jaccard") >= jaccard_threshold)
             .dropDuplicates(["id_a", "id_b"]))
-
-
-def minhash_dedup_keep(df: DataFrame, id_col: str, text_col: str,
-                       exact_components: bool = False,
-                       **kwargs) -> DataFrame:
-    """Corpus minus near-duplicates.
-
-    Default (greedy): for every candidate pair above the threshold, drop
-    the higher id — one pass, but a chain a~b, b~c with a!~c drops c even
-    though only b linked them.  ``exact_components=True`` resolves
-    duplicate CLUSTERS by label-propagation connected components
-    (operators/components.py) and keeps exactly one doc (min id) per
-    component — the correct cluster semantics, a few bounded join
-    iterations."""
-    pairs = minhash_lsh_candidates(df, id_col, text_col, **kwargs)
-    if exact_components:
-        from niamoto_spark.operators.components import dedup_keep_components
-
-        return dedup_keep_components(df, pairs, id_col)
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,7 @@ land_use.py).  Raster IO is unavailable here (SURVEY §7.2: "inherently not
 Catalyst territory"), so each operator takes the raster ALREADY EXPLODED to
 a (zone, pixel value[, flags]) long table — exactly what a mapInPandas
 rasterio reader emits per zone window at scale — and does the distributed
-part: bucketing, categorical splits, area sums.  ``fake_zone_pixels`` builds
-that table deterministically for tests/demos.
+part: bucketing, categorical splits, area sums.
 """
 
 from __future__ import annotations
@@ -110,20 +109,3 @@ def land_use_analysis(zone_pieces: DataFrame, group_cols: Sequence[str],
         out = out.withColumn(
             "pct", F.round(F.col("area_m2") * 100.0 / F.sum("area_m2").over(w), 2))
     return out
-
-
-def fake_zone_pixels(spark, zones: Sequence[str], side: int = 40,
-                     max_elevation: float = 1600.0) -> DataFrame:
-    """Deterministic stand-in for the rasterio zone-window reader: a
-    side x side pixel grid per zone with smooth elevation, a forest mask,
-    and Holdridge classes derived from elevation."""
-    z = spark.createDataFrame([(s,) for s in zones], "zone string")
-    px = z.select(
-        "zone",
-        F.explode(F.sequence(F.lit(0), F.lit(side * side - 1))).alias("i"))
-    row, col = (F.col("i") / side).cast("int"), F.col("i") % side
-    elev = ((row + col) / (2.0 * (side - 1))) * max_elevation
-    forest = ((F.xxhash64("zone", "i") % 100 + 100) % 100 < 60).cast("int")
-    hold = F.when(elev < 400, 1).when(elev < 900, 2).otherwise(3)
-    return px.select("zone", elev.alias("elevation"),
-                     forest.alias("forest"), hold.alias("holdridge"))

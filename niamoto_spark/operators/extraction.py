@@ -130,30 +130,6 @@ def geospatial_extractor(df: DataFrame, group_cols: Sequence[str],
     return base.withColumn("point_count", F.lit(1))
 
 
-def to_geojson_feature_collection(points: DataFrame,
-                                  group_cols: Sequence[str]) -> DataFrame:
-    """Assemble geospatial_extractor output into one GeoJSON
-    FeatureCollection string per group (the reference's output format,
-    geospatial_extractor.py:28-120) — to_json over collected structs,
-    entirely JVM-side."""
-    from niamoto_spark.operators.geospatial import point_lat, point_lon
-
-    feature = F.struct(
-        F.lit("Feature").alias("type"),
-        F.struct(F.lit("Point").alias("type"),
-                 F.array(point_lon(F.col("geometry_wkt")),
-                         point_lat(F.col("geometry_wkt"))).alias("coordinates"))
-         .alias("geometry"),
-        F.struct(F.col("point_count").alias("count")).alias("properties"))
-    return (points.groupBy(*group_cols)
-            .agg(F.collect_list(feature).alias("__features"))
-            .select(*group_cols,
-                    F.to_json(F.struct(
-                        F.lit("FeatureCollection").alias("type"),
-                        F.col("__features").alias("features")))
-                     .alias("geojson")))
-
-
 @register("melt", PluginType.TRANSFORMER)
 def melt(df: DataFrame, id_cols: Sequence[str], value_cols: Sequence[str],
          var_name: str = "variable", value_name: str = "value") -> DataFrame:

@@ -144,7 +144,7 @@ def substring_dup_pairs(df: DataFrame, id_col: str, text_col: str,
 def substring_dedup_keep(df: DataFrame, id_col: str, text_col: str,
                          **kwargs) -> DataFrame:
     """Corpus minus substring-duplicated documents (drop the higher id of
-    each pair — greedy, same policy as minhash_dedup_keep's default)."""
+    each pair — greedy)."""
     pairs = substring_dup_pairs(df, id_col, text_col, **kwargs)
     drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(drop, id_col, "left_anti")

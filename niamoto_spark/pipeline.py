@@ -78,8 +78,9 @@ class Pipeline:
         self.registry = registry or EntityRegistry()
         self.warnings: list[str] = []
         # strict_parity=True (default) reproduces the reference's own
-        # bugs where drop-in output parity requires them (documented in
-        # ROUND12_NOTES; certified by tools/ref_pipeline_diff.py);
+        # bugs where drop-in output parity requires them (each pinned in
+        # tests/test_strict_parity.py; certified by
+        # tools/ref_pipeline_diff.py);
         # False gives new users the sane behavior at those sites
         # (VERDICT r12 "What's wrong" #3)
         self.strict_parity = strict_parity

@@ -5595,7 +5595,7 @@ def q157_ewma_smoothing(spark, sf_dir):
     replays the identical term sum (generated below)."""
     from niamoto_spark.operators.timeseries import ewma
 
-    # doctrine #7 (ROUND11_NOTES): the lag chain needs a TOTAL per-user
+    # README cross-engine rule 7: the lag chain needs a TOTAL per-user
     # order — rows with a NULL order key are excluded on both engines
     # (composed-probe find: a NULL event_id block sorts arbitrarily and
     # the lag terms diverge cross-engine)

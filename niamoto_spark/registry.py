@@ -6,8 +6,12 @@ and a per-type registry (reference: src/niamoto/core/plugins/base.py:31-38 and
 (or classes with a ``transform``/``load_data`` method) that take DataFrames
 and validated params and return DataFrames / Column expressions.
 
-Keeping the same plugin names as the reference means a reference
-``transform.yml`` resolves against this registry unchanged.
+The pipeline does not look plugins up here: ``Pipeline._transform_group``,
+``_widget_json`` and ``_run_widget`` dispatch a config's plugin names
+themselves.  The registry serves the ``plugins`` CLI listing, the deploy
+step's platform lookup (``deployers.run_deploy``) for platforms it does
+not handle itself, and name checks: tests assert that the reference's
+plugin names are registered.
 """
 
 from __future__ import annotations

@@ -8,7 +8,7 @@ CHECKABLE, because `committed_version` is a single metadata read.
 
 The cache key is md5(query_key | (dep_path, dep_version)...), so a new
 commit on any dependency changes the key and the stale entry is simply
-never addressed again (vacuum_cache reaps unreferenced entries by age).
+never addressed again.
 Results are parquet directories written through a staging rename —
 concurrent builders race benignly (one rename wins, the other's
 staging dir is discarded; both return the same rows).
@@ -24,7 +24,6 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,20 +60,3 @@ def cached_query(spark: SparkSession, cache_root: str, query_key: str,
     except OSError:
         shutil.rmtree(staging, ignore_errors=True)  # lost the race
     return spark.read.parquet(final), False
-
-
-def vacuum_cache(cache_root: str, max_age_s: float) -> int:
-    """Reap cache entries (and orphaned staging dirs) older than
-    ``max_age_s``.  Stale entries are unreachable by construction
-    (their key embeds a superseded version), so age is the only
-    policy needed.  Returns the number of entries removed."""
-    if not os.path.isdir(cache_root):
-        return 0
-    now = time.time()
-    removed = 0
-    for name in os.listdir(cache_root):
-        p = os.path.join(cache_root, name)
-        if os.path.isdir(p) and now - os.path.getmtime(p) > max_age_s:
-            shutil.rmtree(p, ignore_errors=True)
-            removed += 1
-    return removed

@@ -71,11 +71,3 @@ def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
     the left against bucket i of the right."""
     keys = [on] if isinstance(on, str) else list(on)
     return spark.table(left_table).join(spark.table(right_table), keys, how)
-
-
-def join_has_no_exchange(df: DataFrame) -> bool:
-    """True when the executed plan contains no shuffle Exchange (the
-    bucketed-join contract).  AQE wraps plans, so inspect the final
-    executed string."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" not in plan

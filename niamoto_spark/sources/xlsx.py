@@ -29,12 +29,6 @@ def _col_index(cell_ref: str) -> int:
     return idx - 1
 
 
-def list_sheets(path: str) -> list[str]:
-    with zipfile.ZipFile(path) as z:
-        wb = ET.fromstring(z.read("xl/workbook.xml"))
-    return [s.get("name") for s in wb.iter(f"{_NS}sheet")]
-
-
 def read_xlsx_rows(path: str, sheet: int | str = 0) -> list[list]:
     """Sheet cells as a list of rows (python values: str/float/bool/None)."""
     with zipfile.ZipFile(path) as z:
@@ -99,10 +93,30 @@ def read_xlsx_rows(path: str, sheet: int | str = 0) -> list[list]:
     return rows
 
 
+def _arrow_column(values: list):
+    """One sheet column as a typed Arrow array: boolean or double when
+    every filled cell is one, null when no cell is filled, else string
+    (numbers and booleans in a text column print as Spark casts them).
+    Empty cells are nulls.  Declaring the type keeps a mixed column from
+    failing the Arrow conversion of the whole sheet."""
+    import pyarrow as pa
+
+    filled = [v for v in values if v is not None]
+    if not filled:
+        return pa.array(values, type=pa.null())
+    if all(isinstance(v, bool) for v in filled):
+        return pa.array(values, type=pa.bool_())
+    if all(isinstance(v, float) for v in filled):
+        return pa.array(values, type=pa.float64())
+    return pa.array([None if v is None
+                     else str(v).lower() if isinstance(v, bool) else str(v)
+                     for v in values], type=pa.string())
+
+
 def read_xlsx_native(spark, path: str, sheet: int | str = 0,
                      header: bool = True):
     """XLSX -> Spark DataFrame via the pure-python parser."""
-    import pandas as pd
+    import pyarrow as pa
 
     rows = read_xlsx_rows(path, sheet)
     if not rows:
@@ -114,72 +128,6 @@ def read_xlsx_native(spark, path: str, sheet: int | str = 0,
     else:
         cols = [f"col{i}" for i in range(len(rows[0]))]
         body = rows
-    return spark.createDataFrame(pd.DataFrame(body, columns=cols))
-
-
-def write_xlsx(path: str, rows: list[list], sheet_name: str = "Sheet1") -> None:
-    """Minimal XLSX writer (inline strings + numbers) for fixtures/tests."""
-
-    def col_letter(i: int) -> str:
-        s = ""
-        i += 1
-        while i:
-            i, r = divmod(i - 1, 26)
-            s = chr(65 + r) + s
-        return s
-
-    cells_xml = []
-    for ri, row in enumerate(rows, 1):
-        cs = []
-        for ci, v in enumerate(row):
-            ref = f"{col_letter(ci)}{ri}"
-            if v is None:
-                continue
-            if isinstance(v, bool):
-                cs.append(f'<c r="{ref}" t="b"><v>{int(v)}</v></c>')
-            elif isinstance(v, (int, float)):
-                cs.append(f'<c r="{ref}"><v>{v}</v></c>')
-            else:
-                from xml.sax.saxutils import escape
-
-                cs.append(f'<c r="{ref}" t="inlineStr"><is><t>'
-                          f"{escape(str(v))}</t></is></c>")
-        cells_xml.append(f'<row r="{ri}">{"".join(cs)}</row>')
-    sheet = ('<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-             '<worksheet xmlns="http://schemas.openxmlformats.org/'
-             'spreadsheetml/2006/main"><sheetData>'
-             + "".join(cells_xml) + "</sheetData></worksheet>")
-    workbook = ('<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                '<workbook xmlns="http://schemas.openxmlformats.org/'
-                'spreadsheetml/2006/main" xmlns:r="http://schemas.'
-                'openxmlformats.org/officeDocument/2006/relationships">'
-                f'<sheets><sheet name="{sheet_name}" sheetId="1" '
-                'r:id="rId1"/></sheets></workbook>')
-    rels = ('<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-            '<Relationships xmlns="http://schemas.openxmlformats.org/'
-            'package/2006/relationships"><Relationship Id="rId1" '
-            'Type="http://schemas.openxmlformats.org/officeDocument/2006/'
-            'relationships/worksheet" Target="worksheets/sheet1.xml"/>'
-            "</Relationships>")
-    content_types = ('<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                     '<Types xmlns="http://schemas.openxmlformats.org/'
-                     'package/2006/content-types">'
-                     '<Default Extension="xml" ContentType="application/xml"/>'
-                     '<Override PartName="/xl/workbook.xml" ContentType='
-                     '"application/vnd.openxmlformats-officedocument.'
-                     'spreadsheetml.sheet.main+xml"/>'
-                     '<Override PartName="/xl/worksheets/sheet1.xml" '
-                     'ContentType="application/vnd.openxmlformats-'
-                     'officedocument.spreadsheetml.worksheet+xml"/></Types>')
-    root_rels = ('<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                 '<Relationships xmlns="http://schemas.openxmlformats.org/'
-                 'package/2006/relationships"><Relationship Id="rId1" '
-                 'Type="http://schemas.openxmlformats.org/officeDocument/'
-                 '2006/relationships/officeDocument" '
-                 'Target="xl/workbook.xml"/></Relationships>')
-    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr("[Content_Types].xml", content_types)
-        z.writestr("_rels/.rels", root_rels)
-        z.writestr("xl/workbook.xml", workbook)
-        z.writestr("xl/_rels/workbook.xml.rels", rels)
-        z.writestr("xl/worksheets/sheet1.xml", sheet)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [_arrow_column([r[i] for r in body]) for i in range(len(cols))],
+        names=cols))

@@ -177,22 +177,17 @@ def test_binary_counter_percentages(spark):
 
 
 def test_geojson_feature_collection(spark):
-    import json as _json
-
-    from niamoto_spark.operators.extraction import (
-        geospatial_extractor, to_geojson_feature_collection)
+    """The point rows a GeoJSON FeatureCollection is built from: one row
+    per distinct coordinate of an entity, with its count."""
+    from niamoto_spark.operators.extraction import geospatial_extractor
 
     df = spark.createDataFrame(pd.DataFrame(
         {"pid": [1, 1, 1], "geo_pt": ["POINT (166.5 -22.1)",
                                       "POINT (166.5 -22.1)",
                                       "POINT (167.0 -21.0)"]}))
     pts = geospatial_extractor(df, ["pid"], "geo_pt")
-    fc = _json.loads(to_geojson_feature_collection(pts, ["pid"])
-                     .collect()[0]["geojson"])
-    assert fc["type"] == "FeatureCollection" and len(fc["features"]) == 2
-    counts = {tuple(f["geometry"]["coordinates"]): f["properties"]["count"]
-              for f in fc["features"]}
-    assert counts[(166.5, -22.1)] == 2
+    counts = {r["geometry_wkt"]: r["point_count"] for r in pts.collect()}
+    assert counts == {"POINT (166.5 -22.1)": 2, "POINT (167.0 -21.0)": 1}
 
 
 def test_statistical_summary_median_approx_mode(spark, frame):

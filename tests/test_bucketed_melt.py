@@ -17,10 +17,16 @@ def _cleanup(spark, *tables):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def join_has_no_exchange(df) -> bool:
+    """True when the executed plan contains no shuffle Exchange (the
+    bucketed-join contract).  AQE wraps plans, so inspect the final
+    executed string."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "Exchange hashpartitioning" not in plan
+
+
 def test_bucketed_join_no_exchange(spark, no_broadcast):
-    from niamoto_spark.sources.bucketed import (bucketed_join,
-                                                join_has_no_exchange,
-                                                write_bucketed)
+    from niamoto_spark.sources.bucketed import bucketed_join, write_bucketed
 
     left = spark.range(2000).select((F.col("id") % 100).alias("k"),
                                     F.col("id").alias("v"))
@@ -59,8 +65,7 @@ def test_bucketed_join_matches_plain_join(spark, no_broadcast):
 
 def test_bucketed_agg_no_exchange(spark, no_broadcast):
     """Aggregation on the bucket key also skips its Exchange."""
-    from niamoto_spark.sources.bucketed import (join_has_no_exchange,
-                                                write_bucketed)
+    from niamoto_spark.sources.bucketed import write_bucketed
 
     df = spark.range(1000).select((F.col("id") % 50).alias("k"),
                                   F.col("id").alias("v"))
@@ -76,9 +81,7 @@ def test_bucketed_agg_no_exchange(spark, no_broadcast):
 def test_mismatched_buckets_reshuffle(spark, no_broadcast):
     """Different bucket counts (non-divisor) cannot co-locate — at
     least one side re-shuffles; results stay correct."""
-    from niamoto_spark.sources.bucketed import (bucketed_join,
-                                                join_has_no_exchange,
-                                                write_bucketed)
+    from niamoto_spark.sources.bucketed import bucketed_join, write_bucketed
 
     left = spark.range(300).select((F.col("id") % 10).alias("k"))
     right = spark.range(10).select(F.col("id").alias("k"))

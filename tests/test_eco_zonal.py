@@ -7,13 +7,29 @@ from pyspark.sql import functions as F
 from niamoto_spark.operators import eco_zonal as ez
 
 
+def fake_zone_pixels(spark, zones, side=40, max_elevation=1600.0):
+    """Deterministic stand-in for the rasterio zone-window reader: a
+    side x side pixel grid per zone with smooth elevation, a forest mask,
+    and Holdridge classes derived from elevation."""
+    z = spark.createDataFrame([(s,) for s in zones], "zone string")
+    px = z.select(
+        "zone",
+        F.explode(F.sequence(F.lit(0), F.lit(side * side - 1))).alias("i"))
+    row, col = (F.col("i") / side).cast("int"), F.col("i") % side
+    elev = ((row + col) / (2.0 * (side - 1))) * max_elevation
+    forest = ((F.xxhash64("zone", "i") % 100 + 100) % 100 < 60).cast("int")
+    hold = F.when(elev < 400, 1).when(elev < 900, 2).otherwise(3)
+    return px.select("zone", elev.alias("elevation"),
+                     forest.alias("forest"), hold.alias("holdridge"))
+
+
 @pytest.fixture(scope="module")
 def pixels(spark):
-    return ez.fake_zone_pixels(spark, ["z1", "z2"], side=20)
+    return fake_zone_pixels(spark, ["z1", "z2"], side=20)
 
 
 def test_fake_pixels_deterministic(spark, pixels):
-    again = ez.fake_zone_pixels(spark, ["z1", "z2"], side=20)
+    again = fake_zone_pixels(spark, ["z1", "z2"], side=20)
     assert sorted(map(tuple, pixels.collect())) == sorted(map(tuple, again.collect()))
 
 

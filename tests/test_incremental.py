@@ -184,8 +184,7 @@ def test_materialize_shards_layout(spark, tmp_path):
 
 
 def test_jsonl_shard_roundtrip(spark, tmp_path):
-    from niamoto_spark.exporters.jsonl import (export_jsonl_shards,
-                                               read_jsonl_shards)
+    from niamoto_spark.exporters.jsonl import export_jsonl_shards
 
     df = spark.range(300).select(
         F.col("id").alias("doc_id"),
@@ -194,7 +193,7 @@ def test_jsonl_shard_roundtrip(spark, tmp_path):
     out = str(tmp_path / "jsonl")
     n = export_jsonl_shards(df, "doc_id", out, n_shards=4)
     assert n == 4
-    back = read_jsonl_shards(spark, out)
+    back = spark.read.json(out)
     assert back.select("shard").distinct().count() == 4
     got = sorted((r["doc_id"], r["text"], r["grp"])
                  for r in back.collect())

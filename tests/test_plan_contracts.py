@@ -1,4 +1,5 @@
-"""Plan contracts: the scale properties the engine promises (PLANS.md) as
+"""Plan contracts: the scale properties the engine promises (README
+"Scale design") as
 assertions — broadcast-only dimension joins, pruned scans, no global
 single-partition windows — so future edits can't silently regress them."""
 

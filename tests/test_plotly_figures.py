@@ -10,7 +10,7 @@ import pytest
 
 from niamoto_spark.exporters.plotly_figures import (
     MUTED_CHART_COLORS, bar_figure, bar_figure_from, donut_figure,
-    donut_figure_from, is_plotly_figure, line_figure, line_figure_from)
+    donut_figure_from, is_plotly_figure)
 
 GOLDEN_LAYOUT = {
     "annotations": [],
@@ -42,16 +42,6 @@ def test_donut_figure_golden():
     }
 
 
-def test_line_figure_series_split():
-    fig = line_figure([(1, 10.0, "a"), (2, 11.0, "a"), (1, 5.0, "b")])
-    assert [t["name"] for t in fig["data"]] == ["a", "b"]
-    assert fig["data"][0] == {"type": "scatter", "mode": "lines",
-                              "name": "a", "x": [1, 2], "y": [10.0, 11.0]}
-    # no-series input emits one unnamed trace
-    single = line_figure([(1, 2.0), (2, 3.0)])
-    assert len(single["data"]) == 1 and "name" not in single["data"][0]
-
-
 def test_adapters_over_widget_frames(spark):
     from niamoto_spark.widgets import (bar_plot_data, donut_chart_data,
                                        line_plot_data)
@@ -65,8 +55,8 @@ def test_adapters_over_widget_frames(spark):
     assert donut["data"][0]["hole"] == 0.3
     ts = spark.createDataFrame(
         [(2, 1.0, "s1"), (1, 2.0, "s1")], "t int, v double, s string")
-    line = line_figure_from(line_plot_data(ts, "t", "v", series="s"))
-    assert line["data"][0]["x"] == [1, 2]          # x-ordered
+    line = line_plot_data(ts, "t", "v", series="s").collect()
+    assert [r["x"] for r in line] == [1, 2]        # x-ordered
 
 
 def test_html_exporter_embeds_figures(spark, tmp_path):

@@ -1,137 +1,13 @@
-"""Golden figure-dict tests for the round-10 Plotly parity widgets
-(VERDICT r9 next-#2): scatter, sunburst, stacked_area, diverging_bar,
-radial_gauge, concentric_rings, interactive_map — the remaining 7 of the
-reference's 10 Plotly-figure widget kinds (the other 6 widget kinds render
-HTML tables/grids in the reference, not Plotly figures)."""
+"""The frames of the round-10 chart widgets (scatter, sunburst,
+stacked_area, diverging_bar, radial_gauge, concentric_rings,
+interactive_map) and the HTML exporter's embedding of a non-bar
+Plotly figure payload."""
 
 import json
 
-from niamoto_spark.exporters.plotly_figures import (
-    DIVERGING_NEGATIVE, DIVERGING_POSITIVE, GAUGE_DEFAULT_COLOR,
-    RING_DEFAULT_COLORS, concentric_rings_figure,
-    concentric_rings_figure_from, diverging_bar_figure,
-    diverging_bar_figure_from, is_plotly_figure, map_figure,
-    map_figure_from, radial_gauge_figure, radial_gauge_figure_from,
-    scatter_figure, scatter_figure_from, stacked_area_figure,
-    stacked_area_figure_from, sunburst_figure, sunburst_figure_from)
-
-
-def test_scatter_figure_golden():
-    fig = scatter_figure([1, 2], [3.0, 4.0], title="T",
-                         size=[5, 9], color=["a", "b"])
-    assert is_plotly_figure(fig)
-    (tr,) = fig["data"]
-    assert tr["type"] == "scatter" and tr["mode"] == "markers"
-    assert tr["marker"] == {"color": ["a", "b"], "size": [5, 9]}
-    assert fig["layout"]["margin"]["t"] == 30  # title present
-    assert scatter_figure([], [])["layout"]["margin"]["t"] == 10
-
-
-def test_sunburst_figure_golden():
-    fig = sunburst_figure(["A", "A/x"], ["A", "x"], ["", "A"], [10, 4])
-    (tr,) = fig["data"]
-    # reference sunburst_chart.py:236-254 trace contract
-    assert tr["type"] == "sunburst"
-    assert tr["branchvalues"] == "total"
-    assert tr["marker"]["line"] == {"color": "#FFFFFF", "width": 1}
-    assert tr["insidetextorientation"] == "radial"
-    assert tr["sort"] is False
-    assert tr["hoverinfo"] == "label+percent parent+value"
-    assert fig["layout"]["height"] == 450
-    assert fig["layout"]["margin"] == {"t": 5, "l": 5, "r": 5, "b": 5}
-
-
-def test_stacked_area_figure_golden():
-    fig = stacked_area_figure([1, 2], {"a": [1, 2], "b": [3, 4]},
-                              colors=["#111111", "#222222"])
-    a, b = fig["data"]
-    assert a["stackgroup"] == "one" and b["stackgroup"] == "one"
-    assert a["fill"] == "tonexty"  # stacked_area_plot.py:62 default
-    assert a["line"] == {"color": "#111111", "width": 0}
-    assert a["fillcolor"] == "#111111"
-    assert [t["name"] for t in fig["data"]] == ["a", "b"]
-
-
-def test_diverging_bar_sign_colors():
-    fig = diverging_bar_figure(["x", "y", "z"], [5, -3, 0])
-    (tr,) = fig["data"]
-    assert tr["marker"]["color"] == [
-        DIVERGING_POSITIVE, DIVERGING_NEGATIVE, DIVERGING_POSITIVE]
-    assert tr["text"] == [5, -3, 0] and tr["textposition"] == "auto"
-    assert fig["layout"]["bargap"] == 0.15
-    assert fig["layout"]["showlegend"] is False
-    h = diverging_bar_figure(["x"], [-1], orientation="h")
-    assert h["data"][0]["x"] == [-1] and h["data"][0]["y"] == ["x"]
-
-
-def test_radial_gauge_golden():
-    fig = radial_gauge_figure(42.5, 0, 100, title="Cover", suffix="%")
-    (tr,) = fig["data"]
-    assert tr["type"] == "indicator" and tr["mode"] == "gauge+number"
-    assert tr["value"] == 42.5 and tr["number"] == {"suffix": "%"}
-    g = tr["gauge"]
-    assert g["axis"]["range"] == [0, 100]
-    assert g["bar"] == {"color": GAUGE_DEFAULT_COLOR, "thickness": 0.8}
-    assert g["bgcolor"] == "#f5f5f5" and g["shape"] == "angular"
-    # degenerate range expands (radial_gauge.py:338-344)
-    deg = radial_gauge_figure(5, 10, 10)["data"][0]["gauge"]["axis"]["range"]
-    assert deg[1] > deg[0]
-
-
-def test_concentric_rings_hole_ladder_and_annotations():
-    rings = {"um": (["forest", "other"], [30, 70]),
-             "num": (["forest", "other"], [55, 45]),
-             "emprise": (["forest", "other"], [20, 80])}
-    fig = concentric_rings_figure(rings, ["um", "num", "emprise"],
-                                  ring_labels={"um": "UM"})
-    # traces added outermost-first (reversed order), holes 0 / .35 / .65
-    holes = [t["hole"] for t in fig["data"]]
-    assert holes == [0.0, 0.35, 0.65]
-    assert all(t["type"] == "pie" and t["sort"] is False
-               and t["rotation"] == -30 and t["direction"] == "clockwise"
-               and t["textinfo"] == "none" for t in fig["data"])
-    assert fig["data"][2]["name"] == "UM"  # innermost, labeled
-    ann = fig["layout"]["annotations"]
-    texts = [a["text"] for a in ann]
-    assert "UM" in texts and "30.0%" in texts and "55.0%" in texts
-    # first ring label at the reference's center-hole position
-    um = next(a for a in ann if a["text"] == "UM")
-    assert (um["x"], um["y"]) == (0.5, 0.4)
-
-
-def test_map_figure_golden():
-    fig = map_figure([166.0, 167.0], [-22.0, -21.0], [4, 9])
-    (tr,) = fig["data"]
-    assert tr["type"] == "scattermap" and tr["mode"] == "markers"
-    assert tr["marker"]["opacity"] == 0.8
-    lay = fig["layout"]
-    assert lay["map_style"] == "carto-positron"
-    assert lay["map_center"] == {"lat": -21.5, "lon": 166.5}
-    assert lay["margin"] == {"r": 0, "t": 0, "l": 0, "b": 0}
-    assert lay["height"] == 500
-
-
-def test_ring_palette_matches_reference():
-    assert RING_DEFAULT_COLORS == ["#6B8E23", "#8B7355", "#C5A98B",
-                                   "#F4E4BC"]
-
-
-def test_all_figures_json_serializable():
-    figs = [
-        scatter_figure([1], [2]),
-        sunburst_figure(["a"], ["a"], [""], [1]),
-        stacked_area_figure([1], {"s": [1]}),
-        diverging_bar_figure(["c"], [1]),
-        radial_gauge_figure(1),
-        concentric_rings_figure({"r": (["x"], [1])}, ["r"]),
-        map_figure([0.0], [0.0]),
-    ]
-    for f in figs:
-        assert is_plotly_figure(f)
-        json.dumps(f)
-
 
 def test_adapters_over_widget_frames(spark):
+    """Each widget frame holds what a figure over it draws."""
     from niamoto_spark.widgets import (concentric_rings_data,
                                        diverging_bar_data,
                                        interactive_map_data,
@@ -144,46 +20,45 @@ def test_adapters_over_widget_frames(spark):
          ("b", "s1", 3.0, 5.0, 30)],
         "g string, s string, x double, y double, v long")
 
-    sc = scatter_figure_from(scatter_plot_data(df, "x", "y"))
-    assert len(sc["data"][0]["x"]) == 3
+    sc = scatter_plot_data(df, "x", "y")
+    assert sc.columns == ["x", "y"] and sc.count() == 3
 
-    sb = sunburst_figure_from(sunburst_data(df, ["g", "s"], "v"))
-    ids = sb["data"][0]["ids"]
-    assert "a" in ids and "a/s1" in ids and sb["data"][0]["parents"][0] == ""
+    sb = sunburst_data(df, ["g", "s"], "v").collect()
+    ids = [r["id"] for r in sb]
+    assert "a" in ids and "a/s1" in ids and sb[0]["parent"] == ""
 
-    sa = stacked_area_figure_from(stacked_area_data(df, "x", "s", "v"))
-    assert sorted(t["name"] for t in sa["data"]) == ["s1", "s2"]
+    sa = stacked_area_data(df, "x", "s", "v")
+    assert sorted(c for c in sa.columns if c != "x") == ["s1", "s2"]
 
     flags = spark.createDataFrame([("c1", 7, 3), ("c2", 2, 8)],
                                   "category string, true_count long, "
                                   "false_count long")
-    dv = diverging_bar_figure_from(diverging_bar_data(flags))
-    (tr,) = dv["data"]
-    assert tr["y"] == [7, -3, 2, -8]
-    assert tr["marker"]["color"][:2] == [DIVERGING_POSITIVE,
-                                         DIVERGING_NEGATIVE]
+    dv = diverging_bar_data(flags).collect()
+    assert [tuple(r) for r in dv] == [("c1", 7, -3), ("c2", 2, -8)]
 
-    g = radial_gauge_figure_from(radial_gauge_data(
-        spark.createDataFrame([(63.0,)], "value double")))
-    assert g["data"][0]["value"] == 63.0
+    g = radial_gauge_data(
+        spark.createDataFrame([(63.0,)], "value double")).first()
+    assert g["value"] == 63.0
 
-    rings = concentric_rings_figure_from(concentric_rings_data(
+    rings = concentric_rings_data(
         spark.createDataFrame([("um", 30.0), ("um", 70.0), ("num", 5.0)],
                               "zone string, area double"),
-        "zone", "area"), ring_order=["um", "num"])
-    assert len(rings["data"]) == 2
+        "zone", "area")
+    assert {r["ring"] for r in rings.collect()} == {"um", "num"}
 
     pts = spark.createDataFrame(
         [("POINT (166.5 -22.1)", 4), ("POINT (167.0 -21.0)", 2)],
         "geometry_wkt string, point_count long")
-    mp = map_figure_from(interactive_map_data(pts))
-    assert mp["data"][0]["lon"] == [166.5, 167.0]
+    mp = interactive_map_data(pts).collect()
+    assert [r["lon"] for r in mp] == [166.5, 167.0]
 
 
 def test_html_exporter_embeds_new_figures(spark, tmp_path):
     from niamoto_spark.exporters.html_site import export_html_site
 
-    fig = radial_gauge_figure(55.0, 0, 100)
+    fig = {"data": [{"type": "indicator", "mode": "gauge+number",
+                     "value": 55.0}],
+           "layout": {"annotations": []}}
     results = spark.createDataFrame(
         [(1, json.dumps(fig))], "plot_id int, gauge string")
     export_html_site(results, "plot_id", str(tmp_path / "site"),

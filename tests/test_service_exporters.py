@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from niamoto_spark.catalog import Entity, EntityKind, EntityRegistry, testdata_registry
+from niamoto_spark.catalog import EntityRegistry
 from niamoto_spark.exporters.dwc import to_dwc_occurrence
 from niamoto_spark.exporters.json_api import export_json_api
 from niamoto_spark.operators import extraction as ex
@@ -27,8 +27,8 @@ def test_registry_resolves_reference_plugin_names():
     assert len(list_plugins(PluginType.TRANSFORMER)["transformer"]) >= 30
 
 
-def test_entity_registry_roundtrip(tmp_path, spark, sf_dir):
-    reg = testdata_registry(sf_dir)
+def test_entity_registry_roundtrip(tmp_path, spark, testdata_registry):
+    reg = testdata_registry
     p = str(tmp_path / "registry.json")
     reg.save(p)
     reg2 = EntityRegistry.open(p)

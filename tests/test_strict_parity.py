@@ -59,7 +59,7 @@ def test_geospatial_group_by_coords_sane(tagged, spark):
 
 def test_index_dsl_missing_source_strict_null():
     """Strict: the reference maps a misspelled source (id: taxon_id when
-    the column is taxons_id) to null silently (ROUND12_NOTES quirk)."""
+    the column is taxons_id) to null silently."""
     item = {"taxons_id": 7, "full_name": "x"}
     out = _ref_map_fields(item, ["id: taxon_id"], group="taxons",
                           pattern="{group}/{id}.json", base_id=7,

@@ -3,6 +3,7 @@ WKB round-trips, and the import-pipeline e2e the reference runs on real
 projects (engine.py:371-520 reads .gpkg/.shp first)."""
 
 import struct
+import warnings
 
 import pytest
 
@@ -153,17 +154,15 @@ def test_import_pipeline_reads_shp_and_gpkg(tmp_path, spark):
 # XLSX (pure-python stdlib parser, sources/xlsx.py)
 # ---------------------------------------------------------------------------
 
-def test_xlsx_roundtrip(tmp_path, spark):
-    from niamoto_spark.sources import xlsx
+def test_xlsx_roundtrip(tmp_path, spark, write_xlsx):
     from niamoto_spark.sources.files import read_xlsx
 
     path = str(tmp_path / "plots.xlsx")
-    xlsx.write_xlsx(path, [
+    write_xlsx(path, [
         ["plot_id", "name", "elevation", "active"],
         [1, "Plot A", 250.5, True],
         [2, "Côte <est>", 800.0, False],
     ])
-    assert xlsx.list_sheets(path) == ["Sheet1"]
     rows = {r["plot_id"]: r for r in read_xlsx(spark, path).collect()}
     assert rows[1.0]["name"] == "Plot A"
     assert rows[2.0]["name"] == "Côte <est>"        # xml escaping
@@ -171,24 +170,34 @@ def test_xlsx_roundtrip(tmp_path, spark):
     assert rows[1.0]["active"] is True and rows[2.0]["active"] is False
 
 
-def test_xlsx_sparse_and_headerless(tmp_path, spark):
+def test_xlsx_sparse_and_headerless(tmp_path, spark, write_xlsx):
+    """Columns mixing text, numbers and empty cells keep Spark on its
+    Arrow path: a fallback to pickled rows warns, and fails the test."""
     from niamoto_spark.sources.xlsx import read_xlsx_native, read_xlsx_rows
 
     path = str(tmp_path / "sparse.xlsx")
-    from niamoto_spark.sources import xlsx
-    xlsx.write_xlsx(path, [["a", None, "c"], [1, 2, None]])
+    write_xlsx(path, [["a", None, "c"], [1, 2, None]])
     rows = read_xlsx_rows(path)
     assert rows == [["a", None, "c"], [1.0, 2.0, None]]
-    df = read_xlsx_native(spark, path, header=False)
-    assert df.columns == ["col0", "col1", "col2"]
-    assert df.count() == 2
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        df = read_xlsx_native(spark, path, header=False)
+    assert df.schema.simpleString() == \
+        "struct<col0:string,col1:double,col2:string>"
+    assert [tuple(r) for r in df.collect()] == \
+        [("a", None, "c"), ("1.0", 2.0, None)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        df = read_xlsx_native(spark, path)
+    assert df.schema.simpleString() == "struct<a:double,col1:double,c:void>"
+    assert [tuple(r) for r in df.collect()] == [(1.0, 2.0, None)]
 
 
-def test_xlsx_named_sheet_missing(tmp_path):
+def test_xlsx_named_sheet_missing(tmp_path, write_xlsx):
     from niamoto_spark.sources import xlsx
 
     path = str(tmp_path / "one.xlsx")
-    xlsx.write_xlsx(path, [["x"], [1]])
+    write_xlsx(path, [["x"], [1]])
     with pytest.raises(ValueError, match="not in"):
         xlsx.read_xlsx_rows(path, sheet="Nope")
 
@@ -230,10 +239,9 @@ REF_FIXTURES = "/root/reference/tests/fixtures/datasets"
 def test_xlsx_parser_reads_real_openpyxl_file(spark):
     """The stdlib parser must read a REAL openpyxl-written workbook (the
     reference's own test fixture): shared strings, dates, empty cells."""
-    from niamoto_spark.sources.xlsx import list_sheets, read_xlsx_native
+    from niamoto_spark.sources.xlsx import read_xlsx_native
 
     path = f"{REF_FIXTURES}/mixed_types.xlsx"
-    assert list_sheets(path) == ["Sheet1"]
     df = read_xlsx_native(spark, path)
     assert df.columns == ["id", "name", "value_str", "date_mixed",
                           "numeric", "category"]

@@ -2,7 +2,7 @@
 
 Comparison doctrine: entity ids must align exactly (both engines derive
 hash ids from full_path, hierarchy_builder.py:462-470); numeric leaves
-compare at 2dp (the repo-wide rounding pin, ROUND3_NOTES); lists are
+compare at 2dp (the repo-wide rounding pin); lists are
 order-sensitive because the reference's widget arrays are ordered
 payloads (tops/counts, month series, binned counts).
 """
