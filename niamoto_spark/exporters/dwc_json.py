@@ -217,7 +217,7 @@ def _generator(name, occ, taxon, taxon_id, occ_index, params):
             if v:
                 return str(v)
         return "present"
-    return None
+    raise ValueError(f"unknown DwC generator {name!r}")
 
 
 def map_occurrence(occ: Mapping[str, Any], taxon: Mapping[str, Any],
@@ -303,7 +303,7 @@ def export_dwc_occurrence_target(taxa_results: DataFrame,
     n_files = 0
     index_entries = []
     for r in items_pdf.toLocalIterator():
-        item = _flatten_item(json.loads(r["__doc"]), id_col)
+        item = _flatten_item(json.loads(r["__doc"]))
         taxon_id = item.get(f"{group_name}_id", item.get("id"))
         # the item's configured id field holds the taxonomy pk the
         # occurrence buckets are keyed by (_get_taxon_id_from_data)

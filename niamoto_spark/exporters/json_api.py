@@ -200,7 +200,7 @@ def _parse_widget_strings(doc: dict) -> dict:
     return doc
 
 
-def _flatten_item(doc: dict, id_col: str) -> dict:
+def _flatten_item(doc: dict) -> dict:
     """Reference item model (json_api_exporter.py:830-860): the id
     column first, then every widget column parsed, and each DICT
     widget's contents ALSO merged at top level in column order (later
@@ -220,24 +220,8 @@ def _flatten_item(doc: dict, id_col: str) -> dict:
     return item
 
 
-def _missing_src_check(item: Mapping[str, Any], src: str,
-                       strict_parity: bool) -> None:
-    """Non-strict mode fails LOUDLY on a source path whose head key is
-    absent from the item — the reference maps e.g. ``id: taxon_id`` to
-    null silently when the column is really ``taxons_id``
-    (the reference's index field DSL quirk; strict mode preserves it
-    for drop-in parity, tests/test_strict_parity.py)."""
-    if not strict_parity and src.split(".", 1)[0] not in item:
-        close = [k for k in item if k.endswith("_id") or k == "id"]
-        raise KeyError(
-            f"index/detail field source '{src}' not in item; available "
-            f"id-like keys: {sorted(close)} (strict_parity=True would "
-            f"map it to null, matching the reference)")
-
-
 def _ref_map_fields(item: Mapping[str, Any], specs, *, group: str,
-                    pattern: str, base_id: Any,
-                    strict_parity: bool = True) -> dict[str, Any]:
+                    pattern: str, base_id: Any) -> dict[str, Any]:
     """Reference index/detail field DSL incl. the endpoint_url generator
     (DataMapper._map_fields :1072-1118, _generate_endpoint_url)."""
     out: dict[str, Any] = {}
@@ -245,15 +229,12 @@ def _ref_map_fields(item: Mapping[str, Any], specs, *, group: str,
         if isinstance(spec, str):
             if ":" in spec:
                 name, src = (s.strip() for s in spec.split(":", 1))
-                _missing_src_check(item, src, strict_parity)
                 out[name] = _nested_get(item, src)
             else:
-                _missing_src_check(item, spec, strict_parity)
                 out[spec] = _nested_get(item, spec)
         elif isinstance(spec, Mapping):
             for name, cfg in spec.items():
                 if isinstance(cfg, str):
-                    _missing_src_check(item, cfg, strict_parity)
                     out[name] = _nested_get(item, cfg)
                 elif isinstance(cfg, Mapping) and \
                         cfg.get("generator") == "endpoint_url":
@@ -272,8 +253,7 @@ def _ref_map_fields(item: Mapping[str, Any], specs, *, group: str,
 
 def export_json_api_target(results: DataFrame, group_name: str,
                            out_dir: str, params: Mapping[str, Any],
-                           group_cfg: Mapping[str, Any],
-                           strict_parity: bool = True) -> dict:
+                           group_cfg: Mapping[str, Any]) -> dict:
     """One group of a reference export.yml ``json_api_exporter`` target.
 
     Writes ``detail_output_pattern``-named files per entity (pass_through
@@ -311,7 +291,7 @@ def export_json_api_target(results: DataFrame, group_name: str,
                   {"ignoreNullFields": "false"}).alias("__doc"))
 
     def emit(doc: dict):
-        item = _flatten_item(doc, id_col)
+        item = _flatten_item(doc)
         item_id = next((item[k] for k in id_keys if item.get(k) is not None),
                        None)
         if item_id is None:
@@ -321,8 +301,7 @@ def export_json_api_target(results: DataFrame, group_name: str,
             detail = _ref_map_fields(item, detail_cfg["fields"],
                                      group=group_name,
                                      pattern=detail_pattern,
-                                     base_id=item_id,
-                                     strict_parity=strict_parity)
+                                     base_id=item_id)
         else:
             detail = item
         rel = detail_pattern.format(group=group_name,
@@ -353,8 +332,7 @@ def export_json_api_target(results: DataFrame, group_name: str,
             mapped = _ref_map_fields(item, index_cfg["fields"],
                                      group=group_name,
                                      pattern=detail_pattern,
-                                     base_id=item_id,
-                                     strict_parity=strict_parity)
+                                     base_id=item_id)
         else:
             mapped = dict(item)
         if "detail_url" not in mapped:

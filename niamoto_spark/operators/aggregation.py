@@ -254,12 +254,14 @@ def boolean_comparison(df: DataFrame, group_cols: Sequence[str],
 
 @register("top_ranking", PluginType.TRANSFORMER)
 def top_ranking(df: DataFrame, group_cols: Sequence[str], field: str,
-                limit: int = 10, mode: str = "direct",
+                limit: int = 10,
                 agg: str = "count", value_field: str | None = None,
                 name_join: tuple[DataFrame, str, str] | None = None,
                 weight_col: str | None = None) -> DataFrame:
-    """Top-N by frequency (mode=direct) or by an aggregate through joins
-    (mode=join) (reference: transformers/aggregation/top_ranking.py:297-381,
+    """Top-N by frequency (``agg="count"``, the reference's direct mode) or
+    by a sum/avg of ``value_field`` over rows the caller has joined (its
+    join mode), with optional display names from ``name_join``
+    (reference: transformers/aggregation/top_ranking.py:297-381,
     :434-565; agg fns :644-663).  Hierarchical roll-up lives in
     ``loaders.hierarchical_top_ranking`` because it needs a hierarchy table.
 

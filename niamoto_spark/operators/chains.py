@@ -172,7 +172,7 @@ def evaluate(params: dict, docs: dict) -> Any:
     return cc_pure_op(op, _resolved(_op_params(params), docs))
 
 
-def _evaluate_frame(joined: DataFrame, gid: str, keys: dict[str, str],
+def _evaluate_frame(joined: DataFrame, keys: dict[str, str],
                     calculators: list[tuple[str, str, dict]]) -> DataFrame:
     """``joined`` plus the doc column of each custom_calculator step
     ``(column, key, params)``, from :func:`evaluate` over the docs of
@@ -234,7 +234,7 @@ def transform_chain(steps: list[dict], sources: dict[str, DataFrame],
                          "custom_calculator")
     joined = reduce(lambda a, b: a.join(b, gid, "full"), frames)
     if calculators:
-        joined = _evaluate_frame(joined, gid, keys, calculators)
+        joined = _evaluate_frame(joined, keys, calculators)
     parts = [F.lit("{")]
     for i, step in enumerate(steps):
         parts.append(F.lit(("," if i else "")

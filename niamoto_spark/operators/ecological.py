@@ -67,18 +67,6 @@ def shannon_pielou(counts: DataFrame, group_cols: Sequence[str],
                       "non_zero_classes", "pielou")
 
 
-def simpson_index(counts: DataFrame, group_cols: Sequence[str],
-                  count_col: str = "count") -> DataFrame:
-    """Simpson diversity 1 - sum(p^2) from a counts table."""
-    c = F.col(count_col).cast("double")
-    g = counts.groupBy(*group_cols) if group_cols else counts.groupBy()
-    pre = g.agg(F.sum(c).alias("__t"), F.sum(c * c).alias("__ss"))
-    return pre.select(
-        *group_cols,
-        F.round(F.lit(1.0) - F.col("__ss") / (F.col("__t") * F.col("__t")), 4)
-         .alias("simpson"))
-
-
 # --------------------------------------------------------------------------
 # Array-form operations (ArrayType columns, higher-order functions)
 # --------------------------------------------------------------------------

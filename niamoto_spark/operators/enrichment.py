@@ -48,186 +48,6 @@ def reference_enrichment_profile(df: DataFrame, json_col: str,
     return df.withColumn("profile", F.array(*items))
 
 
-class ApiAuth:
-    """Authentication surface of the reference's HTTP enricher family
-    (api_taxonomy_enricher.py:225-304 config validation, :514-533 request
-    application, :640-737 api_key placement + oauth2 token flow).
-
-    ``prepare()`` returns the request pieces (headers, query params,
-    cookies, basic tuple) for the configured method; oauth2 fetches and
-    caches a client-credentials token through the injectable ``transport``
-    (``transport(method, url, data) -> dict``), refreshing 60 s before
-    expiry exactly like the reference."""
-
-    def __init__(self, auth_method: str = "none",
-                 auth_params: Mapping[str, str] | None = None,
-                 transport: Callable[..., dict] | None = None,
-                 clock: Callable[[], float] = time.time):
-        p = dict(auth_params or {})
-        if auth_method == "api_key":
-            if "key" not in p:
-                raise ValueError(
-                    "api_key authentication requires 'key' in auth_params")
-            if "location" not in p:
-                raise ValueError("api_key authentication requires 'location' "
-                                 "in auth_params (header, query, or cookie)")
-            if p["location"] == "header" and "name" not in p:
-                raise ValueError("api_key in header requires 'name' in auth_params")
-            if p["location"] not in ("header", "query", "cookie"):
-                raise ValueError(f"Invalid api_key location {p['location']!r}")
-        elif auth_method == "basic":
-            if "username" not in p or "password" not in p:
-                raise ValueError("basic authentication requires 'username' "
-                                 "and 'password' in auth_params")
-        elif auth_method == "oauth2":
-            if "token" not in p and "token_url" not in p:
-                raise ValueError("oauth2 authentication requires either "
-                                 "'token' or 'token_url' in auth_params")
-            if "token_url" in p and ("client_id" not in p
-                                     or "client_secret" not in p):
-                raise ValueError("oauth2 with token_url requires 'client_id' "
-                                 "and 'client_secret' in auth_params")
-        elif auth_method == "bearer":
-            if "token" not in p:
-                raise ValueError(
-                    "bearer authentication requires 'token' in auth_params")
-        elif auth_method != "none":
-            raise ValueError(f"unknown auth_method {auth_method!r}")
-        self.method = auth_method
-        self.params = p
-        self.transport = transport
-        self._clock = clock
-        self._token_cache: dict[str, dict] = {}
-
-    def _oauth_token(self) -> str:
-        p = self.params
-        if "token" in p:
-            return p["token"]
-        cache_key = f"{p['token_url']}_{p['client_id']}_{p.get('scope', '')}"
-        cached = self._token_cache.get(cache_key)
-        if cached and cached["expires_at"] > self._clock():
-            return cached["token"]
-        data = {"grant_type": p.get("grant_type", "client_credentials"),
-                "client_id": p["client_id"],
-                "client_secret": p["client_secret"]}
-        if p.get("scope"):
-            data["scope"] = p["scope"]
-        resp = self.transport("POST", p["token_url"], data)
-        token = resp.get("access_token")
-        if not token:
-            raise ValueError("no access_token in OAuth2 response")
-        self._token_cache[cache_key] = {
-            "token": token,
-            "expires_at": self._clock() + resp.get("expires_in", 3600) - 60,
-        }
-        return token
-
-    def prepare(self) -> dict:
-        headers: dict[str, str] = {}
-        query: dict[str, str] = {}
-        cookies: dict[str, str] = {}
-        basic = None
-        p = self.params
-        if self.method == "api_key":
-            loc = p["location"]
-            if loc == "header":
-                headers[p.get("name", "X-API-Key")] = p["key"]
-            elif loc == "query":
-                query[p.get("name", "api_key")] = p["key"]
-            else:
-                cookies[p.get("name", "api_key")] = p["key"]
-        elif self.method == "basic":
-            basic = (p["username"], p["password"])
-        elif self.method == "bearer":
-            headers["Authorization"] = f"Bearer {p['token']}"
-        elif self.method == "oauth2":
-            headers["Authorization"] = f"Bearer {self._oauth_token()}"
-        return {"headers": headers, "query": query, "cookies": cookies,
-                "basic": basic}
-
-
-class ApiError(Exception):
-    def __init__(self, status: int, body: str = ""):
-        super().__init__(f"HTTP {status}: {body[:200]}")
-        self.status = status
-
-
-class _MissingField(Exception):
-    pass
-
-
-class _SkipDict(dict):
-    def __missing__(self, key):
-        raise _MissingField(key)
-
-
-def http_fetcher(url_template: str, transport: Callable[..., dict],
-                 auth: ApiAuth | None = None, max_retries: int = 2,
-                 backoff_s: float = 0.5,
-                 sleeper: Callable[[float], None] = time.sleep,
-                 chained: list[Mapping] | None = None,
-                 ) -> Callable[[str], dict]:
-    """Build a fetcher for ``api_enrichment``: fills ``{key}`` into the URL
-    template, applies the auth pieces, retries transient failures
-    (HTTP 429/5xx or transport exceptions) with linear backoff.
-
-    ``chained`` replicates the reference's chained_endpoints
-    (api_taxonomy_enricher.py:237-316, :3742-3820): after the initial
-    response, each entry's ``url_template`` is formatted from the
-    data-so-far ({field} placeholders; entry silently skipped when a field
-    is missing — the expected no-result case), fetched with the same
-    auth/retry, and its ``mapping`` ({out: response_field}) merges into
-    the result.
-
-    ``transport("GET", url, params, headers=..., cookies=..., basic=...)
-    -> dict`` is injectable — a requests-backed implementation is a
-    five-liner on a connected cluster; tests (and this offline container)
-    inject fakes."""
-    for idx, ep in enumerate(chained or []):
-        if "url_template" not in ep:
-            raise ValueError(f"chained[{idx}] must have 'url_template'")
-        if "mapping" not in ep:
-            raise ValueError(f"chained[{idx}] must have 'mapping'")
-
-    def call(url: str, spec: dict, extra_params: Mapping | None = None) -> dict:
-        last: Exception | None = None
-        q = dict(spec["query"])
-        q.update(extra_params or {})
-        for attempt in range(max_retries + 1):
-            try:
-                return transport("GET", url, q,
-                                 headers=spec["headers"],
-                                 cookies=spec["cookies"],
-                                 basic=spec["basic"])
-            except ApiError as e:
-                last = e
-                if e.status not in (429,) and e.status < 500:
-                    raise
-            except Exception as e:  # noqa: BLE001 - transient transport error
-                last = e
-            if attempt < max_retries:
-                sleeper(backoff_s * (attempt + 1))
-        raise last  # type: ignore[misc]
-
-    def fetch(key: str) -> dict:
-        spec = auth.prepare() if auth else {
-            "headers": {}, "query": {}, "cookies": {}, "basic": None}
-        data = dict(call(url_template.format(key=key), spec))
-        for ep in chained or []:
-            try:
-                url = ep["url_template"].format_map(
-                    _SkipDict(key=key, **data))
-            except _MissingField:
-                continue                    # expected when no initial match
-            resp = call(url, spec, ep.get("params"))
-            for out, src in ep["mapping"].items():
-                if src in resp:
-                    data[out] = resp[src]
-        return data
-
-    return fetch
-
-
 class RateLimitedCache:
     """Driver-side fetch coordinator: ``rate_limit`` requests/sec + an
     in-memory cache keyed by a stable string (reference

@@ -61,12 +61,3 @@ def scd2_history(df: DataFrame, key_cols: Sequence[str], ts_col: str,
                 .withColumn("is_current", nxt.isNull())
                 .select(*keys, *attr_cols,
                         "valid_from", "valid_to", "is_current"))
-
-
-def scd2_snapshot(history: DataFrame, at_ts) -> DataFrame:
-    """Point-in-time reconstruction from an SCD2 table: the state of
-    every key as of ``at_ts`` (epoch-seconds literal or Column)."""
-    at = F.lit(at_ts)
-    return history.where((F.col("valid_from") <= at) &
-                         (F.col("valid_to").isNull() |
-                          (at < F.col("valid_to"))))

@@ -59,16 +59,6 @@ def fuzzy_pairs(df: DataFrame, id_col: str, name_col: str, block_col: str,
                     F.round(sim, round_dp).alias("name_sim")))
 
 
-def fuzzy_dedup_keep(df: DataFrame, id_col: str, name_col: str,
-                     block_col: str, **kwargs) -> DataFrame:
-    """Record set with fuzzy duplicates removed (min-id keeper per
-    matched pair — compose with components.dedup_keep_components for
-    cluster-exact semantics)."""
-    pairs = fuzzy_pairs(df, id_col, name_col, block_col, **kwargs)
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, id_col, "left_anti")
-
-
 def char_trigrams(col) -> "F.Column":
     """Distinct padded character 3-grams of a lowercased string, via
     higher-order functions (no UDF): '##a', '#ab', 'abc', ..., 'z$'.

@@ -104,21 +104,6 @@ def lm_perplexity_score(df: DataFrame, text_col: str, id_col: str,
             .withColumn("perplexity", F.exp(-F.col("avg_logprob"))))
 
 
-def lm_quality_filter(df: DataFrame, text_col: str, id_col: str,
-                      keep_frac: float = 0.5,
-                      add_k: float = 0.5) -> DataFrame:
-    """Keep the lowest-perplexity ``keep_frac`` of documents (CCNet's
-    head/middle split).  The cutoff comes from ``approx_percentile`` —
-    one extra aggregation, no sort of the corpus."""
-    scores = lm_perplexity_score(df, text_col, id_col, add_k=add_k)
-    cut = scores.agg(F.expr(
-        f"approx_percentile(perplexity, {float(keep_frac)})")).first()[0]
-    if cut is None:  # empty corpus: nothing to keep, nothing to crash on
-        return df.limit(0)
-    keep = scores.where(F.col("perplexity") <= F.lit(float(cut)))
-    return df.join(keep.select(id_col), on=id_col, how="left_semi")
-
-
 @register("kn_logprob_score", PluginType.TRANSFORMER)
 def kn_logprob_score(df: DataFrame, text_col: str, id_col: str,
                      discount: float = 0.75) -> DataFrame:

@@ -84,39 +84,62 @@ def join_table(data: DataFrame, data_key: str,
 
 
 @register("nested_set", PluginType.LOADER)
-def nested_set_loader(data: DataFrame, key: str,
-                      hierarchy: DataFrame, node_key: str = "id",
-                      ancestor_alias: str = "ancestor_id") -> DataFrame:
+def nested_set_loader(data: DataFrame, key: str, hierarchy: DataFrame,
+                      group_id: str, leaf_key: str | None, lft_col: str,
+                      rght_col: str) -> DataFrame:
     """Descendant-subtree membership via nested-set range join (reference:
     loaders/nested_set.py:147-185).  Instead of fetching one node's
-    (lft, rght) per query, ``subtree_join`` attaches EVERY ancestor id to
-    each fact row in a single broadcast range join — aggregating by
-    ``ancestor_alias`` afterwards yields the per-subtree result for all
-    subtrees at once.
+    (lft, rght) per query, ``subtree_join`` tags each fact row with EVERY
+    ancestor's ``group_id`` in a single broadcast range join — aggregating
+    by ``group_id`` afterwards yields the per-subtree result for all
+    subtrees at once.  ``data.key`` matches the hierarchy's ``leaf_key``
+    (``group_id`` when None).
     """
-    return subtree_join(data, key, hierarchy, node_key, ancestor_alias)
+    data, key = _clear_gid_collision(data, key, group_id)
+    return subtree_join(
+        data, key, hierarchy, node_key=group_id, ancestor_alias="__anc",
+        leaf_key=leaf_key or group_id, lft_col=lft_col, rght_col=rght_col,
+    ).withColumn(group_id, F.col("__anc")).drop("__anc")
 
 
 @register("adjacency_list", PluginType.LOADER)
-def adjacency_list_loader(data: DataFrame, key: str,
-                          nodes: DataFrame, node_key: str = "id",
-                          parent_col: str = "parent_id",
-                          ancestor_alias: str = "ancestor_id",
-                          max_depth: int = 32) -> DataFrame:
+def adjacency_list_loader(data: DataFrame, key: str, nodes: DataFrame,
+                          group_id: str, parent_col: str, match_field: str,
+                          include_children: bool) -> DataFrame:
     """Node + descendants via the adjacency encoding (reference:
     loaders/adjacency_list.py:119-208 uses a recursive CTE).  Spark SQL has
     no recursive CTE, so the closure (node, ancestor, depth) is materialized
     by a bounded iterative join (hierarchy.ancestor_closure) and then the
-    fact table equi-joins the closure — one distributed join, no recursion
+    fact table equi-joins the broadcast closure — one join, no recursion
     in the hot path.
-    """
-    from niamoto_spark.functions import hashed_dim_join
 
-    closure = ancestor_closure(nodes, node_key, parent_col, max_depth)
-    cl = closure.select(F.col("node_id").alias("__node"),
-                        F.col("ancestor_id").alias(ancestor_alias))
-    return hashed_dim_join(data, cl, key, [ancestor_alias],
-                           dim_key="__node")
+    ``data.key`` matches the hierarchy's ``match_field``;
+    ``include_children=False`` tags the direct node only
+    (adjacency_list.py:168-177).
+    """
+    data, key = _clear_gid_collision(data, key, group_id)
+    if not include_children:
+        m = nodes.select(F.col(match_field).alias("__m"),
+                         F.col(group_id).alias("__g"))
+        return data.join(F.broadcast(m), data[key] == F.col("__m")) \
+            .drop("__m").withColumn(group_id, F.col("__g")).drop("__g")
+    closure = ancestor_closure(nodes, group_id, parent_col)
+    cl = closure.select(F.col("node_id"),
+                        F.col("ancestor_id").alias(group_id))
+    if match_field != group_id:
+        # the recursive CTE matches data.key against the hierarchy's
+        # EXTERNAL id (match_id, adjacency_list.py:189-205): translate
+        # each node's match value into its subtree-ancestor ids before
+        # tagging
+        mm = nodes.select(F.col(match_field).alias("__m"),
+                          F.col(group_id).alias("__node"))
+        cl = cl.join(mm, cl["node_id"] == F.col("__node")) \
+            .select(F.col("__m"), F.col(group_id))
+        return data.join(F.broadcast(cl), data[key] == F.col("__m")) \
+            .drop("__m")
+    cl = cl.withColumnRenamed("node_id", "__n")
+    return data.join(F.broadcast(cl), data[key] == F.col("__n")) \
+        .drop("__n")
 
 
 @register("stats_loader", PluginType.LOADER)
@@ -150,17 +173,16 @@ def spatial_containment(data: DataFrame, point_wkt_col: str,
                         shapes: DataFrame, shape_id: str,
                         shape_wkt_col: str) -> DataFrame:
     """Points-in-polygon membership (reference: loaders/spatial.py:91-131
-    uses per-shape ``ST_Contains`` SQL).  Implemented as a broadcast join of
-    the (small) shape table against the fact table with a vectorized
-    Shapely containment check via mapInPandas when shapely is available;
-    falls back to a bounding-box prefilter-only strategy otherwise.
-
-    See operators/geospatial.py for the implementation details; this wrapper
-    keeps the loader-name contract.
+    uses per-shape ``ST_Contains`` SQL): each fact row is tagged with
+    the ``shape_id`` of every shape containing its point, in one
+    broadcast join of the (small) shape table — see
+    ``geospatial.points_in_polygons``.
     """
     from niamoto_spark.operators.geospatial import points_in_polygons
 
-    return points_in_polygons(data, point_wkt_col, shapes, shape_id, shape_wkt_col)
+    return points_in_polygons(data, point_wkt_col,
+                              shapes.select(shape_id, shape_wkt_col),
+                              shape_id, shape_wkt_col)
 
 
 def hierarchical_top_ranking(data: DataFrame, key: str,
@@ -169,10 +191,10 @@ def hierarchical_top_ranking(data: DataFrame, key: str,
                              target_ranks: list[str] | None = None,
                              limit: int = 10,
                              node_key: str = "id") -> DataFrame:
-    """top_ranking(mode=hierarchical): roll each fact row up to the nearest
-    ancestor at a target rank, then count + top-N (reference:
-    top_ranking.py:383-432 walks parent pointers per id; here it's the
-    nested-set subtree join + one aggregate).
+    """The reference's hierarchical top_ranking mode: roll each fact row up
+    to the nearest ancestor at a target rank, then count + top-N
+    (reference: top_ranking.py:383-432 walks parent pointers per id;
+    here it's the nested-set subtree join + one aggregate).
     Output: (item, value, rank) where item is the ancestor's rank_value.
     """
     # Pre-aggregate facts per LEAF below the range join (guide §2.3

@@ -24,7 +24,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from niamoto_spark.registry import PluginType, register
@@ -151,17 +150,6 @@ def media_resize(df: DataFrame, target: tuple[int, int] = (64, 64),
             yield pdf
 
     return df.mapInPandas(resize, schema=out_schema)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: expands (media_id, frame_count in meta)
-    into one row per sampled frame index — pure Spark (sequence + explode);
-    the actual frame decode plugs into media_features."""
-    frames = F.sequence(F.lit(0),
-                        F.greatest(F.coalesce(F.element_at("meta", "frame_count")
-                                               .cast("int"), F.lit(0)) - 1, F.lit(0)),
-                        F.lit(every_n))
-    return df.select("media_id", F.explode(frames).alias("frame_idx"))
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType([
@@ -428,16 +416,6 @@ def image_dhash(df: DataFrame, use_fake_decoder: bool = False) -> DataFrame:
 
     return df.select("media_id", "payload").mapInPandas(
         compute, schema="media_id long, dhash long")
-
-
-def image_near_dup(df: DataFrame, max_hamming: int = 5,
-                   use_fake_decoder: bool = False) -> DataFrame:
-    """Perceptual near-duplicate image pairs: dHash + Hamming banding.
-    Output: (id_a, id_b, hamming)."""
-    from niamoto_spark.operators.dedup import hamming_near_pairs
-
-    hashes = image_dhash(df, use_fake_decoder=use_fake_decoder)
-    return hamming_near_pairs(hashes, "media_id", "dhash", max_hamming)
 
 
 def _dct_matrix(n: int) -> np.ndarray:

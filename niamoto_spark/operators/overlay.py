@@ -550,36 +550,17 @@ def simplify_wkt(shapes: DataFrame, wkt_col: str,
     return shapes.mapInPandas(simp, schema=out_schema)
 
 
-def wkt_to_topojson(wkt: str, quantization: int = 10_000) -> dict:
-    """POLYGON/MULTIPOLYGON/LINESTRING WKT -> a TopoJSON Topology dict
+def nested_to_topojson(gtype: str, polys, quantization: int = 10_000) -> dict:
+    """Nested-coordinate polygons -> a TopoJSON Topology dict
     (reference shape_processor._convert_to_topojson :278-330 via the
     topojson lib with prequantize; here a dependency-free encoder).
 
     Per-geometry conversion like the reference (one feature per Topology),
     so arcs are the geometry's own rings, quantized to a
     ``quantization``-step integer grid and delta-encoded — the standard
-    TopoJSON transform/translate representation."""
-    from niamoto_spark.sources.vector import parse_wkt_nested
-
-    name, nested = parse_wkt_nested(wkt)
-    if name == "POLYGON":
-        polys = [nested]
-        gtype = "Polygon"
-    elif name == "MULTIPOLYGON":
-        polys = nested
-        gtype = "MultiPolygon"
-    elif name == "LINESTRING":
-        polys = [[nested]]
-        gtype = "LineString"
-    else:
-        raise ValueError(f"unsupported WKT type for TopoJSON: {name}")
-    return nested_to_topojson(gtype, polys, quantization)
-
-
-def nested_to_topojson(gtype: str, polys, quantization: int = 10_000) -> dict:
-    """Nested-coordinate form of :func:`wkt_to_topojson` — shared by the
-    engine widget and the refdiff topojson shim so float coordinates
-    never round-trip through WKT strings (r13 geography differential)."""
+    TopoJSON transform/translate representation.  Shared by the engine
+    widget and the refdiff topojson shim so float coordinates never
+    round-trip through WKT strings."""
     all_pts = [p for poly in polys for ring in poly for p in ring]
     xs = [p[0] for p in all_pts]
     ys = [p[1] for p in all_pts]
@@ -636,7 +617,7 @@ def nested_to_geojson(gtype: str, polys) -> dict:
 
 
 def topojson_decode(topo: dict) -> list[list[tuple[float, float]]]:
-    """Dequantize a Topology produced by ``wkt_to_topojson`` back to
+    """Dequantize a Topology produced by ``nested_to_topojson`` back to
     absolute-coordinate rings (test/verification helper)."""
     sx, sy = topo["transform"]["scale"]
     x0, y0 = topo["transform"]["translate"]
@@ -650,43 +631,3 @@ def topojson_decode(topo: dict) -> list[list[tuple[float, float]]]:
             ring.append((x0 + cx * sx, y0 + cy * sy))
         rings.append(ring)
     return rings
-
-
-@register("shape_topojson", PluginType.TRANSFORMER)
-def shape_topojson(shapes: DataFrame, wkt_col: str,
-                   out_col: str = "topojson",
-                   quantization: int = 10_000,
-                   simplify_epsilon_deg: float | None = None) -> DataFrame:
-    """TopoJSON output format of the reference shape_processor
-    (format='topojson', shape_processor.py:88-98,278-330): optional
-    Douglas-Peucker simplification, then per-shape Topology JSON.
-    mapInPandas — shapes partition across executors."""
-    import json as _json
-
-    out_schema = T.StructType(
-        list(shapes.schema.fields)
-        + [T.StructField(out_col, T.StringType(), True)])
-
-    def conv(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for wkt in pdf[wkt_col]:
-                if not wkt:
-                    outs.append(None)
-                    continue
-                if simplify_epsilon_deg:
-                    rings = parse_polygon_wkt(wkt)
-                    if rings:
-                        ring = douglas_peucker(rings[0], simplify_epsilon_deg)
-                        if len(ring) >= 4:
-                            wkt = _ring_to_wkt(ring)
-                try:
-                    outs.append(_json.dumps(
-                        wkt_to_topojson(wkt, quantization), sort_keys=True))
-                except ValueError:
-                    outs.append(None)
-            pdf = pdf.copy()
-            pdf[out_col] = outs
-            yield pdf
-
-    return shapes.mapInPandas(conv, schema=out_schema)

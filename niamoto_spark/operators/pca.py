@@ -111,38 +111,6 @@ def pca_fit(df: DataFrame, vec_col: str, k: int) -> dict:
             "n": n}
 
 
-@register("pca_project", PluginType.TRANSFORMER)
-def pca_project(df: DataFrame, vec_col: str, model: dict,
-                out_col: str = "pca",
-                round_dp: int | None = 6) -> DataFrame:
-    """Project vectors onto the fitted components: out = (x - mean) @ C'.
-    One broadcast of the k x d matrix, one Arrow-batched matmul per
-    batch; all other columns pass through."""
-    mean = np.asarray(model["mean"])
-    comps = np.asarray(model["components"])
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast((mean, comps, round_dp))
-
-    out_fields = [f for f in df.schema.fields]
-    schema = T.StructType(out_fields + [
-        T.StructField(out_col, T.ArrayType(T.DoubleType()))])
-
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m, c, dp = b.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            y = (x - m) @ c.T
-            if dp is not None:
-                y = np.round(y, dp)
-            pdf = pdf.copy()
-            pdf[out_col] = list(y)
-            yield pdf
-
-    return df.mapInPandas(project, schema=schema)
-
-
 def pca_variance_report(df: DataFrame, vec_col: str, k: int,
                         round_dp: int = 4) -> DataFrame:
     """(component, explained_variance, explained_variance_ratio,

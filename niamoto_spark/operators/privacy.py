@@ -56,37 +56,6 @@ def dp_counts(df: DataFrame, group_cols: "list[str]",
         F.round(F.col("__n") + noise, round_dp).alias("noisy_count"))
 
 
-@register("erase_entity", PluginType.TRANSFORMER)
-def erase_entity(spark, table_paths: "list[str]", key_col: str,
-                 key_value, vacuum_now: bool = False) -> dict:
-    """Right-to-erasure sweep: delete every row carrying
-    ``key_col = key_value`` across a set of manifest tables
-    (copy-on-write — only files containing the entity are rewritten),
-    and optionally ``vacuum`` so the bytes are PHYSICALLY gone, not
-    just unreferenced (time-travel history necessarily goes with
-    them; that is the point of erasure).
-
-    Returns {table_path: rows_deleted}.  Tables where the entity does
-    not appear commit nothing."""
-    from niamoto_spark.sources import manifest as M
-
-    deleted: dict = {}
-    for path in table_paths:
-        before = M.read_table(spark, path).where(
-            F.col(key_col) == F.lit(key_value)).count()
-        if before:
-            # Column predicate, never string interpolation: a key value
-            # containing a quote/backslash must not alter the predicate.
-            M.delete_where(spark, path, F.col(key_col) == F.lit(key_value))
-            if vacuum_now:
-                # Only where a delete committed: vacuuming untouched
-                # tables would destroy their time-travel history for no
-                # erasure gain.
-                M.vacuum(path, keep_versions=1)
-        deleted[path] = before
-    return deleted
-
-
 @register("apply_masking", PluginType.TRANSFORMER)
 def apply_masking(df: DataFrame, policy: "dict[str, str]",
                   salt: str = "") -> DataFrame:

@@ -107,12 +107,6 @@ def expect(df: DataFrame, rules: list[dict]) -> DataFrame:
     return spark.createDataFrame(results, "rule string, n_violations long")
 
 
-def expect_pass(df: DataFrame, rules: list[dict]) -> bool:
-    """True when every rule has zero violations."""
-    res = expect(df, rules)
-    return res.agg(F.max("n_violations")).first()[0] == 0
-
-
 @register("benford_audit", PluginType.TRANSFORMER)
 def benford_audit(df: DataFrame, value_col: str,
                   round_dp: int = 4) -> DataFrame:

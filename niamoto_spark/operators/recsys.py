@@ -22,7 +22,7 @@ next to contrastive.py / tfidf.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from niamoto_spark.registry import PluginType, register
@@ -70,23 +70,6 @@ def item_similarity(df: DataFrame, basket_col: str, item_col: str,
                                     * F.col("cb")),
                            round_dp).alias("cosine")))
     return cos
-
-
-@register("recommend_topn", PluginType.TRANSFORMER)
-def recommend_topn(similarity: DataFrame, n: int = 5) -> DataFrame:
-    """Symmetrize the pair table and keep each item's top-n neighbors
-    by (cosine desc, neighbor asc) — the serving-side artifact."""
-    sym = (similarity
-           .select(F.col("item_a").alias("item"),
-                   F.col("item_b").alias("neighbor"),
-                   "n_ab", "cosine")
-           .unionByName(similarity.select(
-               F.col("item_b").alias("item"),
-               F.col("item_a").alias("neighbor"), "n_ab", "cosine")))
-    w = Window.partitionBy("item").orderBy(F.col("cosine").desc(),
-                                           F.col("neighbor").asc())
-    return (sym.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= n))
 
 
 @register("audience_overlap", PluginType.TRANSFORMER)

@@ -140,12 +140,6 @@ def count_min_sketch(df: DataFrame, col: str, width: int = 1024,
     return sketch
 
 
-def cms_merge(a: list[list[int]], b: list[list[int]]) -> list[list[int]]:
-    if len(a) != len(b) or len(a[0]) != len(b[0]):
-        raise ValueError("count-min sketches must share (depth, width)")
-    return [[x + y for x, y in zip(ra, rb)] for ra, rb in zip(a, b)]
-
-
 def cms_estimate(sketch: list[list[int]], item) -> int:
     """Point estimate: min over rows of the item's bucket counter."""
     import hashlib

@@ -124,48 +124,3 @@ def skew_report(df: DataFrame, key_cols: "list[str] | str",
                                / F.col("__nkeys").cast("double")),
                             round_dp).alias("skew_ratio"),
                     F.col("__nkeys").alias("n_keys")))
-
-
-def plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a DataFrame (optimizedPlan stats,
-    the same number the planner's own autoBroadcastJoinThreshold
-    compares against) — file-scan relations get real footer sizes,
-    derived plans get propagated estimates.  No job runs."""
-    return int(df._jdf.queryExecution().optimizedPlan()
-               .stats().sizeInBytes())
-
-
-@register("smart_join", PluginType.TRANSFORMER)
-def smart_join(big: DataFrame, small: DataFrame,
-               on: "list[str] | str", how: str = "inner",
-               broadcast_threshold: int = 32 * 1024 * 1024,
-               skew_check: bool = False,
-               skew_ratio_threshold: float = 8.0,
-               salt_buckets: int = 8) -> DataFrame:
-    """Strategy-picking equi-join: broadcast when the dimension side's
-    CATALYST size estimate fits ``broadcast_threshold`` (explicit
-    ``F.broadcast`` — independent of session config, so the choice is
-    visible in the plan); otherwise a shuffle join, optionally salted
-    when ``skew_check`` finds a hot key (max/avg key rows ≥
-    ``skew_ratio_threshold``, one cheap keys-only aggregation on the
-    BIG side — opt-in because the diagnosis pass costs a scan).
-
-    This encodes the 100 TB playbook as a single operator: the three
-    regimes (broadcast / plain shuffle / salted shuffle) that every
-    manual tuning session walks through, chosen from the same
-    statistics the engine itself plans with.  The decision is
-    DataFrame-visible: tests pin BroadcastHashJoin vs SortMergeJoin vs
-    the salt column in the executed plan."""
-    keys = [on] if isinstance(on, str) else list(on)
-    if plan_size_bytes(small) <= broadcast_threshold:
-        return big.join(F.broadcast(small), keys, how)
-    if skew_check:
-        stats = (big.groupBy(*keys)
-                 .agg(F.count(F.lit(1)).alias("__n"))
-                 .agg(F.max("__n").alias("mx"),
-                      F.avg("__n").alias("av")).first())
-        if stats["av"] and stats["mx"] / stats["av"] \
-                >= skew_ratio_threshold:
-            return salted_join(big, small, keys, buckets=salt_buckets,
-                               how=how)
-    return big.join(small, keys, how)

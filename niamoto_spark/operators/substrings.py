@@ -139,12 +139,3 @@ def substring_dup_pairs(df: DataFrame, id_col: str, text_col: str,
                 F.min("pos_b").alias("b_start"),
                 (F.max("pos_b") + F.lit(gram_chars - 1)).alias("b_end")))
     return agg.where(F.col("n_shared_grams") >= min_shared_grams)
-
-
-def substring_dedup_keep(df: DataFrame, id_col: str, text_col: str,
-                         **kwargs) -> DataFrame:
-    """Corpus minus substring-duplicated documents (drop the higher id of
-    each pair — greedy)."""
-    pairs = substring_dup_pairs(df, id_col, text_col, **kwargs)
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, id_col, "left_anti")

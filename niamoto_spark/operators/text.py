@@ -137,20 +137,6 @@ def token_stats(df: DataFrame, group_cols: Sequence[str],
     )
 
 
-@register("bpe_token_estimate", PluginType.TRANSFORMER)
-def bpe_token_estimate(df: DataFrame, text_col: str,
-                       out_col: str = "bpe_tokens_est") -> DataFrame:
-    """BPE-ish token-count estimate without a tokenizer dependency:
-    split on word/number/punct boundaries (the GPT-2 pre-tokenizer regex
-    family), counting long words as ceil(len/4) subwords."""
-    pieces = F.split(F.trim(F.col(text_col)), r"\s+")
-    est = F.aggregate(
-        pieces, F.lit(0),
-        lambda acc, w: acc + F.greatest(F.ceil(F.length(w) / 4.0).cast("int"), F.lit(1)))
-    return df.withColumn(out_col,
-                         F.when(F.length(F.trim(F.col(text_col))) == 0, 0).otherwise(est))
-
-
 @register("vocabulary", PluginType.TRANSFORMER)
 def vocabulary(df: DataFrame, text_col: str, top_k: int | None = None,
                min_count: int = 1, id_col: str | None = None) -> DataFrame:
@@ -801,8 +787,7 @@ def shard_corpus(df: DataFrame, id_col: str, n_shards: int,
     engine / partitioning / rerun (md5 is engine-portable, so the
     assignment refits exactly in SQL — q135's oracle), (c) changing the
     seed re-deals the corpus for a new epoch layout without a global
-    sort.  Adds a ``shard`` column; ``materialize_shards`` writes one
-    directory per shard."""
+    sort.  Adds a ``shard`` column."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1: {n_shards}")
     bucket = F.conv(F.substring(
@@ -815,17 +800,6 @@ def shard_corpus(df: DataFrame, id_col: str, n_shards: int,
     return df.withColumn(
         "shard", F.when(F.col(id_col).isNotNull(),
                         (bucket % n_shards).cast("int")))
-
-
-def materialize_shards(df: DataFrame, id_col: str, path: str,
-                       n_shards: int, seed: int = 0) -> None:
-    """Write the sharded corpus as ``shard=N/`` partition directories.
-    ``repartition(n_shards, 'shard')`` co-locates each shard before the
-    write so every shard directory is one writer's output (no
-    small-file spray), and partition pruning serves per-shard reads."""
-    out = shard_corpus(df, id_col, n_shards, seed)
-    (out.repartition(n_shards, "shard")
-        .write.mode("overwrite").partitionBy("shard").parquet(path))
 
 
 @register("epoch_order", PluginType.TRANSFORMER)
@@ -1239,41 +1213,6 @@ def leakage_audit(assignments: DataFrame, pairs: DataFrame,
             .agg(F.count(F.lit(1)).alias("n_pairs"))
             .withColumn("is_leak",
                         F.col("split_a") != F.col("split_b")))
-
-
-@register("compression_ratio", PluginType.TRANSFORMER)
-def compression_ratio(df: DataFrame, text_col: str,
-                      out_col: str = "zlib_ratio",
-                      round_dp: int = 4) -> DataFrame:
-    """Per-document zlib compression ratio (compressed/original bytes)
-    — the Gopher-style redundancy signal: boilerplate and template
-    farms compress far below prose (< 0.3), while high-entropy noise
-    won't compress at all (≈ 1.0).  Complements repetition_stats
-    (n-gram level) with a whole-document redundancy measure.
-
-    zlib isn't expressible as SQL, so this is an Arrow-batched Pandas
-    UDF (deterministic: fixed zlib level 6) — the honest slow lane,
-    vectorized per batch, one projection, no shuffle.  Empty/null docs
-    get NULL."""
-    import zlib
-
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType
-
-    @F.pandas_udf(DoubleType())
-    def ratio(s):
-        out = []
-        for t in s:
-            if t is None or len(t) == 0:
-                out.append(None)
-                continue
-            raw = t.encode("utf-8", errors="replace")
-            out.append(round(len(zlib.compress(raw, 6)) / len(raw),
-                             round_dp))
-        return pd.Series(out, dtype="float64")
-
-    return df.withColumn(out_col, ratio(F.col(text_col)))
 
 
 @register("contamination_score", PluginType.TRANSFORMER)

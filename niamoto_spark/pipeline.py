@@ -36,7 +36,7 @@ from niamoto_spark.catalog import Entity, EntityKind, EntityLink, EntityRegistry
 from niamoto_spark.config import (ImportConfig, TransformGroupConfig,
                                   validate_import_config,
                                   validate_transform_config)
-from niamoto_spark.hierarchy import ancestor_closure, derive_hierarchy, subtree_join
+from niamoto_spark.hierarchy import derive_hierarchy
 from niamoto_spark.operators import aggregation as agg_ops
 from niamoto_spark.operators import class_objects as co_ops
 from niamoto_spark.operators import extraction as ex_ops
@@ -71,19 +71,11 @@ def _kernel_frame(k, frames: dict[str, DataFrame], gid: str,
 
 class Pipeline:
     def __init__(self, spark: SparkSession, warehouse: str,
-                 registry: EntityRegistry | None = None,
-                 strict_parity: bool = True):
+                 registry: EntityRegistry | None = None):
         self.spark = spark
         self.warehouse = warehouse
         self.registry = registry or EntityRegistry()
         self.warnings: list[str] = []
-        # strict_parity=True (default) reproduces the reference's own
-        # bugs where drop-in output parity requires them (each pinned in
-        # tests/test_strict_parity.py; certified by
-        # tools/ref_pipeline_diff.py);
-        # False gives new users the sane behavior at those sites
-        # (VERDICT r12 "What's wrong" #3)
-        self.strict_parity = strict_parity
         self.layers_meta: dict[str, dict] = {}
         os.makedirs(warehouse, exist_ok=True)
 
@@ -328,56 +320,21 @@ class Pipeline:
                     rel.ref_field)
             elif plugin == "nested_set":
                 fields = rel.fields or {}
-                data, key = loader_ops._clear_gid_collision(data, key, gid)
-                out = subtree_join(
-                    data, key, grouping, node_key=gid,
-                    ancestor_alias="__anc",
-                    leaf_key=rel.ref_key or gid,
-                    lft_col=fields.get("left", "lft"),
-                    rght_col=fields.get("right", "rght"),
-                ).withColumn(gid, F.col("__anc")).drop("__anc")
+                out = loader_ops.nested_set_loader(
+                    data, key, grouping, gid, rel.ref_key,
+                    fields.get("left", "lft"), fields.get("right", "rght"))
             elif plugin == "adjacency_list":
                 # both dialects: ours (fields.parent) and the
                 # reference's top-level params (adjacency_list.py:39-56
                 # parent_field / hierarchy_id_field / include_children)
                 extra = rel.model_extra or {}
-                data, key = loader_ops._clear_gid_collision(data, key, gid)
-                parent_col = extra.get("parent_field") \
-                    or (rel.fields or {}).get("parent", "parent_id")
                 match_field = extra.get("hierarchy_id_field", "id")
-                if match_field == "id":
-                    match_field = gid
-                if not extra.get("include_children", True):
-                    # direct node only (adjacency_list.py:168-177)
-                    m = grouping.select(F.col(match_field).alias("__m"),
-                                        F.col(gid).alias("__g"))
-                    out = data.join(F.broadcast(m),
-                                    data[key] == F.col("__m")) \
-                        .drop("__m").withColumn(gid, F.col("__g")) \
-                        .drop("__g")
-                else:
-                    closure = ancestor_closure(grouping, gid, parent_col)
-                    cl = closure.select(F.col("node_id"),
-                                        F.col("ancestor_id").alias(gid))
-                    if match_field != gid:
-                        # the recursive CTE matches data.key against the
-                        # hierarchy's EXTERNAL id (match_id,
-                        # adjacency_list.py:189-205): translate each
-                        # node's match value into its subtree-ancestor
-                        # gids before tagging
-                        mm = grouping.select(
-                            F.col(match_field).alias("__m"),
-                            F.col(gid).alias("__node"))
-                        cl = cl.join(mm, cl["node_id"] == F.col("__node")) \
-                            .select(F.col("__m"), F.col(gid))
-                        out = data.join(F.broadcast(cl),
-                                        data[key] == F.col("__m")) \
-                            .drop("__m")
-                    else:
-                        cl = cl.withColumnRenamed("node_id", "__n")
-                        out = data.join(F.broadcast(cl),
-                                        data[key] == F.col("__n")) \
-                            .drop("__n")
+                out = loader_ops.adjacency_list_loader(
+                    data, key, grouping, gid,
+                    extra.get("parent_field")
+                    or (rel.fields or {}).get("parent", "parent_id"),
+                    gid if match_field == "id" else match_field,
+                    extra.get("include_children", True))
             elif plugin == "join_table":
                 extra = rel.model_extra or {}
                 if "join_table" in extra and "keys" in extra:
@@ -405,12 +362,8 @@ class Pipeline:
                         rel.model_extra.get("bridge_reference", "reference"),
                         grouping, gid)
             elif plugin == "spatial_containment":
-                from niamoto_spark.operators.geospatial import points_in_polygons
-
-                shapes = grouping.select(
-                    gid, rel.model_extra.get("geometry_field", "location"))
-                out = points_in_polygons(
-                    data, key, shapes, gid,
+                out = loader_ops.spatial_containment(
+                    data, key, grouping, gid,
                     rel.model_extra.get("geometry_field", "location"))
             else:
                 raise ValueError(f"unknown relation plugin {plugin!r}")
@@ -517,7 +470,7 @@ class Pipeline:
                                                group_by, gid, grouping)
                 if frame is None:
                     frame = self._run_widget(name, dict(sparams), bound,
-                                             group_by, gid)
+                                             gid)
                 return jdf, frame
 
             return transform_chain(params["steps"], tagged, gid, step), None
@@ -562,9 +515,7 @@ class Pipeline:
                 "types" in params:
             return RS.co_series_by_axis_extractor(df, gid, params), None
         if plugin == "geospatial_extractor":
-            return RS.geospatial_extractor(
-                df, gid, params, grouping,
-                strict_parity=self.strict_parity), None
+            return RS.geospatial_extractor(df, gid, params, grouping), None
         if plugin == "multi_column_extractor" and df is not None:
             return RS.multi_column_extractor(df, gid, params), None
         if plugin == "shape_processor":
@@ -580,7 +531,7 @@ class Pipeline:
             # would double-cast everything first (r13 variant find)
             run_params.pop("max_value", None)
             run_params.pop("precision", None)
-        wdf = self._run_widget(plugin, run_params, tagged, group_by, gid)
+        wdf = self._run_widget(plugin, run_params, tagged, gid)
         if plugin == "top_ranking":
             jdf = RS.top_ranking(wdf, gid, params)
         elif plugin == "time_series_analysis":
@@ -703,7 +654,7 @@ class Pipeline:
                                 schema=f"{gid} {gid_type}, __json string")
 
     def _run_widget(self, plugin: str, params: dict, tagged: dict,
-                    group_by: str, gid: str) -> DataFrame:
+                    gid: str) -> DataFrame:
         """Adapter: reference YAML param names -> operator signatures."""
         src_name = params.pop("source", None)
         df = tagged.get(src_name) if src_name else None
@@ -909,8 +860,7 @@ class Pipeline:
                         "not supported in this dialect"}
             else:
                 results.append(export_json_api_target(
-                    df, group, target_out, params, g,
-                    strict_parity=self.strict_parity))
+                    df, group, target_out, params, g))
         return {"status": "success", "groups": results}
 
     def run_export(self, cfg: dict, out_dir: str,

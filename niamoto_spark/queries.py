@@ -1248,8 +1248,9 @@ FROM events GROUP BY event_type
 
 
 def q43_top_ranking_join(spark, sf_dir):
-    """top_ranking(mode=join): top-5 nations by lineitem revenue through the
-    supplier bridge, with name enrichment (reference top_ranking.py:434-565)."""
+    """top_ranking(agg="sum", name_join=...): top-5 nations by lineitem
+    revenue through the supplier bridge, with name enrichment (the
+    reference's join mode, top_ranking.py:434-565)."""
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
@@ -1281,8 +1282,9 @@ SELECT item, round(v, 2) AS value, rank FROM ranked WHERE rank <= 5
 
 
 def q44_hierarchical_top(spark, sf_dir):
-    """top_ranking(mode=hierarchical): roll customers up to region rank via
-    the nested-set subtree join (reference top_ranking.py:383-432)."""
+    """hierarchical_top_ranking: roll customers up to region rank via the
+    nested-set subtree join (the reference's hierarchical top_ranking
+    mode, top_ranking.py:383-432)."""
     nodes = add_nested_sets(_region_nation_nodes(spark, sf_dir),
                             "id", "parent_id", order_col="id") \
         .withColumn("rank_name",

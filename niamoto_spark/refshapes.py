@@ -596,27 +596,22 @@ def multi_column_extractor(df: DataFrame, gid: str, p: dict) -> DataFrame:
 
 
 def geospatial_extractor(tagged_df: DataFrame, gid: str, p: dict,
-                         entities: DataFrame,
-                         strict_parity: bool = True) -> DataFrame:
-    """GeoJSON FeatureCollection — bug-for-bug with the reference under
-    ``strict_parity`` (the default, and what the refdiff certifies):
+                         entities: DataFrame) -> DataFrame:
+    """GeoJSON FeatureCollection — bug-for-bug with the reference (what
+    the refdiff certifies):
 
     - group_by_coordinates=true iterates ``row.geometry``, which only
       resolves when the geometry FIELD is literally named 'geometry'
       (pandas attribute access); any other field name raises per-row,
       is swallowed, and yields an EMPTY FeatureCollection
-      (extraction/geospatial_extractor.py:612-686).
+      (extraction/geospatial_extractor.py:612-686); a field named
+      'geometry' groups (unique coordinates, first-occurrence
+      properties, a ``count`` per coordinate).
     - otherwise geopandas to_json emits features with id = source row
-      index and all JSON-safe columns as properties.
-
-    ``strict_parity=False`` gives the sane behavior the reference
-    presumably intended: group_by_coordinates works for ANY field name
-    (unique coordinates, first-occurrence properties, a ``count`` per
-    coordinate — the reference's own semantics when the field IS named
-    'geometry')."""
+      index and all JSON-safe columns as properties."""
     field = p["field"]
     group_by_coords = p.get("group_by_coordinates", False)
-    if group_by_coords and field != "geometry" and strict_parity:
+    if group_by_coords and field != "geometry":
         return entities.select(
             F.col(gid),
             F.lit('{"type": "FeatureCollection", "features": []}')

@@ -76,12 +76,9 @@ def _commit_doc(path: str, version: int, extra: dict) -> None:
     exactly one succeeds and the other raises (it must re-read the new
     head and retry on a fresh version).  Readers only ever see the
     final name once the staged file is fully written."""
-    import time as _time
-
     _, meta = _table_dirs(path)
     nonce = uuid.uuid4().hex
-    doc = {"version": version, "nonce": nonce,
-           "committed_at": _time.time(), **extra}
+    doc = {"version": version, "nonce": nonce, **extra}
     staged = os.path.join(meta, f".manifest-{nonce}.tmp")
     with open(staged, "w") as f:
         json.dump(doc, f, default=str)
@@ -598,37 +595,6 @@ def _last_batch_id(path: str):
             return doc["batch_id"]
         v = doc.get("parent", v - 1)
     return None
-
-
-def stream_to_table(stream_df: DataFrame, path: str,
-                    checkpoint_dir: str, stats_cols: list[str] | None = None,
-                    trigger_available_now: bool = True):
-    """Structured-Streaming sink into a manifest table: each micro-batch
-    commits atomically as one new snapshot via foreachBatch, so readers
-    always see whole batches — the streaming half of the lakehouse-lite
-    story.  Spark's checkpoint makes batch REPLAY possible after a
-    crash; committing a replayed batch twice is prevented by recording
-    the batch id in the manifest chain (idempotent foreachBatch, the
-    standard exactly-once recipe).
-    """
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if _last_batch_id(path) == batch_id:
-            return  # crash-replayed batch: already committed
-        # batch_id rides inside the commit document itself, so the data
-        # commit and the idempotence record are ONE atomic link — a
-        # crash can never leave a committed snapshot without its batch
-        # id (which would make checkpoint replay double-commit it).
-        meta = {"batch_id": batch_id}
-        if stats_cols:
-            append_with_stats(batch_df, path, stats_cols, extra_meta=meta)
-        else:
-            append(batch_df, path, extra_meta=meta)
-
-    writer = (stream_df.writeStream.foreachBatch(commit_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _zvalue(df: DataFrame, cols: list[str], bits: int = 16):
@@ -1623,9 +1589,9 @@ def stream_upsert_to_table(stream_df: DataFrame, path: str,
     """Streaming MERGE: each micro-batch UPSERTS into the manifest
     table by key (CDC-apply — the change stream keeps a keyed table
     current, not an append log).  Batch-id idempotence rides in the
-    commit doc like ``stream_to_table``; replaying a crashed batch
-    re-merges the same rows into the same final state, so the sink is
-    exactly-once BY VALUE even though the merge rewrites rows.
+    commit doc; replaying a crashed batch re-merges the same rows into
+    the same final state, so the sink is exactly-once BY VALUE even
+    though the merge rewrites rows.
 
     Within-batch duplicate keys are resolved to the LAST row per key
     under the stream's implicit order first (micro-batches may carry
@@ -1702,42 +1668,6 @@ def overwrite_hidden_partition(df: DataFrame, path: str,
                  "pvals": new_pvals, "ptransform": list(tf),
                  **_carry_dv(doc, keep)})
     return parent + 1
-
-
-def read_table_asof(spark: SparkSession, path: str, ts: float) -> DataFrame:
-    """Time travel by WALL CLOCK (Delta's ``TIMESTAMP AS OF``): the
-    newest committed snapshot whose commit time is <= ``ts``.  Every
-    commit document stamps ``committed_at`` at link time, so the
-    lookup walks the committed chain backward — one metadata read per
-    version, no data touched until the snapshot is chosen.
-
-    Raises if ``ts`` precedes the first commit (there was no table
-    then — the Delta convention, not an empty result)."""
-    v = committed_version(path)
-    chosen = None
-    while v >= 0:
-        doc = _read_manifest(path, v)
-        if _txn_state(doc) == "committed":
-            at = doc.get("committed_at")
-            if at is None:
-                # Pre-upgrade commit (written before committed_at was
-                # stamped): fall back to the manifest file's mtime so
-                # time travel still resolves on old history instead of
-                # walking past every early snapshot.
-                mf = os.path.join(path, "_log", _MANIFEST.format(v=v))
-                try:
-                    at = os.path.getmtime(mf)
-                except OSError:
-                    at = None
-            if at is not None and float(at) <= ts:
-                chosen = v
-                break
-        v = doc.get("parent", v - 1)
-    if chosen is None:
-        raise ValueError(
-            f"read_table_asof: no snapshot at or before ts={ts} "
-            f"(table {path} did not exist yet)")
-    return read_table(spark, path, version=chosen)
 
 
 def table_cdf(spark: SparkSession, path: str, from_version: int,

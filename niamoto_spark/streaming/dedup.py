@@ -3,8 +3,7 @@
 Batch dedup (operators/dedup.py) handles the historical corpus; new
 documents arriving as a stream are deduplicated against a bounded window of
 recent fingerprints with ``dropDuplicatesWithinWatermark`` — state stays
-bounded by the watermark instead of growing with the corpus (the exact-once
-global variant joins against the batch fingerprint table instead)."""
+bounded by the watermark instead of growing with the corpus."""
 
 from __future__ import annotations
 
@@ -23,14 +22,3 @@ def dedup_stream(docs: DataFrame, text_col: str = "text",
                   .dropDuplicatesWithinWatermark(["__fp"])
                   .drop("__fp"))
     return fp.dropDuplicates(["__fp"]).drop("__fp")
-
-
-def dedup_stream_against_corpus(docs: DataFrame, corpus_fps: DataFrame,
-                                text_col: str = "text") -> DataFrame:
-    """Filter stream docs whose fingerprint exists in the (static) corpus
-    fingerprint table — a stream-static anti join, which Structured
-    Streaming executes per micro-batch without state."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    fp = docs.withColumn("__fp", F.md5(norm))
-    return fp.join(corpus_fps.select(F.col("fingerprint").alias("__fp")),
-                   "__fp", "left_anti").drop("__fp")

@@ -160,18 +160,6 @@ def test_cms_exact_when_wide(spark):
         assert cms_estimate(sketch, str(item)) == 100
 
 
-def test_cms_merge_equals_whole(spark):
-    from niamoto_spark.operators.sketches import (cms_merge,
-                                                  count_min_sketch)
-
-    a = spark.range(0, 500).select((F.col("id") % 13).cast("string").alias("x"))
-    b = spark.range(500, 1200).select((F.col("id") % 13).cast("string").alias("x"))
-    whole = a.unionByName(b)
-    merged = cms_merge(count_min_sketch(a, "x", 128, 3),
-                       count_min_sketch(b, "x", 128, 3))
-    assert merged == count_min_sketch(whole, "x", 128, 3)
-
-
 def test_cms_estimate_df_matches_driver_estimate(spark):
     from niamoto_spark.operators.sketches import (cms_estimate,
                                                   cms_estimate_df,
@@ -253,19 +241,6 @@ def test_bigram_lm_scores_fluency(spark):
     assert scores[0] > scores[100]
 
 
-def test_bigram_lm_quality_filter_keeps_fraction(spark):
-    from niamoto_spark.operators.lm import lm_quality_filter
-
-    docs = [(i, "a b c d e f g") for i in range(30)] + \
-           [(100 + i, f"xx{i} yy{i} zz{i}") for i in range(10)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    kept = lm_quality_filter(df, "text", "doc_id", keep_frac=0.75)
-    ids = {r["doc_id"] for r in kept.collect()}
-    # the 30 identical fluent docs all score identically-best -> all kept
-    assert set(range(30)) <= ids
-    assert len(ids) <= 36  # gibberish tail mostly cut
-
-
 def test_bigram_lm_external_model(spark):
     """Scoring with a model fit on a different corpus (fit/score split)."""
     from niamoto_spark.operators.lm import (fit_bigram_lm,
@@ -295,67 +270,3 @@ def test_registry_names_resolve():
         fn = get_plugin(name, PluginType.TRANSFORMER)
         assert callable(fn)
         assert fn.__name__ not in ("_log_dropped_async",)
-
-
-def test_lm_quality_filter_empty_corpus(spark):
-    from niamoto_spark.operators.lm import lm_quality_filter
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert lm_quality_filter(empty, "text", "doc_id").count() == 0
-
-
-# --- smart_join strategy picking -------------------------------------------
-
-def test_smart_join_broadcasts_small_side(spark):
-    from niamoto_spark.operators.skew import smart_join
-    big = spark.range(0, 10_000).withColumn("k", F.col("id") % 100)
-    dim = spark.range(0, 100).withColumnRenamed("id", "k")
-    out = smart_join(big, dim, "k")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert out.count() == 10_000
-
-
-def test_smart_join_shuffles_when_over_threshold(spark):
-    from niamoto_spark.operators.skew import smart_join
-    big = spark.range(0, 10_000).withColumn("k", F.col("id") % 100)
-    dim = spark.range(0, 100).withColumnRenamed("id", "k")
-    # smart_join must NOT force a broadcast; with the session's own
-    # auto-broadcast off, the plan falls through to a shuffle join
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = smart_join(big, dim, "k", broadcast_threshold=0)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-        assert out.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_smart_join_salts_hot_key(spark):
-    from niamoto_spark.operators.skew import smart_join
-    # one key carries 90% of rows
-    big = spark.range(0, 10_000).withColumn(
-        "k", F.when(F.col("id") % 10 < 9, 0).otherwise(F.col("id") % 100))
-    dim = spark.range(0, 100).withColumnRenamed("id", "k")
-    out = smart_join(big, dim, "k", broadcast_threshold=0,
-                     skew_check=True, skew_ratio_threshold=5.0)
-    # the salt column appears in the (pre-projection) plan
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "__salt" in plan
-    # and the result is identical to the plain join
-    assert out.count() == big.join(dim, "k").count()
-
-
-def test_smart_join_strategy_result_parity(spark):
-    from niamoto_spark.operators.skew import smart_join
-    big = spark.range(0, 5_000).withColumn("k", F.col("id") % 37)
-    dim = (spark.range(0, 37).withColumnRenamed("id", "k")
-           .withColumn("tag", F.col("k") * 10))
-    expected = sorted(map(tuple, big.join(dim, "k").collect()))
-    for kw in (dict(), dict(broadcast_threshold=0),
-               dict(broadcast_threshold=0, skew_check=True,
-                    skew_ratio_threshold=0.5)):
-        got = sorted(map(tuple, smart_join(big, dim, "k", **kw).collect()))
-        assert got == expected

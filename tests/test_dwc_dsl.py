@@ -168,3 +168,17 @@ def test_unique_id_fallback_survives_missing_taxon(spark, taxon):
     }, taxon=taxon, occ_taxon_col="taxon_ref", order_col="occ_id")
     ids = sorted(r["occurrenceID"] for r in out.collect())
     assert ids == ["niaocc_10_0", "niaocc_unknown_0"]
+
+
+def test_reference_dialect_unknown_generator_raises():
+    """A misspelt generator in the reference-dialect mapping fails and
+    names itself, instead of dropping its term from every record."""
+    from niamoto_spark.exporters.dwc_json import map_occurrence
+
+    mapping = {"occurrenceStatus": {"generator": "map_occurrence_status"},
+               "decimalLatitude": {"generator": "format_cordinates"}}
+    with pytest.raises(ValueError, match="'format_cordinates'"):
+        map_occurrence({"id": 1}, {}, 1, 0, mapping)
+    del mapping["decimalLatitude"]
+    assert map_occurrence({"id": 1}, {}, 1, 0, mapping) == {
+        "occurrenceStatus": "present"}

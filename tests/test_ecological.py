@@ -31,11 +31,6 @@ def test_shannon_all_zero(spark):
     assert r["shannon"] == 0.0 and r["pielou"] == 0.0
 
 
-def test_simpson(spark):
-    df = spark.createDataFrame(pd.DataFrame({"g": ["x"] * 2, "count": [1, 1]}))
-    assert eco.simpson_index(df, ["g"]).collect()[0]["simpson"] == 0.5
-
-
 @pytest.fixture(scope="module")
 def arr_df(spark):
     return spark.createDataFrame(

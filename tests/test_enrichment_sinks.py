@@ -112,30 +112,6 @@ def test_overwrite_table_atomic(tmp_path, spark):
     assert not os.path.exists(_side(p, ".__backup__"))
 
 
-def test_partitioned_upsert_side_dirs_invisible(tmp_path, spark):
-    """A crashed bucket swap's leftover side dir must be HIDDEN from
-    readers: Spark waives the '_'-prefix hidden rule for names with '='
-    (partition dirs), so the old `_bucket=N.__backup__` naming was
-    scanned as live partition data, doubling the bucket's rows."""
-    import shutil
-
-    from niamoto_spark.sources.sinks import (_side,
-                                             read_partitioned_table,
-                                             write_partitioned_table)
-
-    p = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(20)],
-                               "id int, v string")
-    write_partitioned_table(df, p, "id", num_buckets=4)
-    assert read_partitioned_table(spark, p).count() == 20
-    # simulate a crash that left a backup copy of one bucket behind
-    buckets = [d for d in os.listdir(p) if d.startswith("_bucket=")]
-    sub = os.path.join(p, buckets[0])
-    shutil.copytree(sub, _side(sub, ".__backup__"))
-    shutil.copytree(sub, _side(sub, ".__staging__"))
-    assert read_partitioned_table(spark, p).count() == 20
-
-
 def test_upsert_table_key_semantics(tmp_path, spark):
     p = str(tmp_path / "tbl")
     base = spark.createDataFrame(pd.DataFrame(
@@ -146,235 +122,6 @@ def test_upsert_table_key_semantics(tmp_path, spark):
     upsert_table(spark, upd, p, "id")
     got = {r["id"]: r["v"] for r in spark.read.parquet(p).collect()}
     assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-
-
-# ---------------------------------------------------------------------------
-# API enricher auth surface (reference api_taxonomy_enricher.py:225-304,
-# 514-533, 640-737)
-# ---------------------------------------------------------------------------
-
-class FakeServer:
-    """Records requests; enforces the auth mode it is configured with."""
-
-    def __init__(self, require=None, fail_first=0):
-        self.require = require            # fn(params, headers, cookies, basic) -> bool
-        self.requests = []
-        self.token_requests = []
-        self.fail_first = fail_first
-
-    def __call__(self, method, url, params=None, headers=None, cookies=None,
-                 basic=None, data=None):
-        from niamoto_spark.operators.enrichment import ApiError
-
-        if method == "POST":                       # token endpoint
-            self.token_requests.append(dict(data or params or {}))
-            return {"access_token": f"tok{len(self.token_requests)}",
-                    "expires_in": 3600}
-        self.requests.append({"url": url, "params": params,
-                              "headers": headers, "cookies": cookies,
-                              "basic": basic})
-        if self.fail_first > 0:
-            self.fail_first -= 1
-            raise ApiError(503, "flaky")
-        if self.require and not self.require(params, headers, cookies, basic):
-            raise ApiError(401, "unauthorized")
-        key = url.rsplit("/", 1)[-1]
-        return {"id": key, "status": "ok"}
-
-
-def test_auth_api_key_header_query_cookie():
-    from niamoto_spark.operators.enrichment import ApiAuth, http_fetcher
-
-    for loc, check in [
-        ("header", lambda p, h, c, b: h.get("X-Token") == "s3cret"),
-        ("query", lambda p, h, c, b: p.get("apikey") == "s3cret"),
-        ("cookie", lambda p, h, c, b: c.get("sid") == "s3cret"),
-    ]:
-        srv = FakeServer(require=check)
-        name = {"header": "X-Token", "query": "apikey", "cookie": "sid"}[loc]
-        auth = ApiAuth("api_key", {"key": "s3cret", "location": loc,
-                                   "name": name})
-        fetch = http_fetcher("https://api.test/t/{key}", srv, auth)
-        assert fetch("42")["status"] == "ok", loc
-
-
-def test_auth_basic_and_bearer():
-    from niamoto_spark.operators.enrichment import ApiAuth, http_fetcher
-
-    srv = FakeServer(require=lambda p, h, c, b: b == ("u", "pw"))
-    fetch = http_fetcher("https://api.test/t/{key}", srv,
-                         ApiAuth("basic", {"username": "u", "password": "pw"}))
-    assert fetch("1")["status"] == "ok"
-
-    srv2 = FakeServer(
-        require=lambda p, h, c, b: h.get("Authorization") == "Bearer abc")
-    fetch2 = http_fetcher("https://api.test/t/{key}", srv2,
-                          ApiAuth("bearer", {"token": "abc"}))
-    assert fetch2("1")["status"] == "ok"
-
-
-def test_auth_oauth2_token_flow_caches_until_expiry():
-    from niamoto_spark.operators.enrichment import ApiAuth, http_fetcher
-
-    srv = FakeServer(
-        require=lambda p, h, c, b: h.get("Authorization", "").startswith("Bearer tok"))
-    now = [1000.0]
-    auth = ApiAuth("oauth2", {"token_url": "https://id.test/token",
-                              "client_id": "cid", "client_secret": "cs",
-                              "scope": "read"},
-                   transport=srv, clock=lambda: now[0])
-    fetch = http_fetcher("https://api.test/t/{key}", srv, auth)
-    fetch("1")
-    fetch("2")
-    assert len(srv.token_requests) == 1            # token cached
-    assert srv.token_requests[0]["grant_type"] == "client_credentials"
-    assert srv.token_requests[0]["scope"] == "read"
-    now[0] += 3600                                  # past expires_in - 60
-    fetch("3")
-    assert len(srv.token_requests) == 2            # refreshed
-    assert srv.requests[-1]["headers"]["Authorization"] == "Bearer tok2"
-
-
-def test_auth_config_validation_errors():
-    from niamoto_spark.operators.enrichment import ApiAuth
-
-    with pytest.raises(ValueError, match="'key'"):
-        ApiAuth("api_key", {"location": "header", "name": "X"})
-    with pytest.raises(ValueError, match="location"):
-        ApiAuth("api_key", {"key": "k"})
-    with pytest.raises(ValueError, match="username"):
-        ApiAuth("basic", {"password": "p"})
-    with pytest.raises(ValueError, match="client_id"):
-        ApiAuth("oauth2", {"token_url": "https://id.test/t"})
-    with pytest.raises(ValueError, match="token"):
-        ApiAuth("bearer", {})
-
-
-def test_retry_backoff_then_success_and_rate_limit_interplay(spark):
-    from niamoto_spark.operators.enrichment import (ApiAuth, api_enrichment,
-                                                    http_fetcher)
-
-    srv = FakeServer(fail_first=2)
-    naps = []
-    fetch = http_fetcher("https://api.test/t/{key}", srv,
-                         ApiAuth("bearer", {"token": "abc"}),
-                         max_retries=2, backoff_s=0.25,
-                         sleeper=naps.append)
-    df = spark.createDataFrame(pd.DataFrame({"k": ["a", "a", "b"]}))
-    out = api_enrichment(df, "k", fetch, rate_limit=1000.0,
-                         response_mapping={"ident": "id"})
-    rows = {r["k"]: json.loads(r["extra_data"]) for r in out.collect()}
-    assert rows["a"] == {"ident": "a"} and rows["b"] == {"ident": "b"}
-    assert naps == [0.25, 0.5]                     # linear backoff
-    # distinct keys only: 2 successes + the 2 retried failures
-    assert len(srv.requests) == 4
-
-
-def test_retry_gives_up_after_max(spark):
-    from niamoto_spark.operators.enrichment import (ApiError, http_fetcher)
-
-    srv = FakeServer(fail_first=99)
-    fetch = http_fetcher("https://api.test/t/{key}", srv, None,
-                         max_retries=1, backoff_s=0, sleeper=lambda s: None)
-    with pytest.raises(ApiError):
-        fetch("x")
-    assert len(srv.requests) == 2                  # initial + 1 retry
-
-
-def test_non_retryable_4xx_raises_immediately():
-    from niamoto_spark.operators.enrichment import (ApiAuth, ApiError,
-                                                    http_fetcher)
-
-    srv = FakeServer(require=lambda p, h, c, b: False)
-    fetch = http_fetcher("https://api.test/t/{key}", srv,
-                         ApiAuth("bearer", {"token": "bad"}),
-                         max_retries=3, sleeper=lambda s: None)
-    with pytest.raises(ApiError):
-        fetch("x")
-    assert len(srv.requests) == 1                  # 401 is not retried
-
-
-def test_partitioned_upsert_touches_only_affected_buckets(tmp_path, spark):
-    from niamoto_spark.sources.sinks import (read_partitioned_table,
-                                             upsert_table_partitioned,
-                                             write_partitioned_table)
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(pd.DataFrame(
-        {"id": range(100), "v": [0] * 100}))
-    write_partitioned_table(base, path, "id", num_buckets=8)
-    assert len([d for d in os.listdir(path) if d.startswith("_bucket=")]) == 8
-
-    before = {d: sorted(os.listdir(os.path.join(path, d)))
-              for d in os.listdir(path) if d.startswith("_bucket=")}
-    updates = spark.createDataFrame(pd.DataFrame(
-        {"id": [3, 7], "v": [99, 98]}))
-    touched = upsert_table_partitioned(spark, updates, path, "id",
-                                       num_buckets=8)
-    assert 1 <= len(touched) <= 2                   # at most 2 buckets rewritten
-    after = {d: sorted(os.listdir(os.path.join(path, d)))
-             for d in os.listdir(path) if d.startswith("_bucket=")}
-    unchanged = [d for d in before
-                 if int(d.split("=")[1]) not in touched]
-    for d in unchanged:
-        assert before[d] == after[d]                # untouched buckets intact
-    out = read_partitioned_table(spark, path)
-    got = {r["id"]: r["v"] for r in out.collect()}
-    assert len(got) == 100
-    assert got[3] == 99 and got[7] == 98 and got[5] == 0
-
-
-def test_partitioned_upsert_inserts_new_keys(tmp_path, spark):
-    from niamoto_spark.sources.sinks import (read_partitioned_table,
-                                             upsert_table_partitioned)
-
-    path = str(tmp_path / "tbl2")
-    first = spark.createDataFrame(pd.DataFrame({"id": [1, 2], "v": [10, 20]}))
-    upsert_table_partitioned(spark, first, path, "id", num_buckets=4)
-    second = spark.createDataFrame(pd.DataFrame({"id": [2, 3], "v": [21, 30]}))
-    upsert_table_partitioned(spark, second, path, "id", num_buckets=4)
-    got = {r["id"]: r["v"] for r in
-           read_partitioned_table(spark, path).collect()}
-    assert got == {1: 10, 2: 21, 3: 30}
-
-
-def test_chained_endpoints_follow_and_merge():
-    from niamoto_spark.operators.enrichment import http_fetcher
-
-    def transport(method, url, params=None, headers=None, cookies=None,
-                  basic=None, data=None):
-        if url.startswith("https://api.test/match/"):
-            key = url.rsplit("/", 1)[-1]
-            if key == "nomatch":
-                return {"status": "none"}           # no ext_id -> skip chain
-            return {"ext_id": f"X{key}", "status": "ok"}
-        if url.startswith("https://api.test/detail/"):
-            ext = url.rsplit("/", 1)[-1]
-            return {"rank": "species", "ext": ext, "extra": 1}
-        raise AssertionError(url)
-
-    fetch = http_fetcher(
-        "https://api.test/match/{key}", transport,
-        chained=[{"url_template": "https://api.test/detail/{ext_id}",
-                  "mapping": {"rank_out": "rank", "detail_ext": "ext"}}])
-    out = fetch("42")
-    assert out["ext_id"] == "X42"
-    assert out["rank_out"] == "species"             # mapped + merged
-    assert out["detail_ext"] == "X42"
-    assert "extra" not in out                       # unmapped fields dropped
-    # missing placeholder -> chain silently skipped
-    assert fetch("nomatch") == {"status": "none"}
-
-
-def test_chained_endpoints_config_validation():
-    from niamoto_spark.operators.enrichment import http_fetcher
-
-    with pytest.raises(ValueError, match="url_template"):
-        http_fetcher("https://a/{key}", lambda *a, **k: {},
-                     chained=[{"mapping": {}}])
-    with pytest.raises(ValueError, match="mapping"):
-        http_fetcher("https://a/{key}", lambda *a, **k: {},
-                     chained=[{"url_template": "https://b"}])
 
 
 def test_api_enrichment_max_keys_guard(spark):

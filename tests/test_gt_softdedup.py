@@ -117,20 +117,3 @@ def test_leakage_audit_counts_straddling_pairs(spark):
     assert out[("val", "val")]["n_pairs"] == 1
     leak = out[("train", "val")]
     assert leak["n_pairs"] == 1 and leak["is_leak"]
-
-
-def test_compression_ratio_orders_redundancy(spark):
-    from niamoto_spark.operators.text import compression_ratio
-    rows = [(1, "spam " * 400),                    # ultra-redundant
-            (2, "The quick brown fox jumps over the lazy dog. " * 10),
-            (3, None), (4, "")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r["zlib_ratio"]
-           for r in compression_ratio(df, "text").collect()}
-    assert out[1] < 0.05                            # template farm
-    assert out[1] < out[2] < 1.0                    # prose compresses less
-    assert out[3] is None and out[4] is None
-    # deterministic across runs
-    again = {r["doc_id"]: r["zlib_ratio"]
-             for r in compression_ratio(df, "text").collect()}
-    assert out == again

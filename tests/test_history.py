@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from niamoto_spark.operators.history import scd2_history, scd2_snapshot
+from niamoto_spark.operators.history import scd2_history
 
 
 def _log(spark):
@@ -44,17 +44,6 @@ def test_null_attribute_states(spark):
     h = scd2_history(df, ["user"], "ts", ["attr"]).collect()
     # two nulls collapse into one episode; null -> 'x' opens a new one
     assert len(h) == 2
-
-
-def test_snapshot_point_in_time(spark):
-    h = scd2_history(_log(spark), ["user"], "ts", ["tier"],
-                     order_cols=["eid"])
-    at_350 = {r["user"]: r["tier"]
-              for r in scd2_snapshot(h, 350).collect()}
-    assert at_350 == {"u1": "gold", "u2": "silver"}
-    at_100 = {r["user"]: r["tier"]
-              for r in scd2_snapshot(h, 100).collect()}
-    assert at_100 == {"u1": "bronze"}
 
 
 def test_single_exchange_plan(spark):

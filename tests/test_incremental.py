@@ -161,24 +161,6 @@ def test_shard_seed_redeals(spark):
     assert moved > len(a) / 2  # a new seed re-deals most docs
 
 
-def test_materialize_shards_layout(spark, tmp_path):
-    from niamoto_spark.operators.text import materialize_shards
-
-    df = spark.range(500).select(F.col("id").alias("doc_id"),
-                                 F.lit("t").alias("text"))
-    out = str(tmp_path / "shards")
-    materialize_shards(df, "doc_id", out, n_shards=4)
-    back = spark.read.parquet(out)
-    assert back.count() == 500
-    assert back.select("shard").distinct().count() == 4
-    # partition pruning: the shard predicate must land in the scan's
-    # PartitionFilters (directory pruning, no data files touched)
-    one = spark.read.parquet(out).where(F.col("shard") == 2)
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "shard" in plan.split(
-        "PartitionFilters", 1)[1][:120]
-
-
 # ---------------------------------------------------------------------------
 # JSONL shard export
 

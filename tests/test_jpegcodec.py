@@ -1,13 +1,12 @@
 """Baseline JPEG codec (sources/jpegcodec.py): published-constant pins,
-round-trip goldens across sampling/restart variants, and the multimodal
-near-dup path over a mixed PNG/JPEG corpus (VERDICT r2 missing #3)."""
+and round-trip goldens across sampling/restart variants."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from niamoto_spark.sources import jpegcodec as jc
-from niamoto_spark.sources.imagecodec import decode_image, encode_png
+from niamoto_spark.sources.imagecodec import decode_image
 
 
 def _gradient(h=40, w=56):
@@ -145,24 +144,6 @@ def test_progressive_solid_color_eob_runs():
     out = jc.decode_jpeg(jc.encode_jpeg_progressive(img, quality=90))
     assert np.array_equal(out, jc.decode_jpeg(jc.encode_jpeg(img,
                                                              quality=90)))
-
-
-def test_image_near_dup_over_mixed_png_jpeg(spark):
-    """The perceptual near-dup path must see a JPEG re-encode of a PNG as
-    a near-duplicate (small Hamming distance) and unrelated noise as not —
-    the exact mixed-format corpus a web-scale pipeline ingests."""
-    from niamoto_spark.operators.multimodal import image_near_dup
-
-    rng = np.random.RandomState(3)
-    img = _gradient(32, 32)
-    noise = rng.randint(0, 256, (32, 32, 3)).astype(np.uint8)
-    rows = [(1, encode_png(img)),
-            (2, jc.encode_jpeg(img, quality=90)),    # same image as JPEG
-            (3, encode_png(noise))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             image_near_dup(df, max_hamming=5).collect()}
-    assert pairs == {(1, 2)}
 
 
 def test_truncated_stream_raises_valueerror_not_indexerror():

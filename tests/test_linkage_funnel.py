@@ -4,7 +4,7 @@
 from pyspark.sql import functions as F
 
 from niamoto_spark.operators.funnel import funnel
-from niamoto_spark.operators.linkage import fuzzy_dedup_keep, fuzzy_pairs
+from niamoto_spark.operators.linkage import fuzzy_pairs
 
 
 def test_fuzzy_pairs_within_block_only(spark):
@@ -25,15 +25,6 @@ def test_fuzzy_block_cap_drops_megablock(spark):
     df = spark.createDataFrame(rows, ["rid", "name", "blk"])
     assert fuzzy_pairs(df, "rid", "name", "blk", max_edit_distance=2,
                        max_block_size=10).count() == 0
-
-
-def test_fuzzy_dedup_keep(spark):
-    df = spark.createDataFrame(
-        [(1, "acme corp", "A"), (2, "acme corp.", "A"),
-         (3, "other llc", "A")],
-        ["rid", "name", "blk"])
-    kept = fuzzy_dedup_keep(df, "rid", "name", "blk", max_edit_distance=1)
-    assert sorted(r["rid"] for r in kept.collect()) == [1, 3]
 
 
 def _funnel_events(spark):

@@ -125,29 +125,6 @@ def test_table_changes_between_versions(spark, tmp_path):
     assert none.count() == 0
 
 
-def test_stream_to_table_commits_batches(spark, tmp_path):
-    """File-stream -> manifest sink: every micro-batch is an atomic
-    snapshot; rerunning the drained stream adds nothing (idempotent)."""
-    src = str(tmp_path / "src")
-    t = str(tmp_path / "tbl")
-    ck = str(tmp_path / "ck")
-    _df(spark, 0, 20).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def run():
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        q = M.stream_to_table(stream, t, ck)
-        q.awaitTermination()
-
-    run()
-    assert M.read_table(spark, t).count() == 20
-    v_after = M.current_version(t)
-    run()  # nothing new to process -> no new versions
-    assert M.current_version(t) == v_after
-    assert M.read_table(spark, t).count() == 20
-
-
 def test_compaction_shrinks_files_keeps_rows_and_history(spark, tmp_path):
     t = str(tmp_path / "tbl")
     for lo in range(0, 100, 10):            # 10 tiny commits
@@ -293,22 +270,6 @@ def test_merge_upsert_keeps_all_base_rows_for_unmatched_keys(spark, tmp_path):
     rows = sorted((r["id"], r["v"])
                   for r in M.read_table(spark, t).collect())
     assert rows == [(1, 10), (1, 11), (2, 99)]
-
-
-def test_stream_batch_id_inside_commit_doc(spark, tmp_path):
-    """The streaming sink's batch id must live INSIDE the commit
-    document (atomic with the snapshot) — no separate stamp step a
-    crash could tear off."""
-    src = str(tmp_path / "src")
-    t = str(tmp_path / "tbl")
-    ck = str(tmp_path / "ck")
-    _df(spark, 0, 6).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    M.stream_to_table(stream, t, ck).awaitTermination()
-    v = M.current_version(t)
-    assert "batch_id" in M._read_manifest(t, v)
 
 
 def test_schema_evolution_additive_column(spark, tmp_path):
@@ -1060,46 +1021,6 @@ def test_cli_plugins_lists_registry(capsys):
     assert len(names) > 100
 
 
-def test_erase_entity_sweeps_tables_and_vacuums(spark, tmp_path):
-    from niamoto_spark.operators.privacy import erase_entity
-    t1, t2 = str(tmp_path / "a"), str(tmp_path / "b")
-    df = spark.createDataFrame(
-        [(1, "keep"), (2, "erase-me"), (2, "erase-me-too"), (3, "keep")],
-        "user_id long, payload string")
-    M.append(df, t1)
-    M.append(df.where("user_id != 2"), t2)   # entity absent here
-    out = erase_entity(spark, [t1, t2], "user_id", 2)
-    assert out == {t1: 2, t2: 0}
-    assert M.read_table(spark, t1).where("user_id = 2").count() == 0
-    assert M.read_table(spark, t2).count() == 2
-    # absent entity -> no empty commit on t2
-    assert M.current_version(t2) == 0
-    # vacuum pass physically drops the pre-erasure files
-    import glob
-    erase_entity(spark, [t1], "user_id", -999, vacuum_now=True)
-    remaining = glob.glob(f"{t1}/data/**/*.parquet", recursive=True)
-    live = set(M._read_manifest(t1, M.committed_version(t1))["files"])
-    # retention policy keeps young uncommitted txn dirs, but every
-    # SUPERSEDED committed file from before the erase is gone
-    assert all(f in live or "txn-" in f for f in remaining)
-
-
-def test_erase_entity_quote_safe_key(spark, tmp_path):
-    """ADVICE r7: repr()-interpolated string keys broke (or altered)
-    the delete predicate on quotes/backslashes; the predicate is now a
-    Column, so hostile key values are just values."""
-    from niamoto_spark.operators.privacy import erase_entity
-    t = str(tmp_path / "a")
-    evil = "O'Brien\\x OR '1'='1"
-    df = spark.createDataFrame(
-        [(evil, "erase"), ("safe", "keep")], "name string, p string")
-    M.append(df, t)
-    out = erase_entity(spark, [t], "name", evil)
-    assert out == {t: 1}
-    rows = M.read_table(spark, t).collect()
-    assert [r["name"] for r in rows] == ["safe"]
-
-
 def test_table_cdf_pre_post_images(spark, tmp_path):
     t = str(tmp_path / "tbl")
     df = spark.createDataFrame(
@@ -1125,24 +1046,6 @@ def test_table_cdf_rejects_duplicate_keys(spark, tmp_path):
                                    "k long, v double"), t)
     with pytest.raises(ValueError, match="not unique"):
         M.table_cdf(spark, t, 0, key_cols=["k"])
-
-
-def test_read_table_asof_walks_commit_times(spark, tmp_path):
-    import json as _json
-    t = str(tmp_path / "tbl")
-    M.append(_df(spark, 0, 5), t)                         # v0
-    M.append(_df(spark, 5, 8), t)                         # v1
-    # pin commit times deterministically (the stamp is wall clock)
-    for v, at in ((0, 1000.0), (1, 2000.0)):
-        mp = str(tmp_path / "tbl/_log" / f"manifest-v{v}.json")
-        doc = _json.load(open(mp))
-        doc["committed_at"] = at
-        _json.dump(doc, open(mp, "w"))
-    assert M.read_table_asof(spark, t, 1500.0).count() == 5
-    assert M.read_table_asof(spark, t, 2500.0).count() == 8
-    assert M.read_table_asof(spark, t, 1000.0).count() == 5  # inclusive
-    with pytest.raises(ValueError, match="did not exist"):
-        M.read_table_asof(spark, t, 999.0)
 
 
 def test_dv_split_scan_plan_and_correctness(spark, tmp_path):

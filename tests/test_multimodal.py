@@ -37,12 +37,6 @@ def test_media_resize_payload_shape(media):
         assert (r["width"], r["height"]) == (4, 4)
 
 
-def test_frame_sample_plan(media):
-    out = mm.frame_sample_plan(media, every_n=10)
-    got = {(r["media_id"], r["frame_idx"]) for r in out.collect()}
-    assert got == {(1, 0), (1, 10), (1, 20), (2, 0)}
-
-
 def test_real_decoder_is_stubbed():
     with pytest.raises(NotImplementedError):
         mm.decode_image(b"not an image")
@@ -185,7 +179,7 @@ def test_wav_roundtrip_and_audio_features(spark):
 def test_image_dhash_near_dup(spark):
     import numpy as np
 
-    from niamoto_spark.operators.multimodal import image_dhash, image_near_dup
+    from niamoto_spark.operators.multimodal import image_dhash
     from niamoto_spark.sources.imagecodec import encode_png
 
     rng = np.random.default_rng(11)
@@ -202,10 +196,8 @@ def test_image_dhash_near_dup(spark):
     hashes = {r["media_id"]: r["dhash"] for r in image_dhash(df).collect()}
     assert hashes[1] == hashes[2] or bin(
         (hashes[1] ^ hashes[2]) & (2**64 - 1)).count("1") <= 5
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in image_near_dup(df, max_hamming=5).collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs
+    for a in (1, 2):
+        assert bin((hashes[a] ^ hashes[3]) & (2**64 - 1)).count("1") > 5
 
 
 def test_audio_spectral_features_pure_tone_and_noise(spark):

@@ -157,13 +157,15 @@ def test_html_site_export(tmp_path, spark):
 
 
 def test_topojson_roundtrip_polygon():
-    from niamoto_spark.operators.overlay import (topojson_decode,
-                                                 wkt_to_topojson)
+    from niamoto_spark.operators.overlay import (nested_to_topojson,
+                                                 topojson_decode)
+    from niamoto_spark.sources.vector import parse_wkt_nested
 
     wkt = ("POLYGON ((166.0 -22.0, 166.0 -21.0, 167.0 -21.0, 167.0 -22.0, "
            "166.0 -22.0), (166.2 -21.8, 166.4 -21.8, 166.4 -21.6, "
            "166.2 -21.6, 166.2 -21.8))")
-    topo = wkt_to_topojson(wkt, quantization=100_000)
+    _, rings = parse_wkt_nested(wkt)
+    topo = nested_to_topojson("Polygon", [rings], quantization=100_000)
     assert topo["type"] == "Topology"
     assert topo["objects"]["shape"]["type"] == "Polygon"
     assert topo["objects"]["shape"]["arcs"] == [0, 1]   # outer + hole arcs
@@ -177,11 +179,13 @@ def test_topojson_roundtrip_polygon():
 
 
 def test_topojson_multipolygon_structure():
-    from niamoto_spark.operators.overlay import wkt_to_topojson
+    from niamoto_spark.operators.overlay import nested_to_topojson
+    from niamoto_spark.sources.vector import parse_wkt_nested
 
     wkt = ("MULTIPOLYGON (((0.0 0.0, 0.0 1.0, 1.0 1.0, 0.0 0.0)), "
            "((5.0 5.0, 5.0 6.0, 6.0 6.0, 5.0 5.0)))")
-    topo = wkt_to_topojson(wkt)
+    _, polys = parse_wkt_nested(wkt)
+    topo = nested_to_topojson("MultiPolygon", polys)
     assert topo["objects"]["shape"]["type"] == "MultiPolygon"
     assert topo["objects"]["shape"]["arcs"] == [[0], [1]]
     assert len(topo["arcs"]) == 2
@@ -211,22 +215,6 @@ def test_nested_to_geojson_shapes():
     gj2 = nested_to_geojson("MultiPolygon", polys)
     assert gj2["features"][0]["geometry"]["type"] == "MultiPolygon"
     assert gj2["features"][0]["geometry"]["coordinates"] == polys
-
-
-def test_shape_topojson_operator(spark):
-    import json as _json
-
-    from niamoto_spark.operators.overlay import shape_topojson
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "shape_id": [1, 2],
-        "geom": ["POLYGON ((0.0 0.0, 0.0 2.0, 2.0 2.0, 2.0 0.0, 0.0 0.0))",
-                 None]}))
-    rows = {r["shape_id"]: r["topojson"]
-            for r in shape_topojson(df, "geom").collect()}
-    topo = _json.loads(rows[1])
-    assert topo["objects"]["shape"]["type"] == "Polygon"
-    assert rows[2] is None
 
 
 def test_triangulate_concave_ring_preserves_area():

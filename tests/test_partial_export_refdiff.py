@@ -16,9 +16,16 @@ import os as _os  # noqa: E402
 
 import pytest as _pytest  # noqa: E402
 
-pytestmark = _pytest.mark.skipif(
-    not _os.environ.get("NIAMOTO_SLOW_TESTS"),
-    reason="slow tier: set NIAMOTO_SLOW_TESTS=1")
+from tools.refdiff.synth import REFERENCE_CONFIG as _REFERENCE_CONFIG  # noqa: E402
+
+pytestmark = [
+    _pytest.mark.skipif(
+        not _os.path.isdir(_REFERENCE_CONFIG),
+        reason="reference tree not mounted"),
+    _pytest.mark.skipif(
+        not _os.environ.get("NIAMOTO_SLOW_TESTS"),
+        reason="slow tier: set NIAMOTO_SLOW_TESTS=1"),
+]
 
 import os
 import shutil

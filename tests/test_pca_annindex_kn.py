@@ -160,22 +160,6 @@ def test_pca_fit_matches_numpy(spark):
     assert sum(model["explained_variance_ratio"][:3]) > 0.999
 
 
-def test_pca_project_matches_numpy(spark):
-    from niamoto_spark.operators.pca import pca_fit, pca_project
-
-    x = _pca_fixture()
-    df = spark.createDataFrame(
-        [(i, row.tolist()) for i, row in enumerate(x)],
-        "id int, vec array<double>")
-    model = pca_fit(df, "vec", k=2)
-    out = (pca_project(df, "vec", model, round_dp=None)
-           .orderBy("id").collect())
-    got = np.array([r.pca for r in out])
-    ref = (x - np.asarray(model["mean"])) @ np.asarray(
-        model["components"]).T
-    assert np.allclose(got, ref, atol=1e-9)
-
-
 def test_pca_partition_invariance(spark):
     from niamoto_spark.operators.pca import pca_fit
 

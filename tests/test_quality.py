@@ -1,9 +1,8 @@
 """Data-quality expectation tests."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from niamoto_spark.operators.quality import expect, expect_pass
+from niamoto_spark.operators.quality import expect
 
 
 def _df(spark):
@@ -40,16 +39,6 @@ def test_foreign_key_orphans(spark):
     res = expect(facts, [{"rule": "foreign_key", "col": "k",
                           "ref": dim, "ref_col": "dk"}]).collect()
     assert res[0]["n_violations"] == 1  # only k=9; NULL is not an orphan
-
-
-def test_expect_pass_clean_table(spark):
-    clean = spark.range(100).select(F.col("id"),
-                                    (F.col("id") % 3).alias("g"))
-    assert expect_pass(clean, [
-        {"rule": "not_null", "col": "id"},
-        {"rule": "unique", "cols": ["id"]},
-        {"rule": "in_range", "col": "g", "lo": 0, "hi": 2},
-    ])
 
 
 def test_unknown_rule_raises(spark):

@@ -1,14 +1,9 @@
 """Regression tests for the round-8 advisor findings (ADVICE.md r9).
 
-Five defects: beta_partition's inverted presence ternary, ohlc_bars'
+Four defects: beta_partition's inverted presence ternary, ohlc_bars'
 modulo-colliding tie-break key, table_cdf's null-position hash
-collision, _scan_with_dv's strict unionByName under merge_schema, and
-read_table_asof skipping pre-``committed_at`` commits.
+collision and _scan_with_dv's strict unionByName under merge_schema.
 """
-
-import json
-import os
-import time
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -114,24 +109,6 @@ def test_dv_scan_merge_schema_union(spark, tmp_path):
     assert "extra" in out.columns
     got = {(r["id"], r["extra"]) for r in out.collect()}
     assert got == {(2, None), (3, 7.0)}
-
-
-# --- read_table_asof on pre-upgrade commits -------------------------------
-
-def test_asof_resolves_commit_without_committed_at(spark, tmp_path):
-    """Commits written before committed_at existed must still resolve
-    via the manifest file's mtime, not raise 'did not exist yet'."""
-    p = str(tmp_path / "t")
-    mf.append(spark.createDataFrame([(1,)], "id int"), p)
-    # simulate a pre-upgrade manifest: strip committed_at from v0
-    mpath = os.path.join(p, "_log", "manifest-v0.json")
-    with open(mpath) as f:
-        doc = json.load(f)
-    doc.pop("committed_at", None)
-    with open(mpath, "w") as f:
-        json.dump(doc, f)
-    out = mf.read_table_asof(spark, p, time.time() + 60)
-    assert out.count() == 1
 
 
 # --- md5 oracle-lane dedup variants (q349/q350) ---------------------------

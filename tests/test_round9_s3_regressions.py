@@ -67,31 +67,6 @@ def test_nested_sets_cycle_raises(spark):
         add_nested_sets(_mk_nodes(spark, rows))
 
 
-# --- erase_entity vacuum scope ---------------------------------------------
-
-def test_erase_entity_vacuum_spares_untouched_tables(spark, tmp_path):
-    """vacuum_now must only vacuum tables where a delete committed —
-    previously it truncated the history of every table in the sweep,
-    including ones that never contained the entity."""
-    from niamoto_spark.operators.privacy import erase_entity
-
-    hit = str(tmp_path / "hit")
-    miss = str(tmp_path / "miss")
-    mf.append(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
-              hit)
-    mf.append(spark.createDataFrame([(9, "x")], "k int, v string"), miss)
-    mf.append(spark.createDataFrame([(10, "y")], "k int, v string"), miss)
-    assert mf.committed_version(miss) == 1
-
-    deleted = erase_entity(spark, [hit, miss], "k", 1, vacuum_now=True)
-    assert deleted == {hit: 1, miss: 0}
-    # untouched table keeps its full version history (time travel intact)
-    assert mf.committed_version(miss) == 1
-    assert mf.read_table(spark, miss, version=0).count() == 1
-    # the erased table no longer contains the entity
-    assert mf.read_table(spark, hit).where("k = 1").count() == 0
-
-
 # --- hashed_dim_join --------------------------------------------------------
 
 def test_hashed_dim_join_string_key_exact(spark):

@@ -52,20 +52,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert 3 in kept
 
 
-def test_stream_static_anti_join_dedup(spark, tmp_path):
-    from niamoto_spark.streaming.dedup import dedup_stream_against_corpus
-
-    corpus = spark.createDataFrame(
-        pd.DataFrame({"fingerprint": []}), "fingerprint string")
-    import hashlib
-    known = hashlib.md5(b"already seen").hexdigest()
-    corpus = spark.createDataFrame(pd.DataFrame({"fingerprint": [known]}))
-    docs = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": [1, 2], "text": ["already seen", "brand new"]}))
-    kept = dedup_stream_against_corpus(docs, corpus).collect()
-    assert [r["doc_id"] for r in kept] == [2]
-
-
 def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     """Append-mode window aggregate with a 2h watermark across two
     availableNow runs sharing a checkpoint: a row arriving AFTER its

@@ -1,7 +1,6 @@
-"""strict_parity escape hatch (VERDICT r12 next-#7): the default True
-reproduces the reference's own bugs where drop-in parity requires them
-(certified by tools/ref_pipeline_diff.py); False gives new users the
-sane behavior at each site."""
+"""Sites where the engine reproduces the reference's own bugs because
+drop-in output parity requires them (certified by
+tools/ref_pipeline_diff.py)."""
 
 import json
 
@@ -28,26 +27,26 @@ def tagged(spark):
 
 
 def test_geospatial_group_by_coords_strict_empty(tagged, spark):
-    """Strict: any field name other than 'geometry' reproduces the
+    """Any field name other than 'geometry' reproduces the
     reference's swallowed AttributeError -> empty FeatureCollection
     (geospatial_extractor.py:612-686)."""
     df, entities = tagged
     out = RS.geospatial_extractor(
         df, "plot_id", {"field": "geo_pt", "group_by_coordinates": True},
-        entities, strict_parity=True)
+        entities)
     docs = {r["plot_id"]: json.loads(r["__json"]) for r in out.collect()}
     assert docs[1] == {"type": "FeatureCollection", "features": []}
 
 
 def test_geospatial_group_by_coords_sane(tagged, spark):
-    """Non-strict: coordinates actually group — unique coords in
-    first-occurrence order, first-row properties, per-coord count."""
+    """A field named 'geometry' groups: unique coords in first-occurrence
+    order, first-row properties, per-coord count."""
     df, entities = tagged
     out = RS.geospatial_extractor(
-        df, "plot_id",
-        {"field": "geo_pt", "group_by_coordinates": True,
+        df.withColumnRenamed("geo_pt", "geometry"), "plot_id",
+        {"field": "geometry", "group_by_coordinates": True,
          "properties": ["species"]},
-        entities, strict_parity=False)
+        entities)
     docs = {r["plot_id"]: json.loads(r["__json"]) for r in out.collect()}
     feats = docs[1]["features"]
     assert [f["geometry"]["coordinates"] for f in feats] == \
@@ -58,23 +57,9 @@ def test_geospatial_group_by_coords_sane(tagged, spark):
 
 
 def test_index_dsl_missing_source_strict_null():
-    """Strict: the reference maps a misspelled source (id: taxon_id when
+    """The reference maps a misspelled source (id: taxon_id when
     the column is taxons_id) to null silently."""
     item = {"taxons_id": 7, "full_name": "x"}
     out = _ref_map_fields(item, ["id: taxon_id"], group="taxons",
-                          pattern="{group}/{id}.json", base_id=7,
-                          strict_parity=True)
+                          pattern="{group}/{id}.json", base_id=7)
     assert out == {"id": None}
-
-
-def test_index_dsl_missing_source_sane_raises():
-    item = {"taxons_id": 7, "full_name": "x"}
-    with pytest.raises(KeyError, match="taxons_id"):
-        _ref_map_fields(item, ["id: taxon_id"], group="taxons",
-                        pattern="{group}/{id}.json", base_id=7,
-                        strict_parity=False)
-    # a PRESENT key maps normally in either mode
-    ok = _ref_map_fields(item, ["id: taxons_id"], group="taxons",
-                         pattern="{group}/{id}.json", base_id=7,
-                         strict_parity=False)
-    assert ok == {"id": 7}

@@ -3,8 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from niamoto_spark.operators.substrings import (substring_dedup_keep,
-                                                substring_dup_pairs,
+from niamoto_spark.operators.substrings import (substring_dup_pairs,
                                                 substring_fingerprints)
 
 
@@ -69,18 +68,6 @@ def test_max_gram_df_drops_boilerplate(spark):
                                    max_gram_df=None)
     assert capped.count() == 0          # boilerplate suppressed
     assert uncapped.count() == 45       # all 10-choose-2 pairs
-
-
-def test_dedup_keep_drops_higher_id(spark):
-    shared = WORDS[:80]
-    df = _corpus(spark, [
-        (1, "aa bb cc " + shared),
-        (2, shared + " dd ee ff"),
-        (3, "independent content xx yy zz qq rr ss tt uu vv ww"),
-    ])
-    kept = substring_dedup_keep(df, "doc_id", "text", gram_chars=30,
-                                max_gram_df=None)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
 
 
 def test_normalization_survives_reformatting(spark):

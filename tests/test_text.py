@@ -40,16 +40,6 @@ def test_text_quality_signals(spark):
     assert 0 <= good["alpha_ratio"] <= 1
 
 
-def test_bpe_estimate_scales_with_length(spark):
-    df = spark.createDataFrame(pd.DataFrame(
-        {"text": ["hi", "internationalization considerations", ""]}))
-    out = [r["bpe_tokens_est"] for r in
-           tx.bpe_token_estimate(df, "text").collect()]
-    assert out[0] == 1
-    assert out[1] >= 9   # two long words -> multiple subword units
-    assert out[2] == 0
-
-
 def test_lang_id_markers(spark):
     df = spark.createDataFrame(pd.DataFrame({"text": [
         "the cat and the dog sat in the garden of the house",

@@ -1,5 +1,5 @@
 """Persisted text index (retrieval.py), k_anonymity (quality.py),
-item similarity / recommendations (recsys.py)."""
+item similarity (recsys.py)."""
 
 import math
 import os
@@ -138,16 +138,3 @@ class TestItemSimilarity:
                               max_basket_items=10)
         # capped basket: C(10,2) pairs, not C(50,2)
         assert out.count() == 45
-
-    def test_recommend_topn_symmetric(self, spark):
-        from niamoto_spark.operators.recsys import (item_similarity,
-                                                    recommend_topn)
-
-        rows = [(1, "A"), (1, "B"), (2, "A"), (2, "B"), (3, "A"),
-                (3, "C")]
-        df = spark.createDataFrame(rows, "b long, it string")
-        sim = item_similarity(df, "b", "it", min_cooccur=1)
-        rec = {(r["item"], r["rank"]): r["neighbor"] for r in
-               recommend_topn(sim, n=2).collect()}
-        assert rec[("A", 1)] == "B"  # higher cosine than A-C
-        assert rec[("B", 1)] == "A"
