@@ -25,7 +25,7 @@ class TransformRelationConfig(BaseModel):
     ref_key: Optional[str] = None
     ref_field: Optional[str] = None
     match_field: Optional[str] = None
-    fields: Optional[Dict[str, str]] = None    # nested_set: left/right/parent
+    fields: Optional[Dict[str, str]] = None    # nested_set: left/right
 
     model_config = ConfigDict(extra="allow")
 

@@ -250,10 +250,9 @@ def export_dwc_occurrence_target(taxa_results: DataFrame,
     (defaults id_taxonref -> taxons_id) and bucket under
     ``taxonomy.id`` — which is what the group-table items carry in
     their ``taxon_id_field`` column."""
-    from niamoto_spark.exporters.json_api import (JsonOptions, _dump,
-                                                  _flatten_item,
-                                                  _ref_map_fields,
-                                                  safe_filename)
+    from niamoto_spark.exporters.json_api import (JsonOptions, _api_url,
+                                                  _dump, _flatten_item,
+                                                  _map_fields, safe_filename)
 
     tp = group_cfg.get("transformer_params", {})
     mapping = tp.get("mapping", {})
@@ -327,15 +326,13 @@ def export_dwc_occurrence_target(taxa_results: DataFrame,
         n_files += 1
         index_cfg = group_cfg.get("index") or {}
         if index_cfg.get("fields"):
-            mapped = _ref_map_fields(item, index_cfg["fields"],
-                                     group=group_name,
-                                     pattern=detail_pattern,
-                                     base_id=taxon_id)
+            mapped = _map_fields(
+                item, index_cfg["fields"], id_col,
+                lambda p: _api_url(p, detail_pattern, group_name, taxon_id))
         else:
             mapped = dict(item)
-        if "detail_url" not in mapped:
-            mapped["detail_url"] = "/api/" + detail_pattern.format(
-                group=group_name, id=taxon_id)
+        mapped.setdefault("detail_url",
+                          _api_url({}, detail_pattern, group_name, taxon_id))
         index_entries.append(mapped)
 
     struct = dict(params.get("index_structure") or {})

@@ -27,7 +27,7 @@ import json
 import math
 import os
 from dataclasses import dataclass
-from typing import Any, Mapping
+from typing import Any, Callable, Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -114,15 +114,13 @@ def _nested_get(data: Mapping[str, Any], path: str) -> Any:
 
 
 def _field_generator(name: str, item: Mapping[str, Any],
-                     params: Mapping[str, Any], ctx: Mapping[str, Any]) -> Any:
-    """Exporter field generators (reference DataMapper :999-1008)."""
-    if name == "endpoint_url":
-        base = params.get("base_url", f"./{ctx['detail_subdir']}")
-        return f"{base}/{safe_filename(item.get(ctx['id_col']))}.json"
+                     params: Mapping[str, Any], id_col: str) -> Any:
+    """Exporter field generators other than ``endpoint_url`` (reference
+    DataMapper :999-1008)."""
     if name in ("unique_occurrence_id", "unique_event_id",
                 "unique_identification_id"):
         prefix = params.get("prefix", name.split("_")[1][:3] + "_")
-        sf = params.get("source_field", ctx["id_col"])
+        sf = params.get("source_field", id_col)
         return f"{prefix}{_nested_get(item, sf)}"
     if name == "extract_specific_epithet":
         import re
@@ -143,8 +141,13 @@ def _field_generator(name: str, item: Mapping[str, Any],
     raise ValueError(f"unknown field generator {name!r}")
 
 
-def _map_fields(item: Mapping[str, Any], specs, ctx) -> dict[str, Any]:
-    """Field-mapping DSL (reference _map_fields :1072-1118)."""
+def _map_fields(item: Mapping[str, Any], specs, id_col: str,
+                endpoint_url: Callable[[Mapping[str, Any]], str]
+                ) -> dict[str, Any]:
+    """Field-mapping DSL (reference DataMapper._map_fields :1072-1118).
+    ``endpoint_url(params)`` is the URL of ``item``'s detail file, which
+    each export dialect lays out its own way; every other generator is
+    :func:`_field_generator`'s, keyed by ``id_col`` by default."""
     out: dict[str, Any] = {}
     for spec in specs:
         if isinstance(spec, str):
@@ -158,8 +161,11 @@ def _map_fields(item: Mapping[str, Any], specs, ctx) -> dict[str, Any]:
                 if isinstance(cfg, str):
                     out[name] = _nested_get(item, cfg)
                 elif isinstance(cfg, Mapping) and "generator" in cfg:
-                    out[name] = _field_generator(
-                        cfg["generator"], item, cfg.get("params", {}), ctx)
+                    params = cfg.get("params") or {}
+                    out[name] = endpoint_url(params) \
+                        if cfg["generator"] == "endpoint_url" \
+                        else _field_generator(cfg["generator"], item,
+                                              params, id_col)
                 elif isinstance(cfg, Mapping) and "source" in cfg:
                     src = _nested_get(item, cfg["source"])
                     if isinstance(src, Mapping) and "fields" in cfg:
@@ -220,35 +226,13 @@ def _flatten_item(doc: dict) -> dict:
     return item
 
 
-def _ref_map_fields(item: Mapping[str, Any], specs, *, group: str,
-                    pattern: str, base_id: Any) -> dict[str, Any]:
-    """Reference index/detail field DSL incl. the endpoint_url generator
-    (DataMapper._map_fields :1072-1118, _generate_endpoint_url)."""
-    out: dict[str, Any] = {}
-    for spec in specs:
-        if isinstance(spec, str):
-            if ":" in spec:
-                name, src = (s.strip() for s in spec.split(":", 1))
-                out[name] = _nested_get(item, src)
-            else:
-                out[spec] = _nested_get(item, spec)
-        elif isinstance(spec, Mapping):
-            for name, cfg in spec.items():
-                if isinstance(cfg, str):
-                    out[name] = _nested_get(item, cfg)
-                elif isinstance(cfg, Mapping) and \
-                        cfg.get("generator") == "endpoint_url":
-                    base = (cfg.get("params") or {}).get("base_path", "/api")
-                    out[name] = (f"{base}/"
-                                 + pattern.format(group=group, id=base_id))
-                elif isinstance(cfg, Mapping) and "source" in cfg:
-                    src = _nested_get(item, cfg["source"])
-                    if isinstance(src, Mapping) and "fields" in cfg:
-                        out[name] = {f: src.get(f) for f in cfg["fields"]
-                                     if f in src}
-                    else:
-                        out[name] = src
-    return out
+def _api_url(params: Mapping[str, Any], pattern: str, group: str,
+             item_id: Any) -> str:
+    """An entity's detail URL in the reference dialect: ``base_path``
+    (default ``/api``) + the detail output pattern
+    (DataMapper._generate_endpoint_url)."""
+    return f"{params.get('base_path', '/api')}/" + pattern.format(
+        group=group, id=item_id)
 
 
 def export_json_api_target(results: DataFrame, group_name: str,
@@ -298,10 +282,9 @@ def export_json_api_target(results: DataFrame, group_name: str,
             return None, None, None
         if detail_cfg.get("fields") and not detail_cfg.get("pass_through",
                                                            False):
-            detail = _ref_map_fields(item, detail_cfg["fields"],
-                                     group=group_name,
-                                     pattern=detail_pattern,
-                                     base_id=item_id)
+            detail = _map_fields(
+                item, detail_cfg["fields"], id_col,
+                lambda p: _api_url(p, detail_pattern, group_name, item_id))
         else:
             detail = item
         rel = detail_pattern.format(group=group_name,
@@ -329,17 +312,13 @@ def export_json_api_target(results: DataFrame, group_name: str,
         item_id = next((item[k] for k in id_keys
                         if item.get(k) is not None), None)
         if index_cfg.get("fields"):
-            mapped = _ref_map_fields(item, index_cfg["fields"],
-                                     group=group_name,
-                                     pattern=detail_pattern,
-                                     base_id=item_id)
+            mapped = _map_fields(
+                item, index_cfg["fields"], id_col,
+                lambda p: _api_url(p, detail_pattern, group_name, item_id))
         else:
             mapped = dict(item)
-        if "detail_url" not in mapped:
-            base = "/api"
-            mapped["detail_url"] = (
-                f"{base}/" + detail_pattern.format(group=group_name,
-                                                   id=item_id))
+        mapped.setdefault("detail_url",
+                          _api_url({}, detail_pattern, group_name, item_id))
         entries.append(mapped)
 
     list_key = str(struct.get("list_key", "{group}")).format(
@@ -384,7 +363,11 @@ def export_json_api(results: DataFrame, id_col: str, out_dir: str,
         else JsonOptions(**(json_options or {}))
     detail_dir = os.path.join(out_dir, detail_subdir)
     os.makedirs(detail_dir, exist_ok=True)
-    ctx = {"id_col": id_col, "detail_subdir": detail_subdir}
+
+    def detail_url(item: Mapping[str, Any],
+                   params: Mapping[str, Any]) -> str:
+        base = params.get("base_url", f"./{detail_subdir}")
+        return f"{base}/{safe_filename(item.get(id_col))}.json"
 
     payload = results.select(F.col(id_col).alias("__id"),
                              F.to_json(F.struct(*results.columns)).alias("__doc"))
@@ -394,7 +377,8 @@ def export_json_api(results: DataFrame, id_col: str, out_dir: str,
     for r in payload.toLocalIterator():
         doc = _parse_widget_strings(json.loads(r["__doc"]))
         if detail_fields:
-            doc = _map_fields(doc, detail_fields, ctx)
+            doc = _map_fields(doc, detail_fields, id_col,
+                              lambda p: detail_url(doc, p))
         _dump(os.path.join(detail_dir, f"{safe_filename(r['__id'])}.json"),
               doc, opts)
 
@@ -408,12 +392,11 @@ def export_json_api(results: DataFrame, id_col: str, out_dir: str,
         if filters and not _matches_filters(item, filters):
             continue
         if index_fields:
-            mapped = _map_fields(item, index_fields, ctx)
+            mapped = _map_fields(item, index_fields, id_col,
+                                 lambda p: detail_url(item, p))
         else:
             mapped = {id_col: item.get(id_col)}
-        mapped.setdefault(
-            "detail_url",
-            f"./{detail_subdir}/{safe_filename(item.get(id_col))}.json")
+        mapped.setdefault("detail_url", detail_url(item, {}))
         items.append(mapped)
 
     struct = dict(index_structure or {})

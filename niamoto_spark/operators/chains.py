@@ -7,7 +7,9 @@ JSON doc under its ``output_key`` (transform_chain.py:305-311).
 
 - A step other than ``custom_calculator`` is shaped exactly like a
   top-level widget with that plugin and those params.  A later step's
-  ``source: "@key"`` reads the frame that step was shaped from.
+  ``source: "@key"`` reads the frame that step was shaped from; naming
+  a step that has none (a widget shaped straight off its source, a
+  custom_calculator) raises.
 - A ``custom_calculator`` step reads the earlier steps' docs through
   ``@step.field[i]`` references (:func:`resolve_ref`).  One Python
   function, :func:`evaluate`, computes its doc, per entity, in one
@@ -209,7 +211,7 @@ def transform_chain(steps: list[dict], sources: dict[str, DataFrame],
 
     ``sources`` are the group's tagged sources.  ``shape(plugin, params,
     bindings)`` returns a step's ``(gid, __json)`` frame and the frame a
-    later ``source: "@key"`` binds to."""
+    later ``source: "@key"`` binds to, or None when it has none."""
     if not steps:
         raise ValueError("empty transform_chain")
     bindings = dict(sources)
@@ -223,7 +225,12 @@ def transform_chain(steps: list[dict], sources: dict[str, DataFrame],
             calculators.append((f"__j{i}", step["output_key"], params))
             continue
         if _is_ref(params.get("source")):
-            params["source"] = params["source"][1:]
+            src = params["source"] = params["source"][1:]
+            if src in [s["output_key"] for s in steps[:i]] \
+                    and bindings.get(src) is None:
+                raise ValueError(
+                    f"chain step {step['output_key']!r} reads source "
+                    f"'@{src}', but step {src!r} builds no frame to read")
         jdf, bindings[step["output_key"]] = shape(step["plugin"], params,
                                                   bindings)
         frames.append(jdf.select(F.col(gid), F.col("__json").alias(

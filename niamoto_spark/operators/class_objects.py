@@ -1,10 +1,12 @@
-"""class_object family — EAV pivot transformers (SURVEY §2.3).
+"""class_object EAV aggregates for the operator catalog (SURVEY §2.3).
 
 The reference consumes EAV-style stats tables with columns
 ``class_object / class_name / class_value`` (FIXTURES.md F5) — its answer to
-pivot/unpivot.  All eight transformers are filters + aggregates over that
-long format; duplicated (class_object, class_name) pairs are SUMMED
-(reference: transformers/class_objects/utils.py:14).
+pivot/unpivot.  The helpers here are filters + aggregates over that long
+format, returning rows; duplicated (class_object, class_name) pairs are
+SUMMED (reference: transformers/class_objects/utils.py:14).  Catalog
+queries call them.  The ``class_object_*`` widget plugins the transform
+runs are the JSON shapers in ``niamoto_spark/refshapes.py``.
 
 Group convention matches operators.aggregation: pass the id column(s) of the
 owning entity in ``group_cols`` to compute all entities at once.
@@ -17,8 +19,6 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from niamoto_spark.registry import PluginType, register
-
 CO, CN, CV = "class_object", "class_name", "class_value"
 
 
@@ -28,7 +28,6 @@ def _dedup_sum(df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     return df.groupBy(*group_cols, CO, CN).agg(F.sum(F.col(CV).cast("double")).alias(CV))
 
 
-@register("class_object_series_extractor", PluginType.TRANSFORMER)
 def series_extractor(df: DataFrame, group_cols: Sequence[str],
                      class_object: str, numeric_axis: bool = False) -> DataFrame:
     """Filter rows of one class_object; emit sorted axis (class_name,
@@ -45,20 +44,6 @@ def series_extractor(df: DataFrame, group_cols: Sequence[str],
     return out.select(*group_cols, CN, *(["axis_num"] if numeric_axis else []), CV)
 
 
-@register("class_object_field_aggregator", PluginType.TRANSFORMER)
-def field_aggregator(df: DataFrame, group_cols: Sequence[str],
-                     class_object: str, mode: str = "value") -> DataFrame:
-    """Scalar per class_object: first value, or [min, max] range format
-    (reference: class_objects/field_aggregator.py; transform.yml:643-683)."""
-    filtered = _dedup_sum(df.where(F.col(CO) == class_object), group_cols)
-    g = filtered.groupBy(*group_cols) if group_cols else filtered.groupBy()
-    if mode == "range":
-        return g.agg(F.round(F.min(CV), 2).alias("min_value"),
-                     F.round(F.max(CV), 2).alias("max_value"))
-    return g.agg(F.round(F.sum(CV), 2).alias("value"))
-
-
-@register("class_object_categories_extractor", PluginType.TRANSFORMER)
 def categories_extractor(df: DataFrame, group_cols: Sequence[str],
                          class_object: str,
                          categories: Sequence[str]) -> DataFrame:
@@ -79,30 +64,6 @@ def categories_extractor(df: DataFrame, group_cols: Sequence[str],
                .orderBy(*group_cols, "__ord").drop("__ord"))
 
 
-@register("class_object_categories_mapper", PluginType.TRANSFORMER)
-def categories_mapper(df: DataFrame, group_cols: Sequence[str],
-                      mapping: Mapping[str, Mapping[str, str]]) -> DataFrame:
-    """Nested regrouping of several class_objects with value re-labeling
-    (reference: class_objects/categories_mapper.py:94; transform.yml:771-800).
-    ``mapping``: {output_group: {class_object: relabeled_class_name}}.
-    Output: group_cols + (out_group, label, class_value).
-    """
-    pieces = []
-    for out_group, spec in mapping.items():
-        for class_object, label in spec.items():
-            pieces.append(
-                _dedup_sum(df.where(F.col(CO) == class_object), group_cols)
-                .groupBy(*group_cols)
-                .agg(F.round(F.sum(CV), 2).alias(CV))
-                .withColumn("out_group", F.lit(out_group))
-                .withColumn("label", F.lit(label)))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out.select(*group_cols, "out_group", "label", CV)
-
-
-@register("class_object_binary_aggregator", PluginType.TRANSFORMER)
 def binary_aggregator(df: DataFrame, group_cols: Sequence[str],
                       class_object: str,
                       class_mapping: Mapping[str, str] | None = None,
@@ -124,44 +85,6 @@ def binary_aggregator(df: DataFrame, group_cols: Sequence[str],
                .select(*group_cols, "label", "share")
 
 
-@register("class_object_series_matrix_extractor", PluginType.TRANSFORMER)
-def series_matrix_extractor(df: DataFrame, group_cols: Sequence[str],
-                            class_objects: Sequence[str],
-                            scale: float = 1.0,
-                            complement: bool = False) -> DataFrame:
-    """Shared numeric axis + several series; optional scale factor and
-    ``complement: true`` -> 100 - x (reference:
-    class_objects/series_matrix_extractor.py:19-92; transform.yml:818-848).
-    Output: group_cols + (axis_num, <class_object> ... ) pivoted wide.
-    """
-    vals = (_dedup_sum(df.where(F.col(CO).isin(list(class_objects))), group_cols)
-            .withColumn("axis_num", F.col(CN).try_cast("double"))
-            .withColumn(CV, F.col(CV) * F.lit(scale)))
-    if complement:
-        vals = vals.withColumn(CV, F.lit(100.0) - F.col(CV))
-    wide = (vals.groupBy(*group_cols, "axis_num")
-            .pivot(CO, list(class_objects))
-            .agg(F.round(F.first(CV), 2)))
-    return wide.orderBy(*group_cols, "axis_num")
-
-
-@register("class_object_series_by_axis_extractor", PluginType.TRANSFORMER)
-def series_by_axis_extractor(df: DataFrame, group_cols: Sequence[str],
-                             axis_mapping: Mapping[str, str]) -> DataFrame:
-    """Axis + named series per class_object mapping (reference:
-    class_objects/series_by_axis_extractor.py:15-114; transform.yml:850-869).
-    ``axis_mapping``: {class_object: series_name}.
-    """
-    m = F.create_map(*[F.lit(x) for kv in axis_mapping.items() for x in kv])
-    vals = (_dedup_sum(df.where(F.col(CO).isin(list(axis_mapping))), group_cols)
-            .withColumn("series", m[F.col(CO)])
-            .withColumn("axis_num", F.col(CN).try_cast("double")))
-    return vals.select(*group_cols, "series", CN, "axis_num",
-                       F.round(F.col(CV), 2).alias(CV)) \
-               .orderBy(*group_cols, "series", "axis_num", CN)
-
-
-@register("class_object_series_ratio_aggregator", PluginType.TRANSFORMER)
 def series_ratio_aggregator(df: DataFrame, group_cols: Sequence[str],
                             subset_class: str, total_class: str,
                             complement_mode: str | None = None) -> DataFrame:

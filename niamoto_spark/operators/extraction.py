@@ -1,7 +1,10 @@
 """Extraction / reshape transformers (SURVEY §2.3 "Extraction / reshape").
 
 Wide<->long reshapes are stack()/pivot projections — no extra shuffles beyond
-the aggregates that feed them.
+the aggregates that feed them.  ``multi_column_extractor`` and
+``geospatial_extractor`` here return rows for the operator catalog; the
+widget plugins of those names are the JSON shapers in
+``niamoto_spark/refshapes.py``.
 """
 
 from __future__ import annotations
@@ -15,7 +18,6 @@ from niamoto_spark.plans.guards import pin_double_literals, validate_formula
 from niamoto_spark.registry import PluginType, register
 
 
-@register("multi_column_extractor", PluginType.TRANSFORMER)
 def multi_column_extractor(df: DataFrame, group_cols: Sequence[str],
                            columns: Sequence[str],
                            labels: Sequence[str] | None = None,
@@ -112,7 +114,6 @@ def scatter_analysis(df: DataFrame, x_field: str, y_field: str,
     return out
 
 
-@register("geospatial_extractor", PluginType.TRANSFORMER)
 def geospatial_extractor(df: DataFrame, group_cols: Sequence[str],
                          wkt_col: str,
                          group_by_coordinates: bool = True) -> DataFrame:

@@ -8,7 +8,8 @@ that group column.
 
 All reference tables (hierarchies, plots, shapes) are small relative to the
 fact table, so every join here broadcasts the reference side — at 100 TB the
-fact table never shuffles for these lookups.
+fact table never shuffles for these lookups.  ``join_table``'s bridge is
+the exception: it is not a reference table, and Spark sizes that join.
 """
 
 from __future__ import annotations
@@ -63,7 +64,10 @@ def join_table(data: DataFrame, data_key: str,
                carry: list[str] | None = None) -> DataFrame:
     """Many-to-many bridge: fact JOIN bridge ON fact.id = bridge.source,
     grouped by bridge.reference (reference: loaders/join_table.py:124-178).
-    Two chained joins; the bridge and group tables broadcast.
+    Two chained joins.  The bridge can be as large as the fact table (a
+    subtree-expanded bridge has a row per fact and ancestor), so its hop
+    is a plain equi-join and Spark's size estimate chooses broadcast or
+    shuffle; the group table broadcasts.
 
     ``carry`` lists extra ``groups`` columns to attach in the SAME group
     join — callers that need a display column (e.g. a name) alongside the
@@ -76,8 +80,7 @@ def join_table(data: DataFrame, data_key: str,
     data, data_key = _clear_gid_collision(data, data_key, group_id)
     b = bridge.select(F.col(bridge_source).alias("__b_src"),
                       F.col(bridge_ref).alias("__b_ref"))
-    tagged = hashed_dim_join(data, b, data_key, ["__b_ref"],
-                             dim_key="__b_src")
+    tagged = data.join(b, data[data_key] == b["__b_src"]).drop("__b_src")
     return hashed_dim_join(tagged, groups, "__b_ref",
                            [group_id, *(carry or [])],
                            dim_key=group_id).drop("__b_ref")

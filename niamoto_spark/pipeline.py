@@ -38,20 +38,11 @@ from niamoto_spark.config import (ImportConfig, TransformGroupConfig,
                                   validate_transform_config)
 from niamoto_spark.hierarchy import derive_hierarchy
 from niamoto_spark.operators import aggregation as agg_ops
-from niamoto_spark.operators import class_objects as co_ops
 from niamoto_spark.operators import extraction as ex_ops
 from niamoto_spark.operators import loaders as loader_ops
 from niamoto_spark.operators.chains import empty_chain_json, transform_chain
 from niamoto_spark.sources.files import read_csv_auto
 from niamoto_spark.sources.sinks import overwrite_table
-
-
-# Widgets whose result is one row per entity -> packed as a JSON object;
-# all others produce a list of rows -> packed as a JSON array.
-SINGLE_ROW_WIDGETS = {
-    "statistical_summary", "field_aggregator", "binary_counter",
-    "direct_attribute", "class_object_field_aggregator",
-}
 
 
 def _kernel_frame(k, frames: dict[str, DataFrame], gid: str,
@@ -324,43 +315,32 @@ class Pipeline:
                     data, key, grouping, gid, rel.ref_key,
                     fields.get("left", "lft"), fields.get("right", "rght"))
             elif plugin == "adjacency_list":
-                # both dialects: ours (fields.parent) and the
-                # reference's top-level params (adjacency_list.py:39-56
-                # parent_field / hierarchy_id_field / include_children)
+                # the reference's params (adjacency_list.py:39-56)
                 extra = rel.model_extra or {}
                 match_field = extra.get("hierarchy_id_field", "id")
                 out = loader_ops.adjacency_list_loader(
                     data, key, grouping, gid,
-                    extra.get("parent_field")
-                    or (rel.fields or {}).get("parent", "parent_id"),
+                    extra.get("parent_field", "parent_id"),
                     gid if match_field == "id" else match_field,
                     extra.get("include_children", True))
             elif plugin == "join_table":
+                # the reference's params (join_table.py:123-176):
+                # SELECT m.* FROM data m JOIN <join_table> j
+                #   ON m.id = j.<keys.source>
+                #  WHERE j.<keys.reference> = <group primary id>
                 extra = rel.model_extra or {}
-                if "join_table" in extra and "keys" in extra:
-                    # reference dialect (join_table.py:123-176):
-                    # SELECT m.* FROM data m JOIN <join_table> j
-                    #   ON m.id = j.<keys.source>
-                    #  WHERE j.<keys.reference> = <group primary id>
-                    # The bridge is fact-sized at scale — plain
-                    # shuffle join, no broadcast.
-                    bridge = self._load_source_data(extra["join_table"])
-                    skey = extra["keys"]["source"]
-                    rkey = extra["keys"]["reference"]
-                    data, src_id = loader_ops._clear_gid_collision(
-                        data, "id", gid)
-                    br = bridge.select(F.col(skey).alias("__s"),
-                                       F.col(rkey).alias(gid))
-                    out = data.join(br, data[src_id] == F.col("__s")) \
-                        .drop("__s")
-                else:
-                    bridge = self._load_source_data(
-                        rel.model_extra["bridge"])
-                    out = loader_ops.join_table(
-                        data, key, bridge,
-                        rel.model_extra.get("bridge_source", "source"),
-                        rel.model_extra.get("bridge_reference", "reference"),
-                        grouping, gid)
+                keys = extra.get("keys") or {}
+                missing = [n for n in ("join_table", "keys")
+                           if n not in extra] + [
+                    f"keys.{n}" for n in ("source", "reference")
+                    if n not in keys]
+                if missing:
+                    raise ValueError(
+                        f"join_table relation of source {src.name!r} "
+                        f"lacks {', '.join(map(repr, missing))}")
+                out = loader_ops.join_table(
+                    data, "id", self._load_source_data(extra["join_table"]),
+                    keys["source"], keys["reference"], grouping, gid)
             elif plugin == "spatial_containment":
                 out = loader_ops.spatial_containment(
                     data, key, grouping, gid,
@@ -456,22 +436,19 @@ class Pipeline:
                      grouping: DataFrame
                      ) -> tuple[DataFrame, DataFrame | None]:
         """One widget -> (gid, __json) in the reference's exact JSON shape
-        (niamoto_spark/refshapes.py); plugins without a reference shaper
-        fall back to the legacy array-of-structs packing.  Also returns
-        the frame the JSON was shaped from, which a later transform_chain
-        step's ``source: "@key"`` reads: a fused plugin's kernel frame,
-        the operator frame of the others, None for a chain and for
-        plugins shaped straight off their source."""
+        (niamoto_spark/refshapes.py); boolean_comparison and
+        scatter_analysis have no reference shaper and pack their rows as
+        a JSON array.  Also returns the frame the JSON was shaped from,
+        which a later transform_chain step's ``source: "@key"`` reads: a
+        fused plugin's kernel frame, the operator frame of the others,
+        None for a chain and for plugins shaped straight off their
+        source."""
         from niamoto_spark import refshapes as RS
 
         if plugin == "transform_chain":
             def step(name: str, sparams: dict, bound: dict):
-                jdf, frame = self._widget_json(name, sparams, bound,
-                                               group_by, gid, grouping)
-                if frame is None:
-                    frame = self._run_widget(name, dict(sparams), bound,
-                                             gid)
-                return jdf, frame
+                return self._widget_json(name, sparams, bound, group_by,
+                                         gid, grouping)
 
             return transform_chain(params["steps"], tagged, gid, step), None
         if plugin in RS.FUSED:
@@ -491,32 +468,26 @@ class Pipeline:
         # class_object family + geospatial: shape straight from the raw
         # tagged frame (the reference plugins receive the loaded stats
         # frame whole and filter internally)
-        if plugin == "class_object_series_extractor" and "size_field" in params:
+        if plugin == "class_object_series_extractor":
             return RS.co_series_extractor(df, gid, params, grouping), None
-        if plugin == "class_object_field_aggregator" and isinstance(
-                params.get("fields"), list):
+        if plugin == "class_object_field_aggregator":
             return RS.co_field_aggregator(df, gid, params, grouping), None
-        if plugin == "class_object_categories_extractor" and (
-                "categories_order" in params or "class_object" in params):
+        if plugin == "class_object_categories_extractor":
             return RS.co_categories_extractor(df, gid, params,
                                               grouping), None
-        if plugin == "class_object_binary_aggregator" and "groups" in params:
+        if plugin == "class_object_binary_aggregator":
             return RS.co_binary_aggregator(df, gid, params), None
-        if plugin == "class_object_categories_mapper" and isinstance(
-                params.get("categories"), dict):
+        if plugin == "class_object_categories_mapper":
             return RS.co_categories_mapper(df, gid, params), None
-        if plugin == "class_object_series_ratio_aggregator" and \
-                "distributions" in params:
+        if plugin == "class_object_series_ratio_aggregator":
             return RS.co_series_ratio_aggregator(df, gid, params), None
-        if plugin == "class_object_series_matrix_extractor" and \
-                "series" in params:
+        if plugin == "class_object_series_matrix_extractor":
             return RS.co_series_matrix_extractor(df, gid, params), None
-        if plugin == "class_object_series_by_axis_extractor" and \
-                "types" in params:
+        if plugin == "class_object_series_by_axis_extractor":
             return RS.co_series_by_axis_extractor(df, gid, params), None
         if plugin == "geospatial_extractor":
             return RS.geospatial_extractor(df, gid, params, grouping), None
-        if plugin == "multi_column_extractor" and df is not None:
+        if plugin == "multi_column_extractor":
             return RS.multi_column_extractor(df, gid, params), None
         if plugin == "shape_processor":
             return self._shape_processor_widget(
@@ -543,8 +514,7 @@ class Pipeline:
                             ("double", "float"))
             jdf = RS.direct_attribute(wdf, gid, params, is_float)
         else:
-            jdf = self._pack_json(wdf, gid, "__json",
-                                  single_row=plugin in SINGLE_ROW_WIDGETS)
+            jdf = self._pack_json(wdf, gid)
         return jdf, wdf
 
     def _shape_processor_widget(self, df: DataFrame, gid: str,
@@ -680,19 +650,11 @@ class Pipeline:
                 df, [gid], field,
                 limit=params.get("count", 10),
                 name_join=name_join)
-        if plugin == "geospatial_extractor":
-            return ex_ops.geospatial_extractor(df, [gid], params["field"])
         if plugin == "direct_attribute":
             return ex_ops.direct_attribute(
                 df, [gid], params["field"],
                 precision=params.get("precision"),
                 max_value=params.get("max_value"))
-        if plugin == "multi_column_extractor":
-            return ex_ops.multi_column_extractor(
-                df, [gid], params["columns"],
-                labels=params.get("labels"),
-                derived=params.get("derived_columns"),
-                include_percentages=params.get("include_percentages", False))
         if plugin == "time_series_analysis":
             fields = params["fields"]
             if isinstance(fields, dict) and fields and \
@@ -709,35 +671,6 @@ class Pipeline:
             return agg_ops.time_series_analysis(
                 df, [gid], params.get("time_field", "month_obs"),
                 fields, dense_months=False, rounding="python")
-        if plugin == "class_object_series_extractor":
-            return co_ops.series_extractor(
-                df, [gid], params["class_object"],
-                numeric_axis=(params.get("size_field", {}) or {}).get("numeric", False))
-        if plugin == "class_object_field_aggregator":
-            return co_ops.field_aggregator(df, [gid], params["class_object"],
-                                           mode=params.get("mode", "value"))
-        if plugin == "class_object_categories_extractor":
-            return co_ops.categories_extractor(df, [gid],
-                                               params["class_object"],
-                                               params["categories"])
-        if plugin == "class_object_binary_aggregator":
-            return co_ops.binary_aggregator(
-                df, [gid], params["class_object"],
-                class_mapping=params.get("class_mapping"))
-        if plugin == "class_object_series_matrix_extractor":
-            return co_ops.series_matrix_extractor(
-                df, [gid], params["class_objects"],
-                scale=params.get("scale", 1.0),
-                complement=params.get("complement", False))
-        if plugin == "class_object_series_by_axis_extractor":
-            return co_ops.series_by_axis_extractor(df, [gid],
-                                                   params["axis_mapping"])
-        if plugin == "class_object_series_ratio_aggregator":
-            return co_ops.series_ratio_aggregator(
-                df, [gid], params["subset_class"], params["total_class"],
-                complement_mode=params.get("complement_mode"))
-        if plugin == "class_object_categories_mapper":
-            return co_ops.categories_mapper(df, [gid], params["mapping"])
         if plugin == "boolean_comparison":
             fields = params["fields"]
             if isinstance(fields, list):
@@ -750,12 +683,10 @@ class Pipeline:
                       .where(F.col("x").isNotNull() & F.col("y").isNotNull()))
         raise ValueError(f"no adapter for widget plugin {plugin!r}")
 
-    def _pack_json(self, wdf: DataFrame, gid: str, name: str,
-                   single_row: bool = False) -> DataFrame:
-        """One JSON column per widget.  The shape is decided by the widget
-        KIND (SINGLE_ROW_WIDGETS -> object, everything else -> array), never
-        by the per-entity row count — consumers get one stable schema per
-        column (the reference's output_structure contract, SURVEY §2.5)."""
+    def _pack_json(self, wdf: DataFrame, gid: str) -> DataFrame:
+        """A widget's rows per entity as one JSON array, whatever the
+        per-entity row count — consumers get one stable schema per column
+        (the reference's output_structure contract, SURVEY §2.5)."""
         others = [c for c in wdf.columns if c != gid]
         # order struct fields so the array's deterministic sort is also the
         # presentation order (rank/bin/month leading)
@@ -766,9 +697,8 @@ class Pipeline:
         packed = (wdf.groupBy(gid)
                   .agg(F.sort_array(F.collect_list(F.struct(*others)))
                        .alias("__rows")))
-        json_col = F.to_json(F.col("__rows")[0]) if single_row \
-            else F.to_json(F.col("__rows"))
-        return packed.select(F.col(gid), json_col.alias(name))
+        return packed.select(F.col(gid),
+                             F.to_json(F.col("__rows")).alias("__json"))
 
     # ------------------------------------------------------------------
     # export phase

@@ -32,6 +32,10 @@ The class_object shapers consume the RAW tagged EAV frame
 (gid + class_object/class_name/class_value) and do their own
 filtering/aggregation — mirroring how the reference plugins receive
 the whole loaded stats frame per entity.
+
+The shapers the pipeline calls with a widget's whole params — the eight
+``class_object_*`` plugins, ``geospatial_extractor`` and
+``multi_column_extractor`` — are registered under those plugin names.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from niamoto_spark.functions import bin_index, py_round2
+from niamoto_spark.registry import PluginType, register
 
 JSON_OPTS = {"ignoreNullFields": "false"}
 SRC_ORDER = "__src_order"
@@ -555,6 +560,7 @@ def time_series_analysis(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
     ])
 
 
+@register("multi_column_extractor", PluginType.TRANSFORMER)
 def multi_column_extractor(df: DataFrame, gid: str, p: dict) -> DataFrame:
     """{labels, counts[, percentages][, named {value, units} fields]} —
     counts are int(first_row[col]) with derived formulas evaluated over
@@ -595,6 +601,7 @@ def multi_column_extractor(df: DataFrame, gid: str, p: dict) -> DataFrame:
     return _doc(base, gid, frags)
 
 
+@register("geospatial_extractor", PluginType.TRANSFORMER)
 def geospatial_extractor(tagged_df: DataFrame, gid: str, p: dict,
                          entities: DataFrame) -> DataFrame:
     """GeoJSON FeatureCollection — bug-for-bug with the reference (what
@@ -702,6 +709,7 @@ def _geospatial_grouped(tagged_df: DataFrame, gid: str, p: dict,
 # class_object family — consume the raw tagged EAV frame
 # ---------------------------------------------------------------------------
 
+@register("class_object_series_extractor", PluginType.TRANSFORMER)
 def co_series_extractor(wdf: DataFrame, gid: str, p: dict,
                         entities: DataFrame) -> DataFrame:
     """{<size.output>: [...], <value.output>: [...]} — groupby(size,
@@ -748,6 +756,7 @@ def co_series_extractor(wdf: DataFrame, gid: str, p: dict,
     ])
 
 
+@register("class_object_field_aggregator", PluginType.TRANSFORMER)
 def co_field_aggregator(wdf: DataFrame, gid: str, p: dict,
                         entities: DataFrame) -> DataFrame:
     """{target: {value[, units]}} / range {min, max[, units]}; missing
@@ -775,6 +784,7 @@ def co_field_aggregator(wdf: DataFrame, gid: str, p: dict,
     return _obj(base, gid, fields)
 
 
+@register("class_object_categories_extractor", PluginType.TRANSFORMER)
 def co_categories_extractor(wdf: DataFrame, gid: str, p: dict,
                             entities: DataFrame) -> DataFrame:
     """{tops: categories_order, counts} — categories missing from the
@@ -782,7 +792,7 @@ def co_categories_extractor(wdf: DataFrame, gid: str, p: dict,
     reference-side ("No data found"), so it gets no widget at all here
     either (class_objects/categories_extractor.py:85-130)."""
     del entities  # reference emits nothing for data-less entities
-    cats = p.get("categories_order") or p.get("categories") or []
+    cats = p.get("categories_order") or []
     sub = (wdf.where(F.col(CO) == p["class_object"])
            .groupBy(gid, CN).agg(F.sum(CV).alias("__v")))
     m = F.map_from_entries(F.collect_list(
@@ -795,6 +805,7 @@ def co_categories_extractor(wdf: DataFrame, gid: str, p: dict,
     ])
 
 
+@register("class_object_binary_aggregator", PluginType.TRANSFORMER)
 def co_binary_aggregator(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
     """{group.label: {out_class: raw summed value}} — raw values, NOT
     re-normalized (class_objects/binary_aggregator.py:60-140)."""
@@ -822,6 +833,7 @@ def co_binary_aggregator(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
     return _obj(joined, gid, fields)
 
 
+@register("class_object_categories_mapper", PluginType.TRANSFORMER)
 def co_categories_mapper(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
     """{out_group: {mapped_label: value}}
     (class_objects/categories_mapper.py:94)."""
@@ -841,6 +853,7 @@ def co_categories_mapper(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
     return _obj(joined, gid, fields)
 
 
+@register("class_object_series_ratio_aggregator", PluginType.TRANSFORMER)
 def co_series_ratio_aggregator(wdf: DataFrame, gid: str,
                                p: dict) -> DataFrame:
     """{dist: {classes, subset, complement}} — difference mode emits
@@ -891,6 +904,7 @@ def co_series_ratio_aggregator(wdf: DataFrame, gid: str,
     return _doc(joined, gid, fields)
 
 
+@register("class_object_series_matrix_extractor", PluginType.TRANSFORMER)
 def co_series_matrix_extractor(wdf: DataFrame, gid: str,
                                p: dict) -> DataFrame:
     """{<axis.field>: [...], series: {name: [...]}}; complement
@@ -928,6 +942,7 @@ def co_series_matrix_extractor(wdf: DataFrame, gid: str,
     ])
 
 
+@register("class_object_series_by_axis_extractor", PluginType.TRANSFORMER)
 def co_series_by_axis_extractor(wdf: DataFrame, gid: str,
                                 p: dict) -> DataFrame:
     """{<axis.output_field>: [...], <type>: [...] ...}

@@ -8,10 +8,14 @@ and validated params and return DataFrames / Column expressions.
 
 The pipeline does not look plugins up here: ``Pipeline._transform_group``,
 ``_widget_json`` and ``_run_widget`` dispatch a config's plugin names
-themselves.  The registry serves the ``plugins`` CLI listing, the deploy
-step's platform lookup (``deployers.run_deploy``) for platforms it does
-not handle itself, and name checks: tests assert that the reference's
-plugin names are registered.
+themselves.  Each relation plugin is registered on the loader in
+``operators/loaders.py`` that the pipeline runs, and each
+``class_object_*``, ``geospatial_extractor`` and
+``multi_column_extractor`` widget on its JSON shaper in ``refshapes.py``.
+The registry serves the ``plugins`` CLI listing, the deploy step's
+platform lookup (``deployers.run_deploy``) for platforms it does not
+handle itself, and name checks: tests assert that the reference's plugin
+names are registered.
 """
 
 from __future__ import annotations
@@ -89,6 +93,7 @@ def load_all() -> None:
         "niamoto_spark.exporters.html_site",
         "niamoto_spark.exporters.humboldt",
         "niamoto_spark.exporters.jsonl",
+        "niamoto_spark.refshapes",
         "niamoto_spark.widgets",
         "niamoto_spark.deployers",
     ):

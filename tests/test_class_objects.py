@@ -1,5 +1,7 @@
-"""EAV class_object transformer goldens (duplicate summing per
-class_objects/utils.py:14 is the load-bearing behavior)."""
+"""EAV class_object catalog helpers (duplicate summing per
+class_objects/utils.py:14 is the load-bearing behavior).  The
+``class_object_*`` widget plugins are tested through the transform in
+tests/test_transform_dialect.py."""
 
 import pandas as pd
 import pytest
@@ -25,11 +27,6 @@ def test_series_extractor_sums_duplicates(eav):
     assert got == [("10", 5.0), ("20", 7.0), ("30", 1.0)]  # 3+4 summed
 
 
-def test_field_aggregator_range(eav):
-    r = co.field_aggregator(eav, [], "dbh", mode="range").collect()[0]
-    assert (r["min_value"], r["max_value"]) == (1.0, 7.0)
-
-
 def test_categories_extractor_declared_order_and_zeros(eav):
     rows = co.categories_extractor(eav, [], "cover",
                                    ["forest", "mangrove", "out"]).collect()
@@ -49,31 +46,3 @@ def test_series_ratio_with_complement(eav):
                                       complement_mode="difference").collect()
     got = {r["class_name"]: r["ratio"] for r in rows}
     assert got == {"a": 0.5, "b": 0.75}  # 1 - sub/tot
-
-
-def test_series_matrix_scale_and_complement(spark):
-    eav = spark.createDataFrame(pd.DataFrame({
-        "class_object": ["s1", "s1", "s2", "s2"],
-        "class_name": ["100", "200", "100", "200"],
-        "class_value": [0.2, 0.4, 0.1, 0.3],
-    }))
-    rows = co.series_matrix_extractor(eav, [], ["s1", "s2"], scale=100.0,
-                                      complement=True).collect()
-    got = {r["axis_num"]: (r["s1"], r["s2"]) for r in rows}
-    assert got == {100.0: (80.0, 90.0), 200.0: (60.0, 70.0)}
-
-
-def test_categories_mapper(eav):
-    out = co.categories_mapper(eav, [], {
-        "structure": {"dbh": "DBH total", "cover": "Cover total"}}).collect()
-    got = {(r["out_group"], r["label"]): r["class_value"] for r in out}
-    assert got == {("structure", "DBH total"): 13.0,
-                   ("structure", "Cover total"): 100.0}
-
-
-def test_series_by_axis(eav):
-    rows = co.series_by_axis_extractor(
-        eav, [], {"sub": "Subset", "tot": "Total"}).collect()
-    assert {(r["series"], r["class_name"], r["class_value"]) for r in rows} == {
-        ("Subset", "a", 2.0), ("Subset", "b", 1.0),
-        ("Total", "a", 4.0), ("Total", "b", 4.0)}

@@ -257,20 +257,27 @@ def test_eav_stats_source_class_objects(project, spark):
         }],
         "widgets_data": {
             "top_families": {"plugin": "class_object_series_extractor",
-                             "params": {"source": "plot_stats",
-                                        "class_object": "top10_family"}},
+                             "params": {
+                                 "source": "plot_stats",
+                                 "class_object": "top10_family",
+                                 "size_field": {"input": "class_name",
+                                                "output": "tops"},
+                                 "value_field": {"input": "class_value",
+                                                 "output": "counts"}}},
             "fam_share": {"plugin": "class_object_binary_aggregator",
-                          "params": {"source": "plot_stats",
-                                     "class_object": "top10_family"}},
+                          "params": {"source": "plot_stats", "groups": [{
+                              "label": "families", "field": "top10_family",
+                              "classes": ["Araucariaceae", "Myrtaceae"]}]}},
         },
     }]
     out = pipe.run_transform(cfg)["plots"]
     rows = {r["id_plot"]: r for r in out.collect()}
-    tops1 = json.loads(rows[1]["top_families"])
-    assert [(t["class_name"], t["class_value"]) for t in tops1] == \
-        [("Araucariaceae", 10.0), ("Myrtaceae", 5.0), ("Sapotaceae", 2.0)]
-    share2 = {s["label"]: s["share"] for s in json.loads(rows[2]["fam_share"])}
-    assert share2["Araucariaceae"] == share2["Myrtaceae"]
+    # unsorted axis: the stats file's row order
+    assert json.loads(rows[1]["top_families"]) == {
+        "tops": ["Araucariaceae", "Myrtaceae", "Sapotaceae"],
+        "counts": [10.0, 5.0, 2.0]}
+    assert json.loads(rows[2]["fam_share"]) == {
+        "families": {"Araucariaceae": 7.0, "Myrtaceae": 7.0}}
 
 
 def test_boolean_and_scatter_adapters(project, spark):

@@ -27,6 +27,19 @@ def test_registry_resolves_reference_plugin_names():
     assert len(list_plugins(PluginType.TRANSFORMER)["transformer"]) >= 30
 
 
+def test_shaped_widgets_register_the_shaper_that_runs():
+    """These widget names resolve to the JSON shapers the pipeline
+    calls, not to the catalog's row-returning helpers."""
+    load_all()
+    names = [f"class_object_{n}" for n in (
+        "series_extractor", "field_aggregator", "categories_extractor",
+        "binary_aggregator", "categories_mapper", "series_ratio_aggregator",
+        "series_matrix_extractor", "series_by_axis_extractor")]
+    for name in names + ["geospatial_extractor", "multi_column_extractor"]:
+        fn = get_plugin(name, PluginType.TRANSFORMER)
+        assert fn.__module__ == "niamoto_spark.refshapes", name
+
+
 def test_entity_registry_roundtrip(tmp_path, spark, testdata_registry):
     reg = testdata_registry
     p = str(tmp_path / "registry.json")
@@ -209,6 +222,30 @@ def test_json_api_field_mapping_and_generators(tmp_path, spark):
     assert item["label"] == "Araucaria columnaris (Hook.)"
     assert item["url"] == "./detail/5.json"
     assert item["detail_url"] == "./detail/5.json"
+
+
+def test_json_api_target_field_generators(tmp_path, spark):
+    """The reference dialect's field mapping runs the same generators as
+    ours; only endpoint_url follows the dialect's own file layout."""
+    from niamoto_spark.exporters.json_api import export_json_api_target
+
+    df = spark.createDataFrame(pd.DataFrame({
+        "taxons_id": [7], "full_name": ["Araucaria columnaris (Hook.)"]}))
+    fields = ["taxons_id",
+              {"occ": {"generator": "unique_occurrence_id",
+                       "params": {"prefix": "x_"}}},
+              {"epithet": {"generator": "extract_specific_epithet"}},
+              {"url": {"generator": "endpoint_url",
+                       "params": {"base_path": "/v1"}}}]
+    export_json_api_target(df, "taxons", str(tmp_path), {},
+                           {"detail": {"fields": fields},
+                            "index": {"fields": fields}})
+    want = {"taxons_id": 7, "occ": "x_7", "epithet": "columnaris",
+            "url": "/v1/taxons/7.json"}
+    assert json.loads((tmp_path / "taxons" / "7.json").read_text()) == want
+    index = json.loads((tmp_path / "all_taxons.json").read_text())
+    assert index == {"taxons": [{**want, "detail_url": "/api/taxons/7.json"}],
+                     "total": 1}
 
 
 def test_json_api_dict_filters_and_structure(tmp_path, spark):

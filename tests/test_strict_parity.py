@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from niamoto_spark import refshapes as RS
-from niamoto_spark.exporters.json_api import _ref_map_fields
+from niamoto_spark.exporters.json_api import _map_fields
 
 
 @pytest.fixture()
@@ -60,6 +60,6 @@ def test_index_dsl_missing_source_strict_null():
     """The reference maps a misspelled source (id: taxon_id when
     the column is taxons_id) to null silently."""
     item = {"taxons_id": 7, "full_name": "x"}
-    out = _ref_map_fields(item, ["id: taxon_id"], group="taxons",
-                          pattern="{group}/{id}.json", base_id=7)
+    out = _map_fields(item, ["id: taxon_id"], "taxons_id",
+                      lambda p: "/api/taxons/7.json")
     assert out == {"id": None}
