@@ -20,6 +20,8 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from niamoto_spark.sources.sinks import read_table
+
 
 class EntityKind(str, enum.Enum):
     # Same three kinds as the reference (registry.py:16-30).
@@ -44,7 +46,6 @@ class Entity:
     format: str = "parquet"
     id_field: str = "id"
     links: list[EntityLink] = field(default_factory=list)
-    options: dict = field(default_factory=dict)
 
 
 class EntityRegistry:
@@ -69,15 +70,10 @@ class EntityRegistry:
 
     def load(self, spark: SparkSession, name: str) -> DataFrame:
         e = self.get(name)
-        reader = spark.read
-        if e.format == "parquet":
-            return reader.parquet(e.path)
-        if e.format == "csv":
-            opts = {"header": "true", "inferSchema": "true", **e.options}
-            return reader.options(**opts).csv(e.path)
-        if e.format == "json":
-            return reader.json(e.path)
-        raise ValueError(f"unsupported format {e.format!r} for entity {name}")
+        if e.format != "parquet":
+            raise ValueError(
+                f"unsupported format {e.format!r} for entity {name}")
+        return read_table(spark, e.path)
 
     # -- persistence ------------------------------------------------------
     def to_json(self) -> str:
@@ -89,7 +85,6 @@ class EntityRegistry:
                     "format": e.format,
                     "id_field": e.id_field,
                     "links": [vars(l) for l in e.links],
-                    "options": e.options,
                 }
                 for n, e in self._entities.items()
             },
@@ -113,7 +108,6 @@ class EntityRegistry:
                     format=spec.get("format", "parquet"),
                     id_field=spec.get("id_field", "id"),
                     links=[EntityLink(**l) for l in spec.get("links", [])],
-                    options=spec.get("options", {}),
                 )
             )
         return reg

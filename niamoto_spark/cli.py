@@ -62,9 +62,11 @@ def cmd_transform(args) -> int:
     # transform a second time
     import pyarrow.parquet as pq
 
+    from niamoto_spark.sources.sinks import data_files
+
     print(json.dumps({
         g: sum(pq.read_metadata(f).num_rows
-               for f in pq.ParquetDataset(pipe.group_table(g)).files)
+               for f in data_files(pipe.group_table(g)))
         for g in results}))
     return 0
 

@@ -177,25 +177,23 @@ def export_html_site(results: DataFrame, id_col: str, out_dir: str,
         page(os.path.join(detail_dir, f"{safe_filename(str(eid))}.html"),
              f"{group_name} {eid}", body, depth=1)
 
-    # persist across the TWO actions (detail render + index collect) so
-    # an expensive upstream transform DAG computes once, not twice
-    results = results.persist()
-    try:
-        for r in payload.toLocalIterator():
-            render_detail(r["__doc"])
+    # two passes, not persisted: the session's cache is keyed by plan, so
+    # a cached group-table read would also serve the export targets that
+    # read the same table concurrently, and their jobs would depend on
+    # thread timing
+    for r in payload.toLocalIterator():
+        render_detail(r["__doc"])
 
-        ids = []
-        index_rows = []
-        # streamed partition-at-a-time (not one big collect): only the
-        # narrow idx_cols projection ever reaches the driver, and never
-        # all partitions at once
-        for r in (results.select(*idx_cols).orderBy(id_col)
-                  .toLocalIterator()):
-            d = r.asDict()
-            ids.append(d[id_col])
-            index_rows.append({c: d.get(c) for c in idx_cols})
-    finally:
-        results.unpersist()
+    ids = []
+    index_rows = []
+    # streamed partition-at-a-time (not one big collect): only the
+    # narrow idx_cols projection ever reaches the driver, and never
+    # all partitions at once
+    for r in (results.select(*idx_cols).orderBy(id_col)
+              .toLocalIterator()):
+        d = r.asDict()
+        ids.append(d[id_col])
+        index_rows.append({c: d.get(c) for c in idx_cols})
 
     # __slug rides beside the escaped cells so the detail link
     # targets the sanitized FILE name while displaying the raw id

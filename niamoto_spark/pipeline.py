@@ -42,7 +42,7 @@ from niamoto_spark.operators import extraction as ex_ops
 from niamoto_spark.operators import loaders as loader_ops
 from niamoto_spark.operators.chains import empty_chain_json, transform_chain
 from niamoto_spark.sources.files import read_csv_auto
-from niamoto_spark.sources.sinks import overwrite_table
+from niamoto_spark.sources.sinks import overwrite_table, read_table
 
 
 def _kernel_frame(k, frames: dict[str, DataFrame], gid: str,
@@ -280,7 +280,7 @@ class Pipeline:
             # column is the only shuffle-safe carrier for it
             return read_csv_auto(self.spark, path).withColumn(
                 SRC_ORDER, F.monotonically_increasing_id())
-        return self.spark.read.parquet(path)
+        return read_table(self.spark, path)
 
     def _transform_group(self, g: TransformGroupConfig,
                          mode: str = "replace",
@@ -468,6 +468,10 @@ class Pipeline:
         # class_object family + geospatial: shape straight from the raw
         # tagged frame (the reference plugins receive the loaded stats
         # frame whole and filter internally)
+        if df is None and (plugin.startswith("class_object_") or plugin in (
+                "geospatial_extractor", "multi_column_extractor")):
+            raise ValueError(
+                f"source {src_name!r} is not loaded for this group")
         if plugin == "class_object_series_extractor":
             return RS.co_series_extractor(df, gid, params, grouping), None
         if plugin == "class_object_field_aggregator":
@@ -657,11 +661,13 @@ class Pipeline:
                 max_value=params.get("max_value"))
         if plugin == "time_series_analysis":
             fields = params["fields"]
-            if isinstance(fields, dict) and fields and \
-                    all(isinstance(v, str) for v in fields.values()):
-                # reference dialect: {output_label: source_column}
-                fields = {k: (F.col(v).cast("double") > 0)
-                          for k, v in fields.items()}
+            if not (isinstance(fields, dict) and fields and all(
+                    isinstance(v, str) for v in fields.values())):
+                raise ValueError(
+                    "time_series_analysis fields must map each output "
+                    f"label to a source column, got {fields!r}")
+            fields = {k: (F.col(v).cast("double") > 0)
+                      for k, v in fields.items()}
             # sparse months + exact python rounding: the reference fills
             # absent months with INT zeros ([0]*12) and rounds presence
             # percentages with round() — the refshapes shaper needs the
@@ -764,7 +770,7 @@ class Pipeline:
             path = self.group_table(group)
             if not os.path.exists(path):
                 continue
-            df = self.spark.read.parquet(path)
+            df = read_table(self.spark, path)
             gid = self.registry.get(group).id_field \
                 if group in self.registry.names() else df.columns[0]
             # the reference group table's id column is {group}_id
@@ -840,11 +846,11 @@ class Pipeline:
         kind = target.get("exporter", "json_api")
         params = target.get("params", {})
         if kind == "json_api":
-            results = self.spark.read.parquet(self.group_table(group))
+            results = read_table(self.spark, self.group_table(group))
             out_path = os.path.join(out_dir, group)
             manifest = export_json_api(results, gid, out_path, **params)
         elif kind == "html":
-            results = self.spark.read.parquet(self.group_table(group))
+            results = read_table(self.spark, self.group_table(group))
             out_path = os.path.join(out_dir, f"{group}_html")
             manifest = export_html_site(
                 results, gid, out_path, group_name=group, **params)

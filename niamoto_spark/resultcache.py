@@ -29,6 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from niamoto_spark.sources import manifest as M
+from niamoto_spark.sources.sinks import read_table
 
 
 def _cache_key(query_key: str, deps: "list[str]") -> str:
@@ -51,7 +52,7 @@ def cached_query(spark: SparkSession, cache_root: str, query_key: str,
     key = _cache_key(query_key, deps)
     final = os.path.join(cache_root, key)
     if os.path.isdir(final):
-        return spark.read.parquet(final), True
+        return read_table(spark, final), True
     df = build()
     staging = os.path.join(cache_root, f".stage-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(staging)
@@ -59,4 +60,4 @@ def cached_query(spark: SparkSession, cache_root: str, query_key: str,
         os.rename(staging, final)
     except OSError:
         shutil.rmtree(staging, ignore_errors=True)  # lost the race
-    return spark.read.parquet(final), False
+    return read_table(spark, final), False

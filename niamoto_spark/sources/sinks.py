@@ -9,15 +9,62 @@
   Without Delta the plain-Spark equivalent is union + row_number-dedupe
   (new rows win) + overwrite; with a Delta-enabled session the same call
   becomes MERGE INTO.
+- ``read_table``: reads a table back with the Spark schema its own footer
+  records, so the read starts no schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# the footer key under which Spark's parquet writer stores the written
+# schema; Spark's own schema inference prefers it to the parquet schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def data_files(path: str) -> list[str] | None:
+    """The data files of the parquet table at ``path`` in name order,
+    hidden as Spark hides them (a name starting with '.', or with '_'
+    and holding no '='); a single file is its own table.  None when
+    Spark has to discover the files itself: the table has
+    subdirectories (``k=v/`` partitions) or ``path`` is not a local file
+    or directory."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for e in sorted(os.scandir(path), key=lambda e: e.name):
+        if e.name.startswith(".") or \
+                (e.name.startswith("_") and "=" not in e.name):
+            continue
+        if e.is_dir():
+            return None
+        files.append(e.path)
+    return files
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job: an
+    unpartitioned table whose first data file's footer carries Spark's
+    schema is read with that schema, the one inference would return.
+    Any other table (partitioned, written by another writer, holding no
+    data file, or missing) is read by inference."""
+    import pyarrow.parquet as pq
+
+    files = data_files(path)
+    if files:
+        meta = pq.read_metadata(files[0]).metadata or {}
+        if _SPARK_SCHEMA_KEY in meta:
+            schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+            return spark.read.schema(schema).parquet(path)
+    return spark.read.parquet(path)
 
 
 def _side(path: str, suffix: str) -> str:
@@ -67,7 +114,7 @@ def upsert_table(spark: SparkSession, updates: DataFrame, path: str,
     """Upsert ``updates`` into the parquet table at ``path`` by ``key``:
     incoming rows replace existing rows with the same key."""
     if os.path.exists(path):
-        existing = spark.read.parquet(path)
+        existing = read_table(spark, path)
         tagged = updates.withColumn("__pri", F.lit(0)) \
             .unionByName(existing.withColumn("__pri", F.lit(1)))
         w = Window.partitionBy(key).orderBy("__pri")

@@ -299,3 +299,33 @@ def test_chain_source_naming_frameless_step_raises(project):
     (warning,) = pipe.warnings
     assert warning.startswith("widget plots.chained (transform_chain): ")
     assert "'reader'" in warning and "'shares'" in warning
+
+
+@pytest.mark.parametrize("plugin, params, source", [
+    ("class_object_binary_aggregator",
+     {**CLASS_OBJECTS["binary"][1], "source": "plot_statz"}, "'plot_statz'"),
+    ("multi_column_extractor", {"columns": ["class_value"]}, "None"),
+])
+def test_widget_names_a_missing_source(project, plugin, params, source):
+    """A misspelt or omitted ``source`` fails the widget with the
+    source's name, not with the shaper's attribute error on None."""
+    pipe, base = project
+    _transform(pipe, base, [STATS_SOURCE],
+               {"w": {"plugin": plugin, "params": params}})
+    assert pipe.warnings == [
+        f"widget plots.w ({plugin}): "
+        f"source {source} is not loaded for this group"]
+
+
+def test_time_series_fields_must_be_a_label_mapping(project):
+    """time_series_analysis takes the reference's ``{label: column}``
+    fields only; a list of columns fails the widget."""
+    pipe, base = project
+    _transform(pipe, base, [STATS_SOURCE], {"w": {
+        "plugin": "time_series_analysis",
+        "params": {"source": "plot_stats", "fields": ["class_value"],
+                   "time_field": "class_name"}}})
+    (warning,) = pipe.warnings
+    assert warning.startswith(
+        "widget plots.w (time_series_analysis): time_series_analysis "
+        "fields must map each output label to a source column")
