@@ -15,6 +15,8 @@ import shutil
 import zipfile
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from niamoto_spark.registry import PluginType, register
 
@@ -39,6 +41,11 @@ def export_dwc_archive(occurrences: DataFrame, out_path: str) -> dict:
     """Write a DwC-A zip from an already-projected occurrence DataFrame
     (columns = DwC terms; first column is the record id)."""
     staging = out_path + ".__tsv__"
+    # CSV holds no VARIANT: a term read from JSON is written as its text
+    occurrences = occurrences.select(*[
+        F.col(f.name).cast("string").alias(f.name)
+        if isinstance(f.dataType, T.VariantType) else F.col(f.name)
+        for f in occurrences.schema.fields])
     # escape='"' makes embedded quotes come out DOUBLED (the DwC text spec's
     # only quoting model) instead of Spark's default backslash-escaping,
     # matching the fieldsEnclosedBy declaration below

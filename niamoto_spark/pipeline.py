@@ -465,13 +465,14 @@ class Pipeline:
             # reference _load_additional_source: whole-table load
             df = self.registry.load(self.spark, src_name)
 
+        # shape_processor falls back to the group's own frame; every other
+        # widget reads its source
+        if df is None and plugin != "shape_processor":
+            raise ValueError(
+                f"source {src_name!r} is not loaded for this group")
         # class_object family + geospatial: shape straight from the raw
         # tagged frame (the reference plugins receive the loaded stats
         # frame whole and filter internally)
-        if df is None and (plugin.startswith("class_object_") or plugin in (
-                "geospatial_extractor", "multi_column_extractor")):
-            raise ValueError(
-                f"source {src_name!r} is not loaded for this group")
         if plugin == "class_object_series_extractor":
             return RS.co_series_extractor(df, gid, params, grouping), None
         if plugin == "class_object_field_aggregator":
@@ -506,16 +507,14 @@ class Pipeline:
             # would double-cast everything first (r13 variant find)
             run_params.pop("max_value", None)
             run_params.pop("precision", None)
-        wdf = self._run_widget(plugin, run_params, tagged, gid)
+        wdf = self._run_widget(plugin, run_params, df, gid)
         if plugin == "top_ranking":
             jdf = RS.top_ranking(wdf, gid, params)
         elif plugin == "time_series_analysis":
             jdf = RS.time_series_analysis(wdf, gid, params)
         elif plugin == "direct_attribute":
             field = params["field"]
-            is_float = bool(df is not None and field in df.columns and
-                            dict(df.dtypes).get(field) in
-                            ("double", "float"))
+            is_float = dict(df.dtypes).get(field) in ("double", "float")
             jdf = RS.direct_attribute(wdf, gid, params, is_float)
         else:
             jdf = self._pack_json(wdf, gid)
@@ -627,12 +626,10 @@ class Pipeline:
         return base.mapInPandas(run,
                                 schema=f"{gid} {gid_type}, __json string")
 
-    def _run_widget(self, plugin: str, params: dict, tagged: dict,
+    def _run_widget(self, plugin: str, params: dict, df: DataFrame,
                     gid: str) -> DataFrame:
-        """Adapter: reference YAML param names -> operator signatures."""
-        src_name = params.pop("source", None)
-        df = tagged.get(src_name) if src_name else None
-
+        """Adapter: reference YAML param names -> operator signatures, over
+        the widget's resolved source frame ``df``."""
         if plugin == "top_ranking":
             name_join = None
             field = params["field"]

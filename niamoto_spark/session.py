@@ -90,11 +90,14 @@ def _java() -> str | None:
     return os.path.realpath(java) if java else None
 
 
-def archive_key(java: str, jars_dir: str) -> str:
-    """Key of the CDS archive: the ``java`` binary and the name, size and
-    mtime of every jar on Spark's classpath.  An upgrade of either makes
-    a new key, so a stale archive is never handed to the JVM."""
-    h = hashlib.sha256()
+def archive_key(java: str, jars_dir: str, conf_dir: str) -> str:
+    """Key of the CDS archive: the ``java`` binary, the name, size and
+    mtime of every jar on Spark's classpath, and the path of the empty
+    conf directory that leads that classpath.  An upgrade of either makes
+    a new key, so a stale archive is never handed to the JVM; nor is an
+    archive copied from another cache, whose classpath the JVM would
+    reject without a word."""
+    h = hashlib.sha256(f"{conf_dir}\n".encode())
     for path in [java] + sorted(glob.glob(os.path.join(jars_dir, "*.jar"))):
         st = os.stat(path)
         h.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
@@ -124,10 +127,10 @@ def cds_launch(conf: dict[str, str]) -> CdsLaunch | None:
         java = _java()
         if java is None:
             return None
-        key = archive_key(java, os.path.join(spark_home, "jars"))
         cache = os.path.join(os.environ.get("XDG_CACHE_HOME")
                              or os.path.expanduser("~/.cache"), "niamoto_spark")
         cds_dir, empty = os.path.join(cache, "cds"), os.path.join(cache, "conf")
+        key = archive_key(java, os.path.join(spark_home, "jars"), empty)
         os.makedirs(cds_dir, exist_ok=True)
         os.makedirs(empty, exist_ok=True)
         if os.listdir(empty) or not os.access(cds_dir, os.W_OK):

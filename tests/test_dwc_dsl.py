@@ -170,20 +170,6 @@ def test_unique_id_fallback_survives_missing_taxon(spark, taxon):
     assert ids == ["niaocc_10_0", "niaocc_unknown_0"]
 
 
-def test_reference_dialect_unknown_generator_raises():
-    """A misspelt generator in the reference-dialect mapping fails and
-    names itself, instead of dropping its term from every record."""
-    from niamoto_spark.exporters.dwc_json import map_occurrence
-
-    mapping = {"occurrenceStatus": {"generator": "map_occurrence_status"},
-               "decimalLatitude": {"generator": "format_cordinates"}}
-    with pytest.raises(ValueError, match="'format_cordinates'"):
-        map_occurrence({"id": 1}, {}, 1, 0, mapping)
-    del mapping["decimalLatitude"]
-    assert map_occurrence({"id": 1}, {}, 1, 0, mapping) == {
-        "occurrenceStatus": "present"}
-
-
 # --- the reference-dialect target: exporters/dwc_json.py -----------------
 
 _OCC_SCHEMA = ("id long, id_taxonref long, date string, month int, "
@@ -341,3 +327,110 @@ def test_dwc_occurrence_target_golden(spark, tmp_path):
         {"taxons_id": 2, "name": "Psychotria nigra var. minor",
          "url": "/api/taxons/2.json", "detail_url": "/api/taxons/2.json"},
     ], "total": 2}
+
+
+def test_reference_dialect_unknown_generator_raises(spark, tmp_path):
+    """A misspelt generator in the reference-dialect mapping fails and
+    names itself, instead of dropping its term from every record."""
+    import json
+
+    from niamoto_spark.exporters.dwc_json import export_dwc_occurrence_target
+
+    taxa = spark.createDataFrame([(1, "Agathis ovata")],
+                                 "taxons_id long, full_name string")
+    occurrences = spark.createDataFrame([(1, 1)], "id long, id_taxonref long")
+    mapping = {"occurrenceStatus": {"generator": "map_occurrence_status"},
+               "decimalLatitude": {"generator": "format_cordinates"}}
+
+    def export():
+        return export_dwc_occurrence_target(
+            taxa, occurrences, "taxons", str(tmp_path), {},
+            {"transformer_params": {"mapping": mapping}})
+
+    with pytest.raises(ValueError, match="'format_cordinates'"):
+        export()
+    del mapping["decimalLatitude"]
+    export()
+    assert json.loads((tmp_path / "taxons" / "1.json").read_text()) == [
+        {"occurrenceStatus": "present"}]
+
+
+# one mapping over all 18 generators, @source, @taxon (a column, a key of
+# a JSON-object column, a path into a JSON value) and a literal
+_PARITY_MAPPING = {
+    **_DWC_MAPPING,
+    "scientificName": "@taxon.full_name",
+    "taxonRank": "@taxon.rank",
+    "organismRemarks": "@taxon.metadata.dims",
+    "sampleSizeValue": "@taxon.metadata.dims.h",
+    "vernacularName": "@taxon.names",
+    "associatedMedia": {"generator": "format_media_urls",
+                        "params": {"source_list": "@taxon.metadata.images"}},
+    "individualCount": {"generator": "count_occurrences"},
+    "modified": {"generator": "current_date"},
+    "language": "en",
+}
+
+
+def test_both_dialects_map_an_occurrence_alike(spark, tmp_path):
+    """The archive path (``to_dwc_occurrence`` with the items as its
+    taxon side) and the reference target give each occurrence the same
+    record, null terms dropped; a path into a JSON value keeps its JSON
+    type."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from niamoto_spark.exporters.dwc_json import export_dwc_occurrence_target
+
+    assert {spec["generator"] for spec in _PARITY_MAPPING.values()
+            if isinstance(spec, dict)} >= {
+        "unique_occurrence_id", "unique_event_id", "unique_identification_id",
+        "extract_specific_epithet", "extract_infraspecific_epithet",
+        "format_event_date", "extract_year", "extract_month", "extract_day",
+        "format_coordinates", "map_establishment_means",
+        "map_occurrence_status", "format_media_urls", "format_measurements",
+        "format_phenology", "format_habitat", "count_occurrences",
+        "current_date"}
+    items = spark.createDataFrame(
+        [(101, "Araucaria columnaris",
+          '{"endemic": true, "images": [{"url": "http://a/1.jpg"}, '
+          '{"url": "http://a/2.jpg"}], "dims": {"h": 12.5, "w": [1, 2]}}',
+          '{"rank": "species", "names": ["kaori", "pin"]}'),
+         (102, "Psychotria nigra var. minor",
+          '{"endemic": false, "images": ["http://b/1.png"], "rank": "x"}',
+          '{"rank": "variety", "names": null}')],
+        "taxons_id long, full_name string, metadata string, "
+        "general_info string")
+    occurrences = spark.createDataFrame(_OCCURRENCES, _OCC_SCHEMA)
+
+    archive = to_dwc_occurrence(
+        occurrences, _PARITY_MAPPING, taxon=items,
+        occ_taxon_col="id_taxonref", taxon_id_col="taxons_id",
+        order_col="id").where(F.col("scientificName").isNotNull())
+    expected = [json.loads(r[0]) for r in archive.select(F.to_json(
+        F.struct(*[F.col(c) for c in _PARITY_MAPPING]))).collect()]
+
+    # the reference target without a taxonomy hop: occurrences link to
+    # the items' own ids, as on the archive side
+    export_dwc_occurrence_target(
+        items, occurrences, "taxons", str(tmp_path), {},
+        {"transformer_params": {"mapping": _PARITY_MAPPING}})
+    got = [rec for rel in ("taxons/101.json", "taxons/102.json")
+           for rec in json.loads((tmp_path / rel).read_text())]
+
+    by_id = {r["occurrenceID"]: r for r in expected}
+    assert len(by_id) == 3
+    assert {r["occurrenceID"]: r for r in got} == by_id
+    first = by_id["occ_1"]
+    assert first["taxonRank"] == "species"                 # a widget key
+    assert first["organismRemarks"] == {"h": 12.5, "w": [1, 2]}
+    assert first["sampleSizeValue"] == 12.5
+    assert first["vernacularName"] == ["kaori", "pin"]
+    assert first["associatedMedia"] == "http://a/1.jpg | http://a/2.jpg"
+    assert first["individualCount"] == 2 and first["language"] == "en"
+    third = by_id["occ_3"]
+    # a JSON null is a dropped term; the later column's key wins
+    assert "vernacularName" not in third and third["taxonRank"] == "variety"
+    assert third["associatedMedia"] == "http://b/1.png"
+    assert third["establishmentMeans"] == "introduced"

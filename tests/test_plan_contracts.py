@@ -485,3 +485,48 @@ def test_table_handle_memo_invalidates_on_nested_partition_rewrite(
     h2 = _t(spark, str(tmp_path / "part"), "region")
     assert h2 is not h1, "rewritten nested part must invalidate the handle"
     assert h2.count() == 4, "stale listing served after nested rewrite"
+
+
+_PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
+
+
+def _executed_python_nodes(df) -> list[str]:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in _PYTHON_NODES if n in plan]
+
+
+def test_dwc_mapping_runs_no_python(spark, tmp_path):
+    """Both export dialects map occurrences to Darwin Core with JVM
+    expressions only: the ``dwca`` target of examples/config and the
+    reference target's per-taxon records, over every generator."""
+    import os
+
+    import yaml
+    from test_dwc_dsl import _OCC_SCHEMA, _OCCURRENCES, _PARITY_MAPPING
+
+    from niamoto_spark.exporters.dwc import to_dwc_occurrence
+    from niamoto_spark.exporters.dwc_json import dwc_records
+    from niamoto_spark.pipeline import Pipeline
+
+    config = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "examples", "config")
+    with open(os.path.join(config, "import.yml")) as f:
+        import_cfg = yaml.safe_load(f)
+    with open(os.path.join(config, "export.yml")) as f:
+        (dwca,) = [t for t in yaml.safe_load(f)["targets"]
+                   if t.get("exporter") == "dwc_archive"]
+    pipe = Pipeline(spark, warehouse=str(tmp_path / "wh"))
+    pipe.run_import(import_cfg, base_dir=config)
+    occurrences = pipe.registry.load(spark, dwca["source"])
+    assert _executed_python_nodes(
+        to_dwc_occurrence(occurrences, dwca["params"]["mapping"])) == []
+
+    items = spark.createDataFrame(
+        [(101, "Araucaria columnaris", '{"endemic": true}', '{"rank": "sp"}')],
+        "taxons_id long, full_name string, metadata string, "
+        "general_info string")
+    records = dwc_records(
+        items, spark.createDataFrame(_OCCURRENCES, _OCC_SCHEMA), "taxons",
+        {"transformer_params": {"mapping": _PARITY_MAPPING}})
+    assert _executed_python_nodes(records) == []

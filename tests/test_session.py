@@ -50,7 +50,8 @@ def fake_home(tmp_path, monkeypatch):
 def test_templates_only_conf_dir_gets_an_archive(fake_home, tmp_path):
     cds = session.cds_launch({})
     cds_dir = tmp_path / "cache" / "niamoto_spark" / "cds"
-    key = session.archive_key(session._java(), str(fake_home / "jars"))
+    key = session.archive_key(session._java(), str(fake_home / "jars"),
+                              cds.conf_dir)
     assert cds.archive == str(cds_dir / f"{key}.jsa")
     assert cds.dump == str(cds_dir / f"{key}.{os.getpid()}.tmp")
     assert cds.java_opts == f"-XX:ArchiveClassesAtExit={cds.dump} -Xlog:cds*=off"
@@ -86,17 +87,42 @@ def test_callers_java_options_are_kept(fake_home):
     assert cds.java_opts.startswith("-Dniamoto.x=1 -XX:+UseG1GC -XX:ArchiveClassesAtExit=")
 
 
-def test_key_follows_every_jar_size_and_mtime(fake_home):
-    java, jars = session._java(), str(fake_home / "jars")
-    key = session.archive_key(java, jars)
-    assert session.archive_key(java, jars) == key
+def test_key_follows_every_jar_size_and_mtime(fake_home, tmp_path):
+    java, jars, conf = session._java(), str(fake_home / "jars"), str(tmp_path)
+    key = session.archive_key(java, jars, conf)
+    assert session.archive_key(java, jars, conf) == key
     jar = fake_home / "jars" / "b.jar"
     jar.write_bytes(b"jar, rebuilt")
-    sized = session.archive_key(java, jars)
+    sized = session.archive_key(java, jars, conf)
     assert sized != key
     st = jar.stat()
     os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    assert session.archive_key(java, jars) not in (key, sized)
+    assert session.archive_key(java, jars, conf) not in (key, sized)
+
+
+def test_archive_copied_to_another_cache_is_not_mapped(fake_home, tmp_path,
+                                                       monkeypatch):
+    """The empty conf dir leads the JVM's classpath, so an archive dumped
+    under one cache does not fit a launch from another; the JVM would
+    drop it without a word.  Its copy must not be passed as the shared
+    archive: the second cache dumps its own."""
+    monkeypatch.setattr(session, "_find_spark_home", lambda: str(fake_home))
+    java = tmp_path / "java"
+    java.write_bytes(b"")
+    monkeypatch.setattr(session, "_java", lambda: str(java))
+    first = session.cds_launch({})
+    open(first.archive, "wb").close()
+    assert "SharedArchiveFile" in session.cds_launch({}).java_opts
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "other"))
+    cds_dir = tmp_path / "other" / "niamoto_spark" / "cds"
+    cds_dir.mkdir(parents=True)
+    (cds_dir / os.path.basename(first.archive)).write_bytes(b"")
+    second = session.cds_launch({})
+    assert second.conf_dir != first.conf_dir
+    assert second.archive != str(cds_dir / os.path.basename(first.archive))
+    assert "SharedArchiveFile" not in second.java_opts
+    assert second.java_opts.startswith("-XX:ArchiveClassesAtExit=")
 
 
 def test_unwritable_cache_launches_without_an_archive(fake_home, tmp_path,

@@ -305,13 +305,22 @@ def test_chain_source_naming_frameless_step_raises(project):
     ("class_object_binary_aggregator",
      {**CLASS_OBJECTS["binary"][1], "source": "plot_statz"}, "'plot_statz'"),
     ("multi_column_extractor", {"columns": ["class_value"]}, "None"),
+    ("top_ranking", {"source": "occurrencez", "field": "class_name"},
+     "'occurrencez'"),
+    ("direct_attribute", {"field": "class_value"}, "None"),
+    # a registry entity that no source of the group tags loads whole
+    ("top_ranking", {"source": "plots", "field": "locality"}, None),
 ])
 def test_widget_names_a_missing_source(project, plugin, params, source):
     """A misspelt or omitted ``source`` fails the widget with the
     source's name, not with the shaper's attribute error on None."""
     pipe, base = project
-    _transform(pipe, base, [STATS_SOURCE],
-               {"w": {"plugin": plugin, "params": params}})
+    rows = _transform(pipe, base, [STATS_SOURCE],
+                      {"w": {"plugin": plugin, "params": params}})
+    if source is None:
+        assert pipe.warnings == []
+        assert all(row["w"] is not None for row in rows.values())
+        return
     assert pipe.warnings == [
         f"widget plots.w ({plugin}): "
         f"source {source} is not loaded for this group"]
