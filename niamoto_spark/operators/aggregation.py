@@ -4,6 +4,10 @@ Reference semantics ported set-oriented; citations in each docstring point at
 the reference implementation whose behavior (rounding, empty-input shape,
 label fallbacks) is preserved.
 
+The widget plugins of the same names are the kernels in
+``niamoto_spark/refshapes.py``; these return rows for the catalog
+queries.
+
 Group convention: every operator takes ``group_cols`` (list of column names).
 Passing ``[]`` computes one global row — internally a constant group that
 Catalyst folds into a plain aggregate (no shuffle at all with partial
@@ -17,7 +21,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from niamoto_spark.functions import py_round2
 from niamoto_spark.registry import PluginType, register
 
 _GROUP_SENTINEL = "_all"
@@ -41,24 +44,10 @@ def _literal_rows(spark, rows: list[tuple], struct: str) -> DataFrame:
     return spark.range(1).select(F.inline(arr.cast(f"array<{struct}>")))
 
 
-@register("statistical_summary", PluginType.TRANSFORMER)
 def statistical_summary(df: DataFrame, group_cols: Sequence[str],
-                        field: str, stats: Sequence[str] | None = None,
-                        units: str | None = None,
-                        max_value: float | None = None,
-                        median: str = "exact") -> DataFrame:
-    """min/mean/max/median/std of a numeric field, rounded to 2dp
+                        field: str) -> DataFrame:
+    """min/mean/max/median/std/count of a numeric field, rounded to 2dp
     (reference: transformers/aggregation/statistical_summary.py:152-233).
-    ``stats`` selects a subset (the reference's YAML accepts e.g.
-    ``stats: ["max"]``); ``units`` adds a constant metadata column.
-
-    ``max_value`` is DISPLAY metadata, not a clip: the reference computes
-    every statistic over the raw data and only emits
-    ``max_value = max(round(data_max, 2), configured)``
-    (statistical_summary.py:221-228).  The r13 config-variant
-    differential caught the previous clipping behavior — invisible on
-    configs whose cap exceeds the data range, wrong the moment a user
-    lowers the cap below it.
 
     Parity notes (SURVEY §7.3):
     - std is sample std (pandas ddof=1) == Spark ``stddev_samp``.
@@ -66,59 +55,31 @@ def statistical_summary(df: DataFrame, group_cols: Sequence[str],
       NOT percentile_approx.
     Scale: single hash aggregate with map-side partial aggregation; the
     exact median uses Spark's sort-based percentile which is the one
-    genuinely shuffle-heavy piece.  ``median='approx'`` swaps it for
-    ``approx_percentile`` (mergeable t-digest-style sketch, stays inside
-    the same partial aggregate — the 100 TB operational lever).  NOT
-    reference parity: the reference's semantics are the exact
-    interpolated median, so the oracle lanes and the refdiff grid keep
-    the default.
+    genuinely shuffle-heavy piece.
     """
-    if median not in ("exact", "approx"):
-        raise ValueError(f"unknown median mode {median!r}")
     c = F.col(field).cast("double")
-    m = F.median(c) if median == "exact" else F.percentile_approx(c, 0.5)
-    all_aggs = {
-        "min": F.round(F.min(c), 2).alias("min"),
-        "mean": F.round(F.avg(c), 2).alias("mean"),
-        "max": F.round(F.max(c), 2).alias("max"),
-        # exact interpolated median hits .xx5 midpoints on 2dp data; double
-        # rounding (4dp->2dp) keeps it stable across engines (see q51)
-        "median": F.round(F.round(m, 4), 2).alias("median"),
-        "std": F.round(F.stddev_samp(c), 2).alias("std"),
-        "count": F.count(c).alias("count"),
-    }
-    selected = list(stats) if stats else list(all_aggs)
-    unknown = set(selected) - set(all_aggs)
-    if unknown:
-        raise ValueError(f"unknown stats {sorted(unknown)}")
-    aggs = [all_aggs[s] for s in selected]
-    if max_value is not None:
-        # hidden data-max rides the same hash aggregate; greatest()
-        # skips the NULL (all-null group) and falls back to the
-        # configured value, matching the reference's empty-series branch
-        aggs.append(F.round(F.max(c), 2).alias("__data_max"))
-    out = _grouped(df, group_cols).agg(*aggs)
-    if max_value is not None:
-        out = out.withColumn(
-            "max_value",
-            F.greatest(F.col("__data_max"), F.lit(float(max_value)))
-        ).drop("__data_max")
-    if units is not None:
-        out = out.withColumn("units", F.lit(units))
+    out = _grouped(df, group_cols).agg(
+        F.round(F.min(c), 2).alias("min"),
+        F.round(F.avg(c), 2).alias("mean"),
+        F.round(F.max(c), 2).alias("max"),
+        # exact interpolated median hits .xx5 midpoints on 2dp data;
+        # double rounding (4dp->2dp) keeps it stable across engines (see
+        # q51)
+        F.round(F.round(F.median(c), 4), 2).alias("median"),
+        F.round(F.stddev_samp(c), 2).alias("std"),
+        F.count(c).alias("count"))
     return _strip_sentinel(out, group_cols)
 
 
-@register("binned_distribution", PluginType.TRANSFORMER)
 def binned_distribution(df: DataFrame, group_cols: Sequence[str], field: str,
-                        edges: Sequence[float],
-                        labels: Sequence[str] | None = None,
-                        include_percentages: bool = False) -> DataFrame:
+                        edges: Sequence[float]) -> DataFrame:
     """Histogram over explicit ascending bin edges with np.histogram
     semantics — every bin is [lo, hi) except the LAST which is [lo, hi]
     (reference: transformers/distribution/binned_distribution.py:196-251,
-    np.histogram call :228).  Empty bins are emitted with count 0.
+    np.histogram call :228).  Empty bins are emitted with count 0; each
+    bin is labelled ``lo-hi``.
 
-    Output: group_cols + (bin_index, bin_label, count [, pct]).
+    Output: group_cols + (bin_index, bin_label, count).
     Scale: one CASE-ladder projection (codegen) + one hash aggregate; the
     dense bin frame is a broadcast join against a literal DataFrame of
     len(edges)-1 rows.
@@ -127,8 +88,7 @@ def binned_distribution(df: DataFrame, group_cols: Sequence[str], field: str,
 
     spark = df.sparkSession
     n = len(edges) - 1
-    if labels is None:
-        labels = [f"{edges[i]:g}-{edges[i+1]:g}" for i in range(n)]
+    labels = [f"{edges[i]:g}-{edges[i+1]:g}" for i in range(n)]
     c = F.col(field).cast("double")
     binned = df.select(*group_cols, bin_index(c, edges).alias("bin_index")) \
                .where(F.col("bin_index").isNotNull())
@@ -144,40 +104,26 @@ def binned_distribution(df: DataFrame, group_cols: Sequence[str], field: str,
     else:
         out = bins.join(counts.drop(_GROUP_SENTINEL), ["bin_index"], "left")
     out = out.withColumn("count", F.coalesce(F.col("count"), F.lit(0)))
-    if include_percentages:
-        w = Window.partitionBy(*group_cols) if group_cols else Window.partitionBy()
-        total = F.sum("count").over(w)
-        out = out.withColumn(
-            "pct",
-            F.when(total > 0, F.round(F.col("count") * 100.0 / total, 2))
-             .otherwise(F.lit(0.0)))
-    return out.select(*group_cols, "bin_index", "bin_label", "count",
-                      *(["pct"] if include_percentages else []))
+    return out.select(*group_cols, "bin_index", "bin_label", "count")
 
 
-@register("categorical_distribution", PluginType.TRANSFORMER)
 def categorical_distribution(df: DataFrame, group_cols: Sequence[str],
-                             field: str,
-                             categories: Sequence | None = None,
+                             field: str, categories: Sequence,
                              include_percentages: bool = False) -> DataFrame:
     """value_counts constrained to a declared category list; categories
-    absent from the data get count 0; values outside the list are dropped;
-    default category list = sorted distinct values (reference:
-    transformers/distribution/categorical_distribution.py:161-252).
+    absent from the data get count 0; values outside the list are dropped
+    (reference: transformers/distribution/categorical_distribution.py:
+    161-252).
 
     Output: group_cols + (category, count [, pct]).
     """
     spark = df.sparkSession
-    c = F.col(field).cast("string")
-    filtered = df.select(*group_cols, c.alias("category")) \
-                 .where(F.col("category").isNotNull())
-    if categories is not None:
-        cats = [str(x) for x in categories]
-        filtered = filtered.where(F.col("category").isin(cats))
-        cat_df = _literal_rows(spark, [(x,) for x in cats],
-                               "struct<category:string>")
-    else:
-        cat_df = filtered.select("category").distinct()
+    cats = [str(x) for x in categories]
+    filtered = df.select(*group_cols,
+                         F.col(field).cast("string").alias("category")) \
+                 .where(F.col("category").isin(cats))
+    cat_df = _literal_rows(spark, [(x,) for x in cats],
+                           "struct<category:string>")
     counts = _grouped(filtered, list(group_cols) + ["category"]).agg(
         F.count(F.lit(1)).alias("count"))
     if group_cols:
@@ -197,17 +143,14 @@ def categorical_distribution(df: DataFrame, group_cols: Sequence[str],
                       *(["pct"] if include_percentages else []))
 
 
-@register("binary_counter", PluginType.TRANSFORMER)
 def binary_counter(df: DataFrame, group_cols: Sequence[str], field: str,
                    true_label: str = "oui",
-                   false_label: str = "non",
-                   include_percentages: bool = False) -> DataFrame:
+                   false_label: str = "non") -> DataFrame:
     """Counts of strictly-1 and strictly-0 values (bools coerced); anything
     else (NULL, 2, strings) ignored (reference:
     transformers/aggregation/binary_counter.py:136-202).
 
-    Output: group_cols + (true_count, false_count, true_label, false_label
-    [, true_pct, false_pct]).
+    Output: group_cols + (true_count, false_count, true_label, false_label).
     """
     c = F.col(field).try_cast("int")
     out = _grouped(df, group_cols).agg(
@@ -215,18 +158,9 @@ def binary_counter(df: DataFrame, group_cols: Sequence[str], field: str,
         F.coalesce(F.sum(F.when(c == 0, 1)), F.lit(0)).alias("false_count"),
     ).withColumn("true_label", F.lit(true_label)) \
      .withColumn("false_label", F.lit(false_label))
-    if include_percentages:
-        total = F.col("true_count") + F.col("false_count")
-        out = (out.withColumn(
-            "true_pct", F.when(total > 0, F.round(F.col("true_count") * 100.0 / total, 2))
-                         .otherwise(F.lit(0.0)))
-            .withColumn(
-            "false_pct", F.when(total > 0, F.round(F.col("false_count") * 100.0 / total, 2))
-                          .otherwise(F.lit(0.0))))
     return _strip_sentinel(out, group_cols)
 
 
-@register("boolean_comparison", PluginType.TRANSFORMER)
 def boolean_comparison(df: DataFrame, group_cols: Sequence[str],
                        fields: dict[str, Column | str]) -> DataFrame:
     """Per-field True/False counts across several boolean columns/expressions
@@ -252,7 +186,6 @@ def boolean_comparison(df: DataFrame, group_cols: Sequence[str],
     return long
 
 
-@register("top_ranking", PluginType.TRANSFORMER)
 def top_ranking(df: DataFrame, group_cols: Sequence[str], field: str,
                 limit: int = 10,
                 agg: str = "count", value_field: str | None = None,
@@ -318,7 +251,6 @@ def top_ranking(df: DataFrame, group_cols: Sequence[str], field: str,
     return ranked.select(*group_cols, "item", "value", "rank")
 
 
-@register("field_aggregator", PluginType.TRANSFORMER)
 def field_aggregator(df_map: dict[str, DataFrame],
                      fields: Sequence[dict]) -> DataFrame:
     """Multi-source scalar assembly: per output field one of
@@ -372,53 +304,38 @@ def field_aggregator(df_map: dict[str, DataFrame],
     return result
 
 
-@register("time_series_analysis", PluginType.TRANSFORMER)
 def time_series_analysis(df: DataFrame, group_cols: Sequence[str],
-                         month_col: str, fields: Sequence[str] | dict[str, Column],
-                         dense_months: bool = True,
-                         rounding: str = "sql") -> DataFrame:
+                         month_col: str,
+                         fields: Sequence[str] | dict[str, Column]) -> DataFrame:
     """Month-bucketed (1..12) presence-%% per field: for each month the %% of
-    rows whose value is > 0 (reference:
-    transformers/distribution/time_series_analysis.py:177-285).
+    rows whose value is > 0, rounded half away from zero like SQL round()
+    (reference: transformers/distribution/time_series_analysis.py:177-285).
 
     ``fields`` may be column names (presence = col > 0) or a mapping
     label -> boolean Column.  Months absent from the data appear with 0.0
-    when ``dense_months`` (the reference emits all 12 labels); the
-    pipeline widget path passes ``dense_months=False`` because the
-    refshapes shaper must distinguish an ABSENT month (reference [0]*12
-    int fill) from a present month with 0%% presence (float 0.0).
-    ``rounding``: "sql" = F.round (DuckDB oracle half-away); "python" =
-    python's round() (reference _presence_percentage), as the JVM
-    expression ``functions.py_round2``.
+    (the reference emits all 12 labels).
     Output: group_cols + (month, <field>_pct ...).
     """
     spark = df.sparkSession
-    if rounding not in ("sql", "python"):
-        raise ValueError(f"unknown rounding mode {rounding!r}")
     if isinstance(fields, dict):
         exprs = {k: v for k, v in fields.items()}
     else:
         exprs = {f: (F.col(f).cast("double") > 0) for f in fields}
     m = F.col(month_col).cast("int")
     base = df.where(m.between(1, 12)).withColumn("month", m)
-    raw_pct = {
-        label: F.avg(F.when(cond, 1.0).otherwise(0.0)) * 100.0
-        for label, cond in exprs.items()
-    }
-    rnd = (lambda v: F.round(v, 2)) if rounding == "sql" else py_round2
     out = base.groupBy(*group_cols, "month").agg(
-        *[rnd(v).alias(f"{label}_pct") for label, v in raw_pct.items()])
-    if dense_months:
-        months = _literal_rows(spark, [(i,) for i in range(1, 13)],
-                               "struct<month:int>")
-        if group_cols:
-            dense = df.select(*group_cols).distinct().crossJoin(F.broadcast(months))
-        else:
-            dense = months
-        out = dense.join(out, list(group_cols) + ["month"], "left")
-        for label in exprs:
-            out = out.withColumn(f"{label}_pct",
-                                 F.coalesce(F.col(f"{label}_pct"), F.lit(0.0)))
+        *[F.round(F.avg(F.when(cond, 1.0).otherwise(0.0)) * 100.0, 2)
+          .alias(f"{label}_pct") for label, cond in exprs.items()])
+    months = _literal_rows(spark, [(i,) for i in range(1, 13)],
+                           "struct<month:int>")
+    if group_cols:
+        dense = df.select(*group_cols).distinct().crossJoin(F.broadcast(months))
+    else:
+        dense = months
+    out = dense.join(out, list(group_cols) + ["month"], "left")
+    for label in exprs:
+        out = out.withColumn(f"{label}_pct",
+                             F.coalesce(F.col(f"{label}_pct"), F.lit(0.0)))
     return out.select(*group_cols, "month", *[f"{label}_pct" for label in exprs])
 
 

@@ -1,10 +1,10 @@
 """Extraction / reshape transformers (SURVEY §2.3 "Extraction / reshape").
 
 Wide<->long reshapes are stack()/pivot projections — no extra shuffles beyond
-the aggregates that feed them.  ``multi_column_extractor`` and
-``geospatial_extractor`` here return rows for the operator catalog; the
-widget plugins of those names are the JSON shapers in
-``niamoto_spark/refshapes.py``.
+the aggregates that feed them.  ``multi_column_extractor``,
+``geospatial_extractor``, ``direct_attribute`` and ``scatter_analysis``
+here return rows for the operator catalog; the widget plugins of those
+names are the JSON shapers and kernels in ``niamoto_spark/refshapes.py``.
 """
 
 from __future__ import annotations
@@ -60,32 +60,20 @@ def multi_column_extractor(df: DataFrame, group_cols: Sequence[str],
     return long
 
 
-@register("direct_attribute", PluginType.TRANSFORMER)
-def direct_attribute(df: DataFrame, group_cols: Sequence[str], field: str,
-                     precision: int | None = None,
-                     max_value: float | None = None) -> DataFrame:
-    """Single field of the group row with units/precision/max_value capping
-    (reference: transformers/extraction/direct_attribute.py:20-78).
+def direct_attribute(df: DataFrame, group_cols: Sequence[str],
+                     field: str) -> DataFrame:
+    """A single field per group (reference:
+    transformers/extraction/direct_attribute.py:20-78).
     Output: group_cols + (value).
     """
     # min(), not first(ignorenulls): first() is partition-order-
     # dependent the moment a group has >1 row (e.g. a NULL group key
     # pooling several entities); min is the deterministic pick
     c = F.min(F.col(field))
-    out = (df.groupBy(*group_cols) if group_cols else df.groupBy()).agg(c.alias("value"))
-    if max_value is not None:
-        v = F.col("value").cast("double")
-        # least() skips NULLs — an all-null entity must stay null, not
-        # become max_value
-        out = out.withColumn("value",
-                             F.when(v.isNotNull(),
-                                    F.least(v, F.lit(float(max_value)))))
-    if precision is not None:
-        out = out.withColumn("value", F.round(F.col("value").cast("double"), precision))
-    return out
+    return (df.groupBy(*group_cols) if group_cols else df.groupBy()) \
+        .agg(c.alias("value"))
 
 
-@register("scatter_analysis", PluginType.TRANSFORMER)
 def scatter_analysis(df: DataFrame, x_field: str, y_field: str,
                      max_points: int | None = None,
                      order_col: str | None = None) -> DataFrame:

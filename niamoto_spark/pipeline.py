@@ -15,9 +15,9 @@ import -> transform -> export.  This module is the Spark-side equivalent:
   O(entities x widgets) query loop.
 - ``run_export``: JSON static API per group (exporters/json_api.py).
 
-Widget param adapters accept the reference's YAML parameter names verbatim
-(bins, count, true_label, hierarchy_table, ...), so a reference
-transform.yml runs unchanged against this engine.
+Widgets take the reference's YAML parameter names verbatim (bins,
+count, true_label, hierarchy_table, ...), so a reference transform.yml
+runs unchanged against this engine.
 """
 
 from __future__ import annotations
@@ -37,24 +37,21 @@ from niamoto_spark.config import (ImportConfig, TransformGroupConfig,
                                   validate_import_config,
                                   validate_transform_config)
 from niamoto_spark.hierarchy import derive_hierarchy
-from niamoto_spark.operators import aggregation as agg_ops
-from niamoto_spark.operators import extraction as ex_ops
 from niamoto_spark.operators import loaders as loader_ops
 from niamoto_spark.operators.chains import empty_chain_json, transform_chain
 from niamoto_spark.sources.files import read_csv_auto
 from niamoto_spark.sources.sinks import overwrite_table, read_table
 
 
-def _kernel_frame(k, frames: dict[str, DataFrame], gid: str,
-                  row_source: str | None) -> DataFrame:
-    """A fused kernel's per-entity values on their own: its rows read off
-    the grouping table, one ``groupBy(gid)`` per source, full-joined on
+def _kernel_frame(k, gid: str, grouping: DataFrame | None) -> DataFrame:
+    """A kernel's per-entity values on their own: its rows read off the
+    ``grouping`` table, one ``groupBy(gid)`` per frame, full-joined on
     gid (transform_chain steps and per-widget analysis)."""
     parts = []
     if k.rows:
-        parts.append(frames[row_source].select(
+        parts.append(grouping.select(
             F.col(gid), *[c.alias(n) for n, c in k.rows.items()]))
-    parts += [frames[src].groupBy(gid).agg(
+    parts += [k.frames[src].groupBy(gid).agg(
                   *[c.alias(n) for n, c in aggs.items()])
               for src, aggs in k.aggs.items()]
     return reduce(lambda a, b: a.join(b, gid, "full"), parts)
@@ -254,6 +251,12 @@ class Pipeline:
             self.warnings.extend(warnings)
         return results
 
+    def _entity_table(self, name: str) -> DataFrame | None:
+        """An imported entity's whole table, None for another name."""
+        if name in self.registry.names():
+            return self.registry.load(self.spark, name)
+        return None
+
     def _load_source_data(self, data: str) -> DataFrame:
         if data in self.registry.names():
             return self.registry.load(self.spark, data)
@@ -349,32 +352,35 @@ class Pipeline:
                 raise ValueError(f"unknown relation plugin {plugin!r}")
             tagged[src.name] = out
 
-        # 2. widgets.  Plain per-entity aggregates (RS.FUSED) become
-        # expressions of ONE groupBy(gid).agg(...) per source; the other
-        # widgets each build a (gid, json) frame.  The wide table joins
-        # each source aggregate and each frame once.
+        # 2. widgets.  Aggregate widgets (RS.KERNELS) become expressions
+        # of ONE groupBy(gid).agg(...) per source; the other widgets each
+        # build a (gid, json) frame.  The wide table joins each source
+        # aggregate and each frame once.
         from niamoto_spark import refshapes as RS
         row_source = g.group_by \
             if tagged[g.group_by] is grouping else None
+        scope = RS.Scope(tagged, gid, row_source, self._entity_table)
         rows: dict[str, Column] = {}
         source_aggs: dict[str, dict[str, Column]] = {}
+        source_frames: dict[str, DataFrame] = {}
         frames: list[DataFrame] = []
         columns: list[Column] = []
         warnings: list[str] = []
         for i, (name, w) in enumerate(g.widgets_data.items()):
             params = dict(w.params)
             try:
-                if w.plugin in RS.FUSED:
-                    k = RS.kernel(w.plugin, params, tagged, row_source)
+                if w.plugin in RS.KERNELS:
+                    k = RS.kernel(w.plugin, params, scope)
                     # analyze this widget's aggregates alone, so a bad
                     # column lands in the warnings instead of failing the
                     # whole group (its doc reads only these aggregates)
-                    _kernel_frame(k, tagged, gid, row_source)
+                    _kernel_frame(k, gid, grouping)
                     prefix = f"__w{i}_"
                     value = k.doc(lambda n, prefix=prefix: F.col(prefix + n))
                     rows.update({prefix + n: c for n, c in k.rows.items()})
                     markers = []
                     for src, aggs in k.aggs.items():
+                        source_frames.setdefault(src, k.frames[src])
                         source_aggs.setdefault(src, {}).update(
                             {prefix + n: c for n, c in aggs.items()})
                         j = list(source_aggs).index(src)
@@ -389,13 +395,13 @@ class Pipeline:
                     frames.append(jdf.select(
                         F.col(gid), F.col("__json").alias(f"__w{i}")))
                     value = F.col(f"__w{i}")
-                    present = value.isNotNull()
+                    present = None
                 # zero-occurrence entities: the reference's per-entity
                 # loop runs EVERY widget on every taxonomy node and empty
                 # frames take the plugins' empty branches — engine
-                # aggregates emit no row there, so fall back to the
-                # config-derived empty literal (r13 import-axis find:
-                # 'Unknown species' nodes)
+                # aggregates emit no row (or no doc) there, so fall back
+                # to the config-derived empty literal (r13 import-axis
+                # find: 'Unknown species' nodes)
                 empty = empty_chain_json(params["steps"]) \
                     if w.plugin == "transform_chain" \
                     else RS.empty_widget_json(w.plugin, params)
@@ -407,7 +413,9 @@ class Pipeline:
                     f"widget {g.group_by}.{name} ({w.plugin}): {e}")
                 continue
             if present is not None:
-                value = F.when(present, value).otherwise(F.lit(empty))
+                value = F.when(present, value)
+            if empty is not None:
+                value = F.coalesce(value, F.lit(empty))
             columns.append(value.alias(name))
 
         result = grouping.select(
@@ -415,7 +423,7 @@ class Pipeline:
         if only_ids is not None:
             result = result.where(F.col(gid).isin(list(only_ids)))
         for j, (src, aggs) in enumerate(source_aggs.items()):
-            agg = tagged[src].groupBy(gid).agg(
+            agg = source_frames[src].groupBy(gid).agg(
                 F.lit(True).alias(f"__in_{j}"),
                 *[c.alias(n) for n, c in aggs.items()])
             result = result.join(agg, gid, "left")
@@ -436,13 +444,10 @@ class Pipeline:
                      grouping: DataFrame
                      ) -> tuple[DataFrame, DataFrame | None]:
         """One widget -> (gid, __json) in the reference's exact JSON shape
-        (niamoto_spark/refshapes.py); boolean_comparison and
-        scatter_analysis have no reference shaper and pack their rows as
-        a JSON array.  Also returns the frame the JSON was shaped from,
-        which a later transform_chain step's ``source: "@key"`` reads: a
-        fused plugin's kernel frame, the operator frame of the others,
-        None for a chain and for plugins shaped straight off their
-        source."""
+        (niamoto_spark/refshapes.py).  Also returns the frame the JSON was
+        shaped from, which a later transform_chain step's ``source:
+        "@key"`` reads: an aggregate widget's kernel frame, None for a
+        chain and for the widgets shaped straight off their source."""
         from niamoto_spark import refshapes as RS
 
         if plugin == "transform_chain":
@@ -451,25 +456,21 @@ class Pipeline:
                                          gid, grouping)
 
             return transform_chain(params["steps"], tagged, gid, step), None
-        if plugin in RS.FUSED:
-            # a chain step (top-level fused widgets are planned by
+        scope = RS.Scope(tagged, gid, group_by, self._entity_table)
+        if plugin in RS.KERNELS:
+            # a chain step (top-level aggregate widgets are planned by
             # _transform_group)
-            k = RS.kernel(plugin, params, tagged, group_by)
-            frame = _kernel_frame(k, tagged, gid, group_by)
+            k = RS.kernel(plugin, params, scope)
+            frame = _kernel_frame(k, gid, tagged[group_by])
             return frame.select(F.col(gid),
                                 k.doc(F.col).alias("__json")), frame
+        if plugin == "shape_processor":
+            # without a source it reads the group's own geometry
+            df = scope.source(params["source"]) if params.get("source") \
+                else grouping
+            return self._shape_processor_widget(df, gid, params), None
 
-        src_name = params.get("source")
-        df = tagged.get(src_name) if src_name else None
-        if src_name and df is None and src_name in self.registry.names():
-            # reference _load_additional_source: whole-table load
-            df = self.registry.load(self.spark, src_name)
-
-        # shape_processor falls back to the group's own frame; every other
-        # widget reads its source
-        if df is None and plugin != "shape_processor":
-            raise ValueError(
-                f"source {src_name!r} is not loaded for this group")
+        df = scope.source(params.get("source"))
         # class_object family + geospatial: shape straight from the raw
         # tagged frame (the reference plugins receive the loaded stats
         # frame whole and filter internally)
@@ -494,31 +495,7 @@ class Pipeline:
             return RS.geospatial_extractor(df, gid, params, grouping), None
         if plugin == "multi_column_extractor":
             return RS.multi_column_extractor(df, gid, params), None
-        if plugin == "shape_processor":
-            return self._shape_processor_widget(
-                df if df is not None else grouping, gid, params), None
-
-        run_params = dict(params)
-        if plugin == "direct_attribute":
-            # the shaper below applies clip + precision itself — it
-            # needs the RAW value and its dtype to reproduce the
-            # reference's per-row typing (clipped -> "65" string,
-            # unclipped int -> 65 number); the operator-level clip
-            # would double-cast everything first (r13 variant find)
-            run_params.pop("max_value", None)
-            run_params.pop("precision", None)
-        wdf = self._run_widget(plugin, run_params, df, gid)
-        if plugin == "top_ranking":
-            jdf = RS.top_ranking(wdf, gid, params)
-        elif plugin == "time_series_analysis":
-            jdf = RS.time_series_analysis(wdf, gid, params)
-        elif plugin == "direct_attribute":
-            field = params["field"]
-            is_float = dict(df.dtypes).get(field) in ("double", "float")
-            jdf = RS.direct_attribute(wdf, gid, params, is_float)
-        else:
-            jdf = self._pack_json(wdf, gid)
-        return jdf, wdf
+        raise ValueError(f"unknown widget plugin {plugin!r}")
 
     def _shape_processor_widget(self, df: DataFrame, gid: str,
                                 params: dict) -> DataFrame:
@@ -625,83 +602,6 @@ class Pipeline:
 
         return base.mapInPandas(run,
                                 schema=f"{gid} {gid_type}, __json string")
-
-    def _run_widget(self, plugin: str, params: dict, df: DataFrame,
-                    gid: str) -> DataFrame:
-        """Adapter: reference YAML param names -> operator signatures, over
-        the widget's resolved source frame ``df``."""
-        if plugin == "top_ranking":
-            name_join = None
-            field = params["field"]
-            if params.get("hierarchy_table"):
-                h = self.registry.load(self.spark, params["hierarchy_table"])
-                cols = params.get("hierarchy_columns", {})
-                key_col = cols.get("id", "id")
-                # dtype-align the fact key with the hierarchy key before
-                # the string-keyed name join: a CSV float column (ints +
-                # NULLs) must match the hierarchy's bigint ids, like the
-                # reference's numeric-affinity lookup does
-                fact_t = dict(df.dtypes).get(field)
-                key_t = dict(h.dtypes).get(key_col)
-                if fact_t in ("double", "float") and \
-                        key_t in ("bigint", "int", "smallint"):
-                    df = df.withColumn(field, F.col(field).cast("bigint"))
-                name_join = (h, key_col, cols.get("name", "name"))
-            return agg_ops.top_ranking(
-                df, [gid], field,
-                limit=params.get("count", 10),
-                name_join=name_join)
-        if plugin == "direct_attribute":
-            return ex_ops.direct_attribute(
-                df, [gid], params["field"],
-                precision=params.get("precision"),
-                max_value=params.get("max_value"))
-        if plugin == "time_series_analysis":
-            fields = params["fields"]
-            if not (isinstance(fields, dict) and fields and all(
-                    isinstance(v, str) for v in fields.values())):
-                raise ValueError(
-                    "time_series_analysis fields must map each output "
-                    f"label to a source column, got {fields!r}")
-            fields = {k: (F.col(v).cast("double") > 0)
-                      for k, v in fields.items()}
-            # sparse months + exact python rounding: the reference fills
-            # absent months with INT zeros ([0]*12) and rounds presence
-            # percentages with round() — the refshapes shaper needs the
-            # absent-month signal (a dense 0.0 row is indistinguishable
-            # from a real 0% month) and the exact-binary rounding
-            # (r13 blackout-variant find)
-            return agg_ops.time_series_analysis(
-                df, [gid], params.get("time_field", "month_obs"),
-                fields, dense_months=False, rounding="python")
-        if plugin == "boolean_comparison":
-            fields = params["fields"]
-            if isinstance(fields, list):
-                fields = {f: f for f in fields}
-            return agg_ops.boolean_comparison(df, [gid], fields)
-        if plugin == "scatter_analysis":
-            x, y = params["x_field"], params["y_field"]
-            return (df.select(gid, F.col(x).cast("double").alias("x"),
-                              F.col(y).cast("double").alias("y"))
-                      .where(F.col("x").isNotNull() & F.col("y").isNotNull()))
-        raise ValueError(f"no adapter for widget plugin {plugin!r}")
-
-    def _pack_json(self, wdf: DataFrame, gid: str) -> DataFrame:
-        """A widget's rows per entity as one JSON array, whatever the
-        per-entity row count — consumers get one stable schema per column
-        (the reference's output_structure contract, SURVEY §2.5)."""
-        others = [c for c in wdf.columns if c != gid]
-        # order struct fields so the array's deterministic sort is also the
-        # presentation order (rank/bin/month leading)
-        lead = [c for c in ("rank", "bin_index", "month", "class_name",
-                            "category", "out_group", "label")
-                if c in others]
-        others = lead + [c for c in others if c not in lead]
-        packed = (wdf.groupBy(gid)
-                  .agg(F.sort_array(F.collect_list(F.struct(*others)))
-                       .alias("__rows")))
-        return packed.select(F.col(gid),
-                             F.to_json(F.col("__rows")).alias("__json"))
 
     # ------------------------------------------------------------------
     # export phase

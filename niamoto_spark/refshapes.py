@@ -15,12 +15,15 @@ exactly), never F.round (HALF_UP) or F.bround (half-even on the
 shortest decimal repr) — a 0.005-boundary value would otherwise differ
 by a full cent.
 
-Fused widgets: statistical_summary, binned_distribution,
-categorical_distribution, binary_counter and field_aggregator are plain
-per-entity aggregates.  :func:`kernel` gives each as aggregate
+Aggregate widgets (:data:`KERNELS`): statistical_summary,
+binned_distribution, categorical_distribution, binary_counter,
+field_aggregator, top_ranking, time_series_analysis, direct_attribute,
+boolean_comparison and scatter_analysis are per-entity aggregates.
+Each is registered on a function that :func:`kernel` runs: aggregate
 expressions over its source plus a JSON expression over those
 aggregates, so the pipeline computes every such widget on a source in
-ONE ``groupBy(gid).agg(...)``.
+ONE ``groupBy(gid).agg(...)``.  top_ranking aggregates its per-item
+counts, a frame of its own.
 
 Ordering parity: several reference widgets (series_extractor with
 sort:false) emit values in SOURCE ROW ORDER (pandas groupby
@@ -33,8 +36,8 @@ The class_object shapers consume the RAW tagged EAV frame
 filtering/aggregation — mirroring how the reference plugins receive
 the whole loaded stats frame per entity.
 
-The shapers the pipeline calls with a widget's whole params — the eight
-``class_object_*`` plugins, ``geospatial_extractor`` and
+The frame shapers the pipeline calls with a widget's whole params — the
+eight ``class_object_*`` plugins, ``geospatial_extractor`` and
 ``multi_column_extractor`` — are registered under those plugin names.
 """
 
@@ -45,14 +48,21 @@ from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from niamoto_spark.functions import bin_index, py_round2
-from niamoto_spark.registry import PluginType, register
+from niamoto_spark.registry import PluginType, get_plugin, register
 
 JSON_OPTS = {"ignoreNullFields": "false"}
 SRC_ORDER = "__src_order"
 
 CO, CN, CV = "class_object", "class_name", "class_value"
+
+# time_series_analysis's default labels: the reference's pydantic
+# defaults are ENGLISH (time_series_analysis.py:82-96), not the example
+# config's French list
+_MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
+           "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
 
 def _obj_col(fields: list[Column]) -> Column:
@@ -182,14 +192,9 @@ def empty_widget_json(plugin: str, p: dict) -> str | None:
         return _json.dumps(doc, ensure_ascii=False)
     if plugin == "time_series_analysis":
         fields = p.get("fields") or {}
-        # the reference's pydantic DEFAULT labels are ENGLISH
-        # (time_series_analysis.py:82-96) — a config omitting labels
-        # gets these, not the example config's French list
-        labels = p.get("labels") or ["Jan", "Feb", "Mar", "Apr", "May",
-                                     "Jun", "Jul", "Aug", "Sep", "Oct",
-                                     "Nov", "Dec"]
         return _json.dumps({"month_data": {k: [0] * 12 for k in fields},
-                            "labels": labels}, ensure_ascii=False)
+                            "labels": p.get("labels") or _MONTHS},
+                           ensure_ascii=False)
     if plugin == "top_ranking":
         return '{"tops": [], "counts": []}'
     if plugin == "field_aggregator":
@@ -219,47 +224,75 @@ def empty_widget_json(plugin: str, p: dict) -> str | None:
 
 
 # ---------------------------------------------------------------------------
-# fused aggregate widgets
+# aggregate widget kernels
 # ---------------------------------------------------------------------------
+
+class Scope(NamedTuple):
+    """What a kernel function reads: the group's ``sources`` by name (a
+    chain step also sees the frames of the steps before it), the entity
+    id column ``gid``, the name of the grouping table, whose fields are
+    read off the entity's own row, and ``load(name)``, the whole table of
+    an imported entity or None."""
+    sources: dict[str, DataFrame]
+    gid: str
+    row_source: str | None = None
+    load: Callable[[str], DataFrame | None] = lambda name: None
+
+    def source(self, name: str | None) -> DataFrame:
+        """The frame a widget's ``source`` names: one of the group's
+        sources, else an imported entity's whole table (the reference's
+        _load_additional_source)."""
+        df = self.sources.get(name)
+        if df is None and name:
+            df = self.load(name)
+        if df is None:
+            raise ValueError(
+                f"source {name!r} is not loaded for this group")
+        return df
+
 
 class Kernel(NamedTuple):
     """One widget as expressions the pipeline fuses with its siblings:
-    ``aggs`` maps a source name to ``{name: aggregate}`` over that
-    source's ``groupBy(gid)``; ``rows`` maps ``{name: expression}`` over
-    the grouping table's own row; ``doc(col)`` is the widget JSON, where
-    ``col(name)`` is the column holding that aggregate or row value."""
+    ``aggs`` maps a frame name to ``{name: aggregate}`` over that frame's
+    ``groupBy(gid)``, and ``frames`` holds each such frame; ``rows`` maps
+    ``{name: expression}`` over the grouping table's own row; ``doc(col)``
+    is the widget JSON, where ``col(name)`` is the column holding that
+    aggregate or row value.  An entity whose doc is NULL gets the
+    widget's empty literal, like an entity with no rows."""
     aggs: dict[str, dict[str, Column]]
     rows: dict[str, Column]
     doc: Callable[[Callable[[str], Column]], Column]
+    frames: dict[str, DataFrame]
 
 
-FUSED = {"statistical_summary", "binned_distribution",
-         "categorical_distribution", "binary_counter", "field_aggregator"}
+# the widget plugins registered on a kernel function
+KERNELS: set[str] = set()
 
 
-def kernel(plugin: str, p: dict, sources: dict[str, DataFrame],
-           row_source: str | None = None) -> Kernel:
-    """The :class:`Kernel` of a FUSED plugin.  ``row_source`` names the
-    grouping table: field_aggregator fields on it are read straight off
-    the entity's row instead of being aggregated."""
-    if plugin == "field_aggregator":
-        return _field_aggregator(p, sources, row_source)
+def _kernel(name: str):
+    """Register ``build(params, scope) -> Kernel`` as widget ``name``."""
+    KERNELS.add(name)
+    return register(name, PluginType.TRANSFORMER)
+
+
+def kernel(plugin: str, p: dict, scope: Scope) -> Kernel:
+    """The :class:`Kernel` of widget ``plugin``, one of :data:`KERNELS`."""
+    return get_plugin(plugin, PluginType.TRANSFORMER)(p, scope)
+
+
+def _over_source(p: dict, scope: Scope, aggs: dict[str, Column],
+                 doc: Callable) -> Kernel:
+    """The kernel of a widget that aggregates its one ``source``."""
     src = p.get("source")
-    if src not in sources:
-        raise ValueError(f"source {src!r} is not loaded for this group")
-    build = {"statistical_summary": _statistical_summary,
-             "binned_distribution": _binned_distribution,
-             "categorical_distribution": _categorical_distribution,
-             "binary_counter": _binary_counter}[plugin]
-    aggs, doc = build(p)
-    return Kernel({src: aggs}, {}, doc)
+    return Kernel({src: aggs}, {}, doc, {src: scope.source(src)})
 
 
 _STATS = {"min": F.min, "mean": F.avg, "max": F.max, "median": F.median,
           "std": F.stddev_samp}
 
 
-def _statistical_summary(p: dict):
+@_kernel("statistical_summary")
+def _statistical_summary(p: dict, scope: Scope) -> Kernel:
     """{stat: round(v, 2)..., units, max_value}
     (reference aggregation/statistical_summary.py:152-233): sample std
     (pandas ddof=1), exact interpolated median."""
@@ -288,10 +321,11 @@ def _statistical_summary(p: dict):
                       .otherwise(F.lit(_json.dumps(conf)))))
         return _doc_col(frags)
 
-    return aggs, doc
+    return _over_source(p, scope, aggs, doc)
 
 
-def _binned_distribution(p: dict):
+@_kernel("binned_distribution")
+def _binned_distribution(p: dict, scope: Scope) -> Kernel:
     """{bins: edges as floats, counts dense,[ labels][, percentages]}
     (distribution/binned_distribution.py:210-247): np.histogram bins,
     one ``count_if`` per bin."""
@@ -314,10 +348,11 @@ def _binned_distribution(p: dict):
                           _frag_pct(col("counts"), int_zero_fill=True)))
         return _doc_col(frags)
 
-    return aggs, doc
+    return _over_source(p, scope, aggs, doc)
 
 
-def _categorical_distribution(p: dict):
+@_kernel("categorical_distribution")
+def _categorical_distribution(p: dict, scope: Scope) -> Kernel:
     """{categories, counts, labels[, percentages]}
     (distribution/categorical_distribution.py:197-247) over the
     declared categories, matched as strings."""
@@ -346,10 +381,11 @@ def _categorical_distribution(p: dict):
                           _frag_pct(col("counts"), int_zero_fill=False)))
         return _doc_col(frags)
 
-    return aggs, doc
+    return _over_source(p, scope, aggs, doc)
 
 
-def _binary_counter(p: dict):
+@_kernel("binary_counter")
+def _binary_counter(p: dict, scope: Scope) -> Kernel:
     """{true_label: n, false_label: m[, *_percent]} counting values
     that are exactly 1 / 0 (aggregation/binary_counter.py:136-202)."""
     tl = p.get("true_label", "oui")
@@ -367,21 +403,24 @@ def _binary_counter(p: dict):
                        for n, label in ((t, tl), (f, fl))]
         return _obj_col(fields)
 
-    return aggs, doc
+    return _over_source(p, scope, aggs, doc)
 
 
 _FIELD_AGGS = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
                "std": F.stddev_samp}
 
 
-def _field_aggregator(p: dict, sources: dict[str, DataFrame],
-                      row_source: str | None) -> Kernel:
+@_kernel("field_aggregator")
+def _field_aggregator(p: dict, scope: Scope) -> Kernel:
     """{target: {value[, units]}} across sources
     (aggregation/field_aggregator.py:206-341): ``direct`` is the first
     non-null value, ``count`` counts non-null values (0 for an entity
     another source knows), the numeric transformations round to 2dp.
-    JSON dot-paths (``extra_data.key``) read through get_json_object."""
+    JSON dot-paths (``extra_data.key``) read through get_json_object.
+    Fields on the grouping table are read straight off the entity's
+    row instead of being aggregated."""
     aggs: dict[str, dict[str, Column]] = {}
+    frames: dict[str, DataFrame] = {}
     rows: dict[str, Column] = {}
     specs = list(p["fields"])
     for i, spec in enumerate(specs):
@@ -389,12 +428,11 @@ def _field_aggregator(p: dict, sources: dict[str, DataFrame],
         t = spec.get("transformation", "direct")
         if t not in _FIELD_AGGS and t not in ("direct", "count"):
             raise ValueError(f"unsupported transformation {t!r}")
-        if src not in sources:
-            raise ValueError(f"source {src!r} is not loaded for this group")
+        df = scope.source(src)
         root, _, path = fld.partition(".")
         c = F.get_json_object(F.col(root), f"$.{path}") \
-            if path and root in sources[src].columns else F.col(fld)
-        if src == row_source:
+            if path and root in df.columns else F.col(fld)
+        if src == scope.row_source:
             # one grouping row per entity: the aggregate of that row
             if t == "direct":
                 e = c
@@ -413,6 +451,7 @@ def _field_aggregator(p: dict, sources: dict[str, DataFrame],
             else:
                 e = F.round(_FIELD_AGGS[t](c.cast("double")), 2)
             aggs.setdefault(src, {})[f"f{i}"] = e
+            frames[src] = df
 
     def doc(col):
         fields = []
@@ -426,12 +465,97 @@ def _field_aggregator(p: dict, sources: dict[str, DataFrame],
             fields.append(F.struct(*inner).alias(spec["target"]))
         return _obj_col(fields)
 
-    return Kernel(aggs, rows, doc)
+    return Kernel(aggs, rows, doc, frames)
 
 
-# ---------------------------------------------------------------------------
-# scalar / per-entity object widgets
-# ---------------------------------------------------------------------------
+@_kernel("top_ranking")
+def _top_ranking(p: dict, scope: Scope) -> Kernel:
+    """{tops, counts}: the ``count`` most frequent non-NULL items, by
+    count desc then item (aggregation/top_ranking.py:246-315).  Items
+    are counted per (entity, item) first; a ``hierarchy_table`` shows
+    each item key by its name there, and a float key (a CSV id column
+    with NULLs) matches the table's integer ids."""
+    src, field, gid = p.get("source"), p["field"], scope.gid
+    df = scope.source(src)
+    key = F.col(field)
+    table = p.get("hierarchy_table")
+    if table:
+        h = scope.load(table)
+        if h is None:
+            raise ValueError(f"hierarchy_table {table!r} is not an "
+                             "imported entity")
+        cols = p.get("hierarchy_columns", {})
+        key_col = cols.get("id", "id")
+        if dict(df.dtypes).get(field) in ("double", "float") and \
+                dict(h.dtypes).get(key_col) in ("bigint", "int", "smallint"):
+            key = key.cast("bigint")
+    counts = (df.where(F.col(field).isNotNull())
+              .groupBy(gid, key.cast("string").alias("__item"))
+              .agg(F.count(F.lit(1)).alias("__n")))
+    if table:
+        names = h.select(F.col(key_col).cast("string").alias("__item"),
+                         F.col(cols.get("name", "name")).alias("__name"))
+        counts = counts.join(F.broadcast(names), "__item", "left").select(
+            gid, F.coalesce("__name", "__item").alias("__item"), "__n")
+    ranked = F.array_sort(F.collect_list(F.struct(
+        (-F.col("__n")).alias("order"), F.col("__item").alias("item"),
+        F.col("__n").alias("n"))))
+    # every top_ranking over the same counts shares their aggregate
+    name = "top_ranking " + _json.dumps(
+        [src, field, table, p.get("hierarchy_columns")])
+
+    def doc(col):
+        top = col("top")
+        return _obj_col([F.transform(top, lambda x: x["item"]).alias("tops"),
+                         F.transform(top, lambda x: x["n"]).alias("counts")])
+
+    return Kernel(
+        {name: {"top": F.slice(ranked, 1, max(int(p.get("count", 10)), 0))}},
+        {}, doc, {name: counts})
+
+
+@_kernel("time_series_analysis")
+def _time_series_analysis(p: dict, scope: Scope) -> Kernel:
+    """{month_data: {label: [12 pcts]}, labels}
+    (distribution/time_series_analysis.py:177-285): per month 1-12, the
+    share of rows whose field is > 0, in percent and python-rounded.
+    A month with no rows reads the reference's int 0 fill
+    ([0] * 12, :247-259), so one array mixes 0 (no data) with 0.0
+    (data, no presence).  An entity with no row in months 1-12 has no
+    doc."""
+    fields = p["fields"]
+    if not (isinstance(fields, dict) and fields and all(
+            isinstance(v, str) for v in fields.values())):
+        raise ValueError(
+            "time_series_analysis fields must map each output "
+            f"label to a source column, got {fields!r}")
+    labels = p.get("labels") or _MONTHS
+    month = F.col(p.get("time_field", "month_obs")).cast("int")
+    # each month's avg sums 0/1 doubles: exact, whatever the row order
+    aggs = {f"{i}_{m}": py_round2(F.avg(F.when(
+                month == m, F.when(F.col(c).cast("double") > 0, 1.0)
+                .otherwise(0.0))) * 100.0)
+            for i, c in enumerate(fields.values()) for m in range(1, 13)}
+
+    def doc(col):
+        parts: list[Column] = [F.lit("{")]
+        for i, label in enumerate(fields):
+            parts.append(F.lit(("," if i else "") + _json.dumps(label)
+                               + ":["))
+            for m in range(1, 13):
+                pct = col(f"{i}_{m}")
+                parts += [F.lit(",")] if m > 1 else []
+                parts.append(F.when(pct.isNull(), F.lit("0"))
+                             .otherwise(_frag_scalar(pct)))
+            parts.append(F.lit("]"))
+        parts.append(F.lit("}"))
+        seen = F.coalesce(*[col(f"0_{m}") for m in range(1, 13)])
+        return F.when(seen.isNotNull(), _doc_col([
+            ("month_data", F.concat(*parts)),
+            ("labels", F.lit(_json.dumps(labels, ensure_ascii=False)))]))
+
+    return _over_source(p, scope, aggs, doc)
+
 
 def _rstrip_str(c: Column) -> Column:
     """str(float) with the reference's trailing-zero strip."""
@@ -450,10 +574,12 @@ def _jesc(c: Column) -> Column:
         F.lit('"'))
 
 
-def direct_attribute(wdf: DataFrame, gid: str, p: dict,
-                     is_float_col: bool) -> DataFrame:
-    """{value, units[, max_value][, format]} with the reference's
-    per-row typing (extraction/direct_attribute.py transform tail):
+@_kernel("direct_attribute")
+def _direct_attribute(p: dict, scope: Scope) -> Kernel:
+    """{value, units[, max_value][, format]}: the field's smallest value
+    over the entity's rows (its own value on the grouping table), with
+    the reference's per-row typing (extraction/direct_attribute.py
+    transform tail):
 
     - float values (np.float64 IS a python float) take the
       str().rstrip / precision branch -> JSON string;
@@ -466,99 +592,109 @@ def direct_attribute(wdf: DataFrame, gid: str, p: dict,
     - precision applies only on those float/clipped paths, never to a
       raw int or a pass-through string.
     """
-    import json as _json
-
-    from pyspark.sql.types import StringType
-
-    v = F.col("value")
-    num = v.cast("double")
+    src = p.get("source")
+    df = scope.source(src)
+    field = p["field"]
+    is_float = dict(df.dtypes).get(field) in ("double", "float")
+    is_str = isinstance(df.select(F.col(field)).schema[0].dataType,
+                        StringType)
     max_value = p.get("max_value")
     precision = p.get("precision")
-    is_str_col = isinstance(wdf.schema["value"].dataType, StringType)
 
-    clipped = num > float(max_value) if max_value is not None \
-        else F.lit(False)
-    cv = F.when(clipped, F.lit(float(max_value))).otherwise(num) \
-        if max_value is not None else num
-    if precision is not None:
-        float_form = F.format_string(f"%.{int(precision)}f", cv)
-    else:
-        float_form = _rstrip_str(cv)
-    quoted_float = F.concat(F.lit('"'), float_form, F.lit('"'))
+    def doc(col):
+        v = col("value")
+        # a string that is not a number is never clipped (the reference
+        # skips the cap when float(value) raises)
+        num = v.try_cast("double")
+        clipped = num > float(max_value) if max_value is not None \
+            else F.lit(False)
+        cv = F.when(clipped, F.lit(float(max_value))).otherwise(num) \
+            if max_value is not None else num
+        if precision is not None:
+            float_form = F.format_string(f"%.{int(precision)}f", cv)
+        else:
+            float_form = _rstrip_str(cv)
+        quoted_float = F.concat(F.lit('"'), float_form, F.lit('"'))
+        if is_float:
+            value_json = quoted_float
+        elif is_str:
+            # float(value) succeeding only matters for the clip
+            # comparison; an unclipped (or non-numeric) string passes
+            # through verbatim
+            value_json = F.when(clipped, quoted_float).otherwise(_jesc(v))
+        else:
+            value_json = F.when(clipped, quoted_float) \
+                          .otherwise(v.cast("string"))
+        value_json = F.when(v.isNull(), F.lit("null")) \
+                      .otherwise(value_json)
+        parts = [F.lit('{"value":'), value_json,
+                 F.lit(',"units":' + _json.dumps(p.get("units", "")))]
+        if max_value is not None:
+            # the reference serializes params.max_value AFTER pydantic
+            # validation, and DirectAttributeParams types it
+            # Optional[float] — a YAML int is coerced, so the JSON is
+            # always a float (r13 byte differential; contrast
+            # statistical_summary, whose Union[int, float] preserves the
+            # YAML type)
+            parts.append(F.lit(',"max_value":'
+                               + _json.dumps(float(max_value))))
+        if p.get("format") is not None:
+            parts.append(F.lit(',"format":' + _json.dumps(p["format"])))
+        parts.append(F.lit("}"))
+        return F.concat(*parts)
 
-    if is_float_col:
-        value_json = quoted_float
-    elif is_str_col:
-        # float(value) succeeding only matters for the clip comparison;
-        # an unclipped (or non-numeric) string passes through verbatim
-        value_json = F.when(clipped, quoted_float).otherwise(_jesc(v))
-    else:
-        value_json = F.when(clipped, quoted_float) \
-                      .otherwise(v.cast("string"))
-    value_json = F.when(v.isNull(), F.lit("null")).otherwise(value_json)
-
-    parts = [F.lit('{"value":'), value_json,
-             F.lit(',"units":' + _json.dumps(p.get("units", "")))]
-    if max_value is not None:
-        # the reference serializes params.max_value AFTER pydantic
-        # validation, and DirectAttributeParams types it Optional[float]
-        # — a YAML int is coerced, so the JSON is always a float (r13
-        # byte differential; contrast statistical_summary, whose
-        # Union[int, float] preserves the YAML type)
-        parts.append(F.lit(',"max_value":' + _json.dumps(float(max_value))))
-    if p.get("format") is not None:
-        parts.append(F.lit(',"format":' + _json.dumps(p["format"])))
-    parts.append(F.lit("}"))
-    return wdf.select(F.col(gid), F.concat(*parts).alias("__json"))
+    if src == scope.row_source:
+        return Kernel({}, {"value": F.col(field)}, doc, {})
+    # min(), not first(): the deterministic pick among several rows
+    return Kernel({src: {"value": F.min(F.col(field))}}, {}, doc,
+                  {src: df})
 
 
-def top_ranking(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
-    """{tops, counts} by count desc (aggregation/top_ranking.py:246-315).
-    wdf: (gid, item, value, rank)."""
-    arr = F.sort_array(F.collect_list(
-        F.struct(F.col("rank"), F.col("item"), F.col("value"))))
-    agg = wdf.groupBy(gid).agg(arr.alias("__a"))
-    return _obj(agg, gid, [
-        F.transform("__a", lambda x: x["item"]).alias("tops"),
-        F.transform("__a", lambda x: x["value"]).alias("counts"),
-    ])
+@_kernel("boolean_comparison")
+def _boolean_comparison(p: dict, scope: Scope) -> Kernel:
+    """[{category, true_count, false_count}...] by category: each
+    field's true and false counts, NULLs in neither
+    (analysis/boolean_comparison.py:108-150).  ``fields`` is a list of
+    columns or a ``{label: column}`` mapping."""
+    fields = p["fields"]
+    if isinstance(fields, list):
+        fields = {f: f for f in fields}
+    cols = list(fields.values())
+    aggs = {}
+    for i, c in enumerate(cols):
+        b = F.col(c).cast("boolean")
+        aggs[f"t{i}"], aggs[f"f{i}"] = F.count_if(b), F.count_if(~b)
+    order = sorted(range(len(cols)), key=lambda i: str(list(fields)[i]))
+
+    def doc(col):
+        labels = list(fields)
+        return F.to_json(F.array(*[F.struct(
+            F.lit(str(labels[i])).alias("category"),
+            col(f"t{i}").alias("true_count"),
+            col(f"f{i}").alias("false_count")) for i in order]))
+
+    return _over_source(p, scope, aggs, doc)
 
 
-def time_series_analysis(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
-    """{month_data: {label: [12 pcts]}, labels}
-    (distribution/time_series_analysis.py:279-285)."""
-    # English pydantic defaults (time_series_analysis.py:82-96), not the
-    # example config's French list — configs omitting labels get these
-    labels = p.get("labels") or ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
-                                 "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
-    series = [c for c in wdf.columns if c.endswith("_pct")]
-    aggs = []
-    for s in series:
-        m = F.map_from_entries(
-            F.collect_list(F.struct(F.col("month"), F.col(s))))
-        aggs.append(m.alias(f"__m_{s}"))
-    agg = wdf.groupBy(gid).agg(*aggs)
-    # element typing (r13 byte differential): the reference initializes
-    # month_data = {name: [0] * 12} — INT zeros — and only months with
-    # rows get round(pct, 2) floats (time_series_analysis.py:247-259),
-    # so one array mixes 0 (no data) with 0.0 (data, zero presence)
-    md_parts: list[Column] = [F.lit("{")]
-    for si, s in enumerate(series):
-        m = F.col(f"__m_{s}")
-        md_parts.append(F.lit(
-            ("," if si else "") + _json.dumps(s[:-len("_pct")]) + ":["))
-        for i in range(1, 13):
-            if i > 1:
-                md_parts.append(F.lit(","))
-            md_parts.append(F.when(m[F.lit(i)].isNull(), F.lit("0"))
-                            .otherwise(_frag_scalar(m[F.lit(i)])))
-        md_parts.append(F.lit("]"))
-    md_parts.append(F.lit("}"))
-    return _doc(agg, gid, [
-        ("month_data", F.concat(*md_parts)),
-        ("labels", F.lit(_json.dumps(labels, ensure_ascii=False))),
-    ])
+@_kernel("scatter_analysis")
+def _scatter_analysis(p: dict, scope: Scope) -> Kernel:
+    """[{x, y}...] sorted: the entity's rows with both coordinates
+    (analysis/scatter_analysis.py:113-146); no doc when it has none."""
+    x = F.col(p["x_field"]).cast("double")
+    y = F.col(p["y_field"]).cast("double")
+    aggs = {"points": F.sort_array(F.collect_list(F.when(
+        x.isNotNull() & y.isNotNull(),
+        F.struct(x.alias("x"), y.alias("y")))))}
 
+    def doc(col):
+        return F.when(F.size(col("points")) > 0, F.to_json(col("points")))
+
+    return _over_source(p, scope, aggs, doc)
+
+
+# ---------------------------------------------------------------------------
+# frame widgets
+# ---------------------------------------------------------------------------
 
 @register("multi_column_extractor", PluginType.TRANSFORMER)
 def multi_column_extractor(df: DataFrame, gid: str, p: dict) -> DataFrame:

@@ -6,16 +6,17 @@ and a per-type registry (reference: src/niamoto/core/plugins/base.py:31-38 and
 (or classes with a ``transform``/``load_data`` method) that take DataFrames
 and validated params and return DataFrames / Column expressions.
 
-The pipeline does not look plugins up here: ``Pipeline._transform_group``,
-``_widget_json`` and ``_run_widget`` dispatch a config's plugin names
-themselves.  Each relation plugin is registered on the loader in
-``operators/loaders.py`` that the pipeline runs, and each
-``class_object_*``, ``geospatial_extractor`` and
-``multi_column_extractor`` widget on its JSON shaper in ``refshapes.py``.
-The registry serves the ``plugins`` CLI listing, the deploy step's
-platform lookup (``deployers.run_deploy``) for platforms it does not
-handle itself, and name checks: tests assert that the reference's plugin
-names are registered.
+Each aggregate widget is registered on the kernel function in
+``refshapes.py`` that the transform runs, and ``refshapes.kernel`` looks
+its function up here.  The other plugin names are dispatched by the
+pipeline itself (``Pipeline._transform_group`` and ``_widget_json``), but
+each is registered on what it runs: each relation plugin on its loader in
+``operators/loaders.py``, and each ``class_object_*``,
+``geospatial_extractor`` and ``multi_column_extractor`` widget on its JSON
+shaper in ``refshapes.py``.  The registry also serves the ``plugins`` CLI
+listing, the deploy step's platform lookup (``deployers.run_deploy``) for
+platforms it does not handle itself, and name checks: tests assert that
+the reference's plugin names are registered.
 """
 
 from __future__ import annotations

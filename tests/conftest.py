@@ -21,6 +21,28 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def kernel_docs():
+    """``docs(df, plugin, params, gid="g")``: widget ``plugin``'s parsed
+    JSON per entity of ``df``, through its kernel with ``df`` as the
+    widget's source."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from niamoto_spark import refshapes as RS
+    from niamoto_spark.pipeline import _kernel_frame
+
+    def docs(df, plugin, params, gid="g"):
+        k = RS.kernel(plugin, {"source": "s", **params},
+                      RS.Scope({"s": df}, gid))
+        out = _kernel_frame(k, gid, None).select(gid, k.doc(F.col))
+        return {r[0]: None if r[1] is None else json.loads(r[1])
+                for r in out.collect()}
+
+    return docs
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

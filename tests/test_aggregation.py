@@ -152,28 +152,30 @@ def test_time_series_dense_months(spark):
     assert out[1] == 50.0 and out[2] == 100.0 and out[3] == 0.0
 
 
-def test_statistical_summary_subset_units_cap(spark):
+def test_statistical_summary_subset_units_cap(spark, kernel_docs):
     df = spark.createDataFrame(pd.DataFrame({"g": ["a"] * 3,
                                              "v": [100.0, 400.0, 900.0]}))
-    r = agg.statistical_summary(df, ["g"], "v", stats=["max"],
-                                units="cm", max_value=500).collect()[0]
-    assert set(r.asDict()) == {"g", "max", "units", "max_value"}
+    params = {"field": "v", "stats": ["max"], "units": "cm"}
+    r = kernel_docs(df, "statistical_summary",
+                    {**params, "max_value": 500})["a"]
     # max_value is DISPLAY metadata, never a clip: stats run over raw
     # data, and the emitted max_value is max(data_max, configured)
     # (reference statistical_summary.py:221-228; r13 variant-grid find)
-    assert r["max"] == 900.0 and r["units"] == "cm"
-    assert r["max_value"] == 900.0
-    r2 = agg.statistical_summary(df, ["g"], "v", stats=["max"],
-                                 max_value=2000).collect()[0]
-    assert r2["max_value"] == 2000.0   # configured cap above data wins
+    assert r == {"max": 900.0, "units": "cm", "max_value": 900.0}
+    r2 = kernel_docs(df, "statistical_summary",
+                     {**params, "max_value": 2000})["a"]
+    assert r2["max_value"] == 2000     # configured cap above data wins
     with pytest.raises(ValueError):
-        agg.statistical_summary(df, ["g"], "v", stats=["nope"])
+        kernel_docs(df, "statistical_summary", {"field": "v",
+                                                "stats": ["nope"]})
 
 
-def test_binary_counter_percentages(spark):
-    df = spark.createDataFrame(pd.DataFrame({"b": [1, 1, 1, 0]}))
-    r = agg.binary_counter(df, [], "b", include_percentages=True).collect()[0]
-    assert r["true_pct"] == 75.0 and r["false_pct"] == 25.0
+def test_binary_counter_percentages(spark, kernel_docs):
+    df = spark.createDataFrame(pd.DataFrame({"g": 1, "b": [1, 1, 1, 0]}))
+    r = kernel_docs(df, "binary_counter",
+                    {"field": "b", "include_percentages": True})[1]
+    assert r == {"oui": 3, "non": 1, "oui_percent": 75.0,
+                 "non_percent": 25.0}
 
 
 def test_geojson_feature_collection(spark):
@@ -188,25 +190,3 @@ def test_geojson_feature_collection(spark):
     pts = geospatial_extractor(df, ["pid"], "geo_pt")
     counts = {r["geometry_wkt"]: r["point_count"] for r in pts.collect()}
     assert counts == {"POINT (166.5 -22.1)": 2, "POINT (167.0 -21.0)": 1}
-
-
-def test_statistical_summary_median_approx_mode(spark, frame):
-    """median='approx' (the 100 TB operational lever — mergeable sketch
-    inside the same partial aggregate instead of the sort-based exact
-    percentile).  Documented NON-parity: exact stays the default and the
-    only mode the oracle lanes / refdiff grid use — approx_percentile
-    returns a DATA value and never interpolates even-count midpoints."""
-    approx = {r["g"]: r["median"] for r in
-              agg.statistical_summary(frame, ["g"], "dbh",
-                                      median="approx").collect()}
-    pdf = pd.DataFrame({"dbh": VALUES, "g": ["a"] * 9 + ["b"] * 8})
-    for g, sub in pdf.groupby("g"):
-        s = sorted(sub["dbh"])
-        if len(s) % 2:  # odd count: the sketch's pick IS the exact median
-            assert approx[g] == round(s[len(s) // 2], 2)
-        else:  # even: approx returns a DATA value straddling the midpoint
-            assert approx[g] in (round(s[len(s) // 2 - 1], 2),
-                                 round(s[len(s) // 2], 2))
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="median"):
-        agg.statistical_summary(frame, ["g"], "dbh", median="bogus")

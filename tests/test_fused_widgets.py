@@ -1,13 +1,14 @@
 """Fused per-entity aggregate widgets.
 
+Every aggregate widget (``refshapes.KERNELS``) is computed as
+expressions of one ``groupBy(gid).agg(...)`` per source
+(``refshapes.kernel``).  These tests check the JSON of
 statistical_summary, binned_distribution, categorical_distribution,
-binary_counter and field_aggregator are computed as expressions of one
-``groupBy(gid).agg(...)`` per source (``refshapes.kernel``).  These tests
-check each widget's JSON against values computed here in plain Python
-with the reference plugins' semantics, the JVM rounding against
-CPython's ``round(x, 2)``, the plan shape of the ``examples/config``
-plots group, and that a bad widget is reported without sinking its
-group.
+binary_counter and field_aggregator against values computed here in
+plain Python with the reference plugins' semantics, the JVM rounding
+against CPython's ``round(x, 2)``, the plan shape of the
+``examples/config`` plots group and of a group of aggregate widgets,
+and that a bad widget is reported without sinking its group.
 """
 
 import json
@@ -264,18 +265,52 @@ def test_bad_widget_is_a_warning_not_a_failed_group(project):
 # examples/config: plan shape and CLI warnings
 # ---------------------------------------------------------------------------
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_plots_group_plan_is_fused(spark, tmp_path):
     pipe = Pipeline(spark, warehouse=str(tmp_path / "wh"))
     with open(os.path.join(CONFIG, "import.yml")) as f:
         pipe.run_import(yaml.safe_load(f), base_dir=CONFIG)
     with open(os.path.join(CONFIG, "transform.yml")) as f:
         cfg = yaml.safe_load(f)
-    plots = pipe.run_transform(cfg, group_by="plots")["plots"]
-    plan = plots._jdf.queryExecution().executedPlan().toString()
-    for node in ("ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD"):
+    plan = _plan(pipe.run_transform(cfg, group_by="plots")["plots"])
+    # top_ranking ranks each entity's counts inside its aggregate: no
+    # window and no sort
+    for node in ("ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD",
+                 "Window", "Sort"):
         assert node not in plan, node
     assert plan.count("FileScan parquet") <= 8
     assert plan.count("Exchange") <= 11
+
+
+def test_aggregate_widgets_share_one_scan(project):
+    """Every aggregate widget over the occurrences is an expression of
+    the one occurrences aggregate, and direct_attribute on the grouping
+    table reads the entity's own row: one scan of the occurrences."""
+    occ = {"source": "occurrences"}
+    widgets = {
+        "stats": WIDGETS["stats_default"],
+        "ts": {"plugin": "time_series_analysis", "params": {
+            **occ, "fields": {"flag": "flag"}, "time_field": "cat_int"}},
+        "bools": {"plugin": "boolean_comparison", "params": {
+            **occ, "fields": ["flag"]}},
+        "scatter": {"plugin": "scatter_analysis", "params": {
+            **occ, "x_field": "dbh", "y_field": "cat_int"}},
+        "dbh": {"plugin": "direct_attribute", "params": {
+            **occ, "field": "dbh"}},
+        "name": {"plugin": "direct_attribute", "params": {
+            "source": "plots", "field": "plot"}},
+    }
+    before = len(project.warnings)
+    plan = _plan(project.run_transform(_cfg(widgets))["plots"])
+    assert project.warnings[before:] == []
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    # the plots table: its rows, and the loader join tagging occurrences
+    assert sum("ReadSchema: struct<id_plot" in s for s in scans) == 2
+    assert sum("plot_name" in s for s in scans) == 1, scans
+    assert len(scans) == 3
 
 
 def test_cli_prints_widget_warnings_and_keeps_other_widgets(

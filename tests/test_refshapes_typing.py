@@ -24,7 +24,7 @@ def _docs(df):
     return {r[0]: json.loads(r["__json"]) for r in df.collect()}
 
 
-def test_stat_summary_max_value_type_echo(spark):
+def test_stat_summary_max_value_type_echo(spark, kernel_docs):
     """max_value: config literal (YAML type, Union[int,float] — no
     pydantic coercion) unless round(data_max, 2) is STRICTLY greater,
     which emits the float data max (statistical_summary.py:221-228)."""
@@ -33,12 +33,9 @@ def test_stat_summary_max_value_type_echo(spark):
                       "v": [38.5, 10.0, 40.0, 45.25, 1.0]}))
 
     def docs(max_value):
-        k = RS.kernel("statistical_summary",
-                      {"source": "s", "field": "v", "stats": ["max"],
-                       "max_value": max_value}, {"s": df})
-        agg = df.groupBy("gid").agg(
-            *[c.alias(n) for n, c in k.aggs["s"].items()])
-        return _docs(agg.select("gid", k.doc(F.col).alias("__json")))
+        return kernel_docs(df, "statistical_summary",
+                           {"field": "v", "stats": ["max"],
+                            "max_value": max_value}, gid="gid")
 
     out = docs(40)
     # data below the cap AND data == cap -> config int echo
@@ -55,15 +52,26 @@ def test_stat_summary_max_value_type_echo(spark):
     assert isinstance(out_f[1]["max_value"], float)
 
 
-def test_direct_attribute_max_value_always_float(spark):
+def test_direct_attribute_max_value_always_float(spark, kernel_docs):
     """DirectAttributeParams.max_value is Optional[float]: pydantic
     coerces a YAML int, so the reference always emits a float."""
-    wdf = spark.createDataFrame(
+    df = spark.createDataFrame(
         pd.DataFrame({"gid": [1], "value": [3]}))
-    out = _docs(RS.direct_attribute(wdf, "gid", {"max_value": 5},
-                                    is_float_col=False))
+    out = kernel_docs(df, "direct_attribute",
+                      {"field": "value", "max_value": 5}, gid="gid")
     assert out[1]["max_value"] == 5.0
     assert isinstance(out[1]["max_value"], float)
+
+
+def test_direct_attribute_caps_only_numeric_strings(spark, kernel_docs):
+    """On a string column, a number above max_value becomes the cap,
+    formatted as a float; any other value, a word too, passes through
+    verbatim."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"gid": [1, 2, 3], "v": ["Alpha", "150", "7"]}))
+    out = kernel_docs(df, "direct_attribute",
+                      {"field": "v", "max_value": 100}, gid="gid")
+    assert [out[g]["value"] for g in (1, 2, 3)] == ["Alpha", "100", "7"]
 
 
 @pytest.fixture()
@@ -96,14 +104,16 @@ def test_series_axis_to_numeric_column_typing(eav, spark):
     assert all(isinstance(v, float) for v in out[1]["counts"])
 
 
-def test_time_series_int_fill_vs_float_pct(spark):
+def test_time_series_int_fill_vs_float_pct(spark, kernel_docs):
     """month_data mixes [0]*12 INT fills (months with no rows) with
     float percentages (months with rows — even 0.0)
     (time_series_analysis.py:247-259)."""
-    wdf = spark.createDataFrame(
-        pd.DataFrame({"gid": [1, 1], "month": [2, 5],
-                      "fleur_pct": [37.5, 0.0]}))
-    out = _docs(RS.time_series_analysis(wdf, "gid", {}))
+    df = spark.createDataFrame(
+        pd.DataFrame({"gid": 1, "month": [2] * 8 + [5],
+                      "flower": [1, 1, 1] + [0] * 6}))
+    out = kernel_docs(df, "time_series_analysis",
+                      {"fields": {"fleur": "flower"}, "time_field": "month"},
+                      gid="gid")
     fleur = out[1]["month_data"]["fleur"]
     assert fleur[1] == 37.5 and isinstance(fleur[1], float)
     assert fleur[4] == 0.0 and isinstance(fleur[4], float)

@@ -5,8 +5,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from niamoto_spark.functions import word_shingles
-from niamoto_spark.operators import aggregation as agg
-from niamoto_spark.operators import extraction as ex
 from niamoto_spark.operators.dedup import minhash_lsh_candidates
 from niamoto_spark.operators.loaders import direct_reference
 
@@ -24,23 +22,23 @@ def test_short_docs_dont_crash_shingling(spark):
                                   num_hashes=16, bands=4).count() == 0
 
 
-def test_max_value_cap_preserves_nulls(spark):
+def test_max_value_cap_preserves_nulls(spark, kernel_docs):
     """NULL handling around max_value: stats ignore NULLs, and the
     max_value metadata (max of data-max and the configured value —
     never a clip, reference statistical_summary.py:221-228) must not
     let a NULL masquerade as the cap."""
     df = spark.createDataFrame(
         [("a", None), ("a", 5.0), ("a", 200.0)], "g string, v double")
-    r = agg.statistical_summary(df, ["g"], "v", max_value=100).collect()[0]
+    params = {"field": "v", "stats": ["count", "mean"], "max_value": 100}
+    r = kernel_docs(df, "statistical_summary", params)["a"]
     assert r["count"] == 2          # NULL not counted
     assert r["mean"] == 102.5       # (5 + 200) / 2 — raw data, no clip
     assert r["max_value"] == 200.0  # data max wins over the cap
     allnull = spark.createDataFrame([("a", None)], "g string, v double")
-    r3 = agg.statistical_summary(
-        allnull, ["g"], "v", max_value=100).collect()[0]
-    assert r3["max_value"] == 100.0  # all-null -> configured fallback
-    d = spark.createDataFrame([("a", None)], "g string, v double")
-    r2 = ex.direct_attribute(d, ["g"], "v", max_value=100.0).collect()[0]
+    r3 = kernel_docs(allnull, "statistical_summary", params)["a"]
+    assert r3["max_value"] == 100   # all-null -> configured fallback
+    r2 = kernel_docs(allnull, "direct_attribute",
+                     {"field": "v", "max_value": 100.0})["a"]
     assert r2["value"] is None      # all-null entity stays null
 
 

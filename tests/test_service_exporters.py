@@ -28,14 +28,23 @@ def test_registry_resolves_reference_plugin_names():
 
 
 def test_shaped_widgets_register_the_shaper_that_runs():
-    """These widget names resolve to the JSON shapers the pipeline
-    calls, not to the catalog's row-returning helpers."""
+    """These widget names resolve to the JSON shapers and kernel
+    functions the pipeline calls, not to the catalog's row-returning
+    helpers."""
+    from niamoto_spark import refshapes as RS
+
     load_all()
     names = [f"class_object_{n}" for n in (
         "series_extractor", "field_aggregator", "categories_extractor",
         "binary_aggregator", "categories_mapper", "series_ratio_aggregator",
         "series_matrix_extractor", "series_by_axis_extractor")]
-    for name in names + ["geospatial_extractor", "multi_column_extractor"]:
+    kernels = ["statistical_summary", "binned_distribution",
+               "categorical_distribution", "binary_counter",
+               "field_aggregator", "top_ranking", "time_series_analysis",
+               "direct_attribute", "boolean_comparison", "scatter_analysis"]
+    assert RS.KERNELS == set(kernels)
+    for name in names + kernels + ["geospatial_extractor",
+                                   "multi_column_extractor"]:
         fn = get_plugin(name, PluginType.TRANSFORMER)
         assert fn.__module__ == "niamoto_spark.refshapes", name
 
@@ -91,10 +100,13 @@ def test_multi_column_extractor_derived_formula(spark):
     assert got == {"total_stems": 30.0, "living_stems": 23.0, "dead_stems": 7.0}
 
 
-def test_direct_attribute_precision_cap(spark):
-    df = spark.createDataFrame(pd.DataFrame({"g": ["a"], "v": [123.456]}))
-    r = ex.direct_attribute(df, ["g"], "v", precision=1, max_value=100.0).collect()[0]
-    assert r["value"] == 100.0
+def test_direct_attribute_precision_cap(spark, kernel_docs):
+    df = spark.createDataFrame(pd.DataFrame({"g": ["a", "b"],
+                                             "v": [123.456, 12.345]}))
+    docs = kernel_docs(df, "direct_attribute",
+                       {"field": "v", "precision": 1, "max_value": 100.0})
+    assert docs["a"]["value"] == "100.0"    # clipped
+    assert docs["b"]["value"] == "12.3"
 
 
 def test_transform_chain_refs():
