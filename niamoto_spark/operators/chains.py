@@ -7,9 +7,10 @@ JSON doc under its ``output_key`` (transform_chain.py:305-311).
 
 - A step other than ``custom_calculator`` is shaped exactly like a
   top-level widget with that plugin and those params.  A later step's
-  ``source: "@key"`` reads the frame that step was shaped from; naming
-  a step that has none (a widget shaped straight off its source, a
-  custom_calculator) raises.
+  ``source: "@key"`` reads the frame that step was shaped from (an
+  aggregate widget's per-entity aggregates); a step that cannot read it,
+  or names a step that has none (a chain, a shape_processor, a
+  custom_calculator), fails naming both steps.
 - A ``custom_calculator`` step reads the earlier steps' docs through
   ``@step.field[i]`` references (:func:`resolve_ref`).  One Python
   function, :func:`evaluate`, computes its doc, per entity, in one
@@ -224,15 +225,18 @@ def transform_chain(steps: list[dict], sources: dict[str, DataFrame],
             _check(params, [s["output_key"] for s in steps[:i]])
             calculators.append((f"__j{i}", step["output_key"], params))
             continue
-        if _is_ref(params.get("source")):
-            src = params["source"] = params["source"][1:]
-            if src in [s["output_key"] for s in steps[:i]] \
-                    and bindings.get(src) is None:
-                raise ValueError(
-                    f"chain step {step['output_key']!r} reads source "
-                    f"'@{src}', but step {src!r} builds no frame to read")
-        jdf, bindings[step["output_key"]] = shape(step["plugin"], params,
-                                                  bindings)
+        src = params.get("source")
+        if _is_ref(src):
+            params["source"] = src[1:]
+        try:
+            jdf, bindings[step["output_key"]] = shape(step["plugin"],
+                                                      params, bindings)
+        except Exception as e:
+            if not _is_ref(src):
+                raise
+            raise ValueError(
+                f"chain step {step['output_key']!r} cannot read the "
+                f"frame of step {src[1:]!r}: {e}") from e
         frames.append(jdf.select(F.col(gid), F.col("__json").alias(
             f"__j{i}")))
         keys[f"__j{i}"] = step["output_key"]

@@ -7,12 +7,13 @@ import -> transform -> export.  This module is the Spark-side equivalent:
 - ``run_import``: file/derived connectors -> parquet tables in a warehouse
   dir + an EntityRegistry (the reference's DuckDB tables + registry rows).
 - ``run_transform``: for each group config, ONE loader join per source
-  tags the fact rows with the entity id; every widget that is a plain
-  per-entity aggregate becomes expressions of ONE ``groupBy(gid)`` per
-  source, the other widgets build one (gid, json) frame each, and a wide
-  per-group result table joins them once each — the same table shape
-  the reference builds row-by-row (transformer.py:1142-1186), minus the
-  O(entities x widgets) query loop.
+  tags the fact rows with the entity id; every widget but
+  ``transform_chain`` and ``shape_processor`` is a per-entity aggregate
+  whose expressions join ONE ``groupBy(gid)`` per source (or per shared
+  pre-aggregate), those two build one (gid, json) frame each, and a
+  wide per-group result table joins them once each — the same table
+  shape the reference builds row-by-row (transformer.py:1142-1186),
+  minus the O(entities x widgets) query loop.
 - ``run_export``: JSON static API per group (exporters/json_api.py).
 
 Widgets take the reference's YAML parameter names verbatim (bins,
@@ -353,9 +354,9 @@ class Pipeline:
             tagged[src.name] = out
 
         # 2. widgets.  Aggregate widgets (RS.KERNELS) become expressions
-        # of ONE groupBy(gid).agg(...) per source; the other widgets each
-        # build a (gid, json) frame.  The wide table joins each source
-        # aggregate and each frame once.
+        # of ONE groupBy(gid).agg(...) per source or shared pre-aggregate;
+        # transform_chain and shape_processor each build a (gid, json)
+        # frame.  The wide table joins each aggregate and each frame once.
         from niamoto_spark import refshapes as RS
         row_source = g.group_by \
             if tagged[g.group_by] is grouping else None
@@ -447,7 +448,7 @@ class Pipeline:
         (niamoto_spark/refshapes.py).  Also returns the frame the JSON was
         shaped from, which a later transform_chain step's ``source:
         "@key"`` reads: an aggregate widget's kernel frame, None for a
-        chain and for the widgets shaped straight off their source."""
+        chain and for shape_processor."""
         from niamoto_spark import refshapes as RS
 
         if plugin == "transform_chain":
@@ -470,31 +471,6 @@ class Pipeline:
                 else grouping
             return self._shape_processor_widget(df, gid, params), None
 
-        df = scope.source(params.get("source"))
-        # class_object family + geospatial: shape straight from the raw
-        # tagged frame (the reference plugins receive the loaded stats
-        # frame whole and filter internally)
-        if plugin == "class_object_series_extractor":
-            return RS.co_series_extractor(df, gid, params, grouping), None
-        if plugin == "class_object_field_aggregator":
-            return RS.co_field_aggregator(df, gid, params, grouping), None
-        if plugin == "class_object_categories_extractor":
-            return RS.co_categories_extractor(df, gid, params,
-                                              grouping), None
-        if plugin == "class_object_binary_aggregator":
-            return RS.co_binary_aggregator(df, gid, params), None
-        if plugin == "class_object_categories_mapper":
-            return RS.co_categories_mapper(df, gid, params), None
-        if plugin == "class_object_series_ratio_aggregator":
-            return RS.co_series_ratio_aggregator(df, gid, params), None
-        if plugin == "class_object_series_matrix_extractor":
-            return RS.co_series_matrix_extractor(df, gid, params), None
-        if plugin == "class_object_series_by_axis_extractor":
-            return RS.co_series_by_axis_extractor(df, gid, params), None
-        if plugin == "geospatial_extractor":
-            return RS.geospatial_extractor(df, gid, params, grouping), None
-        if plugin == "multi_column_extractor":
-            return RS.multi_column_extractor(df, gid, params), None
         raise ValueError(f"unknown widget plugin {plugin!r}")
 
     def _shape_processor_widget(self, df: DataFrame, gid: str,

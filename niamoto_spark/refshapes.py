@@ -1,6 +1,6 @@
 """Reference-shaped widget JSON assembly.
 
-Each shaper turns per-entity rows into the EXACT JSON object the
+Each widget kernel turns per-entity rows into the EXACT JSON object the
 reference's transformer plugins persist (verified against the
 reference's own output by tools/ref_pipeline_diff.py).  Everything is
 Spark expressions — collect_list over already-grouped frames (entities
@@ -15,35 +15,37 @@ exactly), never F.round (HALF_UP) or F.bround (half-even on the
 shortest decimal repr) — a 0.005-boundary value would otherwise differ
 by a full cent.
 
-Aggregate widgets (:data:`KERNELS`): statistical_summary,
-binned_distribution, categorical_distribution, binary_counter,
-field_aggregator, top_ranking, time_series_analysis, direct_attribute,
-boolean_comparison and scatter_analysis are per-entity aggregates.
-Each is registered on a function that :func:`kernel` runs: aggregate
-expressions over its source plus a JSON expression over those
-aggregates, so the pipeline computes every such widget on a source in
-ONE ``groupBy(gid).agg(...)``.  top_ranking aggregates its per-item
-counts, a frame of its own.
+Every widget but ``transform_chain`` and ``shape_processor`` is a
+per-entity aggregate (:data:`KERNELS`).  Each is registered on a
+function that :func:`kernel` runs: aggregate expressions over its
+source plus a JSON expression over those aggregates, so the pipeline
+computes every such widget on a source in ONE ``groupBy(gid).agg(...)``.
+A widget that aggregates a per-(entity, key) pre-aggregate first —
+top_ranking's item counts, the class_object series' per-axis sums,
+grouped geospatial_extractor's per-coordinate rows — aggregates a
+frame of its own, named by what defines it, so widgets that need the
+same frame share it.
+
+The class_object widgets read the RAW tagged EAV frame
+(gid + class_object/class_name/class_value), as the reference plugins
+receive the whole loaded stats frame per entity: each per-entity value
+is a filtered aggregate such as ``sum(class_value)`` over the rows of
+one class_object and class_name.
 
 Ordering parity: several reference widgets (series_extractor with
-sort:false) emit values in SOURCE ROW ORDER (pandas groupby
-sort=False).  The pipeline materializes a ``__src_order`` column at
-file scan so that order survives Spark's shuffles as data, which is
-the only scale-safe way to express "file order" anyway.
-
-The class_object shapers consume the RAW tagged EAV frame
-(gid + class_object/class_name/class_value) and do their own
-filtering/aggregation — mirroring how the reference plugins receive
-the whole loaded stats frame per entity.
-
-The frame shapers the pipeline calls with a widget's whole params — the
-eight ``class_object_*`` plugins, ``geospatial_extractor`` and
-``multi_column_extractor`` — are registered under those plugin names.
+sort:false, geospatial_extractor feature ids) emit values in SOURCE ROW
+ORDER (pandas groupby sort=False).  The pipeline materializes a
+``__src_order`` column at file scan so that order survives Spark's
+shuffles as data, which is the only scale-safe way to express "file
+order" anyway.
 """
 
 from __future__ import annotations
 
 import json as _json
+import operator
+import re
+from functools import reduce
 from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -67,10 +69,6 @@ _MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
 
 def _obj_col(fields: list[Column]) -> Column:
     return F.to_json(F.struct(*fields), JSON_OPTS)
-
-
-def _obj(df: DataFrame, gid: str, fields: list[Column]) -> DataFrame:
-    return df.select(F.col(gid), _obj_col(fields).alias("__json"))
 
 
 # ---------------------------------------------------------------------------
@@ -112,11 +110,6 @@ def _doc_col(frags: list[tuple[str, Column]]) -> Column:
         parts.append(F.coalesce(frag, F.lit("null")))
     parts.append(F.lit("}"))
     return F.concat(*parts)
-
-
-def _doc(df: DataFrame, gid: str,
-         frags: list[tuple[str, Column]]) -> DataFrame:
-    return df.select(F.col(gid), _doc_col(frags).alias("__json"))
 
 
 def _frag_pct(counts: Column, int_zero_fill: bool) -> Column:
@@ -243,7 +236,7 @@ class Scope(NamedTuple):
         sources, else an imported entity's whole table (the reference's
         _load_additional_source)."""
         df = self.sources.get(name)
-        if df is None and name:
+        if name and name not in self.sources:
             df = self.load(name)
         if df is None:
             raise ValueError(
@@ -693,420 +686,438 @@ def _scatter_analysis(p: dict, scope: Scope) -> Kernel:
 
 
 # ---------------------------------------------------------------------------
-# frame widgets
+# row-picking and geometry widgets
 # ---------------------------------------------------------------------------
 
-@register("multi_column_extractor", PluginType.TRANSFORMER)
-def multi_column_extractor(df: DataFrame, gid: str, p: dict) -> DataFrame:
+# a formula's number and column-name tokens (plans.guards validates it)
+_FORMULA_PART = re.compile(r"(\d+(?:\.\d+)?)|([A-Za-z_][A-Za-z0-9_]*)")
+
+
+@_kernel("multi_column_extractor")
+def _multi_column_extractor(p: dict, scope: Scope) -> Kernel:
     """{labels, counts[, percentages][, named {value, units} fields]} —
     counts are int(first_row[col]) with derived formulas evaluated over
     the first row; missing columns/NaN -> 0
-    (extraction/multi_column_extractor.py:275-340)."""
+    (extraction/multi_column_extractor.py:275-340).  Every ``first()``
+    of one aggregate reads the same row, and a derived column is its
+    formula over those firsts, earlier derived columns inlined."""
     from niamoto_spark.plans.guards import (pin_double_literals,
                                             validate_formula)
 
+    src = p.get("source")
+    df = scope.source(src)
     columns = list(p["columns"])
     labels = p.get("labels") if p.get("labels") is not None else columns
     derived = p.get("derived_columns") or []
-    base_cols = [c for c in df.columns if c != gid]
-    firsts = df.groupBy(gid).agg(
-        *[F.first(c, ignorenulls=False).alias(c) for c in base_cols])
-    allowed = set(base_cols) | {d["name"] for d in derived}
+    sql = {c: f"first(`{c}`)" for c in df.columns if c != scope.gid}
+    allowed = set(sql) | {d["name"] for d in derived}
+
+    def part(m):
+        if m.group(1):
+            return pin_double_literals(m.group(1))
+        if m.group(2) not in sql:
+            raise ValueError(f"derived column {d['name']!r} reads "
+                             f"{m.group(2)!r} before it is defined")
+        return sql[m.group(2)]
+
     for d in derived:
         validate_formula(d["formula"], allowed_names=allowed)
-        firsts = firsts.withColumn(
-            d["name"], F.expr(pin_double_literals(d["formula"])))
+        sql[d["name"]] = "(" + _FORMULA_PART.sub(part, d["formula"]) + ")"
     counts = F.array(*[
-        (F.coalesce(F.col(c).cast("double"), F.lit(0.0)).cast("bigint")
-         if c in base_cols or any(d["name"] == c for d in derived)
-         else F.lit(0).cast("bigint"))
+        F.coalesce(F.expr(sql[c]).cast("double"), F.lit(0.0))
+        .cast("bigint") if c in sql else F.lit(0).cast("bigint")
         for c in columns])
-    base = firsts.select(F.col(gid), counts.alias("counts"))
-    frags = [("labels", F.lit(_json.dumps([str(lb) for lb in labels],
-                                          ensure_ascii=False))),
-             ("counts", F.to_json(F.col("counts")))]
-    if p.get("include_percentages"):
-        # zero-total fill is [0]*n INTS (multi_column_extractor.py:324)
-        frags.append(("percentages",
-                      _frag_pct(F.col("counts"), int_zero_fill=True)))
-    if p.get("create_named_fields") and p.get("field_names"):
-        for i, fname in enumerate(p["field_names"]):
-            frags.append((fname, F.to_json(F.struct(
-                F.element_at("counts", i + 1).alias("value"),
-                F.lit("").alias("units")), JSON_OPTS)))
-    return _doc(base, gid, frags)
+
+    def doc(col):
+        frags = [("labels", F.lit(_json.dumps([str(lb) for lb in labels],
+                                              ensure_ascii=False))),
+                 ("counts", F.to_json(col("counts")))]
+        if p.get("include_percentages"):
+            # zero-total fill is [0]*n INTS (multi_column_extractor.py:324)
+            frags.append(("percentages",
+                          _frag_pct(col("counts"), int_zero_fill=True)))
+        if p.get("create_named_fields") and p.get("field_names"):
+            for i, fname in enumerate(p["field_names"]):
+                frags.append((fname, F.to_json(F.struct(
+                    F.element_at(col("counts"), i + 1).alias("value"),
+                    F.lit("").alias("units")), JSON_OPTS)))
+        return _doc_col(frags)
+
+    return _over_source(p, scope, {"counts": counts}, doc)
 
 
-@register("geospatial_extractor", PluginType.TRANSFORMER)
-def geospatial_extractor(tagged_df: DataFrame, gid: str, p: dict,
-                         entities: DataFrame) -> DataFrame:
+_POINT = r"POINT \(([-\d.]+) ([-\d.]+)\)"
+_EMPTY_FC = '{"type": "FeatureCollection", "features": []}'
+
+
+def _feature_collection(features: Column) -> Column:
+    """The GeoJSON doc of ``features``, an array of ``(order, feature)``
+    structs; no doc when it is empty."""
+    return F.when(F.size(features) > 0, _obj_col([
+        F.lit("FeatureCollection").alias("type"),
+        F.transform(features, lambda s: s["f"]).alias("features")]))
+
+
+@_kernel("geospatial_extractor")
+def _geospatial_extractor(p: dict, scope: Scope) -> Kernel:
     """GeoJSON FeatureCollection — bug-for-bug with the reference (what
     the refdiff certifies):
 
     - group_by_coordinates=true iterates ``row.geometry``, which only
       resolves when the geometry FIELD is literally named 'geometry'
       (pandas attribute access); any other field name raises per-row,
-      is swallowed, and yields an EMPTY FeatureCollection
-      (extraction/geospatial_extractor.py:612-686); a field named
+      is swallowed, and yields an EMPTY FeatureCollection for every
+      entity (extraction/geospatial_extractor.py:612-686); a field named
       'geometry' groups (unique coordinates, first-occurrence
       properties, a ``count`` per coordinate).
     - otherwise geopandas to_json emits features with id = source row
-      index and all JSON-safe columns as properties."""
-    field = p["field"]
-    group_by_coords = p.get("group_by_coordinates", False)
-    if group_by_coords and field != "geometry":
-        return entities.select(
-            F.col(gid),
-            F.lit('{"type": "FeatureCollection", "features": []}')
-            .alias("__json"))
-    if group_by_coords:
-        return _geospatial_grouped(tagged_df, gid, p, field)
-    pt, x, y = _point_xy(field)
+      index and all JSON-safe columns as properties.
+    An entity with no point has no doc."""
+    src, field, gid = p.get("source"), p["field"], scope.gid
+    df = scope.source(src)
+    grouped = p.get("group_by_coordinates", False)
+    if grouped and field != "geometry":
+        return Kernel({}, {"entity": F.col(gid)},
+                      lambda col: F.lit(_EMPTY_FC), {})
+    pt = F.regexp_extract(F.col(field), _POINT, 0)
+    x = F.regexp_extract(F.col(field), _POINT, 1).cast("double")
+    y = F.regexp_extract(F.col(field), _POINT, 2).cast("double")
+    order = F.col(SRC_ORDER) if SRC_ORDER in df.columns \
+        else F.monotonically_increasing_id()
+    if grouped:
+        # unique coordinates in first-occurrence order, properties from
+        # the FIRST row at each coordinate (configured ``properties``
+        # only), plus a ``count`` of rows sharing it: a per-coordinate
+        # frame of its own
+        props = [c for c in (p.get("properties") or []) if c in df.columns]
+        per_coord = (df.where(pt != "")
+                     .select(F.col(gid), x.alias("x"), y.alias("y"),
+                             order.alias("o"),
+                             F.struct(*[F.col(c) for c in props]).alias("p")
+                             if props else
+                             F.struct(F.lit(1).alias("__dummy")).alias("p"))
+                     .groupBy(gid, "x", "y")
+                     .agg(F.min("o").alias("first"),
+                          F.min_by("p", "o").alias("p"),
+                          F.count(F.lit(1)).alias("count")))
+        feature = F.struct(
+            F.lit("Feature").alias("type"),
+            F.struct(F.lit("Point").alias("type"),
+                     F.array(F.col("x"), F.col("y")).alias("coordinates"))
+            .alias("geometry"),
+            F.struct(*[F.col("p")[c].alias(c) for c in props],
+                     F.col("count").alias("count")).alias("properties"))
+        name = "geospatial_extractor " + _json.dumps([src, props])
+        features = F.sort_array(F.collect_list(
+            F.struct(F.col("first").alias("o"), feature.alias("f"))))
+        return Kernel({name: {"features": features}}, {},
+                      lambda col: _feature_collection(col("features")),
+                      {name: per_coord})
     # a loader may have shadowed the source's own gid-named column under
     # __src_<gid> (loaders._clear_gid_collision); the reference sees the
     # source column under its ORIGINAL name in GeoJSON properties
-    prop_cols = []
-    for c in tagged_df.columns:
-        if c in (gid, field, SRC_ORDER) or c.lower().endswith("_geom") \
-                or c.lower() in ("geometry", "geom"):
-            continue
-        out_name = c[len("__src_"):] if c.startswith("__src_") else c
-        prop_cols.append((c, out_name))
-    rows = tagged_df.where(pt != "")
+    props = [F.col(c).alias(c[len("__src_"):] if c.startswith("__src_")
+                            else c)
+             for c in df.columns
+             if c not in (gid, field, SRC_ORDER)
+             and not c.lower().endswith("_geom")
+             and c.lower() not in ("geometry", "geom")]
     feature = F.struct(
         F.col(SRC_ORDER).cast("string").alias("id") if SRC_ORDER
-        in tagged_df.columns else F.lit("0").alias("id"),
+        in df.columns else F.lit("0").alias("id"),
         F.lit("Feature").alias("type"),
-        F.struct(*[F.col(c).alias(o) for c, o in prop_cols])
-        .alias("properties"),
+        F.struct(*props).alias("properties"),
         F.struct(F.lit("Point").alias("type"),
                  F.array(x, y).alias("coordinates")).alias("geometry"))
-    order = F.col(SRC_ORDER) if SRC_ORDER in tagged_df.columns \
-        else F.monotonically_increasing_id()
-    agg = (rows.select(F.col(gid), order.alias("__o"), feature.alias("__f"))
-           .groupBy(gid)
-           .agg(F.sort_array(F.collect_list(F.struct(F.col("__o"),
-                                                     F.col("__f"))))
-                .alias("__a")))
-    return _obj(agg, gid, [
-        F.lit("FeatureCollection").alias("type"),
-        F.transform("__a", lambda s: s["__f"]).alias("features"),
-    ])
-
-
-def _point_xy(field: str):
-    pt = F.regexp_extract(F.col(field), r"POINT \(([-\d.]+) ([-\d.]+)\)", 0)
-    x = F.regexp_extract(F.col(field),
-                         r"POINT \(([-\d.]+) ([-\d.]+)\)", 1).cast("double")
-    y = F.regexp_extract(F.col(field),
-                         r"POINT \(([-\d.]+) ([-\d.]+)\)", 2).cast("double")
-    return pt, x, y
-
-
-def _geospatial_grouped(tagged_df: DataFrame, gid: str, p: dict,
-                        field: str) -> DataFrame:
-    """group_by_coordinates semantics (geospatial_extractor.py:612-686):
-    unique coordinates in first-occurrence order, properties from the
-    FIRST row at each coordinate (configured ``properties`` list only),
-    plus a ``count`` of rows sharing it."""
-    pt, x, y = _point_xy(field)
-    props = [c for c in (p.get("properties") or [])
-             if c in tagged_df.columns]
-    order = F.col(SRC_ORDER) if SRC_ORDER in tagged_df.columns \
-        else F.monotonically_increasing_id()
-    rows = tagged_df.where(pt != "").select(
-        F.col(gid), x.alias("__x"), y.alias("__y"), order.alias("__o"),
-        F.struct(*[F.col(c) for c in props]).alias("__p")
-        if props else F.struct(F.lit(1).alias("__dummy")).alias("__p"))
-    per_coord = (rows.groupBy(gid, "__x", "__y")
-                 .agg(F.min("__o").alias("__first"),
-                      F.min_by("__p", "__o").alias("__p"),
-                      F.count(F.lit(1)).alias("count")))
-    prop_fields = [F.col("__p")[c].alias(c) for c in props]
-    feature = F.struct(
-        F.lit("Feature").alias("type"),
-        F.struct(F.lit("Point").alias("type"),
-                 F.array(F.col("__x"), F.col("__y")).alias("coordinates"))
-        .alias("geometry"),
-        F.struct(*prop_fields, F.col("count").alias("count"))
-        .alias("properties"))
-    agg = (per_coord
-           .select(F.col(gid), F.col("__first"), feature.alias("__f"))
-           .groupBy(gid)
-           .agg(F.sort_array(F.collect_list(
-               F.struct(F.col("__first"), F.col("__f")))).alias("__a")))
-    return _obj(agg, gid, [
-        F.lit("FeatureCollection").alias("type"),
-        F.transform("__a", lambda s: s["__f"]).alias("features"),
-    ])
+    features = F.sort_array(F.collect_list(F.when(
+        pt != "", F.struct(order.alias("o"), feature.alias("f")))))
+    return _over_source(p, scope, {"features": features},
+                        lambda col: _feature_collection(col("features")))
 
 
 # ---------------------------------------------------------------------------
-# class_object family — consume the raw tagged EAV frame
+# class_object family — filtered aggregates over the raw tagged EAV frame
 # ---------------------------------------------------------------------------
 
-@register("class_object_series_extractor", PluginType.TRANSFORMER)
-def co_series_extractor(wdf: DataFrame, gid: str, p: dict,
-                        entities: DataFrame) -> DataFrame:
+def _in_class(co: Any, name: Column | None = None) -> Column:
+    """Rows of class_object ``co`` (and class ``name``): a NULL key
+    matches no class, as pandas' groupby drops a NaN key."""
+    cond = F.col(CO) == F.lit(co)
+    return cond if name is None else cond & (name.isNotNull())
+
+
+def _class_sum(co: Any, cond: Column | None = None) -> Column:
+    """sum(class_value) over the rows of class_object ``co`` matching
+    ``cond``: NULL where there are none."""
+    match = _in_class(co) if cond is None else _in_class(co) & cond
+    return F.sum(F.when(match, F.col(CV)))
+
+
+@_kernel("class_object_series_extractor")
+def _co_series_extractor(p: dict, scope: Scope) -> Kernel:
     """{<size.output>: [...], <value.output>: [...]} — groupby(size,
     sort=False) preserves SOURCE ORDER unless sort is requested; an
     entity with no rows gets empty lists, not a missing widget
-    (class_objects/series_extractor.py:120-205)."""
+    (class_objects/series_extractor.py:120-205).  The per-(entity, size)
+    sums are a frame of their own."""
+    src, gid = p.get("source"), scope.gid
+    df = scope.source(src)
     size_f = p.get("size_field", {}) or {}
     value_f = p.get("value_field", {}) or {}
     out_axis = size_f.get("output", "sizes")
     out_val = value_f.get("output", "values")
+    numeric = bool(size_f.get("numeric"))
     # reference row filter: size fillna(-1) then size != -1 (NULL or
     # literal -1 size drops the row); value NULL rows are KEPT — the
     # pandas NaN-skipping sum makes an all-NULL group 0.0, so the
     # aggregate below coalesces instead of dropping
-    sub = wdf.where(F.col(CO) == p["class_object"]) \
-             .where(F.col(CN).isNotNull() & (F.col(CN) != "-1")
-                    & (F.col(CV).isNull() | (F.col(CV) != -1)))
-    axis: Column = F.col(CN).cast("double") if size_f.get("numeric") \
-        else F.col(CN).cast("string")
-    order_col = F.min(SRC_ORDER).alias("__o") if SRC_ORDER in wdf.columns \
-        else F.min(F.lit(0)).alias("__o")
-    zero = F.lit(0).cast(dict(wdf.dtypes).get(CV, "double"))
-    grouped = (sub.groupBy(gid, axis.alias("__axis"))
-               .agg(F.coalesce(F.sum(CV), zero).alias("__val"),
-                    order_col))
-    sort_key = F.col("__axis") if size_f.get("sort") else F.col("__o")
-    arr = F.sort_array(F.collect_list(
-        F.struct(sort_key.alias("__k"), F.col("__axis"), F.col("__val"))))
-    agg = entities.select(F.col(gid)).join(
-        grouped.groupBy(gid).agg(arr.alias("__a")), gid, "left")
-    agg = agg.withColumn(
-        "__a", F.coalesce(F.col("__a"), F.array().cast(
-            agg.schema["__a"].dataType)))
-    # axis typing (r13 byte differential): the reference runs pandas
-    # to_numeric over each ENTITY's axis column, so an all-integral
-    # axis serializes as JSON ints, any fraction makes the whole array
-    # doubles — a per-array choice no struct type can express
-    axis_arr = F.transform("__a", lambda x: x["__axis"])
-    axis_frag = _frag_num_array(axis_arr) if size_f.get("numeric") \
-        else F.to_json(axis_arr)
-    return _doc(agg, gid, [
-        (out_axis, axis_frag),
-        (out_val, F.to_json(F.transform("__a", lambda x: x["__val"]))),
-    ])
+    sub = df.where(F.col(CO) == p["class_object"]) \
+            .where(F.col(CN).isNotNull() & (F.col(CN) != "-1")
+                   & (F.col(CV).isNull() | (F.col(CV) != -1)))
+    axis = F.col(CN).cast("double" if numeric else "string")
+    order = F.min(SRC_ORDER) if SRC_ORDER in df.columns \
+        else F.min(F.lit(0))
+    zero = F.lit(0).cast(dict(df.dtypes).get(CV, "double"))
+    sums = (sub.groupBy(gid, axis.alias("axis"))
+            .agg(F.coalesce(F.sum(CV), zero).alias("val"),
+                 order.alias("o")))
+    name = "class_object_series_extractor " + _json.dumps(
+        [src, p["class_object"], numeric])
+    key = F.col("axis") if size_f.get("sort") else F.col("o")
+    pairs = F.sort_array(F.collect_list(
+        F.struct(key.alias("k"), F.col("axis"), F.col("val"))))
+    empty = _doc_col([(out_axis, F.lit("[]")), (out_val, F.lit("[]"))])
+
+    def doc(col):
+        a = col("pairs")
+        # axis typing (r13 byte differential): the reference runs pandas
+        # to_numeric over each ENTITY's axis column, so an all-integral
+        # axis serializes as JSON ints, any fraction makes the whole
+        # array doubles — a per-array choice no struct type can express
+        sizes = F.transform(a, lambda x: x["axis"])
+        return F.when(a.isNull(), empty).otherwise(_doc_col([
+            (out_axis, _frag_num_array(sizes) if numeric
+             else F.to_json(sizes)),
+            (out_val, F.to_json(F.transform(a, lambda x: x["val"])))]))
+
+    # every entity has a doc: the grouping row marks it present
+    return Kernel({name: {"pairs": pairs}}, {"entity": F.col(gid)}, doc,
+                  {name: sums})
 
 
-@register("class_object_field_aggregator", PluginType.TRANSFORMER)
-def co_field_aggregator(wdf: DataFrame, gid: str, p: dict,
-                        entities: DataFrame) -> DataFrame:
+def _axis_kernel(p: dict, scope: Scope, cos: list, doc: Callable,
+                 name: str = "pairs") -> Kernel:
+    """A kernel over the per-(entity, numeric class_name) sums of each
+    class_object ``co`` of ``cos``: aggregate ``name`` is the entity's
+    ``(axis, v_<co>...)`` rows in axis order, a missing sum read as
+    0.0.  Every series widget over the same class_objects of a source
+    shares the frame of sums."""
+    cos = sorted(set(cos))
+    src, gid = p.get("source"), scope.gid
+    frame = (scope.source(src).where(F.col(CO).isin(cos))
+             .groupBy(gid, F.col(CN).cast("double").alias("axis"))
+             .agg(*[_class_sum(co).alias(f"v{j}")
+                    for j, co in enumerate(cos)]))
+    pairs = F.sort_array(F.collect_list(F.struct(F.col("axis"), *[
+        F.coalesce(F.col(f"v{j}"), F.lit(0.0)).alias(f"v_{co}")
+        for j, co in enumerate(cos)])))
+    frame_name = "class_object axis " + _json.dumps([src, cos])
+    return Kernel({frame_name: {name: pairs}}, {}, doc, {frame_name: frame})
+
+
+@_kernel("class_object_field_aggregator")
+def _co_field_aggregator(p: dict, scope: Scope) -> Kernel:
     """{target: {value[, units]}} / range {min, max[, units]}; missing
-    class_objects -> null values (class_objects/field_aggregator.py:
-    _get_field_value — float(sum per class_object))."""
-    sums = (wdf.groupBy(gid, CO).agg(F.sum(CV).alias("__v"))
-            .groupBy(gid)
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct(F.col(CO), F.col("__v"))))
-                .alias("__m")))
-    base = entities.select(F.col(gid)).join(sums, gid, "left")
-    fields = []
-    for spec in p["fields"]:
-        target = spec["target"]
+    class_objects -> null values, and every entity has a doc
+    (class_objects/field_aggregator.py:_get_field_value — float(sum per
+    class_object))."""
+    def keys(spec):
         co = spec["class_object"]
         if isinstance(co, list) or spec.get("format") == "range":
-            lo = F.col("__m")[F.lit(co[0])].cast("double")
-            hi = F.col("__m")[F.lit(co[1])].cast("double")
-            inner = [lo.alias("min"), hi.alias("max")]
-        else:
-            inner = [F.col("__m")[F.lit(co)].cast("double").alias("value")]
-        if spec.get("units"):
-            inner.append(F.lit(spec["units"]).alias("units"))
-        fields.append(F.struct(*inner).alias(target))
-    return _obj(base, gid, fields)
+            return {"min": co[0], "max": co[1]}
+        return {"value": co}
+
+    cos = list(dict.fromkeys(co for spec in p["fields"]
+                             for co in keys(spec).values()))
+    aggs = {f"s{j}": _class_sum(co) for j, co in enumerate(cos)}
+
+    def doc(col):
+        fields = []
+        for spec in p["fields"]:
+            inner = [col(f"s{cos.index(co)}").cast("double").alias(k)
+                     for k, co in keys(spec).items()]
+            if spec.get("units"):
+                inner.append(F.lit(spec["units"]).alias("units"))
+            fields.append(F.struct(*inner).alias(spec["target"]))
+        return _obj_col(fields)
+
+    k = _over_source(p, scope, aggs, doc)
+    # every entity has a doc: the grouping row marks it present
+    return k._replace(rows={"entity": F.col(scope.gid)})
 
 
-@register("class_object_categories_extractor", PluginType.TRANSFORMER)
-def co_categories_extractor(wdf: DataFrame, gid: str, p: dict,
-                            entities: DataFrame) -> DataFrame:
+@_kernel("class_object_categories_extractor")
+def _co_categories_extractor(p: dict, scope: Scope) -> Kernel:
     """{tops: categories_order, counts} — categories missing from the
     data get 0, but an entity with NO rows for the class_object raises
     reference-side ("No data found"), so it gets no widget at all here
     either (class_objects/categories_extractor.py:85-130)."""
-    del entities  # reference emits nothing for data-less entities
+    co = p["class_object"]
     cats = p.get("categories_order") or []
-    sub = (wdf.where(F.col(CO) == p["class_object"])
-           .groupBy(gid, CN).agg(F.sum(CV).alias("__v")))
-    m = F.map_from_entries(F.collect_list(
-        F.struct(F.col(CN).cast("string"), F.col("__v"))))
-    agg = sub.groupBy(gid).agg(m.alias("__m"))
-    return _obj(agg, gid, [
-        F.array(*[F.lit(str(c)) for c in cats]).alias("tops"),
-        F.array(*[F.coalesce(F.col("__m")[F.lit(str(c))], F.lit(0.0))
-                  for c in cats]).alias("counts"),
-    ])
+    name = F.col(CN).cast("string")
+    aggs = {"n": F.count_if(_in_class(co, name))}
+    aggs.update({f"c{j}": _class_sum(co, name == F.lit(str(c)))
+                 for j, c in enumerate(cats)})
+
+    def doc(col):
+        return F.when(col("n") > 0, _obj_col([
+            F.array(*[F.lit(str(c)) for c in cats]).alias("tops"),
+            F.array(*[F.coalesce(col(f"c{j}"), F.lit(0.0))
+                      for j in range(len(cats))]).alias("counts")]))
+
+    return _over_source(p, scope, aggs, doc)
 
 
-@register("class_object_binary_aggregator", PluginType.TRANSFORMER)
-def co_binary_aggregator(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
+@_kernel("class_object_binary_aggregator")
+def _co_binary_aggregator(p: dict, scope: Scope) -> Kernel:
     """{group.label: {out_class: raw summed value}} — raw values, NOT
-    re-normalized (class_objects/binary_aggregator.py:60-140)."""
-    fields = []
-    joined = None
+    re-normalized (class_objects/binary_aggregator.py:60-140).  A class
+    name missing from ``class_mapping`` counts toward no class; an
+    entity has a doc when one group has a row with a class."""
+    aggs: dict[str, Column] = {}
+    groups = []
     for gi, grp in enumerate(p["groups"]):
         mapping = grp.get("class_mapping") or {}
         classes = grp.get("classes") or sorted(set(mapping.values()))
-        sub = wdf.where(F.col(CO) == grp["field"])
-        if mapping:
-            mcol = F.create_map(*[F.lit(x) for kv in mapping.items()
-                                  for x in kv])
-            sub = sub.withColumn("__out", mcol[F.col(CN)])
-        else:
-            sub = sub.withColumn("__out", F.col(CN))
-        piece = (sub.groupBy(gid, "__out").agg(F.sum(CV).alias("__v"))
-                 .groupBy(gid)
-                 .agg(F.map_from_entries(
-                     F.collect_list(F.struct(F.col("__out"), F.col("__v"))))
-                     .alias(f"__m{gi}")))
-        joined = piece if joined is None else joined.join(piece, gid, "full")
-        fields.append(F.struct(*[
-            F.coalesce(F.col(f"__m{gi}")[F.lit(c)], F.lit(0.0)).alias(c)
-            for c in classes]).alias(grp["label"]))
-    return _obj(joined, gid, fields)
+        out = F.create_map(*[F.lit(x) for kv in mapping.items()
+                             for x in kv])[F.col(CN)] \
+            if mapping else F.col(CN)
+        aggs[f"n{gi}"] = F.count_if(_in_class(grp["field"], out))
+        aggs.update({f"g{gi}_{j}": _class_sum(grp["field"], out == F.lit(c))
+                     for j, c in enumerate(classes)})
+        groups.append((grp["label"], classes))
+
+    def doc(col):
+        present = reduce(operator.or_, [col(f"n{gi}") > 0
+                                        for gi in range(len(groups))])
+        return F.when(present, _obj_col([F.struct(*[
+            F.coalesce(col(f"g{gi}_{j}"), F.lit(0.0)).alias(c)
+            for j, c in enumerate(classes)]).alias(label)
+            for gi, (label, classes) in enumerate(groups)]))
+
+    return _over_source(p, scope, aggs, doc)
 
 
-@register("class_object_categories_mapper", PluginType.TRANSFORMER)
-def co_categories_mapper(wdf: DataFrame, gid: str, p: dict) -> DataFrame:
+@_kernel("class_object_categories_mapper")
+def _co_categories_mapper(p: dict, scope: Scope) -> Kernel:
     """{out_group: {mapped_label: value}}
-    (class_objects/categories_mapper.py:94)."""
-    fields = []
-    joined = None
-    for gi, (out_group, spec) in enumerate(p["categories"].items()):
-        sub = (wdf.where(F.col(CO) == spec["class_object"])
-               .groupBy(gid, CN).agg(F.sum(CV).alias("__v")))
-        m = F.map_from_entries(F.collect_list(
-            F.struct(F.col(CN).cast("string"), F.col("__v"))))
-        piece = sub.groupBy(gid).agg(m.alias(f"__m{gi}"))
-        joined = piece if joined is None else joined.join(piece, gid, "full")
-        mapping = spec.get("mapping") or {}
-        fields.append(F.struct(*[
-            F.col(f"__m{gi}")[F.lit(str(src))].alias(out_label)
-            for out_label, src in mapping.items()]).alias(out_group))
-    return _obj(joined, gid, fields)
+    (class_objects/categories_mapper.py:94); an entity has a doc when
+    one group's class_object has a row with a class."""
+    name = F.col(CN).cast("string")
+    aggs: dict[str, Column] = {}
+    groups = list(p["categories"].items())
+    for gi, (_, spec) in enumerate(groups):
+        co = spec["class_object"]
+        aggs[f"n{gi}"] = F.count_if(_in_class(co, name))
+        aggs.update({f"g{gi}_{j}": _class_sum(co, name == F.lit(str(src)))
+                     for j, src in enumerate((spec.get("mapping")
+                                              or {}).values())})
+
+    def doc(col):
+        present = reduce(operator.or_, [col(f"n{gi}") > 0
+                                        for gi in range(len(groups))])
+        return F.when(present, _obj_col([F.struct(*[
+            col(f"g{gi}_{j}").alias(label)
+            for j, label in enumerate(spec.get("mapping") or {})])
+            .alias(out_group) for gi, (out_group, spec) in enumerate(groups)]))
+
+    return _over_source(p, scope, aggs, doc)
 
 
-@register("class_object_series_ratio_aggregator", PluginType.TRANSFORMER)
-def co_series_ratio_aggregator(wdf: DataFrame, gid: str,
-                               p: dict) -> DataFrame:
+@_kernel("class_object_series_ratio_aggregator")
+def _co_series_ratio_aggregator(p: dict, scope: Scope) -> Kernel:
     """{dist: {classes, subset, complement}} — difference mode emits
     ABSOLUTE total-subset; ratio mode max(0, 1-subset/total), 1.0 when
-    total==0 (class_objects/series_ratio_aggregator.py:150-225)."""
-    fields = []
-    joined = None
-    for di, (dist_name, dist) in enumerate(p["distributions"].items()):
-        total_co, subset_co = dist["total"], dist["subset"]
-        mode = dist.get("complement_mode")
-        sub = (wdf.where(F.col(CO).isin([total_co, subset_co]))
-               .withColumn("__axis", F.col(CN).cast("double"))
-               .groupBy(gid, "__axis")
-               .agg(F.coalesce(F.sum(F.when(F.col(CO) == total_co,
-                                            F.col(CV))), F.lit(0.0))
-                    .alias("__tot"),
-                    F.coalesce(F.sum(F.when(F.col(CO) == subset_co,
-                                            F.col(CV))), F.lit(0.0))
-                    .alias("__sub")))
-        arr = F.sort_array(F.collect_list(F.struct(
-            F.col("__axis"), F.col("__tot"), F.col("__sub"))))
-        piece = sub.groupBy(gid).agg(arr.alias(f"__a{di}"))
-        joined = piece if joined is None else joined.join(piece, gid, "full")
-        a = F.col(f"__a{di}")
-        classes = F.transform(a, lambda x: x["__axis"])
-        subset = F.transform(a, lambda x: x["__sub"].cast("double"))
-        if mode == "difference":
-            complement = F.transform(
-                a, lambda x: (x["__tot"] - x["__sub"]).cast("double"))
-        else:
-            complement = F.transform(
-                a, lambda x: F.when(
-                    x["__tot"] > 0,
-                    F.greatest(F.lit(0.0),
-                               F.lit(1.0) - x["__sub"] / x["__tot"]))
-                .otherwise(F.lit(1.0)))
-        # classes carry pandas to_numeric typing (r13 byte
-        # differential) -> fragment assembly, null-safe on the full
-        # join's missing side like the previous struct emission
-        frag = F.when(a.isNull(), F.lit(
-            '{"classes":null,"subset":null,"complement":null}')) \
-            .otherwise(F.concat(
-                F.lit('{"classes":'), _frag_num_array(classes),
-                F.lit(',"subset":'), F.to_json(subset),
-                F.lit(',"complement":'), F.to_json(complement),
-                F.lit("}")))
-        fields.append((dist_name, frag))
-    return _doc(joined, gid, fields)
+    total==0 (class_objects/series_ratio_aggregator.py:150-225).  Each
+    distribution reads the sums of its own two class_objects."""
+    dists = list(p["distributions"].items())
+
+    def doc(col):
+        frags = []
+        for di, (dist_name, dist) in enumerate(dists):
+            a = col(f"d{di}")
+            tot, sub = f"v_{dist['total']}", f"v_{dist['subset']}"
+            if dist.get("complement_mode") == "difference":
+                complement = F.transform(a, lambda x: x[tot] - x[sub])
+            else:
+                complement = F.transform(a, lambda x: F.when(
+                    x[tot] > 0,
+                    F.greatest(F.lit(0.0), F.lit(1.0) - x[sub] / x[tot]))
+                    .otherwise(F.lit(1.0)))
+            # classes carry pandas to_numeric typing (r13 byte
+            # differential) -> fragment assembly; an entity without this
+            # distribution's class_objects reads nulls
+            frags.append((dist_name, F.when(a.isNull(), F.lit(
+                '{"classes":null,"subset":null,"complement":null}'))
+                .otherwise(F.concat(
+                    F.lit('{"classes":'),
+                    _frag_num_array(F.transform(a, lambda x: x["axis"])),
+                    F.lit(',"subset":'),
+                    F.to_json(F.transform(a, lambda x: x[sub])),
+                    F.lit(',"complement":'), F.to_json(complement),
+                    F.lit("}")))))
+        return _doc_col(frags)
+
+    aggs: dict[str, dict[str, Column]] = {}
+    frames: dict[str, DataFrame] = {}
+    for di, (_, dist) in enumerate(dists):
+        k = _axis_kernel(p, scope, [dist["total"], dist["subset"]], doc,
+                         f"d{di}")
+        for frame_name, agg in k.aggs.items():
+            aggs.setdefault(frame_name, {}).update(agg)
+        frames.update(k.frames)
+    return Kernel(aggs, {}, doc, frames)
 
 
-@register("class_object_series_matrix_extractor", PluginType.TRANSFORMER)
-def co_series_matrix_extractor(wdf: DataFrame, gid: str,
-                               p: dict) -> DataFrame:
+@_kernel("class_object_series_matrix_extractor")
+def _co_series_matrix_extractor(p: dict, scope: Scope) -> Kernel:
     """{<axis.field>: [...], series: {name: [...]}}; complement
     = 100 - scaled value (class_objects/series_matrix_extractor.py)."""
     axis_field = (p.get("axis") or {}).get("field", "class_name")
-    series_cfg = p["series"]
-    cos = sorted({s["class_object"] for s in series_cfg})
-    sub = (wdf.where(F.col(CO).isin(cos))
-           .withColumn("__axis", F.col(CN).cast("double"))
-           .groupBy(gid, "__axis")
-           .agg(*[F.sum(F.when(F.col(CO) == co, F.col(CV)))
-                  .alias(f"__v_{co}") for co in cos]))
-    arr = F.sort_array(F.collect_list(F.struct(
-        F.col("__axis"), *[F.col(f"__v_{co}") for co in cos])))
-    agg = sub.groupBy(gid).agg(arr.alias("__a"))
-    a = F.col("__a")
-    series_structs = []
-    for s in series_cfg:
-        co = s["class_object"]
-        scale = float(s.get("scale", 1.0))
+    series = p["series"]
 
-        def val(x, co=co, scale=scale):
-            return F.coalesce(x[f"__v_{co}"], F.lit(0.0)) * scale
+    def doc(col):
+        a, cols = col("pairs"), []
+        for s in series:
+            co, scale = f"v_{s['class_object']}", float(s.get("scale", 1.0))
+            if s.get("complement"):
+                expr = F.transform(a, lambda x: F.lit(100.0) - x[co] * scale)
+            else:
+                expr = F.transform(a, lambda x: x[co] * scale)
+            cols.append(expr.alias(s["name"]))
+        return _doc_col([
+            (axis_field,
+             _frag_num_array(F.transform(a, lambda x: x["axis"]))),
+            ("series", F.to_json(F.struct(*cols), JSON_OPTS))])
 
-        if s.get("complement"):
-            expr = F.transform(a, lambda x: (F.lit(100.0) - val(x))
-                               .cast("double"))
-        else:
-            expr = F.transform(a, lambda x: val(x).cast("double"))
-        series_structs.append(expr.alias(s["name"]))
-    return _doc(agg, gid, [
-        (axis_field,
-         _frag_num_array(F.transform(a, lambda x: x["__axis"]))),
-        ("series", F.to_json(F.struct(*series_structs), JSON_OPTS)),
-    ])
+    return _axis_kernel(p, scope, [s["class_object"] for s in series], doc)
 
 
-@register("class_object_series_by_axis_extractor", PluginType.TRANSFORMER)
-def co_series_by_axis_extractor(wdf: DataFrame, gid: str,
-                                p: dict) -> DataFrame:
-    """{<axis.output_field>: [...], <type>: [...] ...}
+@_kernel("class_object_series_by_axis_extractor")
+def _co_series_by_axis_extractor(p: dict, scope: Scope) -> Kernel:
+    """{<axis.output_field>: [...], <type>: [...] ...}, 0.0 where a type
+    has no row at an axis value
     (class_objects/series_by_axis_extractor.py:15-114)."""
-    axis = p.get("axis") or {}
-    out_field = axis.get("output_field", "axis")
+    out_field = (p.get("axis") or {}).get("output_field", "axis")
     types = p["types"]
-    cos = sorted(set(types.values()))
-    sub = (wdf.where(F.col(CO).isin(cos))
-           .withColumn("__axis", F.col(CN).cast("double"))
-           .groupBy(gid, "__axis")
-           .agg(*[F.sum(F.when(F.col(CO) == co, F.col(CV)))
-                  .alias(f"__v_{co}") for co in cos]))
-    arr = F.sort_array(F.collect_list(F.struct(
-        F.col("__axis"), *[F.col(f"__v_{co}") for co in cos])))
-    agg = sub.groupBy(gid).agg(arr.alias("__a"))
-    a = F.col("__a")
-    fields = [(out_field,
-               _frag_num_array(F.transform(a, lambda x: x["__axis"])))]
 
-    def _series(co):
-        # NB: F.transform dispatches on lambda arity — a default-arg
-        # closure (lambda x, co=co) would receive the element INDEX as
-        # co, so bind via factory instead
-        return F.transform(a, lambda x: F.coalesce(x[f"__v_{co}"],
-                                                   F.lit(0.0))
-                           .cast("double"))
+    def doc(col):
+        a = col("pairs")
+        return _doc_col(
+            [(out_field,
+              _frag_num_array(F.transform(a, lambda x: x["axis"])))]
+            # F.transform calls each lambda at once, so it reads this co
+            + [(out, F.to_json(F.transform(a, lambda x: x[f"v_{co}"])))
+               for out, co in types.items()])
 
-    for out_name, co in types.items():
-        fields.append((out_name, F.to_json(_series(co))))
-    return _doc(agg, gid, fields)
+    return _axis_kernel(p, scope, list(types.values()), doc)

@@ -6,14 +6,14 @@ and a per-type registry (reference: src/niamoto/core/plugins/base.py:31-38 and
 (or classes with a ``transform``/``load_data`` method) that take DataFrames
 and validated params and return DataFrames / Column expressions.
 
-Each aggregate widget is registered on the kernel function in
+Each aggregate widget — every widget but ``transform_chain`` and
+``shape_processor`` — is registered on the kernel function in
 ``refshapes.py`` that the transform runs, and ``refshapes.kernel`` looks
 its function up here.  The other plugin names are dispatched by the
 pipeline itself (``Pipeline._transform_group`` and ``_widget_json``), but
 each is registered on what it runs: each relation plugin on its loader in
-``operators/loaders.py``, and each ``class_object_*``,
-``geospatial_extractor`` and ``multi_column_extractor`` widget on its JSON
-shaper in ``refshapes.py``.  The registry also serves the ``plugins`` CLI
+``operators/loaders.py``, ``transform_chain`` on its function in
+``operators/chains.py``.  The registry also serves the ``plugins`` CLI
 listing, the deploy step's platform lookup (``deployers.run_deploy``) for
 platforms it does not handle itself, and name checks: tests assert that
 the reference's plugin names are registered.

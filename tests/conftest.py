@@ -22,9 +22,10 @@ def spark():
 
 @pytest.fixture(scope="session")
 def kernel_docs():
-    """``docs(df, plugin, params, gid="g")``: widget ``plugin``'s parsed
-    JSON per entity of ``df``, through its kernel with ``df`` as the
-    widget's source."""
+    """``docs(df, plugin, params, gid="g", entities=None)``: widget
+    ``plugin``'s parsed JSON per entity, through its kernel with ``df``
+    as the widget's source.  ``entities`` is the grouping table a kernel
+    that reads the entity's own row needs."""
     import json
 
     from pyspark.sql import functions as F
@@ -32,10 +33,10 @@ def kernel_docs():
     from niamoto_spark import refshapes as RS
     from niamoto_spark.pipeline import _kernel_frame
 
-    def docs(df, plugin, params, gid="g"):
+    def docs(df, plugin, params, gid="g", entities=None):
         k = RS.kernel(plugin, {"source": "s", **params},
                       RS.Scope({"s": df}, gid))
-        out = _kernel_frame(k, gid, None).select(gid, k.doc(F.col))
+        out = _kernel_frame(k, gid, entities).select(gid, k.doc(F.col))
         return {r[0]: None if r[1] is None else json.loads(r[1])
                 for r in out.collect()}
 

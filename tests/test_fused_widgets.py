@@ -313,6 +313,37 @@ def test_aggregate_widgets_share_one_scan(project):
     assert len(scans) == 3
 
 
+def test_class_object_widgets_share_the_stats_scans(spark, tmp_path):
+    """The class_object widgets of one group read their stats source in
+    at most five scans: field_aggregator, categories_extractor,
+    binary_aggregator and categories_mapper are expressions of the
+    source's one aggregate, and each series widget adds one
+    pre-aggregate per (entity, axis), shared by the widgets over the same
+    class_objects."""
+    from tests.test_transform_dialect import (CLASS_OBJECTS, PLOTS, STATS,
+                                              STATS_SOURCE)
+
+    PLOTS.to_csv(tmp_path / "plots.csv", index=False)
+    STATS.to_csv(tmp_path / "plot_stats.csv", index=False)
+    pipe = Pipeline(spark, warehouse=str(tmp_path / "wh"))
+    pipe.run_import({"entities": {"references": {"plots": {
+        "connector": {"type": "file", "format": "csv",
+                      "path": "plots.csv"},
+        "schema": {"id_field": "id_plot"}}}}}, base_dir=str(tmp_path))
+
+    def stats_scans(names):
+        out = pipe.run_transform([{
+            "group_by": "plots", "sources": [STATS_SOURCE],
+            "widgets_data": {n: {"plugin": CLASS_OBJECTS[n][0],
+                                 "params": CLASS_OBJECTS[n][1]}
+                             for n in names}}], base_dir=str(tmp_path))
+        assert pipe.warnings == []
+        return _plan(out["plots"]).count("FileScan csv")
+
+    assert stats_scans(["fields", "categories", "binary", "mapper"]) == 1
+    assert stats_scans(sorted(CLASS_OBJECTS)) <= 5
+
+
 def test_cli_prints_widget_warnings_and_keeps_other_widgets(
         spark, tmp_path, capsys):
     cfg_dir = tmp_path / "config"

@@ -7,7 +7,7 @@ fills.  The r13 byte-level export differential
 (tools/refdiff/tablediff.diff_export_trees) found the engine emitted
 doubles everywhere: Catalyst unifies CASE branch types inside a
 to_json(struct(...)) plan, so per-row/per-element typing needs string
-fragment assembly (refshapes._doc/_frag_*).  These tests pin the token
+fragment assembly (refshapes._doc_col/_frag_*).  These tests pin the token
 types without spinning up the full differential.
 """
 
@@ -18,10 +18,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from niamoto_spark import refshapes as RS
-
-
-def _docs(df):
-    return {r[0]: json.loads(r["__json"]) for r in df.collect()}
 
 
 def test_stat_summary_max_value_type_echo(spark, kernel_docs):
@@ -88,14 +84,15 @@ def eav(spark):
     return df, ents
 
 
-def test_series_axis_to_numeric_column_typing(eav, spark):
+def test_series_axis_to_numeric_column_typing(eav, kernel_docs):
     """pandas to_numeric types the whole per-entity axis column: all
     integral -> JSON ints, one fraction -> ALL doubles."""
     df, ents = eav
-    out = _docs(RS.co_series_extractor(
-        df, "gid", {"class_object": "a",
-                    "size_field": {"numeric": True, "output": "bins"},
-                    "value_field": {"output": "counts"}}, ents))
+    out = kernel_docs(
+        df, "class_object_series_extractor",
+        {"class_object": "a",
+         "size_field": {"numeric": True, "output": "bins"},
+         "value_field": {"output": "counts"}}, gid="gid", entities=ents)
     assert out[1]["bins"] == [10, 20, 30]
     assert all(isinstance(b, int) for b in out[1]["bins"])
     assert out[2]["bins"] == [10.0, 12.5]

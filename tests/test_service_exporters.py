@@ -28,9 +28,8 @@ def test_registry_resolves_reference_plugin_names():
 
 
 def test_shaped_widgets_register_the_shaper_that_runs():
-    """These widget names resolve to the JSON shapers and kernel
-    functions the pipeline calls, not to the catalog's row-returning
-    helpers."""
+    """These widget names resolve to the kernel functions the pipeline
+    calls, not to the catalog's row-returning helpers."""
     from niamoto_spark import refshapes as RS
 
     load_all()
@@ -42,9 +41,9 @@ def test_shaped_widgets_register_the_shaper_that_runs():
                "categorical_distribution", "binary_counter",
                "field_aggregator", "top_ranking", "time_series_analysis",
                "direct_attribute", "boolean_comparison", "scatter_analysis"]
+    kernels += names + ["geospatial_extractor", "multi_column_extractor"]
     assert RS.KERNELS == set(kernels)
-    for name in names + kernels + ["geospatial_extractor",
-                                   "multi_column_extractor"]:
+    for name in kernels:
         fn = get_plugin(name, PluginType.TRANSFORMER)
         assert fn.__module__ == "niamoto_spark.refshapes", name
 

@@ -2,8 +2,6 @@
 drop-in output parity requires them (certified by
 tools/ref_pipeline_diff.py)."""
 
-import json
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -26,28 +24,27 @@ def tagged(spark):
     return df, entities
 
 
-def test_geospatial_group_by_coords_strict_empty(tagged, spark):
+def test_geospatial_group_by_coords_strict_empty(tagged, kernel_docs):
     """Any field name other than 'geometry' reproduces the
     reference's swallowed AttributeError -> empty FeatureCollection
     (geospatial_extractor.py:612-686)."""
     df, entities = tagged
-    out = RS.geospatial_extractor(
-        df, "plot_id", {"field": "geo_pt", "group_by_coordinates": True},
-        entities)
-    docs = {r["plot_id"]: json.loads(r["__json"]) for r in out.collect()}
+    docs = kernel_docs(
+        df, "geospatial_extractor",
+        {"field": "geo_pt", "group_by_coordinates": True},
+        gid="plot_id", entities=entities)
     assert docs[1] == {"type": "FeatureCollection", "features": []}
 
 
-def test_geospatial_group_by_coords_sane(tagged, spark):
+def test_geospatial_group_by_coords_sane(tagged, kernel_docs):
     """A field named 'geometry' groups: unique coords in first-occurrence
     order, first-row properties, per-coord count."""
     df, entities = tagged
-    out = RS.geospatial_extractor(
-        df.withColumnRenamed("geo_pt", "geometry"), "plot_id",
+    docs = kernel_docs(
+        df.withColumnRenamed("geo_pt", "geometry"), "geospatial_extractor",
         {"field": "geometry", "group_by_coordinates": True,
          "properties": ["species"]},
-        entities)
-    docs = {r["plot_id"]: json.loads(r["__json"]) for r in out.collect()}
+        gid="plot_id", entities=entities)
     feats = docs[1]["features"]
     assert [f["geometry"]["coordinates"] for f in feats] == \
         [[166.5, -22.1], [166.9, -22.3]]

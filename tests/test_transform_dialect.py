@@ -55,6 +55,11 @@ _P2 = [
     ("sub", "1", 3.0), ("tot", "1", 6.0),
     ("s1", "100", 1.0), ("s2", "100", 0.5),
 ]
+# one row per plot, with a point
+COUNTS = pd.DataFrame({"plot_id": ["P1", "P2"], "a": [3, 0], "b": [5, 0],
+                       "geo_pt": ["POINT (166.5 -22.1)",
+                                  "POINT (165.0 -21.5)"]})
+
 # P3 has no stats rows
 STATS = pd.DataFrame(
     [{"plot_id": p, "class_object": co, "class_name": cn, "class_value": v}
@@ -168,6 +173,10 @@ STATS_SOURCE = {
     "name": "plot_stats", "data": "plot_stats.csv", "grouping": "plots",
     "relation": {"plugin": "stats_loader", "key": "plot_id",
                  "match_field": "plot_id", "ref_field": "locality"}}
+COUNTS_SOURCE = {
+    "name": "plot_counts", "data": "plot_counts.csv", "grouping": "plots",
+    "relation": {"plugin": "direct_reference", "key": "plot_id",
+                 "ref_key": "locality"}}
 
 
 @pytest.fixture(scope="module")
@@ -177,6 +186,7 @@ def project(tmp_path_factory, spark):
     OCCURRENCES.to_csv(base / "occurrences.csv", index=False)
     LINKS.to_csv(base / "occurrence_links.csv", index=False)
     STATS.to_csv(base / "plot_stats.csv", index=False)
+    COUNTS.to_csv(base / "plot_counts.csv", index=False)
     pipe = Pipeline(spark, warehouse=str(base / "warehouse"))
 
     def entity(path, id_field):
@@ -258,21 +268,60 @@ def test_class_object_reference_params(project, name):
     assert {gid: row["w"] for gid, row in rows.items()} == expected
 
 
-# widgets shaped straight off their source, so their chain step has no
-# frame a later step could read; shape_processor reads the grouping
-# table's own geometry
+# a NULL or unmapped class key counts toward no class: (widget, the
+# stats row added to a plot)
+STRAY_ROWS = [
+    pytest.param("binary", ("cover", "water", 5.0), id="binary-unmapped"),
+    pytest.param("binary", ("cover", None, 5.0), id="binary-null-name"),
+    pytest.param("categories", ("cover", None, 5.0),
+                 id="categories-null-name"),
+    pytest.param("mapper", ("dbh", None, 5.0), id="mapper-null-name"),
+    pytest.param("fields", (None, "m", 5.0), id="fields-null-object"),
+]
+
+
+@pytest.mark.parametrize("plot", ["P1", "P3"])
+@pytest.mark.parametrize("name, row", STRAY_ROWS)
+def test_stray_class_key_counts_toward_no_class(project, name, row, plot):
+    """A row whose class_name is NULL or missing from ``class_mapping``,
+    or whose class_object is NULL, changes no doc: each widget's docs are
+    its docs without that row, as pandas' groupby drops a NaN key."""
+    plugin, params, expected = CLASS_OBJECTS[name]
+    pipe, base = project
+    data = f"stats_{plot}_{name}_{row[0]}_{row[1]}.csv"
+    stray = dict(zip(("class_object", "class_name", "class_value"), row))
+    pd.concat([STATS, pd.DataFrame([{"plot_id": plot, **stray}])]) \
+        .to_csv(f"{base}/{data}", index=False)
+    rows = _transform(pipe, base, [{**STATS_SOURCE, "data": data}],
+                      {"w": {"plugin": plugin, "params": params}})
+    assert pipe.warnings == []
+    assert {gid: row["w"] for gid, row in rows.items()} == expected
+
+
+# shape_processor reads the grouping table's own geometry; the
+# group_by_coordinates geospatial_extractor gives every plot a doc
 CHAINED = {name: CLASS_OBJECTS[name][:2] for name in
-           ("binary", "ratio", "mapper", "matrix", "fields")}
+           ("binary", "ratio", "mapper", "matrix", "fields", "series",
+            "categories", "by_axis")}
 CHAINED["shape"] = ("shape_processor", {"field": "location",
                                         "simplify": False,
                                         "format": "geojson"})
+CHAINED["columns"] = ("multi_column_extractor", {
+    "source": "plot_counts", "columns": ["a", "b", "ab", "missing"],
+    "derived_columns": [{"name": "ab", "formula": "a + b"}],
+    "include_percentages": True})
+CHAINED["points"] = ("geospatial_extractor", {"source": "plot_counts",
+                                              "field": "geo_pt"})
+CHAINED["no_points"] = ("geospatial_extractor", {
+    "source": "plot_counts", "field": "geo_pt",
+    "group_by_coordinates": True})
 
 
 @pytest.mark.parametrize("name", sorted(CHAINED))
 def test_chain_step_matches_top_level(project, name):
     plugin, params = CHAINED[name]
     pipe, base = project
-    rows = _transform(pipe, base, [STATS_SOURCE], {
+    rows = _transform(pipe, base, [STATS_SOURCE, COUNTS_SOURCE], {
         "top": {"plugin": plugin, "params": params},
         "chained": {"plugin": "transform_chain", "params": {"steps": [
             {"plugin": plugin, "output_key": name, "params": params}]}}})
@@ -285,8 +334,9 @@ def test_chain_step_matches_top_level(project, name):
 
 def test_chain_source_naming_frameless_step_raises(project):
     """A later step's ``source: "@key"`` reads the frame an earlier step
-    was shaped from; a class_object step has none, so the widget fails
-    with a message naming both steps instead of binding nothing."""
+    was shaped from; a class_object step's frame holds its aggregates,
+    not the stats rows, so the widget fails with a message naming both
+    steps."""
     pipe, base = project
     plugin, params = CHAINED["binary"]
     _transform(pipe, base, [STATS_SOURCE], {

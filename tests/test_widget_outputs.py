@@ -1,8 +1,10 @@
 """Pinned per-entity JSON of the aggregate widgets ``top_ranking``,
 ``time_series_analysis``, ``direct_attribute``, ``boolean_comparison``
-and ``scatter_analysis``, top-level and as ``transform_chain`` steps.
+and ``scatter_analysis``, of the eight ``class_object_*`` widgets, of
+``multi_column_extractor`` and of ``geospatial_extractor``, top-level and
+as ``transform_chain`` steps.
 
-Two groups run on the :func:`tests.test_chain_outputs.fixture_project`
+Three groups run on the :func:`tests.test_chain_outputs.fixture_project`
 project:
 
 - ``plots`` over the fixture's occurrences (plot 3 has none);
@@ -10,7 +12,15 @@ project:
   ties and NULL items, a float key joined to a hierarchy table, months
   0, 13 and NULL, a 1/32 share on the 0.005 rounding boundary, NULL
   booleans, NULL coordinates.  Site S2 has rows but no valid month, no
-  non-NULL item and no complete (x, y) pair; S3 has no rows.
+  non-NULL item and no complete (x, y) pair; S3 has no rows;
+- ``stations`` over the EAV stats :data:`STATION_STATS`, the one-row
+  counts :data:`STATION_COUNTS` and the points :data:`STATION_POINTS`.
+  The stats hold duplicate (class_object, class_name) rows, a NULL
+  class_value, ``-1`` sizes and values, class names ``"1"`` and
+  ``"1.0"`` that meet on one numeric axis, integral and fractional
+  axes and zero totals.  ST3 has stats rows for another class_object
+  only and a point row without a point; ST4 has no rows anywhere; ST5
+  has all-zero stats and counts.
 
 ``tests/data/widget_outputs.json`` holds each widget's parsed doc per
 entity; values compare type-exactly (``0`` differs from ``0.0``).
@@ -155,37 +165,167 @@ def _chain(widgets: dict) -> dict:
         for key, (plugin, params) in widgets.items()]}}
 
 
-def _group(group_by: str, source: dict, widgets: dict,
+def _group(group_by: str, sources: list[dict], widgets: dict,
            chain_keys: list[str]) -> dict:
     data = {k: {"plugin": p, "params": params}
             for k, (p, params) in widgets.items()}
     data["chain"] = _chain({k: widgets[k] for k in chain_keys})
-    return {"group_by": group_by, "sources": [source],
+    return {"group_by": group_by, "sources": sources,
             "widgets_data": data}
 
 
+def _stats(station: str, rows: list) -> list[dict]:
+    return [{"station": station, "class_object": co, "class_name": cn,
+             "class_value": v} for co, cn, v in rows]
+
+
+# file order matters: an unsorted series follows it
+STATION_STATS = pd.DataFrame(_stats("ST1", [
+    ("dbh", "20", 2.0), ("dbh", "10", 1.5), ("dbh", "-1", 9.0),
+    ("dbh", "1.0", 2.0), ("dbh", "30", -1.0), ("dbh", "20", 0.25),
+    ("dbh", "1", 1.0), ("dbh", "40", None), ("dbh", "30", 0.5),
+    ("cover", "forest", 40.0), ("cover", "out", 20.0),
+    ("cover", "forest", 10.0), ("cover", "mangrove", 5.0),
+    ("elev_min", "m", 100.0), ("elev_max", "m", None),
+    ("tot", "1", 4.0), ("tot", "1.0", 4.0), ("tot", "2", 0.0),
+    ("tot", "3", 8.0),
+    ("sub", "1", 2.0), ("sub", "2", 0.0), ("sub", "3", 2.0),
+    ("sub", "4", 1.0), ("sub", "1.0", 0.5),
+    ("s1", "0.5", 0.25), ("s1", "1.5", 0.5), ("s2", "0.5", 0.125),
+]) + _stats("ST2", [
+    ("dbh", "10", 4.0), ("dbh", "12.5", 1.0), ("cover", "out", 3.0),
+    ("elev_min", "m", 5.0), ("elev_max", "m", 50.5), ("tot", "2.5", 2.0),
+]) + _stats("ST3", [
+    ("misc", "x", 1.0), ("misc", "y", 2.0),
+]) + _stats("ST5", [
+    ("dbh", "10", 0.0), ("cover", "forest", 0.0), ("tot", "1", 0.0),
+    ("sub", "1", 0.0), ("s1", "1", 0.0),
+]))
+
+# one row per station: multi_column_extractor reads the first row
+STATION_COUNTS = pd.DataFrame({"station": ["ST1", "ST2", "ST5"],
+                               "a": [3, 7, 0], "b": [5, None, 0],
+                               "c": [6, 2, 0]})
+STATION_COUNTS["b"] = STATION_COUNTS["b"].astype("Int64")
+
+_PTS = ["POINT (166.5 -22.1)", "POINT (166.9 -22.3)",
+        "POINT (166.5 -22.1)", None, "POINT (165.0 -21.5)", None]
+STATION_POINTS = pd.DataFrame({
+    "station": ["ST1", "ST1", "ST1", "ST1", "ST2", "ST3"],
+    "geo_pt": _PTS, "geometry": _PTS,
+    "species": ["a", "b", "c", "d", "e", "f"],
+    "height": [10, 12, 15, 3, 7, 1]})
+
+STATIONS = pd.DataFrame({"id_station": [1, 2, 3, 4, 5],
+                         "code": ["ST1", "ST2", "ST3", "ST4", "ST5"]})
+
+_ST = {"source": "stats"}
+_SERIES = "class_object_series_extractor"
+STATION_WIDGETS = {
+    "series": (_SERIES, {
+        **_ST, "class_object": "dbh",
+        "size_field": {"input": "class_name", "output": "sizes",
+                       "numeric": True, "sort": True},
+        "value_field": {"input": "class_value", "output": "values",
+                        "numeric": True}}),
+    "series_order": (_SERIES, {**_ST, "class_object": "dbh",
+                               "size_field": {"numeric": True}}),
+    "series_str": (_SERIES, {**_ST, "class_object": "dbh",
+                             "size_field": {"output": "names",
+                                            "sort": True}}),
+    "fields": ("class_object_field_aggregator", {**_ST, "fields": [
+        {"source": "stats", "class_object": "dbh", "target": "dbh_total",
+         "units": "cm"},
+        {"source": "stats", "class_object": ["elev_min", "elev_max"],
+         "target": "elevation", "format": "range"},
+        {"source": "stats", "class_object": "misc", "target": "misc"}]}),
+    "categories": ("class_object_categories_extractor", {
+        **_ST, "class_object": "cover",
+        "categories_order": ["out", "mangrove", "forest", "none"]}),
+    "binary": ("class_object_binary_aggregator", {**_ST, "groups": [
+        {"label": "cover", "field": "cover", "classes": ["forest", "open"],
+         "class_mapping": {"forest": "forest", "mangrove": "forest",
+                           "out": "open"}},
+        {"label": "subs", "field": "sub", "classes": ["1", "2", "1.0"]}]}),
+    "mapper": ("class_object_categories_mapper", {**_ST, "categories": {
+        "structure": {"class_object": "dbh",
+                      "mapping": {"small": "10", "mid": "20", "one": "1"}},
+        "land": {"class_object": "cover",
+                 "mapping": {"f": "forest", "o": "out"}}}}),
+    "ratio": ("class_object_series_ratio_aggregator", {
+        **_ST, "distributions": {
+            "share": {"total": "tot", "subset": "sub"},
+            "rest": {"total": "tot", "subset": "sub",
+                     "complement_mode": "difference"},
+            "fine": {"total": "s1", "subset": "s2"}}}),
+    "matrix": ("class_object_series_matrix_extractor", {
+        **_ST, "axis": {"field": "class_name"},
+        "series": [
+            {"name": "s1_pct", "class_object": "s1", "scale": 100},
+            {"name": "s2_rest", "class_object": "s2", "scale": 100,
+             "complement": True}]}),
+    "by_axis": ("class_object_series_by_axis_extractor", {
+        **_ST, "axis": {"output_field": "levels"},
+        "types": {"Subset": "sub", "Total": "tot"}}),
+    "columns": ("multi_column_extractor", {
+        "source": "counts", "columns": ["a", "b", "ab", "ab2", "missing"],
+        "derived_columns": [{"name": "ab", "formula": "a + b"},
+                            {"name": "ab2", "formula": "ab * 2 - c / 4"}],
+        "include_percentages": True, "create_named_fields": True,
+        "field_names": ["fa", "fb"]}),
+    "columns_labels": ("multi_column_extractor", {
+        "source": "counts", "columns": ["c", "a"], "labels": ["C", "A"]}),
+    "geo": ("geospatial_extractor", {"source": "points",
+                                     "field": "geo_pt"}),
+    "geo_grouped": ("geospatial_extractor", {
+        "source": "points", "field": "geometry",
+        "group_by_coordinates": True, "properties": ["species", "nope"]}),
+    "geo_grouped_empty": ("geospatial_extractor", {
+        "source": "points", "field": "geo_pt",
+        "group_by_coordinates": True}),
+}
+
+
+def _by_station(name: str, data: str, plugin: str, **relation) -> dict:
+    return {"name": name, "data": data, "grouping": "stations",
+            "relation": {"plugin": plugin, "key": "station", **relation}}
+
+
 GROUPS = [
-    _group("sites", {"name": "obs", "data": "site_obs", "grouping": "sites",
-                     "relation": {"plugin": "direct_reference",
-                                  "key": "site", "ref_key": "site"}},
+    _group("sites", [{"name": "obs", "data": "site_obs", "grouping": "sites",
+                      "relation": {"plugin": "direct_reference",
+                                   "key": "site", "ref_key": "site"}}],
            SITE_WIDGETS, ["top_hier", "ts", "da_int_clip", "da_site_int",
                           "bools_dict", "scatter"]),
-    _group("plots", {"name": "occurrences", "data": "occurrences",
-                     "grouping": "plots",
-                     "relation": {"plugin": "direct_reference",
-                                  "key": "plot_name",
-                                  "ref_key": "locality"}},
+    _group("plots", [{"name": "occurrences", "data": "occurrences",
+                      "grouping": "plots",
+                      "relation": {"plugin": "direct_reference",
+                                   "key": "plot_name",
+                                   "ref_key": "locality"}}],
            PLOT_WIDGETS, ["top", "ts", "da_locality", "bools", "scatter"]),
+    # CSV sources: their file order is the reference's row order
+    _group("stations", [
+        _by_station("stats", "station_stats.csv", "stats_loader",
+                    match_field="station", ref_field="code"),
+        _by_station("counts", "station_counts.csv", "direct_reference",
+                    ref_key="code"),
+        _by_station("points", "station_points.csv", "direct_reference",
+                    ref_key="code")],
+        STATION_WIDGETS, list(STATION_WIDGETS)),
 ]
-GIDS = {"sites": "id_site", "plots": "id_plot"}
+GIDS = {"sites": "id_site", "plots": "id_plot", "stations": "id_station"}
 
 
 def widget_project(spark, base: str):
     """The chain fixture project plus the sites, their observations and
-    the family hierarchy."""
+    the family hierarchy, and the stations with their stats, counts and
+    points files."""
     pipe = fixture_project(spark, base)
     for name, frame in (("sites", SITES), ("site_obs", SITE_OBS),
-                        ("families", FAMILIES)):
+                        ("families", FAMILIES), ("stations", STATIONS),
+                        ("station_stats", STATION_STATS),
+                        ("station_counts", STATION_COUNTS),
+                        ("station_points", STATION_POINTS)):
         frame.to_csv(os.path.join(base, f"{name}.csv"), index=False)
 
     def entity(name, id_field):
@@ -196,17 +336,19 @@ def widget_project(spark, base: str):
     pipe.run_import({"version": "1.0", "entities": {
         "datasets": {"site_obs": entity("site_obs", "id")},
         "references": {"sites": entity("sites", "id_site"),
-                       "families": entity("families", "id")},
+                       "families": entity("families", "id"),
+                       "stations": entity("stations", "id_station")},
     }}, base_dir=base)
     return pipe
 
 
-def widget_outputs(pipe) -> dict:
-    """{group: {widget: {entity id: parsed JSON or None}}}."""
+def widget_outputs(pipe, base: str) -> dict:
+    """{group: {widget: {entity id: parsed JSON or None}}}; file sources
+    are read from ``base``."""
     out = {}
     for cfg in GROUPS:
         group, gid = cfg["group_by"], GIDS[cfg["group_by"]]
-        rows = pipe.run_transform([cfg])[group].collect()
+        rows = pipe.run_transform([cfg], base_dir=base)[group].collect()
         out[group] = {
             name: {str(r[gid]): (json.loads(r[name])
                                  if r[name] is not None else None)
@@ -217,8 +359,9 @@ def widget_outputs(pipe) -> dict:
 
 @pytest.fixture(scope="module")
 def outputs(spark, tmp_path_factory):
-    pipe = widget_project(spark, str(tmp_path_factory.mktemp("widgets")))
-    got = widget_outputs(pipe)
+    base = str(tmp_path_factory.mktemp("widgets"))
+    pipe = widget_project(spark, base)
+    got = widget_outputs(pipe, base)
     return got, list(pipe.warnings)
 
 
@@ -248,7 +391,7 @@ if __name__ == "__main__":
     with tempfile.TemporaryDirectory() as tmp:
         pipe = widget_project(get_spark("widget_outputs",
                                         master="local[2]"), tmp)
-        result = widget_outputs(pipe)
+        result = widget_outputs(pipe, tmp)
         assert not pipe.warnings, pipe.warnings
     with open(PINNED, "w") as f:       # one line per entity
         f.write("{\n" + ",\n".join(
