@@ -789,12 +789,12 @@ def _geospatial_extractor(p: dict, scope: Scope) -> Kernel:
         # the FIRST row at each coordinate (configured ``properties``
         # only), plus a ``count`` of rows sharing it: a per-coordinate
         # frame of its own
-        props = [c for c in (p.get("properties") or []) if c in df.columns]
+        keep = [c for c in (p.get("properties") or []) if c in df.columns]
         per_coord = (df.where(pt != "")
                      .select(F.col(gid), x.alias("x"), y.alias("y"),
                              order.alias("o"),
-                             F.struct(*[F.col(c) for c in props]).alias("p")
-                             if props else
+                             F.struct(*[F.col(c) for c in keep]).alias("p")
+                             if keep else
                              F.struct(F.lit(1).alias("__dummy")).alias("p"))
                      .groupBy(gid, "x", "y")
                      .agg(F.min("o").alias("first"),
@@ -805,9 +805,9 @@ def _geospatial_extractor(p: dict, scope: Scope) -> Kernel:
             F.struct(F.lit("Point").alias("type"),
                      F.array(F.col("x"), F.col("y")).alias("coordinates"))
             .alias("geometry"),
-            F.struct(*[F.col("p")[c].alias(c) for c in props],
+            F.struct(*[F.col("p")[c].alias(c) for c in keep],
                      F.col("count").alias("count")).alias("properties"))
-        name = "geospatial_extractor " + _json.dumps([src, props])
+        name = "geospatial_extractor " + _json.dumps([src, keep])
         features = F.sort_array(F.collect_list(
             F.struct(F.col("first").alias("o"), feature.alias("f"))))
         return Kernel({name: {"features": features}}, {},
@@ -843,7 +843,7 @@ def _in_class(co: Any, name: Column | None = None) -> Column:
     """Rows of class_object ``co`` (and class ``name``): a NULL key
     matches no class, as pandas' groupby drops a NaN key."""
     cond = F.col(CO) == F.lit(co)
-    return cond if name is None else cond & (name.isNotNull())
+    return cond if name is None else cond & name.isNotNull()
 
 
 def _class_sum(co: Any, cond: Column | None = None) -> Column:
